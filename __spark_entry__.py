@@ -13,7 +13,7 @@ trainer family in ``ext/similarity.py``, the bounded-graph folds in
 returned DataFrame is being CONSTRUCTED, so calling a query builder is not
 free of Spark jobs — most of those queries' runtime (and any failure)
 surfaces at build time. Harnesses must time construction + execution
-together (as ``bench.py`` and ``tools/profile_query.py``'s
+together (as ``bench.py`` and ``tools/profiler.py``'s
 construct_s/execute_s split both do) for the numbers to be comparable.
 Every such collect is bounded by codebook/graph constants, never by the
 corpus (see the guards at their call sites).

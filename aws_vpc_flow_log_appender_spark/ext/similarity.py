@@ -1141,25 +1141,24 @@ def _trainer_conf(spark, rel=None):
     from .dedup import _plan_bytes
 
     conf = spark.conf
-    prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    prev_sp = conf.get("spark.sql.shuffle.partitions", "200")
-    prev_ws = conf.get("spark.sql.codegen.wholeStage", "true")
-    prev_fm = conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
+    settings = {"spark.sql.adaptive.enabled": "false",
+                "spark.sql.shuffle.partitions": "1"}
     size = _plan_bytes(rel) if rel is not None else None
-    interp = size is not None and size < _TRAINER_INTERP_MAX_BYTES
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions", "1")
-    if interp:
-        conf.set("spark.sql.codegen.wholeStage", "false")
-        conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    if size is not None and size < _TRAINER_INTERP_MAX_BYTES:
+        settings["spark.sql.codegen.wholeStage"] = "false"
+        settings["spark.sql.codegen.factoryMode"] = "NO_CODEGEN"
+    prev = {k: conf.get(k, None) for k in settings}  # None: not set
     try:
+        # inside the try: if a set raises, the ones before it are undone too
+        for k, v in settings.items():
+            conf.set(k, v)
         yield
     finally:
-        conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        conf.set("spark.sql.shuffle.partitions", prev_sp)
-        if interp:
-            conf.set("spark.sql.codegen.wholeStage", prev_ws)
-            conf.set("spark.sql.codegen.factoryMode", prev_fm)
+        for k, v in prev.items():
+            if v is None:
+                conf.unset(k)
+            else:
+                conf.set(k, v)
 
 
 def _km_lloyd_literal(e, tag: str, vecs_body: str | None = None,

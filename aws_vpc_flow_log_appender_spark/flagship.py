@@ -154,12 +154,14 @@ lines AS (
          END AS value
   FROM events
 ), parsed AS (
-  SELECT sha256(value) AS record_id,
-         regexp_matches(value,
-           '^(\\d) (\\d+) (eni-\\w+) (\\d+\\.\\d+\\.\\d+\\.\\d+) (\\d+\\.\\d+\\.\\d+\\.\\d+) (\\d+) (\\d+) (\\d+) (\\d+) (\\d+) (\\d+) (\\d+) (ACCEPT|REJECT) (OK|NODATA|SKIPDATA)$'
-         ) AS valid,
-         string_split(value, ' ') AS t
-  FROM lines
+  SELECT record_id, m <> '' AS valid, string_split(m, ' ') AS t
+  FROM (
+    SELECT sha256(value) AS record_id,
+           regexp_extract(value,
+             '^(\\d) (\\d+) (eni-\\w+) (\\d+\\.\\d+\\.\\d+\\.\\d+) (\\d+\\.\\d+\\.\\d+\\.\\d+) (\\d+) (\\d+) (\\d+) (\\d+) (\\d+) (\\d+) (\\d+) (ACCEPT|REJECT) (OK|NODATA|SKIPDATA)'
+           ) AS m
+    FROM lines
+  )
 ), typed AS (
   SELECT record_id,
          CASE WHEN valid THEN 0 ELSE 1 END AS error_flag,

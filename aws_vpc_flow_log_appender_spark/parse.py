@@ -6,9 +6,9 @@ into a typed record with a processing-time ``@timestamp`` or wrapped as an
 error record (record-level dead-lettering — a non-matching line is *kept*, not
 dropped, and later emitted with result ProcessingFailed).
 
-Spark-first design: one ``rlike`` validity predicate + one ``split`` +
-positional ``getItem``/``cast`` — all built-in Column expressions, fully inside
-whole-stage codegen; no UDFs, no per-row regex exec loop.
+Spark-first design: one ``regexp_extract`` of the whole match (empty = no
+match) + one ``split`` of that match + positional ``getItem``/``cast`` — all
+built-in Column expressions, fully inside whole-stage codegen; no UDFs.
 """
 
 from __future__ import annotations
@@ -32,17 +32,13 @@ def decode_base64_utf8(col: Column | str) -> Column:
     ).cast("string")
 
 
-def is_valid_flow_line(col: Column | str) -> Column:
-    """Validity predicate equivalent to the regex match at decorator/index.js:107."""
-    return F.col(col).rlike(FLOW_LINE_PATTERN) if isinstance(col, str) else col.rlike(FLOW_LINE_PATTERN)
-
-
 def parse_flow_fields(line: Column) -> list[Column]:
-    """Tokenize one raw line into the 14 typed columns.
+    """Tokenize one matched line into the 14 typed columns.
 
     Single ``split`` on space + positional casts (decorator/index.js:107-126
-    does one regex exec + 14 Number()/string captures). On invalid lines the
-    casts may produce NULLs — callers gate on :func:`is_valid_flow_line`.
+    does one regex exec + 14 Number()/string captures). ``line`` is the
+    regex match, not the raw line, so trailing text never reaches a field;
+    callers gate on the match being non-empty.
     """
     toks = F.split(line, " ")
     cols = []
@@ -83,10 +79,10 @@ def parse_records(records: DataFrame, data_col: str = "data",
 
         raw = F.col(data_col)
         orig = unchunked_base64(F.encode(data_col, "utf-8"))
-    # null-safe: a NULL payload gives rlike(NULL)=NULL, and NULL `error`
-    # would be treated as false downstream, misrouting the record to 'Ok'
-    valid = F.coalesce(is_valid_flow_line(raw), F.lit(False))
-    # Pin `raw` and the regex validity to ONE evaluation per record
+    # the reference's regex exec (decorator/index.js:107): the match of the
+    # start-anchored pattern, "" when the line does not match
+    match = F.regexp_extract(raw, FLOW_LINE_PATTERN, 0)
+    # Pin `raw` and the regex match to ONE evaluation per record
     # (optimization r10, guide §2.3/§7.2): as a flat projection, Catalyst
     # pushes the downstream validity filter below this projection and
     # re-inlines `raw` into every consumer — the synthesized/decoded line
@@ -94,10 +90,10 @@ def parse_records(records: DataFrame, data_col: str = "data",
     # per record (once in the pushed-down scan filter, once per projected
     # column group; profiled at sf0.1: the parse stage was 9.2 s CPU of
     # which the duplicated regex was the bulk). A one-element
-    # explode(array(struct(raw, valid))) is row-preserving and acts as a
+    # explode(array(struct(raw, match))) is row-preserving and acts as a
     # projection barrier: predicates referencing the generator's output
     # cannot be pushed below it, so the line is materialized once and the
-    # regex verdict is computed once and reused as a plain column.
+    # regex runs once; its match is reused as a plain column.
     # (`__orig_b64` stays OUTSIDE the barrier: it is only consumed by the
     # dead-letter packaging path, and leaving it a flat projection lets
     # column pruning drop its base64 re-encode for every query that never
@@ -105,12 +101,14 @@ def parse_records(records: DataFrame, data_col: str = "data",
     df = records.select(
         "*",
         F.explode(
-            F.array(F.struct(raw.alias("raw"), valid.alias("valid")))
+            F.array(F.struct(raw.alias("raw"), match.alias("match")))
         ).alias("__rv"),
     )
     rawc = F.col("__rv.raw")
-    validc = F.col("__rv.valid")
-    parsed = parse_flow_fields(rawc)
+    # null-safe: a NULL payload gives a NULL match, and NULL `error`
+    # would be treated as false downstream, misrouting the record to 'Ok'
+    validc = F.coalesce(F.col("__rv.match") != "", F.lit(False))
+    parsed = parse_flow_fields(F.col("__rv.match"))
     out = df.select(
         "recordId",
         rawc.alias("raw"),

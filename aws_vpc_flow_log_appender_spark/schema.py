@@ -35,15 +35,15 @@ FLOW_FIELDS: list[tuple[str, T.DataType]] = [
     ("log-status", T.StringType()),     # OK | NODATA | SKIPDATA
 ]
 
+# Anchored at the start only, like the reference's regex
+# (decorator/index.js:43): trailing text after log-status, such as the
+# ingestor's framing newline, still matches, and the fields are the match's.
 FLOW_LINE_PATTERN = (
     r"^(\d) (\d+) (eni-\w+) "
     r"(\d+\.\d+\.\d+\.\d+) (\d+\.\d+\.\d+\.\d+) "
     r"(\d+) (\d+) (\d+) (\d+) (\d+) (\d+) (\d+) "
-    r"(ACCEPT|REJECT) (OK|NODATA|SKIPDATA)$"
+    r"(ACCEPT|REJECT) (OK|NODATA|SKIPDATA)"
 )
-# NOTE: the reference's regex (decorator/index.js:43) uses a bare `(ip)` capture
-# style with non-anchored end; this anchored version accepts exactly the lines
-# the reference accepts for the fixture corpus we generate.
 
 FLOW_SCHEMA = T.StructType(
     [T.StructField(n, t, True) for n, t in FLOW_FIELDS]

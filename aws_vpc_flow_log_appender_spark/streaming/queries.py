@@ -91,15 +91,7 @@ def _run_stream_to_sink(spark: SparkSession, source_df: DataFrame, build,
         def write_epoch(df: DataFrame, _epoch_id: int) -> None:
             df.write.mode(sink_mode).parquet(out_dir)
 
-        q = (
-            out.writeStream.outputMode(output_mode)
-            .foreachBatch(write_epoch)
-            .queryName(f"{name}_{uuid.uuid4().hex[:8]}")
-            .trigger(availableNow=True).start()
-        )
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise TimeoutError(f"{name} did not finish in {timeout_s}s")
+        _await_foreach_batch(out, write_epoch, name, timeout_s, output_mode)
         return _read_back(spark, out_dir, out.schema)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
@@ -228,19 +220,9 @@ def stream_tumbling_window_to_files(spark: SparkSession, source_path: str,
             "total_value",
         )
     )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"stream_tumbling_window_to_files did not finish in {timeout_s}s"
-        )
+    _await_foreach_batch(agg, {"path": output_path,
+                               "checkpointLocation": checkpoint_dir},
+                         "stream_tumbling_window_to_files", timeout_s, "append")
 
 
 @query(
@@ -662,11 +644,15 @@ def _await_foreach_batch(out: DataFrame, sink_fn, name: str,
                          timeout_s: int, output_mode: str) -> None:
     """Run ``out`` through a foreachBatch sink with an availableNow trigger
     to completion. A timed-out query is stopped before raising — leaving it
-    running would leak the query AND keep writing a partial sink."""
+    running would leak the query AND keep writing a partial sink.
+
+    ``sink_fn`` is the foreachBatch function, or a dict of parquet file sink
+    options (path, checkpointLocation) for an exactly-once file sink."""
+    w = out.writeStream.outputMode(output_mode)
+    w = (w.foreachBatch(sink_fn) if callable(sink_fn)
+         else w.format("parquet").options(**sink_fn))
     q = (
-        out.writeStream.outputMode(output_mode)
-        .foreachBatch(sink_fn)
-        .queryName(f"{name}_{uuid.uuid4().hex[:8]}")
+        w.queryName(f"{name}_{uuid.uuid4().hex[:8]}")
         .trigger(availableNow=True)
         .start()
     )

@@ -50,6 +50,43 @@ def test_malformed_line_error_routing(spark):
     assert out["rec-000001"]["error"] is False
 
 
+def _fields(row):
+    return {k: v for k, v in row.items() if k not in ("recordId", "raw", "__orig_b64", "@timestamp")}
+
+
+def test_trailing_newline_is_ok_with_bare_log_status(spark):
+    """The ingestor frames each message as `message + "\\n"`; the reference's
+    regex is anchored at the start only, so the line is Ok and log-status
+    is the bare "OK", not "OK\\n"."""
+    recs = fixtures.firehose_records_df(
+        spark, [fixtures.EVENT_JSON_LINES[0], fixtures.EVENT_JSON_LINES[0] + "\n"])
+    plain, framed = (r.asDict() for r in parse_records(recs).orderBy("recordId").collect())
+    assert framed["error"] is False
+    assert framed["log-status"] == "OK"
+    assert framed["raw"] == fixtures.EVENT_JSON_LINES[0] + "\n"
+    assert _fields(framed) == _fields(plain)
+
+
+def test_trailing_text_is_ok_with_the_reference_fields(spark):
+    """Text after log-status does not stop the reference's match
+    (decorator/index.js:43), and the 14 fields are the captures; the same
+    holds for the flowlog data source's parser."""
+    import re
+
+    from aws_vpc_flow_log_appender_spark.schema import FLOW_LINE_PATTERN
+    from aws_vpc_flow_log_appender_spark.sources.flowlog_datasource import _parse_line
+
+    line = fixtures.EVENT_JSON_LINES[0]
+    recs = fixtures.firehose_records_df(spark, [line, line + "DATA extra 7"])
+    plain, tailed = (r.asDict() for r in parse_records(recs).orderBy("recordId").collect())
+    assert tailed["error"] is False
+    assert (tailed["action"], tailed["log-status"], tailed["end"]) == ("ACCEPT", "OK", 1418530070)
+    assert _fields(tailed) == _fields(plain)
+
+    pattern = re.compile(FLOW_LINE_PATTERN)
+    assert _parse_line(line + "DATA extra 7", pattern)[1:] == _parse_line(line, pattern)[1:]
+
+
 def test_ansi_hostile_records_never_fail_the_batch(spark):
     """The ANSI crash class (code-review r6): under Spark 4 ANSI defaults a
     single hostile record used to RAISE and kill the whole batch in three

@@ -594,14 +594,21 @@ def test_pair_stats_final_step_is_aggregate_not_window(plans):
     assert "Window" not in p
 
 
-def test_spread_input_noop_when_tiny(spark, sf_dir):
-    """Size gate: at sf0.001/sf0.01 the documents scan is far below the
-    per-task byte floor, so _spread_input must NOT insert an Exchange —
-    the shuffle would cost more than single-task hashing saves."""
-    from aws_vpc_flow_log_appender_spark.ext.dedup import _spread_input
-    from aws_vpc_flow_log_appender_spark.operators.registry import load
+def test_spread_input_noop_when_tiny(spark, tmp_path):
+    """Size gate: a single-file input far below the per-task byte floor at
+    any core count must NOT get an Exchange — the shuffle would cost more
+    than single-task hashing saves."""
+    from aws_vpc_flow_log_appender_spark.ext.dedup import (
+        _MIN_SPREAD_BYTES_PER_TASK,
+        _spread_input,
+    )
 
-    docs = load(spark, sf_dir, "documents")
+    path = str(tmp_path / "tiny")
+    spark.createDataFrame([(1, "a b"), (2, "c d"), (3, "e f")],
+                          "doc_id long, text string").coalesce(1).write.parquet(path)
+    assert sum(f.stat().st_size for f in (tmp_path / "tiny").glob("*.parquet")) \
+        < _MIN_SPREAD_BYTES_PER_TASK
+    docs = spark.read.parquet(path)
     out = _spread_input(docs)
     assert out is docs  # identity no-op, no repartition node at all
 

@@ -103,3 +103,44 @@ def test_trainer_interp_gate_paths_agree(spark, sf_dir, monkeypatch):
     assert cb_interp == cb_codegen
     after = {k: conf.get(k, None) for k in before}
     assert after == before
+
+
+class _FailingConf:
+    """spark.conf stand-in whose ``fail_at``-th ``set`` raises."""
+
+    def __init__(self, values: dict, fail_at: int):
+        self.values, self.fail_at, self.sets = dict(values), fail_at, 0
+
+    def get(self, key, default=None):
+        return self.values.get(key, default)
+
+    def set(self, key, value):
+        self.sets += 1
+        if self.sets == self.fail_at:
+            raise RuntimeError("conf.set failed")
+        self.values[key] = value
+
+    def unset(self, key):
+        self.values.pop(key, None)
+
+
+@pytest.mark.parametrize("fail_at", [1, 2, 3, 4])
+def test_trainer_conf_restores_on_a_failing_set(monkeypatch, fail_at):
+    """If one of _trainer_conf's four sets raises, the settings made before
+    it are undone: none of them outlives the block, and a key that was not
+    set before is unset again."""
+    import types
+
+    from aws_vpc_flow_log_appender_spark.ext import dedup
+
+    monkeypatch.setattr(dedup, "_plan_bytes", lambda rel: 0)  # interpreted branch: 4 sets
+    values = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.codegen.wholeStage": "true",
+    }
+    conf = _FailingConf(values, fail_at)
+    with pytest.raises(RuntimeError, match="conf.set failed"):
+        with sim._trainer_conf(types.SimpleNamespace(conf=conf), rel=object()):
+            pass
+    assert conf.values == values

@@ -1,0 +1,129 @@
+"""Unit tests of the measurement tools that need no Spark session:
+tools/profiler.py's event-log reader and tools/ab_drive.py's interleave."""
+
+import importlib.util
+import json
+import os
+
+_TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+
+
+def _load(name):
+    spec = importlib.util.spec_from_file_location(name, os.path.join(_TOOLS, name + ".py"))
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
+profiler = _load("profiler")
+ab_drive = _load("ab_drive")
+
+
+def test_interleave_alternates_which_side_runs_first(monkeypatch):
+    calls = []
+
+    def run_side(root, qlist, n_trials):
+        calls.append(root)
+        return {q: [float(len(calls))] * n_trials for q in qlist}
+
+    monkeypatch.setattr(ab_drive, "_run_side", run_side)
+    acc = ab_drive.interleave({"ref": "/ref", "work": "/work"}, ["q"], 3, 2)
+    assert calls == ["/ref", "/work", "/work", "/ref", "/ref", "/work"]
+    assert acc == {"ref": {"q": [1.0, 1.0, 4.0, 4.0, 5.0, 5.0]},
+                   "work": {"q": [2.0, 2.0, 3.0, 3.0, 6.0, 6.0]}}
+
+
+def _job_start(job, group, submit, infos):
+    return {"Event": "SparkListenerJobStart", "Job ID": job, "Submission Time": submit,
+            "Stage Infos": infos, "Stage IDs": [s["Stage ID"] for s in infos],
+            "Properties": {"spark.jobGroup.id": group}}
+
+
+def _stage(sid, n, name="", ran_before=False):
+    info = {"Stage ID": sid, "Number of Tasks": n, "Stage Name": name}
+    if ran_before:
+        info["Completion Time"] = 1
+    return info
+
+
+def _task(sid, run_ms, reason="Success", input_b=0, remote=0, local=0, written=0):
+    return {"Event": "SparkListenerTaskEnd", "Stage ID": sid,
+            "Task End Reason": {"Reason": reason},
+            "Task Metrics": {"Executor Run Time": run_ms,
+                             "Input Metrics": {"Bytes Read": input_b},
+                             "Shuffle Read Metrics": {"Remote Bytes Read": remote,
+                                                      "Local Bytes Read": local},
+                             "Shuffle Write Metrics": {"Shuffle Bytes Written": written}}}
+
+
+def _stage_done(sid, name, failed=False):
+    info = {"Stage ID": sid, "Stage Name": name}
+    if failed:
+        info["Failure Reason"] = "boom"
+    return {"Event": "SparkListenerStageCompleted", "Stage Info": info}
+
+
+def _job_end(job, t):
+    return {"Event": "SparkListenerJobEnd", "Job ID": job, "Completion Time": t}
+
+
+def test_read_event_log_groups_gaps_and_stage_totals(tmp_path):
+    """Job groups decide which query a job is billed to, jobs keep
+    submission order with their gaps, and stage totals sum the tasks that
+    ran."""
+    events = [
+        # warm-up run of q1: a job group the reader must ignore
+        _job_start(0, "warm:q1", 500, [_stage(0, 8, "warm")]),
+        _task(0, 999, written=999),
+        _stage_done(0, "warm"),
+        _job_end(0, 900),
+        # q1, job 1: a map stage (2 tasks) and a result stage (1 task)
+        _job_start(1, "profile:q1", 1000, [_stage(1, 2, "map at q1.py:1"),
+                                           _stage(2, 1, "collect at q1.py:2")]),
+        _task(1, 100, input_b=50, written=30),
+        _task(1, 200, input_b=70, written=40),
+        _stage_done(1, "map at q1.py:1"),
+        _task(2, 10, remote=20, local=50),
+        _stage_done(2, "collect at q1.py:2"),
+        _job_end(1, 2500),
+        # q1, job 2: reuses stage 1 (already ran, so skipped) plus a new one
+        _job_start(2, "profile:q1", 2700, [_stage(1, 2, ran_before=True),
+                                           _stage(3, 4, "save at q1.py:3")]),
+        _task(3, 5), _task(3, 5), _task(3, 5), _task(3, 5),
+        _stage_done(3, "save at q1.py:3"),
+        _job_end(2, 3000),
+        # q2: one task fails and is retried; a failed stage attempt is left out
+        _job_start(3, "profile:q2", 4000, [_stage(4, 1, "count at q2.py:1"),
+                                           _stage(5, 1, "bad at q2.py:2")]),
+        _task(4, 7, reason="ExceptionFailure"),
+        _task(4, 9),
+        _stage_done(4, "count at q2.py:1"),
+        _task(5, 1, reason="ExceptionFailure"),
+        _stage_done(5, "bad at q2.py:2", failed=True),
+        _job_end(3, 4100),
+    ]
+    path = tmp_path / "eventlog"
+    path.write_text("".join(json.dumps(e) + "\n" for e in events))
+
+    out = profiler.read_event_log(str(path))
+
+    assert set(out) == {"q1", "q2"}
+    q1 = out["q1"]
+    assert [j["jobId"] for j in q1["jobs"]] == [1, 2]
+    assert [j["dur_s"] for j in q1["jobs"]] == [1.5, 0.3]
+    assert [j["gap_s"] for j in q1["jobs"]] == [None, 0.2]
+    assert [j["n_tasks"] for j in q1["jobs"]] == [3, 4]
+    assert q1["jobs"][1]["name"] == "save at q1.py:3"
+    assert (q1["n_jobs"], q1["n_stages"], q1["n_stages_run"], q1["n_tasks"]) == (2, 3, 3, 7)
+    assert (q1["shuffle_read_bytes"], q1["shuffle_write_bytes"]) == (70, 70)
+    # slowest stage first
+    assert [s["stageId"] for s in q1["stages"]] == [1, 3, 2]
+    assert q1["stages"][0] == {
+        "stageId": 1, "executor_run_ms": 300, "tasks": 2, "input_bytes": 120,
+        "shuffle_read_bytes": 0, "shuffle_write_bytes": 70, "name": "map at q1.py:1"}
+
+    q2 = out["q2"]
+    assert (q2["n_jobs"], q2["n_stages"], q2["n_stages_run"], q2["n_tasks"]) == (1, 2, 1, 2)
+    assert q2["stages"] == [{
+        "stageId": 4, "executor_run_ms": 16, "tasks": 1, "input_bytes": 0,
+        "shuffle_read_bytes": 0, "shuffle_write_bytes": 0, "name": "count at q2.py:1"}]

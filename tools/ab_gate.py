@@ -9,8 +9,8 @@ default:
     artifact (the round-start BENCH_r{N-1}.json);
  2. for every query whose min exceeds ``THRESHOLD`` (1.25x) the reference,
     run tools/ab_bench.py INTERLEAVED between HEAD and the round-start
-    checkout (A B A B, separate processes) so machine drift hits both sides
-    equally;
+    checkout (ab_drive.interleave: A B, B A, ..., separate processes) so
+    machine drift hits both sides equally;
  3. write an AB JSON artifact with raw trials, per-side mins, the
     interleaved ratio, and the verdict: a query is a REGRESSION only if
     HEAD's interleaved min is > THRESHOLD x the round-start checkout's
@@ -33,6 +33,8 @@ import subprocess
 import sys
 import tempfile
 
+from ab_drive import interleave
+
 THRESHOLD = 1.25
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -49,18 +51,6 @@ def _load_artifact(path: str) -> dict:
 
 def _load_queries(path: str) -> dict[str, float]:
     return _load_artifact(path)["queries"]
-
-
-def _run_side(root: str, qlist: list[str], n_trials: int) -> dict[str, list[float]]:
-    out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "tools", "ab_bench.py"),
-         root, ",".join(qlist), str(n_trials)],
-        capture_output=True, text=True, check=True,
-    )
-    for line in out.stdout.splitlines():
-        if line.startswith("ABRESULT "):
-            return json.loads(line[len("ABRESULT "):])
-    raise RuntimeError(f"no ABRESULT line from {root}:\n{out.stdout[-2000:]}")
 
 
 def main() -> None:
@@ -120,24 +110,18 @@ def main() -> None:
                 cwd=REPO, check=True, capture_output=True,
             )
             try:
-                head_trials: dict[str, list[float]] = {n: [] for n in suspects}
-                ref_trials: dict[str, list[float]] = {n: [] for n in suspects}
-                for _ in range(args.pairs):
-                    a = _run_side(REPO, suspects, args.trials)
-                    b = _run_side(ref_root, suspects, args.trials)
-                    for n in suspects:
-                        head_trials[n] += a.get(n, [])
-                        ref_trials[n] += b.get(n, [])
+                acc = interleave({"head": REPO, "ref": ref_root}, suspects,
+                                 args.pairs, args.trials)
             finally:
                 subprocess.run(
                     ["git", "worktree", "remove", "--force", ref_root],
                     cwd=REPO, capture_output=True,
                 )
         for n in suspects:
-            h, r = min(head_trials[n]), min(ref_trials[n])
+            h, r = min(acc["head"][n]), min(acc["ref"][n])
             ratio = round(h / r, 3) if r > 0 else None
             result["interleaved"][n] = {
-                "head_trials": head_trials[n], "ref_trials": ref_trials[n],
+                "head_trials": acc["head"][n], "ref_trials": acc["ref"][n],
                 "head_min": h, "ref_min": r, "ratio": ratio,
             }
             if ratio is not None and ratio > THRESHOLD:

@@ -45,6 +45,17 @@ print(f'doc-count gate OK: README/PARITY both state {n}')
 "
 python -m pytest tests/ -q
 python tools/verify_local.py
+# the profiler and the plan dumper stay runnable: one small query each
+SF_SMALL=$(python -c "import os, bench; print(os.path.join(os.path.dirname(bench.SF_DIR), 'sf0.001'))")
+python tools/profiler.py flowlog_enrich --sf "$SF_SMALL" --out /tmp/ci_profile.json
+python -c "
+import json
+r = json.load(open('/tmp/ci_profile.json'))['flowlog_enrich']
+assert r['n_jobs'] > 0 and r['stages'], r
+print('profile OK:', r['n_jobs'], 'jobs,', r['n_stages_run'], 'stages')
+"
+SPARK_GRAFT_SF_DIR="$SF_SMALL" python tools/plans.py flowlog_enrich > /tmp/ci_plans.txt
+grep -q "Physical Plan" /tmp/ci_plans.txt
 # COMMIT EVERY COMPLETE BENCH RUN (VERDICT r5: the best r5 run went
 # uncaptured): the artifact now carries loadavg + raw trials, and the A/B
 # gate below adjudicates any >1.25x per-query delta against the round-start
