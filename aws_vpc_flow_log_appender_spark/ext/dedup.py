@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from .. import plan_gates
 from ..functions import round_half_up
 from ..operators.registry import load, query
 
@@ -36,43 +37,6 @@ _SQL_SHINGLES = """
 """
 
 
-# Below ~8 KiB of source bytes per core the hash work a task would receive is
-# cheaper than its share of the repartition shuffle (A/B'd: at sf0.01 the
-# exchange costs more than single-task hashing; at sf0.1 — 594 KB, ~5k docs —
-# spreading was a profiled 36% win for dedup_minhash_lsh).
-_MIN_SPREAD_BYTES_PER_TASK = 8 << 10
-
-# The derived-table fan-out (bands / per-doc profiles, below) has a higher
-# break-even than the input spread: it buys parallelism only for the
-# candidate-expansion join downstream of a frozen checkpoint, and that
-# expansion is small exactly when the corpus is small. Interleaved A/B at
-# round-start (AB_r06_session2.json): the unconditional repartition put
-# dedup_minhash_lsh at 1.36x the r5 checkout on the 594 KB sf0.1 corpus,
-# while the 10x smoke (5.9 MB) showed it as a 15% win — so gate on source
-# bytes per core, crossover ~2 MB total at 32 cores.
-_MIN_FANOUT_BYTES_PER_TASK = 64 << 10
-
-# Eager-vs-lazy checkpoint gate (optimization r11, VERDICT r10 "Next round"
-# #5): a blocking eager materialization costs one fixed driver-job latency,
-# while the lazy race it prevents re-executes the derivation ~2-3x per
-# consumer — worth it only when the derivation itself is expensive, i.e.
-# when the source corpus carries real bytes per task. Same rationale and
-# value as textanalysis._MIN_CK_BYTES_PER_TASK.
-_CK_GATE_BYTES_PER_TASK = 4 << 20
-
-
-def _plan_bytes(df):
-    """Catalyst's size estimate for a plan, or None when the JVM
-    introspection is unavailable (mocked sessions, future API drift).
-    Estimation only — used to pick a partitioning strategy, never to
-    change results."""
-    try:
-        raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        return raw if isinstance(raw, int) else int(raw.toString())
-    except Exception:
-        return None
-
-
 def _fan_out_derived(derived, source):
     """Round-robin a small DERIVED table (LSH bands, per-doc shingle
     profiles) up to cluster parallelism before its checkpoint — but only
@@ -90,11 +54,9 @@ def _fan_out_derived(derived, source):
     above it, AQE's byte-based coalescing would freeze the tiny derived
     table at ~1 partition and serialize an expansion that is far larger
     than its input (measured 15% win at 10x, growing with scale)."""
-    par = derived.sparkSession.sparkContext.defaultParallelism
-    size = _plan_bytes(source) if source is not None else None
-    if size is not None and size < par * _MIN_FANOUT_BYTES_PER_TASK:
+    if not plan_gates.is_large(source, per_task=plan_gates.FANOUT_BYTES_PER_TASK):
         return derived
-    return derived.repartition(par)
+    return derived.repartition(derived.sparkSession.sparkContext.defaultParallelism)
 
 
 def _spread_input(docs):
@@ -113,17 +75,18 @@ def _spread_input(docs):
       least ``defaultParallelism`` partitions — a real many-file corpus
       arrives pre-partitioned and pays nothing here;
     - the input is too small for a shuffle to pay for itself (under
-      ``_MIN_SPREAD_BYTES_PER_TASK`` per core, e.g. the sf0.01 oracle runs).
+      ``plan_gates.SPREAD_BYTES_PER_TASK`` per core, e.g. the sf0.01
+      oracle runs).
 
     Round-robin is retry-safe (sortBeforeRepartition) and
     row-set-preserving."""
+    if not plan_gates.is_large(docs, per_task=plan_gates.SPREAD_BYTES_PER_TASK):
+        return docs
     spark = docs.sparkSession
     par = spark.sparkContext.defaultParallelism
-    size = _plan_bytes(docs)
+    size = plan_gates.plan_bytes(docs)
     if size is None:  # non-JVM-introspectable plan: keep the old behavior
         return docs.repartition(par)
-    if size < par * _MIN_SPREAD_BYTES_PER_TASK:
-        return docs
     try:
         n_files = len(docs.inputFiles())
         jconf = spark._jsparkSession.sessionState().conf()
@@ -313,26 +276,17 @@ def _minhash_pairs_for(docs):
     size (_fan_out_derived) because at bench scale the expansion is too
     small for the extra exchange to pay (AB_r06_session2.json).
 
-    EAGER above the size gate (optimization r10, gated r11): with a lazy
-    checkpoint the self-join's broadcast-build job and the probe stage
-    race to materialize the banded table and each re-runs the full
-    shingle+two-md5 signature aggregate (profiled: a 44 s-CPU stage for a
-    1,410-candidate join — the signature pipeline executed 2-3x before
-    the cache won). Above `_CK_GATE_BYTES_PER_TASK` per task that
-    re-execution dwarfs one blocking materialization job; below it (bench
-    scale) the r9 lazy form stands — the duplicated sub-second signature
-    pass is cheaper than the added job latency (r11 interleaved A/B vs
-    the r9 tag: unconditional eager measured 1.12x slower on
-    dedup_minhash_lsh). localCheckpoint caveat: executor-local blocks, NO
-    lineage replay on executor loss (guide §5); acceptable because the
-    whole job is re-runnable."""
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    size = _plan_bytes(docs)
-    small = size is not None and size < par * _CK_GATE_BYTES_PER_TASK
-    bands = (
-        _fan_out_derived(_minhash_bands_for(docs), docs)
-        .localCheckpoint(eager=not small)
-    )
+    EAGER (optimization r10): with a lazy checkpoint the self-join's
+    broadcast-build job and the probe stage race to materialize the
+    banded table and each re-runs the full shingle+two-md5 signature
+    aggregate (profiled: a 44 s-CPU stage for a 1,410-candidate join — the
+    signature pipeline executed 2-3x before the cache won). The r11 size
+    gate that kept the lazy form below 4 MB/task is gone: forced each way
+    at sf0.1, the two forms are within 5% (AB_plan_gates_forced.log: 10
+    interleaved pairs, lazy slower by a median 1.7%). localCheckpoint
+    caveat: executor-local blocks, NO lineage replay on executor loss
+    (guide §5); acceptable because the whole job is re-runnable."""
+    bands = _fan_out_derived(_minhash_bands_for(docs), docs).localCheckpoint(eager=True)
     a = bands.alias("a")
     b = bands.alias("b")
     return (

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from .. import plan_gates
 from ..functions import round_half_up
 from ..operators.registry import load, query
 
@@ -1085,30 +1086,11 @@ def _km_best_sql(cb, v: str = "v", vv: str = "vv") -> str:
     return structs[0] if len(structs) == 1 else f"least({', '.join(structs)})"
 
 
-from contextlib import contextmanager
-
-
-# Interpreted-mode gate for the trainer statements (optimization r11,
-# second pass; guide §1.2 step 3). Every Lloyd round statement carries a
-# FRESH literal codebook, so its generated code can never be served from
-# the codegen cache — each round pays a full janino compile (~0.1 s/
-# statement measured in isolation; interleaved A/B over the six
-# trainer-family headline queries: 0.75-0.94 with two neutral-to-noise
-# members). Interpreted execution skips the compile but pays O(rows)
-# scaffolding overhead on the map side, so it only wins while the
-# training relation is small: ~64 MB of (vec_id, v, vv) rows (~120k
-# vectors) is where ~2 us/row of interpreted overhead crosses the
-# ~0.3 s/trainer fixed compile cost. Above the gate (any real corpus,
-# let alone 100 TB) codegen stays on — the scale-correct branch.
-_TRAINER_INTERP_MAX_BYTES = 64 << 20
-
-
-@contextmanager
-def _trainer_conf(spark, rel=None):
+def _trainer_conf(rel, allow_interp: bool = True):
     """Scoped execution conf for the tiny bounded driver-fold trainer
-    queries (optimization r11, guide §1.2 step 3). Two unconditional
-    flips plus a size-gated pair, all restored on exit; queries built
-    OUTSIDE the block keep their creation-time conf snapshot:
+    queries over ``rel`` (optimization r11, guide §1.2 step 3). Two
+    unconditional flips plus a size-gated pair, all restored on exit;
+    queries built OUTSIDE the block keep their creation-time conf snapshot:
 
     - adaptive.enabled=false: AQE runs every intermediate shuffle stage as
       its OWN driver job, so a Lloyd-round aggregate (codebook-bounded
@@ -1123,13 +1105,11 @@ def _trainer_conf(spark, rel=None):
       profiled at 32 inherited partitions the two merged rounds ran 66
       tasks for 24 output rows.
 
-    - codegen.wholeStage=false + codegen.factoryMode=NO_CODEGEN, ONLY
-      when ``rel`` (the training relation) is Catalyst-estimated below
-      ``_TRAINER_INTERP_MAX_BYTES`` (see the gate comment above): each
-      round statement embeds a fresh literal codebook, so codegen can
-      never hit its cache and every statement pays a full compile that
-      interpreted execution skips. When the estimate is unavailable or
-      large, codegen stays on — the branch a real corpus takes.
+    - codegen.wholeStage=false + codegen.factoryMode=NO_CODEGEN, when
+      ``allow_interp`` and ``rel``'s estimate is below
+      ``plan_gates.TRAINER_INTERP_BYTES``: each round statement embeds a
+      fresh literal codebook, so codegen can never hit its cache and every
+      statement pays a full compile that interpreted execution skips.
       Interpreted and generated evaluation of the same expression tree
       are semantically identical (same operation order), so values are
       unaffected either way; the full oracle sweep pins it.
@@ -1138,39 +1118,25 @@ def _trainer_conf(spark, rel=None):
     partial sums, which the 1e-6 rounding grid already absorbs across
     every session layout (the 8-partition test session vs the
     32-partition bench)."""
-    from .dedup import _plan_bytes
-
-    conf = spark.conf
     settings = {"spark.sql.adaptive.enabled": "false",
                 "spark.sql.shuffle.partitions": "1"}
-    size = _plan_bytes(rel) if rel is not None else None
-    if size is not None and size < _TRAINER_INTERP_MAX_BYTES:
+    if allow_interp and not plan_gates.is_large(
+            rel, total=plan_gates.TRAINER_INTERP_BYTES):
         settings["spark.sql.codegen.wholeStage"] = "false"
         settings["spark.sql.codegen.factoryMode"] = "NO_CODEGEN"
-    prev = {k: conf.get(k, None) for k in settings}  # None: not set
-    try:
-        # inside the try: if a set raises, the ones before it are undone too
-        for k, v in settings.items():
-            conf.set(k, v)
-        yield
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                conf.unset(k)
-            else:
-                conf.set(k, v)
+    return plan_gates.scoped_conf(rel.sparkSession, settings)
 
 
 def _km_lloyd_literal(e, tag: str, vecs_body: str | None = None,
                       k: int = KM_K, iters: int = KM_ITERS,
-                      interp: bool = True):
+                      allow_interp: bool = True):
     """Run ``iters`` Lloyd rounds with the codebook driver-held; returns the
     final codebook as [(cid, [element sql], [element value])]. One
     aggregate job per round (map-side combined K x EMB_DIM cells), one
     tiny LIMIT-k job for the seeds — no corpus-keyed exchange anywhere.
 
-    ``interp=False`` keeps codegen on for the trainer statements even
-    below the size gate: _train_mem's consumers measured a reproducible
+    ``allow_interp=False`` keeps codegen on for the trainer statements
+    even below the size gate: _train_mem's consumers measured a reproducible
     ~7-16% loss under the interpreted trainer (3/3 interleaved A/B
     passes) — their final decision query reuses the trainer's generated
     projection shape from the codegen cache, and the interpreted rounds
@@ -1180,7 +1146,7 @@ def _km_lloyd_literal(e, tag: str, vecs_body: str | None = None,
 
     if vecs_body is None:
         vecs_body = _km_vecs_body()
-    with _trainer_conf(e.sparkSession, e if interp else None):
+    with _trainer_conf(e, allow_interp):
         seeds = _sql_over(
             e, f"{tag}_seed",
             f"WITH vecs AS ({vecs_body}) "
@@ -1217,7 +1183,7 @@ def _km_lloyd_literal(e, tag: str, vecs_body: str | None = None,
 def _km_literal_parts_spark(e, tag: str, vecs_body: str | None = None,
                             with_sc: bool = False,
                             cb: list | None = None,
-                            interp: bool = True) -> list[str]:
+                            allow_interp: bool = True) -> list[str]:
     """Driver-folded replacement for _km_train_parts_spark: RUNS the Lloyd
     rounds (2 + KM_ITERS small jobs), then emits the same-named CTEs the
     unrolled form exposed — ``vecs``, ``c{KM_ITERS}`` (literal VALUES) and
@@ -1228,7 +1194,7 @@ def _km_literal_parts_spark(e, tag: str, vecs_body: str | None = None,
         vecs_body = _km_vecs_body()
     fin = KM_ITERS
     if cb is None:
-        cb = _km_lloyd_literal(e, tag, vecs_body, interp=interp)
+        cb = _km_lloyd_literal(e, tag, vecs_body, allow_interp=allow_interp)
     cb_rows = ", ".join(
         f"({cid}, array({', '.join(elem_sql)}))" for cid, elem_sql, _ in cb
     )
@@ -1694,7 +1660,7 @@ def _pq_lloyd_literal(e, tag: str, vecs_sql: str = _PQ_VECS_BODY):
     from .dedup import _sql_over
 
     prefix = f"WITH vecs AS ({vecs_sql}), sub AS ({_PQ_SUB_BODY}) "
-    with _trainer_conf(e.sparkSession, e):
+    with _trainer_conf(e):
         seeds = _sql_over(
             e, f"{tag}_pqseed",
             prefix + f"""
@@ -1786,7 +1752,7 @@ def _dual_literal_train(vck, tag: str):
     Returns (km codebook, pq codebook)."""
     from .dedup import _sql_over
 
-    with _trainer_conf(vck.sparkSession, vck):
+    with _trainer_conf(vck):
         return _dual_literal_train_inner(vck, tag)
 
 
@@ -2616,7 +2582,7 @@ def _train_mem(e, tag: str):
     fin = KM_ITERS
     vck = _vecs_ck(e, tag)
     parts = _km_literal_parts_spark(vck, tag, vecs_body=_VECS_CK_BODY,
-                                    interp=False)
+                                    allow_interp=False)
     # a{fin} carries vv directly (r10) — the old `JOIN vecs v2 ON vec_id`
     # existed only to re-attach the self-dot and cost a corpus-sized join
     # per training; the oracle keeps its join text (same values either way)
@@ -2641,24 +2607,18 @@ def _train_mem(e, tag: str):
 # is orders of magnitude larger than the input bytes — exactly the
 # _fan_out_derived hazard (ext/dedup.py), now fixed at the decision join
 # (optimization r11, guide §2.5/§3.1). When the member relation's SOURCE
-# is provably broadcast-small (parquet-footer-accurate scan estimate,
-# same gate style as _fan_out_derived), the probe side is round-robined
+# is provably broadcast-small (below plan_gates.SEMDEDUP_BROADCAST_BYTES of
+# parquet-footer-accurate scan estimate), the probe side is round-robined
 # to cluster parallelism and the closer-member side broadcast: the cid
 # Exchanges disappear and the per-pair dot/cosine work spreads over every
 # core instead of <= KM_K coalesced tasks. Above the cap (real corpora,
 # where members are corpus-sized and a broadcast would OOM — the
 # sample_dedup_weights lesson) the original unhinted shuffle join stands.
 # Values are identical either way: same pairs, same aggregate.
-SEMDEDUP_BROADCAST_SRC_CAP = 16 << 20
-
-
 def _sem_spread_broadcast(x, y, mem, gate):
-    """(x, y, joined?) — apply the gated spread+broadcast above; returns
-    the joined frame or None when the gate keeps the shuffle join."""
-    from .dedup import _plan_bytes
-
-    size = _plan_bytes(gate) if gate is not None else None
-    if size is None or size >= SEMDEDUP_BROADCAST_SRC_CAP:
+    """(x, y) spread and broadcast per the gate above, or None when the
+    gate keeps the shuffle join."""
+    if plan_gates.is_large(gate, total=plan_gates.SEMDEDUP_BROADCAST_BYTES):
         return None
     par = mem.sparkSession.sparkContext.defaultParallelism
     return x.repartition(par), F.broadcast(y)
@@ -2671,7 +2631,7 @@ def _semantic_decisions(mem, gate=None):
     grid, same (d_i, vec_id) closer-member total order), returning
     (vec_id, cluster_id, kept, max_closer_sim). ``gate``: a frame whose
     plan-size estimate bounds the member relation's source, enabling the
-    spread+broadcast join shape (see SEMDEDUP_BROADCAST_SRC_CAP)."""
+    spread+broadcast join shape (see _sem_spread_broadcast)."""
     x = mem.select(
         "vec_id", "cid",
         F.col("v").alias("x_v"), F.col("vv").alias("x_vv"),

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .. import plan_gates
 from ..functions import round_half_up
 from ..operators.registry import load, query
 
@@ -21,33 +22,6 @@ LANG_MARKERS = {
     "de": [" der ", " und ", " die "],
     "zh": ["的", "是", "了"],
 }
-
-
-# Eager multi-consumer checkpoints are gated on SOURCE size (optimization
-# r11, VERDICT r10 "Next round" #5 / guide §5): a blocking localCheckpoint
-# materialization costs one fixed driver-job latency, while the re-execution
-# it avoids costs roughly source_bytes / (parallelism x scan+agg throughput)
-# per extra consumer. Below ~4 MB/task the re-derivation is tens of ms per
-# task — cheaper than the job it would replace (the r11 interleaved A/B vs
-# the r9 tag measured the unconditional r10 checkpoints 1.26-1.29x SLOWER
-# at bench scale); above it (real corpora) the checkpoint wins and engages.
-_MIN_CK_BYTES_PER_TASK = 4 << 20
-
-
-def _ck_if_large(derived, source):
-    """Eager-checkpoint ``derived`` (a multi-consumer relation) only when
-    ``source``'s parquet-footer-accurate plan estimate clears the per-task
-    threshold above. Identical values either way — the checkpoint holds
-    exactly the rows the inline derivation computes. localCheckpoint
-    caveat: executor-local blocks, NO lineage replay on executor loss
-    (guide §5); acceptable because the whole job is re-runnable."""
-    from .dedup import _plan_bytes
-
-    par = derived.sparkSession.sparkContext.defaultParallelism
-    size = _plan_bytes(source) if source is not None else None
-    if size is not None and size < par * _MIN_CK_BYTES_PER_TASK:
-        return derived
-    return derived.localCheckpoint(eager=True)
 
 
 def _occurrences(col, marker: str):
@@ -244,17 +218,20 @@ def text_tfidf_top_terms(spark, sf_dir):
     words = d.select("doc_id", F.explode(F.split("text", " ")).alias("term")).filter(
         F.col("term") != ""
     )
-    # tf materialized once when the corpus is large (r10, gated r11 — see
-    # _ck_if_large): df and the idf join-back both consume it, and without
-    # the cut the tokenize + doc-term aggregate runs once per branch (6
-    # parquet scans in the r9 plan). The checkpoint holds the
-    # POST-aggregate rows (doc_id, term, tf) — vocabulary-bounded per doc,
-    # far narrower than the exploded token stream. At bench scale the gate
-    # keeps the inline form: the r11 A/B vs r9 measured the unconditional
-    # checkpoint 1.26x slower (fixed materialization latency > two cheap
-    # re-scans of a few-MB corpus).
-    tf = _ck_if_large(
-        words.groupBy("doc_id", "term").agg(F.count("*").alias("tf")), d
+    # tf materialized once, eagerly (r10): df and the idf join-back both
+    # consume it, and without the cut the tokenize + doc-term aggregate
+    # runs once per branch (6 parquet scans in the r9 plan). The checkpoint
+    # holds the POST-aggregate rows (doc_id, term, tf) — vocabulary-bounded
+    # per doc, far narrower than the exploded token stream. The r11 size
+    # gate that kept the inline form at bench scale is gone: forced each
+    # way at sf0.1 the two forms are within 5% (AB_plan_gates_forced.log,
+    # 10 interleaved pairs, here and for text_bm25_search's per_doc).
+    # localCheckpoint caveat: executor-local blocks, NO lineage replay on
+    # executor loss (guide §5); acceptable because the whole job is
+    # re-runnable.
+    tf = (
+        words.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+        .localCheckpoint(eager=True)
     )
     # count(*), not countDistinct(doc_id): tf rows are unique on
     # (doc_id, term) BY CONSTRUCTION (groupBy output), so the distinct
@@ -460,7 +437,7 @@ def _doc_shingles(docs, width: int, cols: list[str]):
     corpus bytes — is a no-op and is dropped. Only the key-less form (the
     benchmark side's global shingle set) still needs a cross-document
     distinct, then over rows already deduplicated within each document.
-    BELOW the gate (_MIN_CK_BYTES_PER_TASK per task — bench scale) the r9
+    BELOW plan_gates.INROW_DEDUP_BYTES_PER_TASK (bench scale) the r9
     explode+distinct form stands: the r11 interleaved A/B vs the r9 tag
     measured the unconditional in-row form 1.29x slower there (the
     higher-order transform + array_distinct evaluate outside whole-stage
@@ -471,14 +448,10 @@ def _doc_shingles(docs, width: int, cols: list[str]):
     path, where documents are the same bounded fixtures scaled out.
     Identical output either way: per-doc distinct == corpus distinct when
     the key is unique."""
-    from .dedup import _plan_bytes
-
     toks = F.split("text", " ")
     n = F.size(toks)
     base = docs.filter(n >= width)
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    size = _plan_bytes(docs)
-    if size is not None and size < par * _MIN_CK_BYTES_PER_TASK:
+    if not plan_gates.is_large(docs, per_task=plan_gates.INROW_DEDUP_BYTES_PER_TASK):
         shingle = F.array_join(F.slice(F.col("l"), F.col("i") + 1, width), " ")
         return (
             base.select(
@@ -873,13 +846,12 @@ def text_bm25_search(spark, sf_dir):
     # ONE tokenize pass (r10; the before plan tokenized the corpus twice —
     # once for dl, once for the query-term tf — 8 parquet scans total):
     # per-doc length and the three query-term counts come out of a single
-    # groupBy(doc_id), materialized once (doc_id + 4 longs — far narrower
-    # than the token stream) when the corpus is large (gated r11, see
-    # _ck_if_large: the corpus stats and the scoring pass both consume it;
-    # at bench scale two inline re-derivations are cheaper than the fixed
-    # materialization job). The tf/df/dl relations and their joins collapse
-    # into row-wise arithmetic over this table either way.
-    per_doc = _ck_if_large(
+    # groupBy(doc_id), materialized once, eagerly (doc_id + 4 longs — far
+    # narrower than the token stream): the corpus stats and the scoring
+    # pass both consume it (see text_tfidf_top_terms' tf for why the r11
+    # size gate went). The tf/df/dl relations and their joins collapse
+    # into row-wise arithmetic over this table.
+    per_doc = (
         words.groupBy("doc_id").agg(
             F.count("*").alias("dl"),
             *[
@@ -888,8 +860,8 @@ def text_bm25_search(spark, sf_dir):
                 .alias(f"tf_{i}")
                 for i, t in enumerate(_BM25_TERMS)
             ],
-        ),
-        d,
+        )
+        .localCheckpoint(eager=True)
     )
     stats = per_doc.agg(
         F.count("*").alias("n_docs"),

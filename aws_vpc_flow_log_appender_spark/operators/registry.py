@@ -241,7 +241,7 @@ QUERY_REGISTRY: dict[str, QuerySpec] = {}
 #    regex-gated cast and the 2dp-rounded threshold) are RETAINED; an
 #    earlier draft of this rotation displaced them, caught by re-checking
 #    every displacement against the round diff before commit.
-#  - session-2 fan-out gating (_fan_out_derived in ext/dedup.py): every
+#  - session-2 fan-out gating (plan_gates.is_large at _fan_out_derived): every
 #    consumer is retained (dedup_minhash_lsh 41, dedup_minhash_est_jaccard
 #    42, dedup_ngram_jaccard 49, dedup_lsh_bucket_stats 4,
 #    corpus_curation_pipeline 32) except dedup_containment, whose ONLY

@@ -456,7 +456,7 @@ _BROADCAST_BOUNDS = {
     ("ext/similarity.py", "y"): (
         "SemDeDup closer-member side, hint applied ONLY under the "
         "_sem_spread_broadcast gate: the source's parquet-footer estimate "
-        "must clear SEMDEDUP_BROADCAST_SRC_CAP (16 MB), so the broadcast "
+        "must clear plan_gates.SEMDEDUP_BROADCAST_BYTES (16 MB), so the broadcast "
         "relation is size-capped by construction; above the cap the join "
         "stays unhinted (AQE chooses, the sample_dedup_weights discipline)"
     ),
@@ -598,16 +598,14 @@ def test_spread_input_noop_when_tiny(spark, tmp_path):
     """Size gate: a single-file input far below the per-task byte floor at
     any core count must NOT get an Exchange — the shuffle would cost more
     than single-task hashing saves."""
-    from aws_vpc_flow_log_appender_spark.ext.dedup import (
-        _MIN_SPREAD_BYTES_PER_TASK,
-        _spread_input,
-    )
+    from aws_vpc_flow_log_appender_spark.ext.dedup import _spread_input
+    from aws_vpc_flow_log_appender_spark.plan_gates import SPREAD_BYTES_PER_TASK
 
     path = str(tmp_path / "tiny")
     spark.createDataFrame([(1, "a b"), (2, "c d"), (3, "e f")],
                           "doc_id long, text string").coalesce(1).write.parquet(path)
     assert sum(f.stat().st_size for f in (tmp_path / "tiny").glob("*.parquet")) \
-        < _MIN_SPREAD_BYTES_PER_TASK
+        < SPREAD_BYTES_PER_TASK
     docs = spark.read.parquet(path)
     out = _spread_input(docs)
     assert out is docs  # identity no-op, no repartition node at all
@@ -616,16 +614,14 @@ def test_spread_input_noop_when_tiny(spark, tmp_path):
 def test_spread_input_noop_when_prepartitioned(spark, tmp_path):
     """A corpus that already arrives in >= defaultParallelism files (or
     splits) is left untouched — the scan itself is parallel."""
-    from aws_vpc_flow_log_appender_spark.ext.dedup import (
-        _MIN_SPREAD_BYTES_PER_TASK,
-        _spread_input,
-    )
+    from aws_vpc_flow_log_appender_spark.ext.dedup import _spread_input
+    from aws_vpc_flow_log_appender_spark.plan_gates import SPREAD_BYTES_PER_TASK
 
     par = spark.sparkContext.defaultParallelism
     path = str(tmp_path / "prepart")
     # incompressible text so the SIZE gate passes and the no-op must come
     # from the file-count branch; written as `par` files
-    spark.range(par * _MIN_SPREAD_BYTES_PER_TASK // 16).selectExpr(
+    spark.range(par * SPREAD_BYTES_PER_TASK // 16).selectExpr(
         "id AS doc_id",
         "concat(md5(string(id)), md5(string(id + 1)), md5(string(id + 2))) AS text",
     ).repartition(par).write.parquet(path)
@@ -637,16 +633,14 @@ def test_spread_input_noop_when_prepartitioned(spark, tmp_path):
 def test_spread_input_spreads_large_single_split(spark, tmp_path):
     """A single-file input big enough to amortize the shuffle IS spread to
     cluster parallelism (the sf0.1+ single-split fixture shape)."""
-    from aws_vpc_flow_log_appender_spark.ext.dedup import (
-        _MIN_SPREAD_BYTES_PER_TASK,
-        _spread_input,
-    )
+    from aws_vpc_flow_log_appender_spark.ext.dedup import _spread_input
+    from aws_vpc_flow_log_appender_spark.plan_gates import SPREAD_BYTES_PER_TASK
 
     par = spark.sparkContext.defaultParallelism
     path = str(tmp_path / "single")
     # incompressible text so the on-disk size (what the stats report) clears
     # the byte floor — repeat('x', n) dictionary-compresses to ~nothing
-    spark.range(par * _MIN_SPREAD_BYTES_PER_TASK // 16).selectExpr(
+    spark.range(par * SPREAD_BYTES_PER_TASK // 16).selectExpr(
         "id AS doc_id",
         "concat(md5(string(id)), md5(string(id + 1)), md5(string(id + 2))) AS text",
     ).coalesce(1).write.parquet(path)
@@ -665,10 +659,8 @@ def test_fan_out_derived_gated_on_source_size(spark, sf_dir, tmp_path):
     derived frame passes through untouched, above it a round-robin
     Repartition is inserted; a non-introspectable source keeps the old
     unconditional-spread behavior."""
-    from aws_vpc_flow_log_appender_spark.ext.dedup import (
-        _MIN_FANOUT_BYTES_PER_TASK,
-        _fan_out_derived,
-    )
+    from aws_vpc_flow_log_appender_spark.ext.dedup import _fan_out_derived
+    from aws_vpc_flow_log_appender_spark.plan_gates import FANOUT_BYTES_PER_TASK
     from aws_vpc_flow_log_appender_spark.operators.registry import load
 
     derived = spark.range(10).selectExpr("id AS doc_id", "id % 3 AS band_id")
@@ -680,7 +672,7 @@ def test_fan_out_derived_gated_on_source_size(spark, sf_dir, tmp_path):
     # corpus above the floor: the derived frame IS round-robin repartitioned
     par = spark.sparkContext.defaultParallelism
     path = str(tmp_path / "big_corpus")
-    spark.range(par * _MIN_FANOUT_BYTES_PER_TASK // 16).selectExpr(
+    spark.range(par * FANOUT_BYTES_PER_TASK // 16).selectExpr(
         "id AS doc_id",
         "concat(md5(string(id)), md5(string(id + 1)), md5(string(id + 2))) AS text",
     ).coalesce(1).write.parquet(path)

@@ -33,10 +33,18 @@ def test_interleave_alternates_which_side_runs_first(monkeypatch):
                    "work": {"q": [2.0, 2.0, 3.0, 3.0, 6.0, 6.0]}}
 
 
-def _job_start(job, group, submit, infos):
+def _job_start(job, group, submit, infos, sql_id=None):
+    props = {"spark.jobGroup.id": group}
+    if sql_id is not None:
+        props["spark.sql.execution.id"] = str(sql_id)
     return {"Event": "SparkListenerJobStart", "Job ID": job, "Submission Time": submit,
             "Stage Infos": infos, "Stage IDs": [s["Stage ID"] for s in infos],
-            "Properties": {"spark.jobGroup.id": group}}
+            "Properties": props}
+
+
+def _sql_start(eid, description):
+    return {"Event": "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart",
+            "executionId": eid, "description": description}
 
 
 def _stage(sid, n, name="", ran_before=False):
@@ -69,7 +77,8 @@ def _job_end(job, t):
 
 def test_read_event_log_groups_gaps_and_stage_totals(tmp_path):
     """Job groups decide which query a job is billed to, jobs keep
-    submission order with their gaps, and stage totals sum the tasks that
+    submission order with their gaps, a job is named by its SQL execution
+    (by its last stage outside one), and stage totals sum the tasks that
     ran."""
     events = [
         # warm-up run of q1: a job group the reader must ignore
@@ -77,14 +86,17 @@ def test_read_event_log_groups_gaps_and_stage_totals(tmp_path):
         _task(0, 999, written=999),
         _stage_done(0, "warm"),
         _job_end(0, 900),
-        # q1, job 1: a map stage (2 tasks) and a result stage (1 task)
+        # q1, job 1: a map stage (2 tasks) and a result stage (1 task), run
+        # for SQL execution 7
+        _sql_start(7, "localCheckpoint at NativeMethodAccessorImpl.java:0"),
         _job_start(1, "profile:q1", 1000, [_stage(1, 2, "map at q1.py:1"),
-                                           _stage(2, 1, "collect at q1.py:2")]),
+                                           _stage(2, 1, "$anonfun at CompletableFuture")],
+                   sql_id=7),
         _task(1, 100, input_b=50, written=30),
         _task(1, 200, input_b=70, written=40),
         _stage_done(1, "map at q1.py:1"),
         _task(2, 10, remote=20, local=50),
-        _stage_done(2, "collect at q1.py:2"),
+        _stage_done(2, "$anonfun at CompletableFuture"),
         _job_end(1, 2500),
         # q1, job 2: reuses stage 1 (already ran, so skipped) plus a new one
         _job_start(2, "profile:q1", 2700, [_stage(1, 2, ran_before=True),
@@ -113,7 +125,9 @@ def test_read_event_log_groups_gaps_and_stage_totals(tmp_path):
     assert [j["dur_s"] for j in q1["jobs"]] == [1.5, 0.3]
     assert [j["gap_s"] for j in q1["jobs"]] == [None, 0.2]
     assert [j["n_tasks"] for j in q1["jobs"]] == [3, 4]
-    assert q1["jobs"][1]["name"] == "save at q1.py:3"
+    assert [j["sql_id"] for j in q1["jobs"]] == [7, None]
+    assert [j["name"] for j in q1["jobs"]] == [
+        "localCheckpoint at NativeMethodAccessorImpl.java:0", "save at q1.py:3"]
     assert (q1["n_jobs"], q1["n_stages"], q1["n_stages_run"], q1["n_tasks"]) == (2, 3, 3, 7)
     assert (q1["shuffle_read_bytes"], q1["shuffle_write_bytes"]) == (70, 70)
     # slowest stage first

@@ -10,7 +10,9 @@ After ``spark.stop()`` it reads the finished event log and reports, per query:
   - jobs, stages (all, and those that ran) and tasks;
   - shuffle read/write bytes;
   - every job's duration, gap after the previous job and task count, in
-    submission order;
+    submission order, named by the SQL execution it served (its
+    description: the action and call site, e.g. ``localCheckpoint at ...``)
+    or, for a job outside any SQL execution, by its last stage's call site;
   - every stage that ran: executor run time, tasks, input/shuffle bytes and
     name, slowest first.
 
@@ -49,8 +51,10 @@ def read_event_log(path: str) -> dict[str, dict]:
     of other groups (warm-up runs, no group) are ignored. Task counts follow
     the Spark UI: a job counts the tasks of its stages that had not already
     run in an earlier job. A query's stages are those its jobs list, skipped
-    ones included; figures cover the stages that completed."""
+    ones included; figures cover the stages that completed. A job is named
+    by the description of its SQL execution, else by its last stage."""
     jobs: dict[int, dict] = {}
+    sql_desc: dict[int, str] = {}  # SQL execution id -> description
     done: dict[int, str] = {}  # stage id -> name, for completed stages
     totals: dict[int, dict] = {}
     with open(path) as f:
@@ -58,13 +62,16 @@ def read_event_log(path: str) -> dict[str, dict]:
             ev = json.loads(line)
             kind = ev.get("Event")
             if kind == "SparkListenerJobStart":
-                group = (ev.get("Properties") or {}).get("spark.jobGroup.id") or ""
+                props = ev.get("Properties") or {}
+                group = props.get("spark.jobGroup.id") or ""
                 if not group.startswith(GROUP):
                     continue
                 infos = ev.get("Stage Infos", [])
                 last = max(infos, key=lambda s: s["Stage ID"], default={})
+                sql_id = props.get("spark.sql.execution.id")
                 jobs[ev["Job ID"]] = {
                     "query": group[len(GROUP):],
+                    "sql_id": int(sql_id) if sql_id is not None else None,
                     "name": last.get("Stage Name", "")[:110],
                     "submit_ms": ev["Submission Time"],
                     "end_ms": None,
@@ -72,6 +79,8 @@ def read_event_log(path: str) -> dict[str, dict]:
                                    if "Completion Time" not in s),
                     "stage_ids": ev.get("Stage IDs", []),
                 }
+            elif kind == "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart":
+                sql_desc[int(ev["executionId"])] = ev.get("description", "")
             elif kind == "SparkListenerJobEnd" and ev["Job ID"] in jobs:
                 jobs[ev["Job ID"]]["end_ms"] = ev["Completion Time"]
             elif kind == "SparkListenerStageCompleted":
@@ -98,7 +107,8 @@ def read_event_log(path: str) -> dict[str, dict]:
             j = jobs[jid]
             end, submit = j["end_ms"], j["submit_ms"]
             rows.append({
-                "jobId": jid, "name": j["name"],
+                "jobId": jid, "sql_id": j["sql_id"],
+                "name": sql_desc.get(j["sql_id"], j["name"])[:110],
                 "dur_s": _ms_to_s(end - submit) if end is not None else None,
                 "gap_s": _ms_to_s(submit - prev_end) if prev_end is not None else None,
                 "n_tasks": j["n_tasks"],
@@ -148,9 +158,11 @@ def main() -> None:
         qs = entry.queries()
         timings = {}
         for name in args.queries:
-            sc.setJobGroup(f"warm:{name}", name)
+            # the group id alone: a job description would also become the
+            # description of every SQL execution, hiding their call sites
+            sc.setLocalProperty("spark.jobGroup.id", f"warm:{name}")
             qs[name](spark, args.sf).write.format("noop").mode("overwrite").save()
-            sc.setJobGroup(GROUP + name, name)
+            sc.setLocalProperty("spark.jobGroup.id", GROUP + name)
             t0 = time.perf_counter()
             df = qs[name](spark, args.sf)
             t1 = time.perf_counter()

@@ -59,6 +59,7 @@ HOT_USER = -777  # synthetic hot key, outside the fixture's user_id range
 def main() -> int:
     from pyspark.sql import functions as F
 
+    from aws_vpc_flow_log_appender_spark import plan_gates
     from aws_vpc_flow_log_appender_spark.operators.registry import load
     from aws_vpc_flow_log_appender_spark.session import get_spark
 
@@ -97,22 +98,12 @@ def main() -> int:
     # 1a) user-keyed SMJ with AQE skew split. Thresholds are lowered so the
     # local[32] fixture's absolute sizes qualify — the RATIO (hot partition
     # ~10% of bytes vs ~1/200th median) is what's being scale-modeled.
-    prev = {
-        k: spark.conf.get(k, None)
-        for k in [
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-        ]
-    }
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1MB"
-    )
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "512KB")
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-    try:
+    with plan_gates.scoped_conf(spark, {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1MB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "512KB",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+    }):
         # materialized dimension: gives the join its own shuffle legs (see
         # module docstring — an agg-reused shuffle defeats the skew rule)
         latest = skewed.groupBy("user_id").agg(
@@ -213,12 +204,6 @@ def main() -> int:
             "ratio": round(ratio, 2),
             "partial_agg": has_partial,
         }
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
     # ---- 2) hot LSH bucket: one text duplicated into 1% of the corpus ---
     import shutil
