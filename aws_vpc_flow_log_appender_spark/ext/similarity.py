@@ -974,9 +974,9 @@ def _kmeans_oracle_sql() -> str:
 
 # --- driver-folded Lloyd training (optimization r10) -------------------------
 #
-# The unrolled-CTE training shape (kept below for the streaming one-time
-# trainer) pays, PER Lloyd round, a corpus-keyed Exchange for the
-# min(struct) argmin groupBy(vec_id) — 8N rows shuffled — plus a second
+# The unrolled-CTE training shape (the DuckDB oracle's, above), run in
+# Spark, pays PER Lloyd round a corpus-keyed Exchange for the min(struct)
+# argmin groupBy(vec_id) — 8N rows shuffled — plus a second
 # Exchange for the centroid update, and its triple-unrolled plan costs
 # seconds of driver-side analysis per query. But the codebook itself is a
 # BOUNDED CONSTANT (KM_K x EMB_DIM doubles): the classical distributed
@@ -1024,13 +1024,12 @@ def _km_vecs_body(where: str | None = None) -> str:
     )
 
 
-# vecs bodies over an ALREADY-MATERIALIZED (vec_id, v, vv) checkpoint — the
+# vecs body over an ALREADY-MATERIALIZED (vec_id, v, vv) checkpoint — the
 # {v} placeholder binds to the checkpoint instead of the raw embeddings view
 _VECS_CK_BODY = "SELECT vec_id, v, vv FROM {v}"
-_PQ_CK_BODY = "SELECT vec_id, v FROM {v}"
 
 
-def _vecs_ck(e, tag: str, where: str | None = None, eager: bool = False):
+def _vecs_ck(e, tag: str):
     """Materialize the projected training relation (vec_id, v, vv) ONCE
     before the Lloyd rounds (the cache-before-iterate discipline of MLlib's
     own KMeans, guide §5). Used ONLY where a trainer plus a multi-read tail
@@ -1049,16 +1048,16 @@ def _vecs_ck(e, tag: str, where: str | None = None, eager: bool = False):
     checkpoint as a side effect — a separate eager count() job paid one
     extra driver-job latency for nothing. The r10 race that forced eager
     materialization (two thread-pooled trainer chains hitting an
-    unmaterialized cache concurrently) is gone: _dual_literal_train now
-    runs its two trainings inside single merged jobs. Failure-domain note
+    unmaterialized cache concurrently) is gone: _lloyd_train runs both
+    trainings inside single merged jobs. Failure-domain note
     for real clusters: localCheckpoint pins partitions to executor-local
     storage without lineage replay — an executor loss makes them
     unrecoverable; acceptable here because every consumer job is
     re-runnable from the source parquet."""
     from .dedup import _sql_over
 
-    return _sql_over(e, f"{tag}_vecs", _km_vecs_body(where)).localCheckpoint(
-        eager=eager
+    return _sql_over(e, f"{tag}_vecs", _km_vecs_body()).localCheckpoint(
+        eager=False
     )
 
 
@@ -1086,115 +1085,17 @@ def _km_best_sql(cb, v: str = "v", vv: str = "vv") -> str:
     return structs[0] if len(structs) == 1 else f"least({', '.join(structs)})"
 
 
-def _trainer_conf(rel, allow_interp: bool = True):
-    """Scoped execution conf for the tiny bounded driver-fold trainer
-    queries over ``rel`` (optimization r11, guide §1.2 step 3). Two
-    unconditional flips plus a size-gated pair, all restored on exit;
-    queries built OUTSIDE the block keep their creation-time conf snapshot:
-
-    - adaptive.enabled=false: AQE runs every intermediate shuffle stage as
-      its OWN driver job, so a Lloyd-round aggregate (codebook-bounded
-      output riding a cached checkpoint) pays 2-3 sequential job latencies
-      where a non-adaptive plan is ONE job. AQE buys nothing here — the
-      output is bounded by codebook constants, no skew, nothing to
-      re-plan.
-    - shuffle.partitions=1: the rounds' reduce side holds at most
-      KM_K x EMB_DIM / PQ_M x PQ_K x PQ_SUB cells AT ANY CORPUS SCALE
-      (map-side partial aggregation emits <= codebook rows per mapper), so
-      this is a scale-INDEPENDENT bound, not a local-core-count tune —
-      profiled at 32 inherited partitions the two merged rounds ran 66
-      tasks for 24 output rows.
-
-    - codegen.wholeStage=false + codegen.factoryMode=NO_CODEGEN, when
-      ``allow_interp`` and ``rel``'s estimate is below
-      ``plan_gates.TRAINER_INTERP_BYTES``: each round statement embeds a
-      fresh literal codebook, so codegen can never hit its cache and every
-      statement pays a full compile that interpreted execution skips.
-      Interpreted and generated evaluation of the same expression tree
-      are semantically identical (same operation order), so values are
-      unaffected either way; the full oracle sweep pins it.
-
-    Values are unaffected: partition-count changes only reorder the avg
-    partial sums, which the 1e-6 rounding grid already absorbs across
-    every session layout (the 8-partition test session vs the
-    32-partition bench)."""
-    settings = {"spark.sql.adaptive.enabled": "false",
-                "spark.sql.shuffle.partitions": "1"}
-    if allow_interp and not plan_gates.is_large(
-            rel, total=plan_gates.TRAINER_INTERP_BYTES):
-        settings["spark.sql.codegen.wholeStage"] = "false"
-        settings["spark.sql.codegen.factoryMode"] = "NO_CODEGEN"
-    return plan_gates.scoped_conf(rel.sparkSession, settings)
-
-
-def _km_lloyd_literal(e, tag: str, vecs_body: str | None = None,
-                      k: int = KM_K, iters: int = KM_ITERS,
-                      allow_interp: bool = True):
-    """Run ``iters`` Lloyd rounds with the codebook driver-held; returns the
-    final codebook as [(cid, [element sql], [element value])]. One
-    aggregate job per round (map-side combined K x EMB_DIM cells), one
-    tiny LIMIT-k job for the seeds — no corpus-keyed exchange anywhere.
-
-    ``allow_interp=False`` keeps codegen on for the trainer statements
-    even below the size gate: _train_mem's consumers measured a reproducible
-    ~7-16% loss under the interpreted trainer (3/3 interleaved A/B
-    passes) — their final decision query reuses the trainer's generated
-    projection shape from the codegen cache, and the interpreted rounds
-    no longer pre-warm it — while every other trainer path measured
-    0.75-0.94 (see OPTIMIZATION_r11.md §4c)."""
-    from .dedup import _sql_over
-
-    if vecs_body is None:
-        vecs_body = _km_vecs_body()
-    with _trainer_conf(e, allow_interp):
-        seeds = _sql_over(
-            e, f"{tag}_seed",
-            f"WITH vecs AS ({vecs_body}) "
-            f"SELECT v FROM vecs ORDER BY vec_id LIMIT {k}",
-        ).collect()
-        cb = [
-            (j, [_dbl_lit(x) for x in row.v], list(row.v))
-            for j, row in enumerate(seeds)
-        ]
-        for i in range(iters):
-            terms = ", ".join(
-                f"CAST(floor(avg(v[{p}]) * {KM_SCALE}D + 0.5D) AS BIGINT)"
-                f" AS s{p}"
-                for p in range(EMB_DIM)
-            )
-            rows = _sql_over(
-                e, f"{tag}_lloyd{i}",
-                f"WITH vecs AS ({vecs_body}) "
-                f"SELECT best.cid AS cid, {terms} FROM "
-                f"(SELECT {_km_best_sql(cb)} AS best, v FROM vecs) "
-                f"GROUP BY best.cid",
-            ).collect()
-            cb = [
-                (
-                    row.cid,
-                    [f"{row[f's{p}']}L / {KM_SCALE}D" for p in range(EMB_DIM)],
-                    [row[f"s{p}"] / KM_SCALE for p in range(EMB_DIM)],
-                )
-                for row in sorted(rows, key=lambda r: r.cid)
-            ]
-    return cb
-
-
-def _km_literal_parts_spark(e, tag: str, vecs_body: str | None = None,
-                            with_sc: bool = False,
-                            cb: list | None = None,
-                            allow_interp: bool = True) -> list[str]:
-    """Driver-folded replacement for _km_train_parts_spark: RUNS the Lloyd
-    rounds (2 + KM_ITERS small jobs), then emits the same-named CTEs the
-    unrolled form exposed — ``vecs``, ``c{KM_ITERS}`` (literal VALUES) and
-    ``a{KM_ITERS}`` (row-wise argmin, zero Exchanges), plus ``sc{KM_ITERS}``
-    (the full (vector, centroid, d) pair relation, lazily exploded) when
-    ``with_sc`` — so every downstream tail keeps its text unchanged."""
+def _km_literal_parts_spark(cb, vecs_body: str | None = None,
+                            with_sc: bool = False) -> list[str]:
+    """Spark twin of _km_oracle_train_parts over the codebook ``cb`` that
+    _lloyd_train returns: emits the same-named CTEs the unrolled form
+    exposes — ``vecs``, ``c{KM_ITERS}`` (literal VALUES) and ``a{KM_ITERS}``
+    (row-wise argmin, zero Exchanges), plus ``sc{KM_ITERS}`` (the full
+    (vector, centroid, d) pair relation, lazily exploded) when ``with_sc`` —
+    so every downstream tail keeps its text unchanged."""
     if vecs_body is None:
         vecs_body = _km_vecs_body()
     fin = KM_ITERS
-    if cb is None:
-        cb = _km_lloyd_literal(e, tag, vecs_body, allow_interp=allow_interp)
     cb_rows = ", ".join(
         f"({cid}, array({', '.join(elem_sql)}))" for cid, elem_sql, _ in cb
     )
@@ -1258,7 +1159,8 @@ def sim_kmeans_cells(spark, sf_dir):
     from .dedup import _sql_over
 
     e = load(spark, sf_dir, "embeddings")
-    parts = _km_literal_parts_spark(e, "kmeans")
+    cb, _ = _lloyd_train(e, "kmeans", _km_vecs_body(), pq=False)
+    parts = _km_literal_parts_spark(cb)
     fin = KM_ITERS
     parts.append(f"""
     SELECT a.cid AS cluster_id,
@@ -1329,7 +1231,8 @@ def sim_ivf_trained_topk(spark, sf_dir):
 
     e = load(spark, sf_dir, "embeddings")
     fin = KM_ITERS
-    parts = _km_literal_parts_spark(e, "kmtrain")
+    cb, _ = _lloyd_train(e, "kmtrain", _km_vecs_body(), pq=False)
+    parts = _km_literal_parts_spark(cb)
     # sqrt(vv) is the per-row norm factor of the pair cosine — one sqrt per
     # row at the checkpoint instead of two 64-element folds per candidate
     # pair (the _cos_prenorm discipline; vv folds in _km_dot_sql order,
@@ -1429,7 +1332,8 @@ def sim_ivf_trained_multiprobe(spark, sf_dir):
 
     e = load(spark, sf_dir, "embeddings")
     fin = KM_ITERS
-    parts = _km_literal_parts_spark(e, "kmprobe", with_sc=True)
+    cb, _ = _lloyd_train(e, "kmprobe", _km_vecs_body(), pq=False)
+    parts = _km_literal_parts_spark(cb, with_sc=True)
     # sqrt(vv) rides the checkpoint per row (the _cos_prenorm discipline)
     parts.append(f"""
     SELECT 0 AS kind, vec_id, v, sqrt(vv) AS nrm, cid,
@@ -1559,64 +1463,6 @@ def _pq_oracle_train_parts(include_vecs: bool = True) -> list[str]:
     return parts
 
 
-def _pq_assign_spark(cent: str, i: int) -> str:
-    """One PQ Lloyd assignment as Spark-SQL CTEs: min(struct(d, cid)) argmin
-    per (vec_id, m) — partial-aggregable, same (d, cid) total order as the
-    oracle's row_number. first(sv) is deterministic by value (sv is
-    functionally dependent on the (vec_id, m) group key)."""
-    return f"""
-    psc{i} AS (
-      SELECT /*+ BROADCAST(c) */ s.vec_id, s.m, s.sv, c.cid,
-             (s.svv - 2.0D * {_km_dot_sql("s.sv", "c.c")} + c.cc) AS d
-      FROM sub s JOIN (
-        SELECT m, cid, c, {_km_dot_sql("c", "c")} AS cc FROM {cent}
-      ) c ON s.m = c.m
-    ),
-    pa{i} AS (
-      SELECT vec_id, m, sv, best.cid AS cid, best.d AS d FROM (
-        SELECT vec_id, m, first(sv) AS sv, min(struct(d, cid)) AS best
-        FROM psc{i} GROUP BY vec_id, m
-      )
-    )"""
-
-
-def _pq_update_spark(i: int) -> str:
-    terms = ", ".join(
-        f"floor(avg(sv[{p}]) * {KM_SCALE}D + 0.5D) / {KM_SCALE}D"
-        for p in range(PQ_SUB)
-    )
-    return f"""
-    pc{i + 1} AS (
-      SELECT m, cid, array({terms}) AS c FROM pa{i} GROUP BY m, cid
-    )"""
-
-
-def _pq_train_parts_spark(include_vecs: bool = True) -> list[str]:
-    head = f"""
-    WITH vecs AS (
-      SELECT vec_id, CAST(embedding AS ARRAY<DOUBLE>) AS v FROM {{v}}
-    ),""" if include_vecs else "\n    ,"
-    parts = [head + f"""
-    sub AS (
-      SELECT vec_id, m, sv, {_km_dot_sql("sv", "sv")} AS svv FROM (
-        SELECT vec_id, m, slice(v, m * {PQ_SUB} + 1, {PQ_SUB}) AS sv
-        FROM vecs
-        LATERAL VIEW explode(sequence(0, {PQ_M - 1})) AS m
-      )
-    ),
-    pc0 AS (
-      SELECT m, CAST(rn - 1 AS INT) AS cid, sv AS c FROM (
-        SELECT m, sv, row_number() OVER (PARTITION BY m ORDER BY vec_id) AS rn
-        FROM sub
-      ) WHERE rn <= {PQ_K}
-    )"""]
-    for i in range(PQ_ITERS):
-        parts.append("," + _pq_assign_spark(f"pc{i}", i))
-        parts.append("," + _pq_update_spark(i))
-    parts.append("," + _pq_assign_spark(f"pc{PQ_ITERS}", PQ_ITERS))
-    return parts
-
-
 _PQ_SUB_BODY = (
     f"SELECT vec_id, m, sv, {_km_dot_sql('sv', 'sv')} AS svv FROM ("
     f"SELECT vec_id, m, slice(v, m * {PQ_SUB} + 1, {PQ_SUB}) AS sv "
@@ -1650,63 +1496,15 @@ def _pq_centroid_case(pcb, what: str) -> str:
     return f"CASE m {' '.join(branches)} END"
 
 
-def _pq_lloyd_literal(e, tag: str, vecs_sql: str = _PQ_VECS_BODY):
-    """Driver-folded PQ training (the _km_lloyd_literal discipline with the
-    grouping key widened to (m, cid)): per round ONE map-side-combined
-    aggregate of PQ_M x PQ_K x PQ_SUB avg cells — no (vec_id, m)-keyed
-    Exchange. Returns {(m, cid): ([element sql], [element value])}.
-    ``vecs_sql`` swaps the vecs derivation for a checkpoint read
-    (_PQ_CK_BODY) when the caller pre-materialized the vectors."""
-    from .dedup import _sql_over
-
-    prefix = f"WITH vecs AS ({vecs_sql}), sub AS ({_PQ_SUB_BODY}) "
-    with _trainer_conf(e):
-        seeds = _sql_over(
-            e, f"{tag}_pqseed",
-            prefix + f"""
-            SELECT m, CAST(rn - 1 AS INT) AS cid, sv FROM (
-              SELECT m, sv, row_number() OVER (PARTITION BY m ORDER BY vec_id)
-                     AS rn FROM sub
-            ) WHERE rn <= {PQ_K}""",
-        ).collect()
-        pcb = {
-            (row.m, row.cid): ([_dbl_lit(x) for x in row.sv], list(row.sv))
-            for row in seeds
-        }
-        for i in range(PQ_ITERS):
-            terms = ", ".join(
-                f"CAST(floor(avg(sv[{p}]) * {KM_SCALE}D + 0.5D) AS BIGINT)"
-                f" AS s{p}"
-                for p in range(PQ_SUB)
-            )
-            rows = _sql_over(
-                e, f"{tag}_pqlloyd{i}",
-                prefix + f"SELECT m, best.cid AS cid, {terms} FROM "
-                f"(SELECT m, {_pq_centroid_case(pcb, 'best')} AS best, sv"
-                f" FROM sub) GROUP BY m, best.cid",
-            ).collect()
-            pcb = {
-                (row.m, row.cid): (
-                    [f"{row[f's{p}']}L / {KM_SCALE}D" for p in range(PQ_SUB)],
-                    [row[f"s{p}"] / KM_SCALE for p in range(PQ_SUB)],
-                )
-                for row in rows
-            }
-    return pcb
-
-
-def _pq_literal_parts_spark(e, tag: str, include_vecs: bool = True,
-                            pcb: dict | None = None,
+def _pq_literal_parts_spark(pcb, include_vecs: bool = True,
                             vecs_sql: str = _PQ_VECS_BODY) -> list[str]:
-    """Driver-folded replacement for _pq_train_parts_spark: runs the PQ
-    Lloyd rounds (2 + PQ_ITERS small jobs) and emits the same-named CTEs —
-    ``sub``, ``pc{PQ_ITERS}`` (literal VALUES), ``pa{PQ_ITERS}`` (row-wise
-    argmin) and ``psc{PQ_ITERS}`` (the lazily-exploded pair relation) — so
-    every downstream tail keeps its text unchanged. ``vecs_sql`` swaps the
-    vecs derivation for a checkpoint read (see _vecs_ck)."""
+    """Spark twin of _pq_oracle_train_parts over the codebooks ``pcb`` that
+    _lloyd_train returns: emits the same-named CTEs — ``sub``,
+    ``pc{PQ_ITERS}`` (literal VALUES), ``pa{PQ_ITERS}`` (row-wise argmin)
+    and ``psc{PQ_ITERS}`` (the lazily-exploded pair relation) — so every
+    downstream tail keeps its text unchanged. ``include_vecs=False`` omits
+    the vecs CTE so the chain can follow a prefix that defines it."""
     fin = PQ_ITERS
-    if pcb is None:
-        pcb = _pq_lloyd_literal(e, tag, vecs_sql)
     head = f"""
     WITH vecs AS ({vecs_sql}),""" if include_vecs else "\n    ,"
     pcb_rows = ", ".join(
@@ -1730,100 +1528,119 @@ def _pq_literal_parts_spark(e, tag: str, include_vecs: bool = True,
     )"""]
 
 
-def _dual_literal_train(vck, tag: str):
-    """Train the coarse (KM) and product (PQ) quantizers with MERGED driver
-    jobs (optimization r11, guide §2.6/§5 — VERDICT r10 "Next round" #2:
-    the heavy tail was driver-job orchestration, so the fix is fewer,
-    fatter jobs, not more concurrency).
+def _lloyd_train(rel, tag: str, vecs_body: str, km: bool = True,
+                 pq: bool = True, allow_interp: bool = True):
+    """The driver-folded Lloyd trainer for the coarse (KM) codebook, the
+    product (PQ) codebooks, or both, over ``vecs_body`` — a (vec_id, v[, vv])
+    derivation of ``rel`` bound at ``{v}``. The codebooks are bounded
+    constants, so they are held on the driver and re-embedded as literals
+    each round. Returns (cb, pcb): cb is [(cid, [element sql], [element
+    value])], pcb is {(m, cid): ([element sql], [element value])}, and an
+    untrained side is None.
 
-    ONE TakeOrdered job collects the seed vectors for BOTH codebooks: the
-    PQ seeds are exact Python slices of the KM seed vectors, because sub's
-    sv is slice(v, m*PQ_SUB+1, PQ_SUB) over the same CAST array and the
-    per-m row_number seeding picks exactly the PQ_K smallest vec_ids —
-    slicing the collected doubles reproduces the sv values bit-identically.
-    Then each Lloyd round runs BOTH update aggregates as ONE UNION ALL job
-    over the same vecs checkpoint (rows tagged grp 0=KM / 1=PQ, sums
-    carried as one BIGINT array): the two aggregate subtrees are textually
-    the per-side queries the r10 thread-pool form submitted as separate
-    jobs, so the per-cell scaled-integer sums are unchanged. Total:
-    1 + max(KM_ITERS, PQ_ITERS) driver jobs where the r10 form paid
-    2 * (1 + ITERS) thread-pooled ones (plus this first job materializes
-    the lazy vecs checkpoint, retiring its separate eager count() job).
-    Returns (km codebook, pq codebook)."""
+    ONE TakeOrdered job collects the seeds, the first KM_K / PQ_K vectors
+    by vec_id. The PQ seeds are exact Python slices of those rows: sub's sv
+    is slice(v, m*PQ_SUB+1, PQ_SUB) over the same doubles, and the oracle's
+    per-m row_number seeding picks the same PQ_K smallest vec_ids. Each
+    round is then ONE job, a UNION ALL of the trained sides' update
+    aggregates (a single-element union when one side is trained): rows
+    tagged grp 0=KM / 1=PQ, the per-cell scaled-integer sums carried as one
+    BIGINT array, each side map-side combined to KM_K x EMB_DIM /
+    PQ_M x PQ_K x PQ_SUB cells, so no corpus-keyed Exchange runs anywhere.
+    Total: 1 + max(KM_ITERS, PQ_ITERS) driver jobs over the trained sides.
+    Over a lazy _vecs_ck checkpoint the seed job also materializes it.
+
+    ``allow_interp=False`` keeps codegen on for the trainer statements
+    even below the size gate: _train_mem's consumers measured a reproducible
+    ~7-16% loss under the interpreted trainer (3/3 interleaved A/B
+    passes) — their final decision query reuses the trainer's generated
+    projection shape from the codegen cache, and the interpreted rounds
+    no longer pre-warm it — while every other trainer path measured
+    0.75-0.94 (see OPTIMIZATION_r11.md §4c)."""
     from .dedup import _sql_over
 
-    with _trainer_conf(vck):
-        return _dual_literal_train_inner(vck, tag)
+    prefix = f"WITH vecs AS ({vecs_body}), sub AS ({_PQ_SUB_BODY}) "
+    km_iters, pq_iters = KM_ITERS if km else 0, PQ_ITERS if pq else 0
 
+    def sums(col: str, n: int) -> str:
+        """The per-cell position means on the 1e-6 grid, as exact BIGINTs."""
+        return "array(" + ", ".join(
+            f"CAST(floor(avg({col}[{p}]) * {KM_SCALE}D + 0.5D) AS BIGINT)"
+            for p in range(n)
+        ) + ")"
 
-def _dual_literal_train_inner(vck, tag: str):
-    from .dedup import _sql_over
+    def literal(vals) -> tuple[list[str], list[float]]:
+        """Seed doubles as exact literals (repr round-trip)."""
+        return [_dbl_lit(x) for x in vals], list(vals)
 
-    seeds = _sql_over(
-        vck, f"{tag}_seed",
-        f"WITH vecs AS ({_VECS_CK_BODY}) "
-        f"SELECT vec_id, v FROM vecs ORDER BY vec_id LIMIT {max(KM_K, PQ_K)}",
-    ).collect()
-    cb = [
-        (j, [_dbl_lit(x) for x in row.v], list(row.v))
-        for j, row in enumerate(seeds[:KM_K])
-    ]
-    pcb = {}
-    for j, row in enumerate(seeds[:PQ_K]):
-        for m in range(PQ_M):
-            sv = list(row.v[m * PQ_SUB:(m + 1) * PQ_SUB])
-            pcb[(m, j)] = ([_dbl_lit(x) for x in sv], sv)
-    km_terms = ", ".join(
-        f"CAST(floor(avg(v[{p}]) * {KM_SCALE}D + 0.5D) AS BIGINT) AS s{p}"
-        for p in range(EMB_DIM)
-    )
-    pq_terms = ", ".join(
-        f"CAST(floor(avg(sv[{p}]) * {KM_SCALE}D + 0.5D) AS BIGINT) AS s{p}"
-        for p in range(PQ_SUB)
-    )
-    km_arr = ", ".join(f"s{p}" for p in range(EMB_DIM))
-    pq_arr = ", ".join(f"s{p}" for p in range(PQ_SUB))
-    for i in range(max(KM_ITERS, PQ_ITERS)):
-        sides = []
-        if i < KM_ITERS:
-            sides.append(
-                f"SELECT 0 AS grp, -1 AS m, cid, array({km_arr}) AS s FROM ("
-                f"SELECT best.cid AS cid, {km_terms} FROM "
-                f"(SELECT {_km_best_sql(cb)} AS best, v FROM vecs) "
-                f"GROUP BY best.cid)"
-            )
-        if i < PQ_ITERS:
-            sides.append(
-                f"SELECT 1 AS grp, m, cid, array({pq_arr}) AS s FROM ("
-                f"SELECT m, best.cid AS cid, {pq_terms} FROM "
-                f"(SELECT m, {_pq_centroid_case(pcb, 'best')} AS best, sv"
-                f" FROM sub) GROUP BY m, best.cid)"
-            )
-        rows = _sql_over(
-            vck, f"{tag}_dual{i}",
-            f"WITH vecs AS ({_VECS_CK_BODY}), sub AS ({_PQ_SUB_BODY}) "
-            + " UNION ALL ".join(sides),
+    def scaled(s) -> tuple[list[str], list[float]]:
+        """A round's scaled-integer sums as ``{s}L / 1e6D`` and its values."""
+        return [f"{x}L / {KM_SCALE}D" for x in s], [x / KM_SCALE for x in s]
+
+    # Scoped execution conf for the tiny bounded statements, restored on
+    # exit; queries built outside the block keep their creation-time conf:
+    # - adaptive.enabled=false: AQE runs every intermediate shuffle stage as
+    #   its own driver job, so a round aggregate pays 2-3 sequential job
+    #   latencies where a non-adaptive plan is ONE job. Its output is
+    #   bounded by codebook constants: no skew, nothing to re-plan.
+    # - shuffle.partitions=1: the reduce side holds at most the codebook
+    #   cells at ANY corpus scale (map-side partial aggregation emits <=
+    #   codebook rows per mapper) — profiled at 32 inherited partitions the
+    #   merged rounds ran 66 tasks for 24 output rows.
+    # - codegen.wholeStage=false + codegen.factoryMode=NO_CODEGEN, when
+    #   ``allow_interp`` and ``rel``'s estimate is below
+    #   plan_gates.TRAINER_INTERP_BYTES: each round embeds a fresh literal
+    #   codebook, so codegen can never hit its cache and every statement
+    #   pays a full compile that interpreted execution skips.
+    # Values are unaffected: interpreted and generated evaluation keep the
+    # operation order, and partition-count changes only reorder the avg
+    # partial sums, which the 1e-6 grid absorbs (the full oracle sweep pins
+    # both the 8-partition test session and the 32-partition bench).
+    settings = {"spark.sql.adaptive.enabled": "false",
+                "spark.sql.shuffle.partitions": "1"}
+    if allow_interp and not plan_gates.is_large(
+            rel, total=plan_gates.TRAINER_INTERP_BYTES):
+        settings["spark.sql.codegen.wholeStage"] = "false"
+        settings["spark.sql.codegen.factoryMode"] = "NO_CODEGEN"
+    cb = pcb = None
+    with plan_gates.scoped_conf(rel.sparkSession, settings):
+        seeds = _sql_over(
+            rel, f"{tag}_seed",
+            prefix + "SELECT vec_id, v FROM vecs ORDER BY vec_id "
+            f"LIMIT {max(KM_K if km else 0, PQ_K if pq else 0)}",
         ).collect()
-        if i < KM_ITERS:
-            cb = [
-                (
-                    row.cid,
-                    [f"{s}L / {KM_SCALE}D" for s in row.s],
-                    [s / KM_SCALE for s in row.s],
-                )
-                for row in sorted(
-                    (r for r in rows if r.grp == 0), key=lambda r: r.cid
-                )
-            ]
-        if i < PQ_ITERS:
+        if km:
+            cb = [(j, *literal(row.v)) for j, row in enumerate(seeds[:KM_K])]
+        if pq:
             pcb = {
-                (row.m, row.cid): (
-                    [f"{s}L / {KM_SCALE}D" for s in row.s],
-                    [s / KM_SCALE for s in row.s],
-                )
-                for row in rows
-                if row.grp == 1
+                (m, j): literal(row.v[m * PQ_SUB:(m + 1) * PQ_SUB])
+                for j, row in enumerate(seeds[:PQ_K])
+                for m in range(PQ_M)
             }
+        for i in range(max(km_iters, pq_iters)):
+            sides = []
+            if i < km_iters:
+                sides.append(
+                    f"SELECT 0 AS grp, -1 AS m, best.cid AS cid,"
+                    f" {sums('v', EMB_DIM)} AS s"
+                    f" FROM (SELECT {_km_best_sql(cb)} AS best, v FROM vecs)"
+                    f" GROUP BY best.cid"
+                )
+            if i < pq_iters:
+                sides.append(
+                    f"SELECT 1 AS grp, m, best.cid AS cid,"
+                    f" {sums('sv', PQ_SUB)} AS s"
+                    f" FROM (SELECT m, {_pq_centroid_case(pcb, 'best')} AS best,"
+                    f" sv FROM sub) GROUP BY m, best.cid"
+                )
+            rows = _sql_over(
+                rel, f"{tag}_lloyd{i}", prefix + " UNION ALL ".join(sides)
+            ).collect()
+            if i < km_iters:
+                cb = [(r.cid, *scaled(r.s))
+                      for r in sorted(rows, key=lambda r: r.cid) if r.grp == 0]
+            if i < pq_iters:
+                pcb = {(r.m, r.cid): scaled(r.s) for r in rows if r.grp == 1}
     return cb, pcb
 
 
@@ -1902,7 +1719,8 @@ def sim_pq_adc(spark, sf_dir):
 
     e = load(spark, sf_dir, "embeddings")
     fin = PQ_ITERS
-    parts = _pq_literal_parts_spark(e, "pqtrain")
+    _, pcb = _lloyd_train(e, "pqtrain", _PQ_VECS_BODY, km=False)
+    parts = _pq_literal_parts_spark(pcb)
     parts.append(f"""
     SELECT 0 AS kind, vec_id, m, cid, CAST(NULL AS DOUBLE) AS d FROM pa{fin}
     UNION ALL
@@ -2038,12 +1856,9 @@ def sim_ivfpq_topk(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings")
     kfin, pfin = KM_ITERS, PQ_ITERS
     vck = _vecs_ck(e, "ivfpq")
-    cb_km, cb_pq = _dual_literal_train(vck, "ivfpq")
-    parts = _km_literal_parts_spark(vck, "ivfpq", with_sc=True, cb=cb_km,
-                                    vecs_body=_VECS_CK_BODY)
-    parts.extend(
-        _pq_literal_parts_spark(vck, "ivfpq", include_vecs=False, pcb=cb_pq)
-    )
+    cb, pcb = _lloyd_train(vck, "ivfpq", _VECS_CK_BODY)
+    parts = _km_literal_parts_spark(cb, _VECS_CK_BODY, with_sc=True)
+    parts.extend(_pq_literal_parts_spark(pcb, include_vecs=False))
     parts.append(f"""
     SELECT 0 AS kind, a.vec_id, a.cid AS cell, p.m, p.cid AS code,
            CAST(NULL AS DOUBLE) AS d
@@ -2156,7 +1971,8 @@ def sim_pq_distortion(spark, sf_dir):
 
     e = load(spark, sf_dir, "embeddings")
     fin = PQ_ITERS
-    parts = _pq_literal_parts_spark(e, "pqdist")
+    _, pcb = _lloyd_train(e, "pqdist", _PQ_VECS_BODY, km=False)
+    parts = _pq_literal_parts_spark(pcb)
     parts.append(f"""
     SELECT CAST(m AS INTEGER) AS m,
            CAST(count(*) AS BIGINT) AS n_vecs,
@@ -2278,12 +2094,9 @@ def _ivfpq_vec_checkpoint(spark, sf_dir, tag: str):
 
     e = load(spark, sf_dir, "embeddings")
     vck = _vecs_ck(e, tag)
-    cb_km, cb_pq = _dual_literal_train(vck, tag)
-    parts = _km_literal_parts_spark(vck, tag, with_sc=True, cb=cb_km,
-                                    vecs_body=_VECS_CK_BODY)
-    parts.extend(
-        _pq_literal_parts_spark(vck, tag, include_vecs=False, pcb=cb_pq)
-    )
+    cb, pcb = _lloyd_train(vck, tag, _VECS_CK_BODY)
+    parts = _km_literal_parts_spark(cb, _VECS_CK_BODY, with_sc=True)
+    parts.extend(_pq_literal_parts_spark(pcb, include_vecs=False))
     parts.append(_ivfpq_vec_union_sql())
     return _sql_over(vck, tag, "".join(parts)).localCheckpoint(eager=False)
 
@@ -2581,8 +2394,8 @@ def _train_mem(e, tag: str):
 
     fin = KM_ITERS
     vck = _vecs_ck(e, tag)
-    parts = _km_literal_parts_spark(vck, tag, vecs_body=_VECS_CK_BODY,
-                                    allow_interp=False)
+    cb, _ = _lloyd_train(vck, tag, _VECS_CK_BODY, pq=False, allow_interp=False)
+    parts = _km_literal_parts_spark(cb, _VECS_CK_BODY)
     # a{fin} carries vv directly (r10) — the old `JOIN vecs v2 ON vec_id`
     # existed only to re-attach the self-dot and cost a corpus-sized join
     # per training; the oracle keeps its join text (same values either way)
@@ -2996,10 +2809,10 @@ def sim_ivf_incremental_assign(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings")
     fin = KM_ITERS
     # training head over the filtered vecs (the new batch excluded),
-    # driver-folded (_km_literal_parts_spark)
-    parts = _km_literal_parts_spark(
-        e, "ivfinc", vecs_body=_km_vecs_body(f"NOT ({_INC_BATCH_PRED})")
-    )
+    # driver-folded (_lloyd_train)
+    train_body = _km_vecs_body(f"NOT ({_INC_BATCH_PRED})")
+    cb, _ = _lloyd_train(e, "ivfinc", train_body, pq=False)
+    parts = _km_literal_parts_spark(cb, train_body)
     parts.append(f"""
     SELECT 0 AS kind, cid, d,
            CAST(NULL AS ARRAY<DOUBLE>) AS c, CAST(NULL AS DOUBLE) AS cc
@@ -3178,8 +2991,8 @@ def sim_ivf_minibatch_update(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings")
     fin = KM_ITERS
     train_body = _km_vecs_body("NOT (vec_id % 4 = 1)")
-    cb = _km_lloyd_literal(e, "ivfmb", train_body)
-    parts = _km_literal_parts_spark(e, "ivfmb", vecs_body=train_body, cb=cb)
+    cb, _ = _lloyd_train(e, "ivfmb", train_body, pq=False)
+    parts = _km_literal_parts_spark(cb, train_body)
     cterms = ", ".join(
         f"floor(CAST(s{p} AS DOUBLE) / (n_train + n_new) + 0.5D)"
         f" / {KM_SCALE}D"

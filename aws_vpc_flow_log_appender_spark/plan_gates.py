@@ -41,7 +41,7 @@ INROW_DEDUP_BYTES_PER_TASK = 4 << 20
 # shuffle join stands.
 SEMDEDUP_BROADCAST_BYTES = 16 << 20
 
-# Interpreted trainer statements (ext/similarity._trainer_conf). Every Lloyd
+# Interpreted trainer statements (ext/similarity._lloyd_train). Every Lloyd
 # round embeds a fresh literal codebook, so its generated code never hits
 # the codegen cache and each statement pays a full compile (~0.1 s) that
 # interpreted execution skips, at ~2 us/row of interpreted overhead; the two

@@ -1581,25 +1581,22 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ext.similarity import (
         KM_SCALE,
         _km_dot_sql,
-        _km_lloyd_literal,
         _km_vecs_body,
+        _lloyd_train,
     )
 
     e = load(spark, sf_dir, "embeddings")
 
     # --- one-time training over the indexed subset; checkpoint the codebook.
-    # Driver-folded Lloyd (optimization r10, the batch family's
-    # _km_lloyd_literal): the old unrolled-CTE trainer paid KM_ITERS
-    # corpus-keyed Exchanges and a triple-unrolled analyzed plan at every
-    # stream setup; the folded form is 2 + KM_ITERS small map-side-combined
-    # jobs and the final codebook evaluates from exact literals (round >= 1
-    # elements are scaled-integer BIGINTs re-emitted as {s}L / 1e6D, c0
-    # doubles round-trip via repr() — bit-identical to the unrolled c{fin},
-    # the §1 OPTIMIZATION_r10 equivalence argument; cc keeps the same
-    # in-plan fold). The written parquet is byte-identical, so the stored
-    # index and every per-batch assignment are unchanged.
-    cb = _km_lloyd_literal(
-        e, "stream_ivf_train", _km_vecs_body("NOT (vec_id % 4 = 1)")
+    # The batch family's driver-folded trainer (_lloyd_train, KM side only):
+    # 1 + KM_ITERS small map-side-combined jobs, no corpus-keyed Exchange.
+    # The final codebook evaluates from exact literals (round >= 1 elements
+    # are scaled-integer BIGINTs re-emitted as {s}L / 1e6D, c0 doubles
+    # round-trip via repr()) — bit-identical to the oracle's unrolled
+    # c{fin}, the §1 OPTIMIZATION_r10 equivalence argument; cc keeps the
+    # same in-plan fold.
+    cb, _ = _lloyd_train(
+        e, "stream_ivf_train", _km_vecs_body("NOT (vec_id % 4 = 1)"), pq=False
     )
     cb_rows = ", ".join(
         f"({cid}, array({', '.join(elem_sql)}))" for cid, elem_sql, _ in cb

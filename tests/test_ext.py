@@ -1548,3 +1548,14 @@ def test_incremental_bloom_words_scale_with_snapshot(spark):
     w_small = _snapshot_bloom_words(spark, "/root/testdata/sf0.01")
     w_big = _snapshot_bloom_words(spark, "/root/testdata/sf0.1")
     assert w_small < w_big, (w_small, w_big)
+
+
+def test_graph_bounded_collects_raise_on_overflow(spark, sf_dir, monkeypatch):
+    """The limit(bound+1) guards must fire as errors, not driver OOMs."""
+    from aws_vpc_flow_log_appender_spark.operators import graphs as g
+
+    monkeypatch.setattr(g, "_EDGE_BOUND", 0)  # any edge now overflows
+    with pytest.raises(RuntimeError, match="circulant bound"):
+        g.graph_pagerank(spark, sf_dir)
+    with pytest.raises(RuntimeError, match="circulant bound"):
+        g.graph_shortest_paths(spark, sf_dir)

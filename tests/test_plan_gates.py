@@ -25,6 +25,9 @@ GATED_QUERIES = [
     "text_cross_doc_repeats",
     "sim_ivfpq_rerank_topk",
     "dedup_semantic",
+    # the trainer's interpreted-mode gate with one codebook trained
+    "sim_kmeans_cells",
+    "sim_pq_distortion",
 ]
 # Their checkpoint gate was deleted; the one shape left stays under the
 # oracle here, and must consult no gate.
@@ -56,6 +59,25 @@ def test_gate_side_matches_oracle(spark, sf_dir, duck, monkeypatch, side, name):
     assert bool(calls) == (name in GATED_QUERIES), calls
     want = duck.sql(entry.oracle_sql()[name]).df()
     assert [p for p in compare(name, got, want) if not p.startswith("DTYPE")] == []
+
+
+def test_doc_shingles_paths_agree(spark, sf_dir, monkeypatch):
+    """The in-row and explode+distinct shingle paths of
+    ext/textanalysis._doc_shingles give identical rows, keyed and key-less."""
+    from aws_vpc_flow_log_appender_spark.ext import textanalysis as ta
+    from aws_vpc_flow_log_appender_spark.operators.registry import load
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    docs = load(spark, sf_dir, "documents")
+    assert not plan_gates.is_large(docs, per_task=plan_gates.INROW_DEDUP_BYTES_PER_TASK)
+    small = rows(ta._doc_shingles(docs, 8, ["doc_id", "source"]))
+    # key-less form (the benchmark side): global distinct on both paths
+    small0 = rows(ta._doc_shingles(docs, 8, []))
+    monkeypatch.setattr(plan_gates, "is_large", lambda source, **threshold: True)
+    assert rows(ta._doc_shingles(docs, 8, ["doc_id", "source"])) == small
+    assert rows(ta._doc_shingles(docs, 8, [])) == small0
 
 
 class _FailingConf:

@@ -1,9 +1,11 @@
 """Unit tests of the measurement tools that need no Spark session:
-tools/profiler.py's event-log reader and tools/ab_drive.py's interleave."""
+tools/profiler.py's event-log reader, tools/ab_drive.py's interleave and
+tools/plans.py's plan normalization."""
 
 import importlib.util
 import json
 import os
+import tempfile
 
 _TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
 
@@ -17,6 +19,45 @@ def _load(name):
 
 profiler = _load("profiler")
 ab_drive = _load("ab_drive")
+plans = _load("plans")
+
+_PLAN = """\
+(1) Scan ExistingRDD
+Arguments: [cid#{a}, vec_id#{b}L, d#{c}], MapPartitionsRDD[{r}] at localCheckpoint at {site}, ExistingRDD
+
+(2) Exchange
+Input [3]: [cid#{a}, vec_id#{b}L, d#{c}]
+Arguments: hashpartitioning(cid#{a}, 8), ENSURE_REQUIREMENTS, [plan_id={p}]
+
+(3) HashAggregate
+Keys [1]: [cid#{a}]
+Results [2]: [cid#{a}, sum(d#{c})#{d} AS total#{e}]
+
+(4) Scan parquet
+Location: InMemoryFileIndex [file:{tmp}/stream_q_sink_{rand}/emit_v0]
+"""
+
+
+def test_plan_normalize_drops_session_labels():
+    tmp = tempfile.gettempdir()
+    one = _PLAN.format(a=2405, b=2402, c=2352, d=2500, e=2501, r=63, p=811,
+                       site="NativeMethodAccessorImpl.java:0", tmp=tmp,
+                       rand="kmq87two")
+    two = _PLAN.format(a=17, b=9, c=40, d=3, e=12, r=5, p=90210,
+                       site="<unknown>:0", tmp=tmp, rand="67h_6bgk")
+    assert plans.normalize(one) == plans.normalize(two)
+    norm = plans.normalize(one)
+    assert "localCheckpoint at <call site>," in norm
+    assert "MapPartitionsRDD[1]" in norm and "[plan_id=1]" in norm
+    assert f"{tmp}/stream_q_sink_XXXXXXXX/emit_v0]" in norm
+    # ids keep their identity: cid is #1 everywhere, sum's output #4 and
+    # the alias #5 stay distinct
+    assert norm.count("cid#1") == 5
+    assert "sum(d#3)#4 AS total#5" in norm
+    # a different id structure stays different after renumbering
+    three = _PLAN.format(a=1, b=1, c=2, d=3, e=4, r=1, p=1, site="x.py:1",
+                         tmp=tmp, rand="abcdefgh")
+    assert plans.normalize(three) != norm
 
 
 def test_interleave_alternates_which_side_runs_first(monkeypatch):
