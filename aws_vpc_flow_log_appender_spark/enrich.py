@@ -9,13 +9,15 @@ Reference behavior (decorator/index.js:163-197):
 
 Spark-first design:
  - J1 -> broadcast LEFT OUTER equi join; deterministic-match discipline via
-   a stable-ordered row_number on the build side (lodash.find returns the
+   a stable-ordered min per key on the build side (lodash.find returns the
    first match; see first_match_dim).
  - J2 (per-row HTTP geo lookup) -> a *data* join against a CIDR-range geo
-   dimension: prefix-bucketed equi join + range filter, broadcast. At 100 TB
-   the naive (ip BETWEEN start AND end) range join is O(n*m); bucketing by /16
-   prefix makes it an equi join with a tiny residual filter and keeps the dim
-   broadcastable (a real GeoIP table explodes to ~a few million bucket rows).
+   dimension. The naive (ip BETWEEN start AND end) range join is O(n*m), and
+   nested ranges would duplicate facts. Instead the dimension is grouped into
+   one row per /16 bucket holding every range that touches it, most specific
+   first (flatten_geo_dim); the fact side does a broadcast equi join on its
+   address's bucket and takes the first candidate that contains the address.
+   Coarse buckets prune, an exact test inside the bucket decides.
 """
 
 from __future__ import annotations
@@ -47,10 +49,11 @@ def ip_to_int(col: Column | str) -> Column:
     the row to a concrete wrong range, where the reference's geocoder gets
     no data and degrades to the ''/0 defaults (code-review r6) — any
     out-of-range or overflowing octet now yields NULL and falls into the
-    geo-miss path."""
+    geo-miss path. ``get``, not ``getItem``: an address with fewer than four
+    octets is NULL too, where an ANSI array index would raise."""
     c = F.col(col) if isinstance(col, str) else col
     o = F.split(c, r"\.")
-    octs = [o.getItem(i).try_cast("long") for i in range(4)]
+    octs = [F.get(o, i).try_cast("long") for i in range(4)]
     valid = None
     for oc in octs:
         ok = oc.isNotNull() & (oc >= 0) & (oc <= 255)
@@ -62,20 +65,24 @@ def ip_to_int(col: Column | str) -> Column:
     )
 
 
+def _nulls_last(cols: list[str]) -> list[Column]:
+    """Struct fields that order like ``asc_nulls_last`` on each column.
+    Struct ordering puts a null field first, so an ``isnull`` flag goes
+    ahead of each column."""
+    return [c for a in cols for c in (F.isnull(a).alias(f"__null_{a}"), F.col(a))]
+
+
 def first_match_dim(eni_dim: DataFrame, key: str = "interfaceId") -> DataFrame:
     """lodash.find takes the FIRST match (decorator/index.js:167). 'First' in
     API-listing order is unknowable once distributed, so the enforced
-    discipline is *deterministic*-match: one row per key chosen by a stable
-    value ordering (bare dropDuplicates keeps whichever row the hash
-    aggregate meets first — flip-flopping sg-ids/direction across runs)."""
-    from pyspark.sql import Window as W
-
+    discipline is *deterministic*-match: one row per key, the least by the
+    other columns in order, nulls last (bare dropDuplicates keeps whichever
+    row the hash aggregate meets first — flip-flopping sg-ids/direction
+    across runs)."""
     others = [c for c in eni_dim.columns if c != key]
-    w = W.partitionBy(key).orderBy(*[F.asc_nulls_last(c) for c in others])
-    return (
-        eni_dim.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    best = F.col("__best")
+    return eni_dim.groupBy(key).agg(F.min(F.struct(*_nulls_last(others))).alias("__best")).select(
+        *[F.col(c) if c == key else best[c].alias(c) for c in eni_dim.columns]
     )
 
 
@@ -117,115 +124,48 @@ def join_eni(parsed: DataFrame, eni_dim: DataFrame) -> DataFrame:
     )
 
 
+def _ip_bucket(ip_int: Column) -> Column:
+    """The /16 prefix bucket: the unit of both the dimension prep and the probe."""
+    return (ip_int / F.lit(2 ** 16)).cast("long")
+
+
 def flatten_geo_dim(geo_dim: DataFrame) -> DataFrame:
-    """Rewrite a possibly-overlapping range dimension into DISJOINT ranges,
-    each carrying the attributes of its most specific (narrowest) covering
-    source range.
+    """Prepare a possibly-overlapping range dimension for the J2 probe: one
+    row per /16 bucket, ``(ip_bucket, cands)``, where ``cands`` holds every
+    range that touches the bucket, sorted so that the first range covering
+    an address is its most specific (narrowest) one.
 
     Real GeoIP feeds nest ranges (country superset + city subset); joining
-    facts against overlapping ranges would duplicate records. Doing the
-    de-overlap ONCE on the small dimension side keeps the fact-side join a
-    plain broadcast probe — the alternative (per-record post-join dedup)
-    costs a fact-sized shuffle at every query.
+    facts against overlapping ranges would duplicate records. With one row
+    per bucket each fact row matches at most one row, and the exact
+    containment test runs inside that row's array — no fact-side dedup.
 
-    Classic boundary sweep: every start / end+1 becomes a breakpoint;
-    consecutive breakpoints form candidate intervals; each interval takes the
-    narrowest source range containing it (uncovered gaps drop out).
-
-    Scale posture (the module docstring promises a few-million-row GeoIP
-    feed): both sweep steps are bucketed by /8 IP prefix so nothing runs on
-    one core or as a nested loop —
-     - "next breakpoint" = lead() within each /8 bucket, patched across
-       bucket boundaries with a 256-row bucket spine (the only global window
-       runs on that spine, not the data);
-     - the interval→covering-range match is an equi join on the interval's
-       /8 bucket against ranges exploded into the /8 buckets they span
-       (complete because intervals never cross a breakpoint, hence never a
-       range boundary: interval ⊆ range ⟹ the interval's start bucket is
-       among the range's spanned buckets), with the BETWEEN containment as a
-       residual filter — a hash/sort-merge join, not BroadcastNestedLoop.
+    One explode (each range into the buckets it spans) and one aggregate.
+    The sort key is width, then start, then each attribute nulls last, then
+    end: a dirty feed carrying the same [start, end] twice with conflicting
+    attributes still picks one winner on every run (the flip-flop hazard
+    first_match_dim eliminates for the ENI dim).
     """
-    from pyspark.sql import Window as W
-
-    shift = F.lit(2 ** 24)  # /8 prefix buckets (≤256 distinct)
-    points = (
-        geo_dim.select(F.col("start_ip_int").alias("p"))
-        .union(geo_dim.select((F.col("end_ip_int") + 1).alias("p")))
-        .distinct()
-        .withColumn("__bkt", (F.col("p") / shift).cast("long"))
-    )
-    in_bucket = W.partitionBy("__bkt").orderBy("p")
-    # Tiny spine: one row per occupied /8 bucket; its global window sorts
-    # ≤256 rows, so the single partition is bounded regardless of dim size.
-    spine = (
-        points.groupBy("__bkt").agg(F.min("p").alias("__bmin"))
-        .withColumn("__next_bmin", F.lead("__bmin").over(W.orderBy("__bkt")))
-        .select("__bkt", "__next_bmin")
-    )
-    iv = (
-        points.withColumn("__next_in_bkt", F.lead("p").over(in_bucket))
-        .join(F.broadcast(spine), "__bkt")
-        .withColumn("next_p", F.coalesce("__next_in_bkt", "__next_bmin"))
-        .filter(F.col("next_p").isNotNull())
-        .select(F.col("p").alias("f_start"), (F.col("next_p") - 1).alias("f_end"))
-        .withColumn("__f_bkt", (F.col("f_start") / shift).cast("long"))
-    )
-    exploded = geo_dim.withColumn(
-        "__r_bkt",
-        F.explode(
-            F.sequence(
-                (F.col("start_ip_int") / shift).cast("long"),
-                (F.col("end_ip_int") / shift).cast("long"),
-            )
-        ),
-    )
-    covered = iv.join(
-        F.broadcast(exploded),
-        (iv["__f_bkt"] == exploded["__r_bkt"])
-        & (iv["f_start"] >= exploded["start_ip_int"])
-        & (iv["f_end"] <= exploded["end_ip_int"]),
-    ).drop("__f_bkt", "__r_bkt")
     attrs = [f.name for f in geo_dim.schema.fields
              if f.name not in ("start_ip_int", "end_ip_int")]
-    # tie-break THROUGH the attribute columns: a dirty feed carrying the
-    # same [start, end] twice with conflicting attributes would otherwise
-    # pick an arbitrary winner per shuffle (the flip-flop hazard
-    # first_match_dim eliminates for the ENI dim; code-review r6)
-    most_specific = W.partitionBy("f_start").orderBy(
-        F.asc(F.col("end_ip_int") - F.col("start_ip_int")),
-        F.asc("start_ip_int"),
-        *[F.asc_nulls_last(a) for a in attrs],
-    )
+    start, end = F.col("start_ip_int"), F.col("end_ip_int")
+    cand = F.struct((end - start).alias("w"), start.alias("s"), *_nulls_last(attrs),
+                    end.alias("e"))
     return (
-        covered.withColumn("__rn", F.row_number().over(most_specific))
-        .filter(F.col("__rn") == 1)
-        .select(
-            F.col("f_start").alias("start_ip_int"),
-            F.col("f_end").alias("end_ip_int"),
-            *attrs,
+        geo_dim.select(
+            F.explode(F.sequence(_ip_bucket(start), _ip_bucket(end))).alias("ip_bucket"),
+            cand.alias("cand"),
         )
-    )
-
-
-def bucket_geo_dim(geo_dim: DataFrame, prefix_bits: int = 16) -> DataFrame:
-    """Explode each CIDR range into the /prefix_bits buckets it spans so the
-    range join becomes an equi join on bucket + residual BETWEEN filter."""
-    shift = F.lit(2 ** (32 - prefix_bits))
-    return geo_dim.withColumn(
-        "ip_bucket",
-        F.explode(
-            F.sequence(
-                (F.col("start_ip_int") / shift).cast("long"),
-                (F.col("end_ip_int") / shift).cast("long"),
-            )
-        ),
+        .groupBy("ip_bucket")
+        .agg(F.array_sort(F.collect_list("cand")).alias("cands"))
     )
 
 
 def join_geo(df: DataFrame, geo_dim: DataFrame, src_col: str = "srcaddr",
-             geolocation_enabled: bool = True, prefix_bits: int = 16,
+             geolocation_enabled: bool = True,
              dim_is_disjoint: bool = False) -> DataFrame:
-    """J2: geolocation as a broadcast prefix-bucketed range join.
+    """J2: geolocation as a broadcast equi join on the /16 bucket, then the
+    first candidate range that contains the address.
 
     Replaces the serial per-row HTTP lookup (decorator/index.js:175-177,
     geocode.js:56-68). The enrichment gate (env flag + RFC1918 source,
@@ -235,6 +175,9 @@ def join_geo(df: DataFrame, geo_dim: DataFrame, src_col: str = "srcaddr",
 
     ``geolocation_enabled`` is resolved at plan-build time (SURVEY §4.3) —
     when False the join is statically pruned from the plan entirely.
+    ``dim_is_disjoint=True`` says ``geo_dim`` is already prepared by
+    flatten_geo_dim (callers that reuse one dimension across queries or
+    micro-batches prepare it once).
     """
     geo_defaults = {
         "source-country-code": F.lit(""),
@@ -252,44 +195,32 @@ def join_geo(df: DataFrame, geo_dim: DataFrame, src_col: str = "srcaddr",
         return df
 
     gate = (~is_rfc1918(src_col)) & F.col(src_col).isNotNull()
-    shift = F.lit(2 ** (32 - prefix_bits))
-    # de-overlap the dimension ONCE (dim-sized work) so each fact row can
-    # match at most one range — no post-join dedup shuffle on the fact side.
-    # Callers that pre-flatten (e.g. streaming, where the static dim would
-    # otherwise be re-swept every micro-batch) pass dim_is_disjoint=True.
-    prepared = geo_dim if dim_is_disjoint else flatten_geo_dim(geo_dim)
-    bucketed = bucket_geo_dim(prepared, prefix_bits)
-    ip_int = F.when(gate, ip_to_int(src_col))
-    df = df.withColumn("__ip_int", ip_int).withColumn(
-        "__ip_bucket", (F.col("__ip_int") / shift).cast("long")
+    buckets = geo_dim if dim_is_disjoint else flatten_geo_dim(geo_dim)
+    ip = F.col("__ip_int")
+    df = df.withColumn("__ip_int", F.when(gate, ip_to_int(src_col))).withColumn(
+        "__ip_bucket", _ip_bucket(ip)
     )
-    cond = (
-        (df["__ip_bucket"] == bucketed["ip_bucket"])
-        & (df["__ip_int"] >= bucketed["start_ip_int"])
-        & (df["__ip_int"] <= bucketed["end_ip_int"])
+    joined = df.join(F.broadcast(buckets), df["__ip_bucket"] == buckets["ip_bucket"], "left")
+    hit = F.try_element_at(
+        F.filter("cands", lambda c: (c["s"] <= ip) & (ip <= c["e"])), F.lit(1)
     )
-    joined = df.join(F.broadcast(bucketed), cond, "left")
-    out = (
-        joined
-        .withColumn("source-country-code", F.coalesce(bucketed["country_code"], F.lit("")))
-        .withColumn("source-country-name", F.coalesce(bucketed["country_name"], F.lit("")))
-        .withColumn("source-region-code", F.coalesce(bucketed["region_code"], F.lit("")))
-        .withColumn("source-region-name", F.coalesce(bucketed["region_name"], F.lit("")))
-        .withColumn("source-city", F.coalesce(bucketed["city"], F.lit("")))
+    geo = F.col("__geo")
+    return (
+        joined.withColumn("__geo", hit)
+        .withColumn("source-country-code", F.coalesce(geo["country_code"], F.lit("")))
+        .withColumn("source-country-name", F.coalesce(geo["country_name"], F.lit("")))
+        .withColumn("source-region-code", F.coalesce(geo["region_code"], F.lit("")))
+        .withColumn("source-region-name", F.coalesce(geo["region_name"], F.lit("")))
+        .withColumn("source-city", F.coalesce(geo["city"], F.lit("")))
         .withColumn(
             "source-location",
             F.struct(
-                F.coalesce(bucketed["latitude"], F.lit(0.0)).alias("lat"),
-                F.coalesce(bucketed["longitude"], F.lit(0.0)).alias("lon"),
+                F.coalesce(geo["latitude"], F.lit(0.0)).alias("lat"),
+                F.coalesce(geo["longitude"], F.lit(0.0)).alias("lon"),
             ),
         )
-        .drop(
-            "ip_bucket", "start_ip_int", "end_ip_int", "country_code",
-            "country_name", "region_code", "region_name", "city",
-            "latitude", "longitude", "__ip_int", "__ip_bucket",
-        )
+        .drop("ip_bucket", "cands", "__ip_int", "__ip_bucket", "__geo")
     )
-    return out
 
 
 def project_eni_dim(ec2_raw: DataFrame) -> DataFrame:

@@ -210,10 +210,6 @@ def _minhash_sig_for(docs):
     )
 
 
-def _minhash_sig(spark, sf_dir):
-    return _minhash_sig_for(load(spark, sf_dir, "documents"))
-
-
 _SQL_MINHASH_SIG = f"""
     SELECT doc_id,
            {", ".join(

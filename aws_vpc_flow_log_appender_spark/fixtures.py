@@ -116,15 +116,17 @@ _GEO_FLAT_LOCK = _threading.Lock()
 
 
 def geo_dim_flat_df(spark: SparkSession) -> DataFrame:
-    """The fixture geo dimension pre-flattened (de-overlapped), materialized
-    ONCE per SparkContext via localCheckpoint.
+    """The fixture geo dimension prepared for the probe (one row per /16
+    bucket, ``enrich.flatten_geo_dim``), materialized ONCE per SparkContext
+    via localCheckpoint.
 
-    Range de-overlap is offline dimension prep in production (GeoIP feeds
-    update daily; facts arrive continuously) — re-running the sweep inside
-    every query invocation bills its fixed dim-prep stages to each query.
-    The streaming path (streaming/flowlog.py) already pre-flattens for the
-    same reason; this is the batch twin. Deterministic, so memoizing across
-    invocations cannot change results; keyed by SparkContext identity (with
+    Range prep is offline dimension work in production (GeoIP feeds update
+    daily; facts arrive continuously). The prep is one explode and one
+    aggregate, but running it inside every query invocation still bills its
+    shuffle job to each query (one more job for ``flowlog_enrich``). The
+    streaming path (streaming/flowlog.py) prepares once for the same reason;
+    this is the batch twin. Deterministic, so memoizing across invocations
+    cannot change results; keyed by SparkContext identity (with
     a weakref liveness probe against id reuse) so a driver-created fresh
     session gets its own materialization."""
     from .enrich import flatten_geo_dim

@@ -203,7 +203,7 @@ def join_range_bands(spark, sf_dir):
     joined into [lo, hi) bands. Small band table broadcast -> a broadcast
     nested-loop join with a cheap residual predicate, which is exactly the
     physical plan a CIDR geo join wants (see enrich.join_geo for the
-    prefix-bucketed variant when the band table is large)."""
+    /16-bucketed variant when the band table is large)."""
     l = load(spark, sf_dir, "lineitem")
     bands = spark.createDataFrame(
         [("low", 0.0, 17.0), ("mid", 17.0, 34.0), ("high", 34.0, 1e9)],

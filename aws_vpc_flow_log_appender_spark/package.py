@@ -47,9 +47,3 @@ def package_records(enriched: DataFrame) -> DataFrame:
         .alias("result"),
         F.when(F.col("error"), payload_failed).otherwise(payload_ok).alias("data"),
     )
-
-
-def result_counts(packaged: DataFrame) -> DataFrame:
-    """The success/failure counters the reference logs per batch
-    (decorator/index.js:208-232) as a distributed aggregate."""
-    return packaged.groupBy("result").agg(F.count("*").alias("n"))

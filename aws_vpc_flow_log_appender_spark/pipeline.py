@@ -6,7 +6,7 @@ SURVEY §3.2) as one declarative Spark plan:
     firehose records
       -> parse_records        (b64 decode, tokenize, cast, validity split)
       -> join_eni             (broadcast left join + direction)
-      -> join_geo             (prefix-bucketed broadcast range join + defaults)
+      -> join_geo             (/16-bucket broadcast join + range test + defaults)
       -> package_records      (Ok/ProcessingFailed tagging + b64(json) payload)
 
 Error rows flow through untouched (NULL flow fields) and come out tagged
@@ -54,8 +54,8 @@ def decorate_lines(lines: DataFrame, eni_dim: DataFrame, geo_dim: DataFrame,
 
     ``unique_ids=True`` disambiguates byte-identical lines (see
     parse.parse_lines) — required when the sink dedupes on recordId.
-    ``geo_dim_is_disjoint=True`` skips the de-overlap sweep for callers that
-    pre-flattened the geo dimension (streaming reuse across micro-batches).
+    ``geo_dim_is_disjoint=True`` says the geo dimension is already prepared
+    by ``enrich.flatten_geo_dim`` (streaming reuse across micro-batches).
     """
     parsed = parse_lines(lines, line_col, unique_ids=unique_ids)
     enriched = enrich_flow_logs(parsed, eni_dim, geo_dim, geolocation_enabled,

@@ -42,15 +42,15 @@ def stream_decorate(
     DescribeNetworkInterfaces call, in tests a fixture DataFrame factory.
     """
     lines = spark.readStream.format("text").load(input_path)
-    # the geo dim is static for the stream's lifetime: flatten its ranges
-    # ONCE here instead of re-running the boundary sweep every micro-batch.
+    # the geo dim is static for the stream's lifetime: group its ranges into
+    # /16 bucket rows ONCE here instead of in every micro-batch.
     # persist(), NOT localCheckpoint(): checkpoint blocks live in
     # unreplicated executor storage with TRUNCATED lineage, so on a real
     # cluster one lost executor hours into a long-running stream would fail
     # every subsequent micro-batch unrecoverably (code-review r6 — the same
     # failure mode queries.py's _read_back already closed). persist keeps
     # the recomputable plan: a lost block is rebuilt from the dimension
-    # source at the cost of one re-flatten.
+    # source at the cost of one re-prep.
     geo_flat = flatten_geo_dim(geo_dim).persist() if geolocation_enabled else geo_dim
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:

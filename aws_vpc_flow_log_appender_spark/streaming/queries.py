@@ -428,7 +428,7 @@ def stream_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_flowlog_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE FLAGSHIP AS A STREAM: the reference decorator's full pipeline
     (synthesized lines -> parse -> ENI broadcast join -> direction -> geo
-    prefix-bucketed range join) consumed as a Structured Streaming source
+    /16-bucket join) consumed as a Structured Streaming source
     and hash-checked against the SAME DuckDB oracle as the batch
     flowlog_enrich — the strongest batch/stream equivalence claim the
     engine makes: not a window aggregate, the entire enrichment pipeline.

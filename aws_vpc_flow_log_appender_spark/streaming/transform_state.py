@@ -195,15 +195,6 @@ def cusum_drift_batch(flows: DataFrame, key_col: str = "`interface-id`") -> Data
     )
 
 
-def reference_cusum(values_by_key: dict[str, list[int]]) -> dict[str, tuple]:
-    """From-scratch reference (plain Python ints) for tests: same recurrence
-    over milli-scaled byte values in seq order."""
-    return {
-        key: _cusum_fold([v * 1000 for v in vals], (0, 0, 0, 0))
-        for key, vals in values_by_key.items()
-    }
-
-
 def cusum_drift_stream_legacy(
     flows: DataFrame, key_col: str = "`interface-id`"
 ) -> DataFrame:

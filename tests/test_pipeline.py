@@ -3,18 +3,28 @@ reference's only fixture (decorator/event.json) plus branch-coverage corpus."""
 
 import base64
 import json
+import random
+import re
 
 from pyspark.sql import functions as F
 
 from aws_vpc_flow_log_appender_spark import fixtures
 from aws_vpc_flow_log_appender_spark.enrich import (
+    RFC1918_PATTERN,
+    first_match_dim,
+    flatten_geo_dim,
     ip_to_int,
     is_rfc1918,
+    join_geo,
     project_eni_dim,
 )
 from aws_vpc_flow_log_appender_spark.parse import parse_records
 from aws_vpc_flow_log_appender_spark.pipeline import decorate, enrich_flow_logs
-from aws_vpc_flow_log_appender_spark.schema import EC2_ENI_RAW_SCHEMA
+from aws_vpc_flow_log_appender_spark.schema import (
+    EC2_ENI_RAW_SCHEMA,
+    ENI_DIM_SCHEMA,
+    GEO_DIM_SCHEMA,
+)
 
 
 def _event_json_records(spark):
@@ -228,6 +238,14 @@ def test_first_match_join_semantics(spark):
     enriched = enrich_flow_logs(parsed, dup_dim, fixtures.geo_dim_df(spark))
     rows = enriched.collect()
     assert len(rows) == 2  # no fanout from duplicate build-side keys
+    # the kept row is the least by the other columns in order, nulls last
+    dirty = spark.createDataFrame([
+        ("eni-x", None, ["1.1.1.1"]), ("eni-x", ["sg-b"], None),
+        ("eni-x", ["sg-a"], None), ("eni-x", ["sg-a"], ["2.2.2.2"]),
+    ], ENI_DIM_SCHEMA)
+    assert [tuple(r) for r in first_match_dim(dirty).collect()] == [
+        ("eni-x", ["sg-a"], ["2.2.2.2"])
+    ]
 
 
 def test_rfc1918_predicate_parity(spark):
@@ -262,3 +280,91 @@ def test_jmespath_projection_equivalent(spark):
     assert r["interfaceId"] == "eni-1854f949"
     assert r["securityGroupIds"] == ["sg-1", "sg-2"]
     assert r["ipAddress"] == ["172.31.16.21"]  # [?Primary] filter keeps a list
+
+
+def _adversarial_geo_dim(rng):
+    """Nested country/region/city ranges with the cases a real feed brings:
+    ranges that cross /16 and /8 boundaries, same-width ranges overlapping
+    at different starts, and duplicate [start, end] rows with conflicting
+    and null attributes. Two ranges cover RFC1918 space, which the gate
+    must keep out of the join."""
+    def row(s, e, tag):
+        def pick(v):
+            return None if rng.random() < 0.2 else v
+        return (s, e, pick(tag[:2]), pick(tag), pick("R" + tag), pick("reg " + tag),
+                pick("city " + tag), pick(rng.uniform(-90, 90)), pick(rng.uniform(-180, 180)))
+
+    rows = [row(10 << 24, (11 << 24) - 1, "private"),
+            row((192 << 24) | (168 << 16), (192 << 24) | (168 << 16) | 0xFFFF, "lan")]
+    for i, o1 in enumerate((8, 23, 45, 61, 72, 88, 104, 151, 185, 203)):
+        cs = o1 << 24
+        rows.append(row(cs, cs | 0xFFFFFF, f"c{i}"))
+        for j in range(rng.randint(2, 4)):
+            rs = cs + rng.randrange(0, (1 << 24) - (1 << 19))
+            re_ = rs + rng.randrange(1 << 15, 1 << 18)
+            rows.append(row(rs, re_, f"c{i}r{j}"))
+            for k in range(rng.randint(1, 3)):
+                s = rng.randrange(rs, re_)
+                rows.append(row(s, min(re_, s + rng.randrange(0, 4096)), f"c{i}r{j}t{k}"))
+        # same width, different starts, overlapping
+        s = cs + rng.randrange(0, 1 << 20)
+        rows += [row(s, s + 99, f"c{i}a"), row(s + 50, s + 149, f"c{i}b")]
+        # crosses the /8 (and /16) boundary into the next country
+        rows.append(row(cs | 0xFFF000, ((o1 + 1) << 24) | 0xFFF, f"c{i}x"))
+    for r in rng.sample(rows, 15):
+        rows.append(row(r[0], r[1], "dup" + str(rng.randrange(3))))
+        rows.append((r[0], r[1]) + (None,) * 7)
+    rng.shuffle(rows)
+    return rows
+
+
+def _ref_ip(addr):
+    if addr is None or re.search(RFC1918_PATTERN, addr):
+        return None
+    parts = addr.split(".")
+    if len(parts) < 4 or not all(p.isdigit() and int(p) <= 255 for p in parts[:4]):
+        return None
+    return sum(int(p) << (24 - 8 * i) for i, p in enumerate(parts[:4]))
+
+
+def _ref_geo(ranges, addr):
+    """The narrowest range covering the address; ties by start, then by the
+    attributes with nulls last. ''/0 defaults when gated or uncovered."""
+    ip = _ref_ip(addr)
+    covering = [r for r in ranges if ip is not None and r[0] <= ip <= r[1]]
+    if not covering:
+        return ("", "", "", "", "", (0.0, 0.0))
+    best = min(covering, key=lambda r: (r[1] - r[0], r[0], *[
+        (a is None, a if a is not None else type(d)()) for a, d in zip(r[2:], ("",) * 5 + (0.0,) * 2)
+    ]))
+    cc, cn, rc, rn, city, lat, lon = best[2:]
+    return (cc or "", cn or "", rc or "", rn or "", city or "", (lat or 0.0, lon or 0.0))
+
+
+def _dotted(ip):
+    return ".".join(str((ip >> s) & 255) for s in (24, 16, 8, 0))
+
+
+def test_join_geo_matches_python_reference(spark):
+    rng = random.Random(7)
+    ranges = _adversarial_geo_dim(rng)
+    probes = set()
+    for s, e, *_ in ranges:
+        for ip in (s - 1, s, e, e + 1):
+            if 0 <= ip < 1 << 32:
+                probes.add(_dotted(ip))
+    probes |= {_dotted(rng.randrange(1 << 32)) for _ in range(300)}
+    probes |= {"10.1.2.3", "192.168.0.7", "172.16.5.5", "127.0.0.1",
+               "72.21.300.1", "8.8.8.256", "99999999999999999999.1.1.1", "8.8.8", None}
+    probes = sorted(probes, key=str)
+    facts = spark.createDataFrame(list(enumerate(probes)), "id long, srcaddr string")
+    geo = spark.createDataFrame(ranges, GEO_DIM_SCHEMA)
+    want = {i: _ref_geo(ranges, a) for i, a in enumerate(probes)}
+    cols = ["source-country-code", "source-country-name", "source-region-code",
+            "source-region-name", "source-city"]
+    for out in (join_geo(facts, geo),
+                join_geo(facts, flatten_geo_dim(geo), dim_is_disjoint=True)):
+        rows = out.collect()
+        assert len(rows) == len(probes)
+        got = {r["id"]: (*[r[c] for c in cols], tuple(r["source-location"])) for r in rows}
+        assert got == want

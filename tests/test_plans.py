@@ -48,19 +48,22 @@ def test_flagship_joins_are_broadcast(plans):
     assert "BroadcastNestedLoopJoin" not in p  # the naive range-join shape
 
 
-def test_flatten_geo_dim_has_no_nested_loop(spark):
-    """The de-overlap sweep must plan as an equi join (bucketed containment),
-    not BroadcastNestedLoopJoin/CartesianProduct — at a few-million-row GeoIP
-    dim the pure-containment join is O(n*m) on one core."""
+def test_geo_prep_and_probe_plans(spark):
+    """The dimension prep is one explode and one aggregate: no window and no
+    BroadcastNestedLoopJoin / CartesianProduct (O(n*m) at a few-million-row
+    GeoIP dim). The probe is one broadcast equi join on the bucket."""
     from aws_vpc_flow_log_appender_spark import fixtures
-    from aws_vpc_flow_log_appender_spark.enrich import flatten_geo_dim
+    from aws_vpc_flow_log_appender_spark.enrich import flatten_geo_dim, join_geo
 
-    p = (
-        flatten_geo_dim(fixtures.geo_dim_df(spark))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastNestedLoopJoin" not in p
-    assert "CartesianProduct" not in p
+    geo = fixtures.geo_dim_df(spark)
+    prep = flatten_geo_dim(geo)._jdf.queryExecution().executedPlan().toString()
+    facts = spark.createDataFrame([("72.21.196.65",)], ["srcaddr"])
+    probe = join_geo(facts, geo)._jdf.queryExecution().executedPlan().toString()
+    for p in (prep, probe):
+        assert "BroadcastNestedLoopJoin" not in p
+        assert "CartesianProduct" not in p
+        assert "Window" not in p
+    assert probe.count("BroadcastHashJoin") == 1
 
 
 def test_agg_has_partial_phase(plans):
@@ -426,11 +429,9 @@ _BROADCAST_BOUNDS = {
     ("ext/sketches.py", "sk"): "count-min sketch, <= d x w = 2048 cells",
     ("ext/sketches.py", "theta"): "1-row scalar aggregate",
     # flagship / enrichment: GeoIP + ENI dims are few-million-row dimension
-    # tables; spine is the /16 bucket spine (<= 65536 rows)
+    # tables; the prepared GeoIP dim has one row per /16 bucket
     ("enrich.py", "dim"): "ENI dimension table",
-    ("enrich.py", "spine"): "/16 bucket spine, <= 65536 rows",
-    ("enrich.py", "exploded"): "GeoIP dim x bucket fan-out (dimension-sized)",
-    ("enrich.py", "bucketed"): "GeoIP dimension table",
+    ("enrich.py", "buckets"): "/16 buckets, <= 65536 rows of GeoIP candidates",
     ("flagship.py", "h1"): "hop-1 neighbor set of ONE seed (seeded BFS)",
     ("sinks.py", "bounds"): "range-partition bounds, #partitions rows",
     # TPC-H dims: region/nation/supplier/part/customer are dimension tables

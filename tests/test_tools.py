@@ -1,6 +1,6 @@
 """Unit tests of the measurement tools that need no Spark session:
 tools/profiler.py's event-log reader, tools/ab_drive.py's interleave and
-tools/plans.py's plan normalization."""
+pair statistic, and tools/plans.py's plan normalization."""
 
 import importlib.util
 import json
@@ -70,8 +70,21 @@ def test_interleave_alternates_which_side_runs_first(monkeypatch):
     monkeypatch.setattr(ab_drive, "_run_side", run_side)
     acc = ab_drive.interleave({"ref": "/ref", "work": "/work"}, ["q"], 3, 2)
     assert calls == ["/ref", "/work", "/work", "/ref", "/ref", "/work"]
-    assert acc == {"ref": {"q": [1.0, 1.0, 4.0, 4.0, 5.0, 5.0]},
-                   "work": {"q": [2.0, 2.0, 3.0, 3.0, 6.0, 6.0]}}
+    assert acc == {"ref": {"q": [[1.0, 1.0], [4.0, 4.0], [5.0, 5.0]]},
+                   "work": {"q": [[2.0, 2.0], [3.0, 3.0], [6.0, 6.0]]}}
+
+
+def test_pair_stats_is_median_of_per_pair_ratios():
+    """One fast outlier trial decides a min-over-all-trials ratio; the median
+    of per-pair ratios of minima does not."""
+    acc = {"ref": {"q": [[1.0, 1.2], [1.1, 1.0], [0.5, 1.0], [1.0, 1.3]]},
+           "work": {"q": [[0.9, 1.0], [0.95, 1.2], [1.0, 1.1], [0.8, 0.9]]}}
+    got = ab_drive.pair_stats(acc, "ref", "work", "q")
+    assert got["ref_min"] == [1.0, 1.0, 0.5, 1.0]
+    assert got["work_min"] == [0.9, 0.95, 1.0, 0.8]
+    assert got["ratios"] == [0.9, 0.95, 2.0, 0.8]
+    assert got["ratio"] == 0.925  # min over all trials would read 0.8 / 0.5 = 1.6
+    assert (got["ref_won"], got["work_won"]) == (1, 3)
 
 
 def _job_start(job, group, submit, infos, sql_id=None):

@@ -5,8 +5,9 @@ raw trials per query.
 Usage: python tools/ab_bench.py <repo_root> <q1,q2,...> [n_trials]
 
 The caller interleaves invocations of this script across two checkouts
-(A B A B ...) so machine drift hits both sides equally; min over all trials
-per side is the comparison number (VERDICT_r03 "Next round #1").
+(A B A B ...) so machine drift hits both sides equally; the comparison
+number is the median over pairs of the per-pair ratio of minima
+(ab_drive.pair_stats).
 """
 
 from __future__ import annotations

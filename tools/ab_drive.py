@@ -1,14 +1,17 @@
 """Drive interleaved A/B rounds of tools/ab_bench.py across two checkouts.
 
 Usage: python tools/ab_drive.py <ref_root> <work_root> <q1,q2,...> [rounds]
-Prints per-query min-over-all-trials for each side and the ratio, plus the
-raw trials, so one JSON line adjudicates a change under host noise.
+Prints each round's raw trials, then one ABSUMMARY JSON line: per query, the
+median over rounds of work/ref (each side's minimum within the round) and
+the number of rounds each side won. A per-pair statistic lets machine drift
+cancel within each pair, and one fast outlier trial cannot decide it.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import subprocess
 import sys
 
@@ -26,31 +29,49 @@ def _run_side(root: str, qlist: list[str], n_trials: int) -> dict[str, list[floa
     raise RuntimeError(f"no ABRESULT from {root}: {p.stdout[-500:]} {p.stderr[-2000:]}")
 
 
+Rounds = dict[str, dict[str, list[list[float]]]]
+
+
 def interleave(roots: dict[str, str], qlist: list[str], pairs: int,
-               n_trials: int) -> dict[str, dict[str, list[float]]]:
+               n_trials: int) -> Rounds:
     """Run ``pairs`` rounds of one ab_bench process per side (one checkout
     per process, so machine drift hits both sides alike); the side that runs
-    first alternates from round to round. Returns side -> query -> trials."""
-    acc: dict[str, dict[str, list[float]]] = {side: {q: [] for q in qlist} for side in roots}
+    first alternates from round to round. Returns side -> query -> one list
+    of trials per round."""
+    acc: Rounds = {side: {q: [] for q in qlist} for side in roots}
     order = list(roots)
     for r in range(pairs):
         for side in order if r % 2 == 0 else order[::-1]:
             res = _run_side(roots[side], qlist, n_trials)
             for q in qlist:
-                acc[side][q] += res.get(q, [])
+                acc[side][q].append(res.get(q, []))
             print(f"round {r} {side}: " + json.dumps(res), flush=True)
     return acc
+
+
+def pair_stats(acc: Rounds, base: str, new: str, q: str) -> dict:
+    """Compare side ``new`` against side ``base`` on query ``q``. Within each
+    round (pair) a side's figure is its minimum trial. Returns those minima,
+    the per-pair ratios new/base, their median as ``ratio``, and the number
+    of pairs each side won (a tie counts for neither)."""
+    pairs = [(min(a), min(b)) for a, b in zip(acc[base][q], acc[new][q])
+             if a and b and min(a) > 0]
+    ratios = [b / a for a, b in pairs]
+    return {
+        f"{base}_min": [a for a, _ in pairs],
+        f"{new}_min": [b for _, b in pairs],
+        "ratios": [round(r, 3) for r in ratios],
+        "ratio": round(statistics.median(ratios), 3) if ratios else None,
+        f"{base}_won": sum(a < b for a, b in pairs),
+        f"{new}_won": sum(b < a for a, b in pairs),
+    }
 
 
 def main() -> None:
     ref, work, qlist = sys.argv[1], sys.argv[2], sys.argv[3].split(",")
     rounds = int(sys.argv[4]) if len(sys.argv) > 4 else 3
     acc = interleave({"ref": ref, "work": work}, qlist, rounds, 2)
-    summary = {}
-    for q in qlist:
-        a, b = min(acc["ref"][q]), min(acc["work"][q])
-        summary[q] = {"ref_min": a, "work_min": b,
-                      "ratio": round(b / a, 3) if a else None}
+    summary = {q: pair_stats(acc, "ref", "work", q) for q in qlist}
     print("ABSUMMARY " + json.dumps(summary))
 
 

@@ -11,11 +11,11 @@ default:
     run tools/ab_bench.py INTERLEAVED between HEAD and the round-start
     checkout (ab_drive.interleave: A B, B A, ..., separate processes) so
     machine drift hits both sides equally;
- 3. write an AB JSON artifact with raw trials, per-side mins, the
-    interleaved ratio, and the verdict: a query is a REGRESSION only if
-    HEAD's interleaved min is > THRESHOLD x the round-start checkout's
-    interleaved min — i.e. the same binary comparison the judge performed,
-    machine drift cancelled out.
+ 3. write an AB JSON artifact with raw trials, each side's minimum per
+    pair, the per-pair ratios and the verdict: a query is a REGRESSION only
+    if the median per-pair ratio HEAD / round-start checkout is
+    > THRESHOLD (ab_drive.pair_stats) — machine drift cancels within each
+    pair, and one fast outlier trial cannot decide it.
 
 Usage:
   python tools/ab_gate.py --bench BENCH_json --ref-bench BENCH_r05.json \
@@ -33,7 +33,7 @@ import subprocess
 import sys
 import tempfile
 
-from ab_drive import interleave
+from ab_drive import interleave, pair_stats
 
 THRESHOLD = 1.25
 
@@ -118,12 +118,11 @@ def main() -> None:
                     cwd=REPO, capture_output=True,
                 )
         for n in suspects:
-            h, r = min(acc["head"][n]), min(acc["ref"][n])
-            ratio = round(h / r, 3) if r > 0 else None
+            stats = pair_stats(acc, "ref", "head", n)
             result["interleaved"][n] = {
-                "head_trials": acc["head"][n], "ref_trials": acc["ref"][n],
-                "head_min": h, "ref_min": r, "ratio": ratio,
+                "head_trials": acc["head"][n], "ref_trials": acc["ref"][n], **stats,
             }
+            ratio = stats["ratio"]
             if ratio is not None and ratio > THRESHOLD:
                 result["confirmed_regressions"].append(n)
     if args.out:

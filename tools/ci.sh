@@ -44,6 +44,10 @@ for path, pat in (
 print(f'doc-count gate OK: README/PARITY both state {n}')
 "
 python -m pytest tests/ -q
+# the flagship benchmark's contract with the package (flatten_geo_dim,
+# join_geo(dim_is_disjoint=), decorate_lines, stream_decorate): both
+# workloads at tiny size, untraced and traced
+python3 flowbench/selftest.py
 python tools/verify_local.py
 # the profiler and the plan dumper stay runnable: one small query each
 SF_SMALL=$(python -c "import os, bench; print(os.path.join(os.path.dirname(bench.SF_DIR), 'sf0.001'))")
