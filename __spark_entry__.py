@@ -40,7 +40,7 @@ def _registry():
 
     # Driver-priority order: the correctness gate checks the first 50 entries,
     # so the flagship + dedup/sim/text/ts/set/window surface registers first
-    # and no-oracle sketches last (see registry.PRIORITY_ORDER).
+    # (see registry.PRIORITY_ORDER).
     return ordered_registry()
 
 

@@ -297,8 +297,6 @@ def _hamilton_alloc(q, denom: int = 2):
         )
     )
 
-_MIX_HASH_SPACE = 16777216  # 2^24: first 6 hex chars of md5 (the temp hash)
-
 
 @query(
     "curation_domain_mix",

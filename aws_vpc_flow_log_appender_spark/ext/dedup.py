@@ -615,8 +615,6 @@ def _shingle_intersections(sh, source=None):
     return inter, profile
 
 
-_HEX = "0123456789abcdef"
-
 # 64-bit fingerprint: bit j in 1..64 is bit j (MSB-first) of the top 64 bits
 # of md5(word), extracted from two 32-bit integer chunks (hex chars 1-8 and
 # 9-16) so the 64 per-bit vote expressions are shift/mask over two ints

@@ -16,6 +16,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession
 
 from .schema import ENI_DIM_SCHEMA, FIREHOSE_RECORD_SCHEMA, GEO_DIM_SCHEMA
+from .session import SessionLRU
 
 # The two payload lines from decorator/event.json (base64-decoded).
 EVENT_JSON_LINES = [
@@ -100,19 +101,8 @@ def geo_dim_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(rows, GEO_DIM_SCHEMA)
 
 
-import threading as _threading
-import weakref as _weakref
-from collections import OrderedDict as _OrderedDict
-
-# Same guarded shape as registry._SCAN_CACHE (code-review r6: the previous
-# bare {id(sc): df} dict had no liveness probe — after a context restart,
-# CPython id reuse could hand back a checkpointed DataFrame bound to a DEAD
-# SparkContext — no bound, and no lock for multi-threaded drivers).
-_GEO_FLAT_CACHE: "_OrderedDict[int, tuple[_weakref.ref, DataFrame]]" = (
-    _OrderedDict()
-)
-_GEO_FLAT_MAX = 4
-_GEO_FLAT_LOCK = _threading.Lock()
+# SparkContext -> the prepared fixture geo dimension
+_GEO_FLAT_CACHE = SessionLRU(maxsize=4)
 
 
 def geo_dim_flat_df(spark: SparkSession) -> DataFrame:
@@ -132,21 +122,11 @@ def geo_dim_flat_df(spark: SparkSession) -> DataFrame:
     from .enrich import flatten_geo_dim
 
     sc = spark.sparkContext
-    with _GEO_FLAT_LOCK:
-        dead = [k for k, (ref, _) in _GEO_FLAT_CACHE.items() if ref() is None]
-        for k in dead:
-            del _GEO_FLAT_CACHE[k]
-        key = id(sc)
-        ent = _GEO_FLAT_CACHE.get(key)
-        if ent is not None and ent[0]() is sc:  # liveness: id() can be reused
-            _GEO_FLAT_CACHE.move_to_end(key)
-            return ent[1]
-    # materialize OUTSIDE the lock (runs Spark jobs); recompute races are
-    # benign — the result is deterministic and last-writer-wins
-    cached = flatten_geo_dim(geo_dim_df(spark)).localCheckpoint(eager=True)
-    with _GEO_FLAT_LOCK:
-        _GEO_FLAT_CACHE[key] = (_weakref.ref(sc), cached)
-        _GEO_FLAT_CACHE.move_to_end(key)
-        while len(_GEO_FLAT_CACHE) > _GEO_FLAT_MAX:
-            _GEO_FLAT_CACHE.popitem(last=False)
+    cached = _GEO_FLAT_CACHE.get(sc)
+    if cached is None:
+        # materialized outside the cache lock (runs Spark jobs); a racing
+        # caller's equal result may win the slot, and both return it
+        cached = _GEO_FLAT_CACHE.setdefault(
+            sc, flatten_geo_dim(geo_dim_df(spark)).localCheckpoint(eager=True)
+        )
     return cached

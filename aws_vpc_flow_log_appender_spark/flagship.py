@@ -1034,8 +1034,8 @@ def cusum_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
 def flowlog_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-interface CUSUM change-point statistics over the first
     ``_CUSUM_SEQ_LIMIT`` events' byte counts (same derivations as
-    ``synth_flow_lines``): the batch twin of the Spark-4 StatefulProcessor
-    operator in ``streaming/transform_state.py``.
+    ``synth_flow_lines``): the batch form of the streaming fold
+    ``streaming/transform_state.cusum_drift_stream``.
 
     CUSUM is an order-dependent recurrence — the one shape Spark's windowed
     aggregates cannot express — so the engine runs it as ONE ordered pass

@@ -21,6 +21,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import SessionLRU
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -395,29 +397,19 @@ PRIORITY_ORDER: list[str] = [
     "join_semi",
 ]
 
-# Rows-only checks (no oracle) must never occupy a hash-checked slot. As of
-# round 5 every registered query is oracle-backed (multimodal_feature_extract
-# was the last holdout), so the tail mechanism is empty — and
-# tests/test_registry_window.py now pins that it STAYS empty.
-NO_ORACLE_TAIL: list[str] = []
-
 
 def ordered_registry() -> dict[str, QuerySpec]:
     """Registry re-keyed into driver-priority order.
 
     PRIORITY_ORDER first, then every other registered query in module
-    registration order, then the no-oracle sketches last. Raises if a
-    priority name is unregistered (catches typos/renames at import time).
+    registration order. Raises if a priority name is unregistered (catches
+    typos/renames at import time).
     """
-    missing = [n for n in PRIORITY_ORDER + NO_ORACLE_TAIL if n not in QUERY_REGISTRY]
+    missing = [n for n in PRIORITY_ORDER if n not in QUERY_REGISTRY]
     if missing:
         raise KeyError(f"priority queries not registered: {missing}")
     head = {n: QUERY_REGISTRY[n] for n in PRIORITY_ORDER}
-    tail = {n: QUERY_REGISTRY[n] for n in NO_ORACLE_TAIL}
-    mid = {
-        n: s for n, s in QUERY_REGISTRY.items() if n not in head and n not in tail
-    }
-    return {**head, **mid, **tail}
+    return {**head, **{n: s for n, s in QUERY_REGISTRY.items() if n not in head}}
 
 
 def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):  # noqa: D401
@@ -449,55 +441,21 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):  # 
 # directory can clear the memo (load_cache_clear) the same way they would
 # REFRESH TABLE a catalog entry.
 #
-# LIFETIME (ADVICE r4 fix): the r4 WeakKeyDictionary-on-the-session never
-# actually evicted — the cached DataFrames hold a strong reference back to
-# their session (df.sparkSession), so each entry's values pinned its own
-# key alive and the promised weak cleanup could not fire. The memo is now a
-# bounded LRU over sessions: at most _SCAN_CACHE_MAX_SESSIONS sessions'
-# scans are retained, the oldest evicted on overflow, so growth in
-# session-cycling processes is O(1) by construction instead of by a
-# liveness argument. Entries are keyed by id(session) with a weakref
-# liveness probe guarding against id reuse after collection; two sessions
-# sharing one SparkContext (newSession(), same applicationId) still never
-# receive a DataFrame bound to the other session's catalog and conf.
-import threading
-import weakref
-from collections import OrderedDict
-
-_SCAN_CACHE: "OrderedDict[int, tuple[weakref.ref, dict]]" = OrderedDict()
-_SCAN_CACHE_MAX_SESSIONS = 4
-# Spark drivers are commonly multi-threaded (concurrent job submission is a
-# documented pattern); the sweep/get/move_to_end/popitem sequence below is
-# not atomic, so without a lock interleaved calls could lose entries or hit
-# RuntimeError mid-sweep (ADVICE r5 #3). The critical section is tiny and
-# cache state never affects results, only plan reuse — a plain module Lock
-# is the whole fix.
-_SCAN_CACHE_LOCK = threading.Lock()
+# LIFETIME: a bounded LRU over sessions (session.SessionLRU: bound, id()
+# keys with a weakref liveness probe, one lock). Two sessions sharing one
+# SparkContext (newSession(), same applicationId) never receive a DataFrame
+# bound to the other session's catalog and conf.
+_SCAN_CACHE = SessionLRU(maxsize=4)
 
 
 def load_cache_clear() -> None:
     """Drop memoized scans (the REFRESH TABLE analog for mutated dirs)."""
-    with _SCAN_CACHE_LOCK:
-        _SCAN_CACHE.clear()
+    _SCAN_CACHE.clear()
 
 
 def _session_scans(spark: SparkSession) -> dict:
     """The (sf_dir, table) -> DataFrame memo for one session (bounded LRU)."""
-    with _SCAN_CACHE_LOCK:
-        dead = [k for k, (ref, _) in _SCAN_CACHE.items() if ref() is None]
-        for k in dead:
-            del _SCAN_CACHE[k]
-        k = id(spark)
-        ent = _SCAN_CACHE.get(k)
-        if ent is not None and ent[0]() is spark:  # liveness: id() can be reused
-            _SCAN_CACHE.move_to_end(k)
-            return ent[1]
-        scans: dict = {}
-        _SCAN_CACHE[k] = (weakref.ref(spark), scans)
-        _SCAN_CACHE.move_to_end(k)
-        while len(_SCAN_CACHE) > _SCAN_CACHE_MAX_SESSIONS:
-            _SCAN_CACHE.popitem(last=False)
-        return scans
+    return _SCAN_CACHE.setdefault(spark, {})
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -9,6 +9,10 @@ are engine-independent, Arrow for the few Pandas-UDF code paths.
 from __future__ import annotations
 
 import os
+import threading
+import weakref
+from collections import OrderedDict
+from typing import Any
 
 from pyspark.sql import SparkSession
 
@@ -59,3 +63,66 @@ def configure_existing(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     return spark
+
+
+class SessionLRU:
+    """A bounded LRU memo keyed by a live object's identity — a
+    SparkSession or its SparkContext.
+
+    Three guards:
+     - BOUND: at most ``maxsize`` entries, oldest evicted first. Cached
+       DataFrames hold a strong reference back to their session, so a
+       weak-keyed dict never evicts; growth in session-cycling processes is
+       O(1) by construction instead.
+     - LIVENESS: keys are ``id(obj)`` with a weakref probe, so an id that
+       CPython reuses after ``obj`` is collected never serves the dead
+       object's value (a DataFrame bound to a stopped context).
+     - LOCK: Spark drivers are commonly multi-threaded; each call's
+       sweep/lookup/evict sequence is atomic.
+    Cache state never affects results, only plan reuse."""
+
+    def __init__(self, maxsize: int) -> None:
+        self.maxsize = maxsize
+        self._entries: OrderedDict[int, tuple[weakref.ref, Any]] = OrderedDict()
+        self._lock = threading.Lock()
+
+    def _sweep(self) -> None:
+        dead = [k for k, (ref, _) in self._entries.items() if ref() is None]
+        for k in dead:
+            del self._entries[k]
+
+    def __len__(self) -> int:
+        """The number of entries whose key is still alive."""
+        with self._lock:
+            self._sweep()
+            return len(self._entries)
+
+    def get(self, obj: Any) -> Any:
+        """The value cached for ``obj`` (now the most recent), or None."""
+        with self._lock:
+            return self._lookup(obj)
+
+    def setdefault(self, obj: Any, value: Any) -> Any:
+        """The value cached for ``obj``; if there is none, cache ``value`` as
+        the most recent entry (evicting the oldest past ``maxsize``) and
+        return it. Two racing callers therefore share one value."""
+        with self._lock:
+            cached = self._lookup(obj)
+            if cached is not None:
+                return cached
+            self._entries[id(obj)] = (weakref.ref(obj), value)
+            while len(self._entries) > self.maxsize:
+                self._entries.popitem(last=False)
+            return value
+
+    def _lookup(self, obj: Any) -> Any:
+        self._sweep()
+        ent = self._entries.get(id(obj))
+        if ent is None or ent[0]() is not obj:
+            return None
+        self._entries.move_to_end(id(obj))
+        return ent[1]
+
+    def clear(self) -> None:
+        with self._lock:
+            self._entries.clear()

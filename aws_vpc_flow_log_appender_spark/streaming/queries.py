@@ -1,11 +1,11 @@
 """Streaming entries in the graded query surface.
 
-``stream_tumbling_window`` runs a REAL Structured Streaming query (readStream
--> event-time window agg -> foreachBatch parquet sink, availableNow) to
-completion inside the callable and returns the materialized result — which
-must equal the batch oracle exactly (complete output mode emits every window,
-so no append-mode watermark holdback). This is the strongest checkable claim
-about the streaming engine: batch and stream agree on the same input.
+Every ``stream_*`` query runs a REAL Structured Streaming query to completion
+inside the callable — staged parquet source -> operator -> foreachBatch sink,
+availableNow — through the one runner ``_run_stream``, and returns the
+durable read-back, which must equal its DuckDB oracle exactly. This is the
+strongest checkable claim about the streaming engine: batch and stream agree
+on the same input.
 """
 
 from __future__ import annotations
@@ -16,12 +16,18 @@ import shutil
 import tempfile
 import time
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import round_half_up
 from ..operators.registry import QUERY_REGISTRY, load, query
+from .windows import (
+    sessionized_stream,
+    sliding_counts_stream,
+    tumbling_counts_stream,
+)
 
 
 # Sink dirs retained for returned stream-query results, newest last. Bounded
@@ -60,43 +66,6 @@ def _track_sink(query_name: str) -> str:
     return out_dir
 
 
-def _run_stream_to_sink(spark: SparkSession, source_df: DataFrame, build,
-                        output_mode: str, name: str,
-                        timeout_s: int = 300) -> DataFrame:
-    """Shared run-a-stream-to-completion scaffold for the whole-table
-    stream_* queries (code-review r6: the staging/foreachBatch/timeout/
-    cleanup block was copy-pasted per query, so a fix to e.g. the
-    stop-on-timeout path had to land in every copy; sliced multi-epoch
-    queries use _run_sliced_stream instead).
-
-    Stages ``source_df`` to a streamable parquet location, applies ``build``
-    (stream DataFrame -> output DataFrame), runs the query with an
-    availableNow trigger into a tracked foreachBatch parquet sink, and
-    returns the durable read-back. The sink write mode follows the output
-    mode: ``complete`` re-emits full state every epoch so OVERWRITE is the
-    idempotent sink (last epoch leaves the full result); ``append`` emits
-    each row exactly once so the sink APPENDS (an overwrite would drop rows
-    finalized in earlier epochs). A timed-out query is stopped before
-    raising — leaving it running would leak the query AND keep writing a
-    partial sink."""
-    sink_mode = "overwrite" if output_mode == "complete" else "append"
-    staging = tempfile.mkdtemp(prefix=f"{name}_src_")
-    out_dir = _track_sink(name)
-    try:
-        source_df.write.mode("overwrite").parquet(staging)
-
-        stream = spark.readStream.schema(source_df.schema).parquet(staging)
-        out = build(stream)
-
-        def write_epoch(df: DataFrame, _epoch_id: int) -> None:
-            df.write.mode(sink_mode).parquet(out_dir)
-
-        _await_foreach_batch(out, write_epoch, name, timeout_s, output_mode)
-        return _read_back(spark, out_dir, out.schema)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-
-
 def _read_back(spark: SparkSession, out_dir: str, schema) -> DataFrame:
     """Post-run read of a foreachBatch parquet sink (ADVICE r4 fix).
 
@@ -129,6 +98,134 @@ def _read_back(spark: SparkSession, out_dir: str, schema) -> DataFrame:
     return spark.read.schema(schema).parquet(out_dir)
 
 
+def _union_epochs(spark: SparkSession, state: str, prefix: str,
+                  schema: str) -> DataFrame:
+    """Read back the four per-epoch outputs (``{prefix}0`` .. ``{prefix}3``)
+    a per-epoch sink wrote under ``state``, as one DataFrame."""
+    return reduce(DataFrame.unionByName, [
+        _read_back(spark, os.path.join(state, f"{prefix}{e}"), schema)
+        for e in range(4)
+    ])
+
+
+def _await(writer, name: str, timeout_s: int = 300) -> None:
+    """Start a configured DataStreamWriter with an availableNow trigger and
+    wait for it to finish. A timed-out query is stopped before raising —
+    leaving it running would leak the query AND keep writing a partial
+    sink."""
+    q = (
+        writer.queryName(f"{name}_{uuid.uuid4().hex[:8]}")
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(f"{name} did not finish in {timeout_s}s")
+
+
+def _run_stream(spark: SparkSession, staged: DataFrame, name: str,
+                build=None, sink=None, n_slices: int = 1,
+                output_mode: str = "append",
+                timeout_s: int = 300) -> DataFrame | None:
+    """The one stage -> stream -> await -> cleanup runner of the stream_*
+    queries.
+
+    Staging: with ``n_slices == 1`` the whole of ``staged`` is written once
+    and consumed in one micro-batch. Otherwise ``staged`` carries an int
+    ``epoch`` column in 0..n_slices-1 (see ``_span_epochs``); each epoch is
+    written as one parquet file, mtimes pinned ascending, and read with
+    ``maxFilesPerTrigger=1`` — n_slices REAL micro-batches in epoch order,
+    each advancing the watermark from that slice's event times. The epoch
+    column stays in the streamed schema: the dedup queries emit it as a
+    witness, and builders that don't need it never select it.
+
+    ``build`` maps the stream to the query's output (default: the stream
+    itself); ``sink(df, epoch_id)`` is the per-epoch foreachBatch function.
+    Without a ``sink``, each epoch goes to a tracked parquet dir and its
+    read-back is returned. The write mode follows the output mode:
+    ``complete`` re-emits full state every epoch, so OVERWRITE is the
+    idempotent sink (the last epoch leaves the full result); ``append``
+    emits each row exactly once and ``update`` re-emits a key's row each
+    batch it changes in, so those APPEND (an overwrite would drop rows
+    finalized in earlier epochs; update mode keeps every emission as
+    per-epoch witness data, and callers select the last one per key). A
+    caller-supplied sink keeps its own state under a ``_track_sink`` dir
+    and reads it back itself; the runner then returns None."""
+    out_dir = None
+    if sink is None:
+        out_dir = _track_sink(name)
+        mode = "overwrite" if output_mode == "complete" else "append"
+
+        def sink(df: DataFrame, _epoch_id: int) -> None:
+            df.write.mode(mode).parquet(out_dir)
+
+    staging = tempfile.mkdtemp(prefix=f"{name}_src_")
+    try:
+        now = time.time()
+        for e in range(n_slices):
+            part = (staged if n_slices == 1
+                    else staged.filter(F.col("epoch") == e).coalesce(1))
+            path = os.path.join(staging, f"slice_{e}.parquet")
+            part.write.mode("overwrite").parquet(path)
+            for fname in os.listdir(path):
+                os.utime(os.path.join(path, fname), (now - 600 + e * 100,) * 2)
+        reader = spark.readStream.schema(staged.schema)
+        if n_slices > 1:
+            reader = reader.option("maxFilesPerTrigger", 1)
+        stream = reader.parquet(os.path.join(staging, "slice_*.parquet"))
+        out = build(stream) if build else stream
+        _await(out.writeStream.outputMode(output_mode).foreachBatch(sink),
+               name, timeout_s)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+    return None if out_dir is None else _read_back(spark, out_dir, out.schema)
+
+
+def _span_epochs(df: DataFrame, n: int, key) -> DataFrame:
+    """``df`` plus an int ``epoch`` column: which of ``n`` equal spans of
+    the long column ``key``, between its min and max, the row falls in.
+    Row-pure arithmetic over one broadcast min/max aggregate (no global
+    sort), so ascending epochs hold ascending ``key`` — the arrival
+    schedule of the sliced stream_* queries."""
+    bounds = df.agg(F.min(key).alias("__mn"), F.max(key).alias("__mx"))
+    span = F.ceil(
+        (F.col("__mx") - F.col("__mn") + 1) / F.lit(float(n))
+    ).cast("long")
+    epoch = F.least(
+        F.lit(n - 1), F.floor((key - F.col("__mn")) / span).cast("int")
+    )
+    return (
+        df.crossJoin(F.broadcast(bounds))
+        .withColumn("epoch", epoch)
+        .drop("__mn", "__mx")
+    )
+
+
+def _window_columns(agg: DataFrame, bounds: list[str],
+                    *keys: str) -> DataFrame:
+    """A window operator's output (streaming/windows.py) as the oracle
+    states it: window bounds as epoch seconds, then the keys, ``n_events``
+    and ``total_value`` rounded half-up to 4 places."""
+    return agg.select(
+        *[F.unix_timestamp(b).alias(b) for b in bounds],
+        *keys,
+        "n_events",
+        round_half_up(F.col("total_value"), 4).alias("total_value"),
+    )
+
+
+def _last_emission(emissions: DataFrame, n_col: str) -> DataFrame:
+    """Each key's final state among its update-mode emissions: the running
+    count ``n_col`` strictly grows whenever a key appears, so the max row
+    is the last (a tie is impossible)."""
+    from pyspark.sql import Window as W
+
+    last = F.row_number().over(
+        W.partitionBy("key").orderBy(F.col(n_col).desc())
+    )
+    return emissions.withColumn("__r", last).filter("__r = 1").drop("__r")
+
+
 @query(
     "stream_tumbling_window",
     oracle="""
@@ -144,9 +241,9 @@ def _read_back(spark: SparkSession, out_dir: str, schema) -> DataFrame:
 def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch/stream equivalence, oracle-checked: the events table is staged
     to a streamable location, consumed as a stream in one availableNow pass,
-    aggregated with the same tumbling-window semantics as the batch
-    ts_tumbling_window — and the result must hash-match the same DuckDB
-    oracle the batch query uses.
+    aggregated by ``windows.tumbling_counts_stream`` (the tumbling-window
+    semantics of the batch ts_tumbling_window) — and the result must
+    hash-match the same DuckDB oracle the batch query uses.
 
     Complete output mode is REQUIRED by the contract (the oracle has every
     window; append mode holds trailing windows back behind the watermark),
@@ -157,27 +254,17 @@ def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet overwrite on executors, read back via ``_read_back`` (explicit
     schema, sink files kept as the durable recomputation source) so no row
     ever materializes on the driver. The watermark + append + file-sink
-    production twin is ``stream_tumbling_window_to_files`` below; the
-    batch twin is ``ts_tumbling_window``."""
+    production form is ``stream_tumbling_window_to_files`` below, over the
+    same operator; the batch form is ``ts_tumbling_window``."""
     events = load(spark, sf_dir, "events")
 
     def build(stream: DataFrame) -> DataFrame:
-        return (
-            stream.groupBy(F.window("ts", "1 hour"), "event_type")
-            .agg(
-                F.count("*").alias("n_events"),
-                round_half_up(F.sum("value"), 4).alias("total_value"),
-            )
-            .select(
-                F.unix_timestamp(F.col("window.start")).alias("window_start"),
-                "event_type",
-                "n_events",
-                "total_value",
-            )
+        return _window_columns(
+            tumbling_counts_stream(stream), ["window_start"], "event_type"
         )
 
-    return _run_stream_to_sink(
-        spark, events, build, "complete", "stream_tumbling_window"
+    return _run_stream(
+        spark, events, "stream_tumbling_window", build, output_mode="complete"
     )
 
 
@@ -206,23 +293,15 @@ def stream_tumbling_window_to_files(spark: SparkSession, source_path: str,
     correct append-mode semantics, not data loss.
     """
     stream = spark.readStream.schema(schema).parquet(source_path)
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            round_half_up(F.sum("value"), 4).alias("total_value"),
-        )
-        .select(
-            F.unix_timestamp(F.col("window.start")).alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
+    agg = _window_columns(
+        tumbling_counts_stream(stream.withWatermark("ts", watermark), width),
+        ["window_start"], "event_type",
     )
-    _await_foreach_batch(agg, {"path": output_path,
-                               "checkpointLocation": checkpoint_dir},
-                         "stream_tumbling_window_to_files", timeout_s, "append")
+    _await(
+        agg.writeStream.outputMode("append").format("parquet")
+        .options(path=output_path, checkpointLocation=checkpoint_dir),
+        "stream_tumbling_window_to_files", timeout_s,
+    )
 
 
 @query(
@@ -259,8 +338,9 @@ def stream_tumbling_window_to_files(spark: SparkSession, source_path: str,
     tags=("streaming", "window", "session"),
 )
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured Streaming SESSION windows (the built-in session_window
-    operator, not the batch lag/cumsum formulation of ts_sessionize), run as
+    """Structured Streaming SESSION windows (``windows.sessionized_stream``
+    over the built-in session_window operator, not the batch lag/cumsum
+    formulation of ts_sessionize), run as
     a real watermark + append stream to completion and oracle-checked.
 
     Append mode is the production shape for session windows — complete mode
@@ -286,29 +366,12 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load(spark, sf_dir, "events")
 
     def build(stream: DataFrame) -> DataFrame:
-        return (
-            stream.withWatermark("ts", "1 hour")
-            .groupBy(F.session_window("ts", "30 minutes"), "user_id")
-            .agg(
-                F.count("*").alias("n_events"),
-                round_half_up(F.sum("value"), 4).alias("total_value"),
-            )
-            .select(
-                F.unix_timestamp(F.col("session_window.start")).alias(
-                    "session_start"
-                ),
-                F.unix_timestamp(F.col("session_window.end")).alias(
-                    "session_end"
-                ),
-                "user_id",
-                "n_events",
-                "total_value",
-            )
+        return _window_columns(
+            sessionized_stream(stream.withWatermark("ts", "1 hour")),
+            ["session_start", "session_end"], "user_id",
         )
 
-    return _run_stream_to_sink(
-        spark, events, build, "append", "stream_session_window"
-    )
+    return _run_stream(spark, events, "stream_session_window", build)
 
 
 @query(
@@ -333,33 +396,22 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tumbling and session are r6 driver rows): 1-hour windows sliding
     every 30 minutes, so each event feeds TWO open windows and the
     stateful aggregation maintains overlapping groups — the assignment
-    fan-out tumbling windows never exercise. Complete output mode against
+    fan-out tumbling windows never exercise. The operator is
+    ``windows.sliding_counts_stream``; complete output mode against
     the SAME DuckDB oracle as the batch ts_sliding_window (which models
     the fan-out by crossing with the 2 offsets); the foreachBatch
     overwrite sink is the idempotent complete-mode pattern of
     stream_tumbling_window. State cost: every open (window, key-less)
     group — 2x the tumbling count on the same horizon; the
-    watermark+append production twin follows
-    stream_tumbling_window_to_files unchanged (window() accepts the slide
-    argument identically)."""
+    watermark + append production form of the same operator is
+    stream_sliding_window_append."""
     events = load(spark, sf_dir, "events")
 
     def build(stream: DataFrame) -> DataFrame:
-        return (
-            stream.groupBy(F.window("ts", "1 hour", "30 minutes"))
-            .agg(
-                F.count("*").alias("n_events"),
-                round_half_up(F.sum("value"), 4).alias("total_value"),
-            )
-            .select(
-                F.unix_timestamp(F.col("window.start")).alias("window_start"),
-                "n_events",
-                "total_value",
-            )
-        )
+        return _window_columns(sliding_counts_stream(stream), ["window_start"])
 
-    return _run_stream_to_sink(
-        spark, events, build, "complete", "stream_sliding_window"
+    return _run_stream(
+        spark, events, "stream_sliding_window", build, output_mode="complete"
     )
 
 
@@ -412,8 +464,8 @@ def stream_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return _run_stream_to_sink(
-        spark, events, build, "complete", "stream_latest_per_key"
+    return _run_stream(
+        spark, events, "stream_latest_per_key", build, output_mode="complete"
     )
 
 
@@ -454,13 +506,10 @@ def stream_flowlog_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return enrich_oracle_projection(enriched)
 
-    return _run_stream_to_sink(
-        spark, lines, build, "append", "stream_flowlog_enrich"
-    )
+    return _run_stream(spark, lines, "stream_flowlog_enrich", build)
 
 
 _DEDUP_T0_US = 1_700_000_000_000_000  # fixed anchor: no wall-clock in data
-_DEDUP_DELAY_S = 600  # the 10-minute dropDuplicatesWithinWatermark horizon
 
 
 @query(
@@ -603,95 +652,7 @@ def _run_redelivery_dedup(spark, r1, witness_col, dedup_builder, name):
             F.unix_micros("ts").alias("ts_us"),
         )
 
-    return _run_sliced_stream(spark, staged, "epoch", 4, build, name)
-
-
-def _stage_slices(staged: DataFrame, slice_col: str, n_slices: int,
-                  name: str) -> str:
-    """Write ``staged`` as one parquet file per ``slice_col`` value
-    (0..n_slices-1) under a fresh staging dir, mtimes pinned ascending so
-    Spark's file source delivers them in slice order with
-    ``maxFilesPerTrigger=1`` — n_slices REAL micro-batches, each advancing
-    the watermark from that slice's event times. Returns the staging dir;
-    the caller owns its cleanup. (ADVICE r8 #4: this loop was inlined in
-    stream_cdc_merge; one arrival-schedule mechanism to maintain now.)"""
-    staging = tempfile.mkdtemp(prefix=f"{name}_src_")
-    now = time.time()
-    for e in range(n_slices):
-        slice_dir = os.path.join(staging, f"slice_{e}.parquet")
-        staged.filter(F.col(slice_col) == e).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(slice_dir)
-        for fname in os.listdir(slice_dir):
-            os.utime(
-                os.path.join(slice_dir, fname),
-                (now - 600 + e * 100, now - 600 + e * 100),
-            )
-    return staging
-
-
-def _slice_stream(spark: SparkSession, staging: str, schema) -> DataFrame:
-    """File-source stream over a _stage_slices dir: one staged slice file
-    per micro-batch, in mtime (= slice) order."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging + "/slice_*.parquet")
-    )
-
-
-def _await_foreach_batch(out: DataFrame, sink_fn, name: str,
-                         timeout_s: int, output_mode: str) -> None:
-    """Run ``out`` through a foreachBatch sink with an availableNow trigger
-    to completion. A timed-out query is stopped before raising — leaving it
-    running would leak the query AND keep writing a partial sink.
-
-    ``sink_fn`` is the foreachBatch function, or a dict of parquet file sink
-    options (path, checkpointLocation) for an exactly-once file sink."""
-    w = out.writeStream.outputMode(output_mode)
-    w = (w.foreachBatch(sink_fn) if callable(sink_fn)
-         else w.format("parquet").options(**sink_fn))
-    q = (
-        w.queryName(f"{name}_{uuid.uuid4().hex[:8]}")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"{name} did not finish in {timeout_s}s")
-
-
-def _run_sliced_stream(spark, staged, slice_col, n_slices, build, name,
-                       timeout_s: int = 300, output_mode: str = "append"):
-    """Stage ``staged`` as mtime-ordered slice files (_stage_slices) and run
-    ``build(stream)`` through a tracked foreachBatch parquet sink; returns
-    the durable read-back.
-
-    ``output_mode`` defaults to append; the stateful-fold queries
-    (applyInPandasWithState) require "update". The sink ALWAYS appends:
-    update mode re-emits a key's row each batch it changes in, and keeping
-    every emission preserves the per-epoch history as witness data —
-    callers that want final state select the last emission per key.
-
-    The slice column stays in the streamed schema: the dedup harness emits
-    it as its epoch witness, and builders that don't need it simply never
-    select it. Shared by the re-delivery dedup queries, the stream-stream
-    interval join, and the streaming CUSUM fold (one arrival-schedule
-    mechanism, one timeout/cleanup path to maintain). stream_cdc_merge
-    shares the staging/stream/await pieces directly — its sink is the
-    MERGE itself, not this append sink."""
-    staging = _stage_slices(staged, slice_col, n_slices, name)
-    out_dir = _track_sink(name)
-    try:
-        out = build(_slice_stream(spark, staging, staged.schema))
-
-        def write_epoch(df: DataFrame, _epoch_id: int) -> None:
-            df.write.mode("append").parquet(out_dir)
-
-        _await_foreach_batch(out, write_epoch, name, timeout_s, output_mode)
-        return _read_back(spark, out_dir, out.schema)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    return _run_stream(spark, staged, name, build, n_slices=4)
 
 
 @query(
@@ -703,22 +664,21 @@ def _run_sliced_stream(spark, staged, slice_col, n_slices, build, name,
     tags=("streaming", "stateful", "cusum"),
 )
 def stream_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The CUSUM change-point fold AS A STREAM — applyInPandasWithState
-    (no protobuf wire protocol, so this is the stateful-processor surface
-    that actually EXECUTES in this container; the Spark-4
-    transformWithState form in streaming/transform_state.py stays for
-    real clusters) run across FOUR real micro-batches and hash-checked
-    against the SAME recursive-CTE oracle as the batch
+    """The CUSUM change-point fold AS A STREAM —
+    ``transform_state.cusum_drift_stream`` on applyInPandasWithState (no
+    protobuf wire protocol needed) — run across FOUR real micro-batches
+    and hash-checked against the SAME recursive-CTE oracle as the batch
     ``flowlog_cusum_drift`` (VERDICT r6 "Next round" #3).
 
     The logical stream is ``flagship.cusum_flows`` staged as four
-    seq-ascending slices (ntile over seq — harness staging, not the
-    operator), one file per micro-batch, so the cross-batch fold order IS
-    seq order: within a batch the operator sorts each key's rows by seq,
-    across batches the slices arrive ascending. Update mode emits each
-    key's running state once per batch it appears in; the foreachBatch
-    sink keeps every emission and the final state per key is the max-n
-    row (n strictly grows whenever a key appears — a tie is impossible).
+    seq-ascending slices (equal seq spans, ``_span_epochs`` — harness
+    staging, not the operator), one file per micro-batch, so the
+    cross-batch fold order IS seq order: within a batch the operator sorts
+    each key's rows by seq, across batches the slices arrive ascending.
+    Update mode emits each key's running state once per batch it appears
+    in; the foreachBatch sink keeps every emission and the final state per
+    key is the max-n row (n strictly grows whenever a key appears — a tie
+    is impossible).
 
     WHY hash-green here proves cross-batch state carry: if state were
     dropped between micro-batches, the final n per key would be only the
@@ -726,26 +686,15 @@ def stream_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the match certifies batch 4 continued batch 1's fold. State is four
     integers per key, keyspace-bounded; production pairs this with
     GroupStateTimeout eviction for churning keys."""
-    from pyspark.sql import Window as W
-
     from ..flagship import cusum_flows
-    from .transform_state import cusum_drift_stream_legacy
+    from .transform_state import cusum_drift_stream
 
-    flows = cusum_flows(spark, sf_dir)
-    staged = flows.withColumn(
-        "slice", (F.ntile(4).over(W.orderBy("seq")) - 1).cast("int")
+    staged = _span_epochs(cusum_flows(spark, sf_dir), 4, F.col("seq"))
+    sink = _run_stream(
+        spark, staged, "stream_cusum_drift", cusum_drift_stream, n_slices=4,
+        output_mode="update",
     )
-
-    sink = _run_sliced_stream(
-        spark, staged, "slice", 4, cusum_drift_stream_legacy,
-        "stream_cusum_drift", output_mode="update",
-    )
-    w = W.partitionBy("key").orderBy(F.col("n").desc())
-    return (
-        sink.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") == 1)
-        .drop("r")
-    )
+    return _last_emission(sink, "n")
 
 
 @query(
@@ -768,24 +717,16 @@ def stream_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     Unlike CUSUM the fold is order-free, so the oracle is a plain GROUP
     BY — this row pins the STATE mechanics, the cusum row pins ordered
     recurrence on top of them."""
-    from pyspark.sql import Window as W
-
     from ..flagship import cusum_flows
     from .stateful import running_totals_stream
 
-    flows = cusum_flows(spark, sf_dir)
-    staged = flows.withColumn(
-        "slice", (F.ntile(4).over(W.orderBy("seq")) - 1).cast("int")
+    staged = _span_epochs(cusum_flows(spark, sf_dir), 4, F.col("seq"))
+    sink = _run_stream(
+        spark, staged, "stream_running_totals", running_totals_stream,
+        n_slices=4, output_mode="update",
     )
-    sink = _run_sliced_stream(
-        spark, staged, "slice", 4, running_totals_stream,
-        "stream_running_totals", output_mode="update",
-    )
-    w = W.partitionBy("key").orderBy(F.col("n_flows").desc())
-    return (
-        sink.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") == 1)
-        .select("key", "total_bytes", "n_flows")
+    return _last_emission(sink, "n_flows").select(
+        "key", "total_bytes", "n_flows"
     )
 
 
@@ -924,34 +865,29 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     COMPLETENESS under eviction (why a 10-minute watermark cannot drop a
     true pair even though the join interval is 1 hour): the harness stages
-    the corpus as four time-ascending slices (ntile over (ts, event_id) —
-    harness staging, not the operator under test), one file per
-    micro-batch. A purchase p matching click c satisfies p.ts <= c.ts + 1h,
-    and c arrives in the same or an earlier slice (p.ts > c.ts, slices
-    ascending). When p's batch runs, the in-effect watermark is (max ts of
-    STRICTLY EARLIER slices) - 10min < p.ts - 10min + (intra-slice spread)
-    <= c.ts + 1h, so c's state — evictable only once the watermark passes
-    c.ts + 1h — is still live and the pair is emitted in p's own batch.
-    Eviction then really runs behind the advancing watermark (~7.5-day
-    slices vs a 1-hour join window: almost all state is dropped between
-    batches), which is exactly the bounded-state claim: state is
+    the corpus as four time-ascending slices (equal event-time spans,
+    ``_span_epochs`` — harness staging, not the operator under test), one
+    file per micro-batch. A purchase p matching click c satisfies p.ts <=
+    c.ts + 1h, and c arrives in the same or an earlier slice (p.ts > c.ts,
+    slices ascending). When p's batch runs, the in-effect watermark is (max
+    ts of STRICTLY EARLIER slices) - 10min < p.ts - 10min + (intra-slice
+    spread) <= c.ts + 1h, so c's state — evictable only once the watermark
+    passes c.ts + 1h — is still live and the pair is emitted in p's own
+    batch. Eviction then really runs behind the advancing watermark
+    (~7.5-day slices vs a 1-hour join window: almost all state is dropped
+    between batches), which is exactly the bounded-state claim: state is
     (watermark horizon + join interval) x arrival rate, never
     stream-lifetime. Inner join => append mode, every pair emitted exactly
     once; the batch twin join_interval_events shares the semantics, this
     row proves the STREAMING physical operator agrees with the SQL oracle
     on every pair and every gap.
     """
-    from pyspark.sql import Window as W
-
     from .joins import stream_stream_interval_join
 
     events = load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts"
     )
-    staged = events.withColumn(
-        "slice",
-        (F.ntile(4).over(W.orderBy("ts", "event_id")) - 1).cast("int"),
-    )
+    staged = _span_epochs(events, 4, F.unix_micros("ts"))
 
     def build(stream: DataFrame) -> DataFrame:
         joined = stream_stream_interval_join(
@@ -962,8 +898,8 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "click_id", "purchase_id", "user_id", "gap_us",
         )
 
-    return _run_sliced_stream(
-        spark, staged, "slice", 4, build, "stream_interval_join"
+    return _run_stream(
+        spark, staged, "stream_interval_join", build, n_slices=4
     )
 
 
@@ -1040,25 +976,20 @@ def stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     reworded this from an earlier draft's slice-term description). State cost is identical to the inner
     form ((horizon + interval) x arrival rate); the unmatched-left scan is
     the same state store, no extra pass."""
-    from pyspark.sql import Window as W
-
     from .joins import stream_stream_interval_join
 
     events = load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts"
     )
-    staged = events.withColumn(
-        "slice",
-        (F.ntile(4).over(W.orderBy("ts", "event_id")) - 1).cast("int"),
-    )
+    staged = _span_epochs(events, 4, F.unix_micros("ts"))
 
     def build(stream: DataFrame) -> DataFrame:
         return stream_stream_interval_join(stream, how="left_outer").select(
             "click_id", "purchase_id", "user_id", "gap_us",
         )
 
-    return _run_sliced_stream(
-        spark, staged, "slice", 4, build, "stream_interval_join_outer"
+    return _run_stream(
+        spark, staged, "stream_interval_join_outer", build, n_slices=4
     )
 
 
@@ -1096,16 +1027,15 @@ def stream_sliding_window_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Arrival schedule (deterministic, no wall clock): the event log splits
     into three time-ordered micro-batches (per-epoch thirds of the event-
-    time span — row-pure arithmetic over one broadcast min/max aggregate,
-    no window sort), then a fourth batch RE-DELIVERS every first-hour
-    event. By epoch 3 the in-effect watermark — ms-truncated max event
-    time over epochs 0-2 (the global max, epoch 2 holds it) minus the
-    30-minute delay — is days past those rows' window ends, so every
-    late row is DROPPED by the aggregation's pre-filter, exercising the
-    eviction path the complete-mode twin never runs. Time-ordered arrival
-    keeps every ORIGINAL row above the in-effect watermark (its earliest
-    window end exceeds its own event time), so none of the true data is
-    lost and the drop class is exactly the injected one.
+    time span, ``_span_epochs``), then a fourth batch RE-DELIVERS every
+    first-hour event. By epoch 3 the in-effect watermark — ms-truncated max
+    event time over epochs 0-2 (the global max, epoch 2 holds it) minus the
+    30-minute delay — is days past those rows' window ends, so every late
+    row is DROPPED by the aggregation's pre-filter, exercising the eviction
+    path the complete-mode twin never runs. Time-ordered arrival keeps
+    every ORIGINAL row above the in-effect watermark (its earliest window
+    end exceeds its own event time), so none of the true data is lost and
+    the drop class is exactly the injected one.
 
     The oracle states append semantics in one pass: each event fans out
     to its two overlapping windows (the ts_sliding_window model); a
@@ -1121,49 +1051,24 @@ def stream_sliding_window_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     State scale: watermark bounds live state to (horizon x slide fan-out)
     windows, independent of stream age — the property that makes this,
     not complete mode, the 100 TB shape."""
-    e = load(spark, sf_dir, "events")
+    e = load(spark, sf_dir, "events").select("ts", "value")
     t_us = F.unix_micros("ts")
-    bounds = e.agg(
-        F.min(t_us).alias("__mn"), F.max(t_us).alias("__mx")
-    )
-    third = F.ceil((F.col("__mx") - F.col("__mn") + 1) / F.lit(3.0)).cast(
-        "long"
-    )
-    originals = (
-        e.crossJoin(F.broadcast(bounds))
-        .select(
-            "ts",
-            "value",
-            F.least(
-                F.lit(2),
-                F.floor((t_us - F.col("__mn")) / third).cast("int"),
-            ).alias("epoch"),
-        )
-    )
+    bounds = e.agg(F.min(t_us).alias("__mn"))
     late = (
         e.crossJoin(F.broadcast(bounds))
         .filter(t_us < F.col("__mn") + F.lit(3_600_000_000))
         .select("ts", "value", F.lit(3).cast("int").alias("epoch"))
     )
-    staged = originals.unionByName(late)
+    staged = _span_epochs(e, 3, t_us).unionByName(late)
 
     def build(stream: DataFrame) -> DataFrame:
-        return (
-            stream.withWatermark("ts", "30 minutes")
-            .groupBy(F.window("ts", "1 hour", "30 minutes"))
-            .agg(
-                F.count("*").alias("n_events"),
-                round_half_up(F.sum("value"), 4).alias("total_value"),
-            )
-            .select(
-                F.unix_timestamp(F.col("window.start")).alias("window_start"),
-                "n_events",
-                "total_value",
-            )
+        return _window_columns(
+            sliding_counts_stream(stream.withWatermark("ts", "30 minutes")),
+            ["window_start"],
         )
 
-    return _run_sliced_stream(
-        spark, staged, "epoch", 4, build, "stream_sliding_window_append"
+    return _run_stream(
+        spark, staged, "stream_sliding_window_append", build, n_slices=4
     )
 
 
@@ -1203,9 +1108,8 @@ def stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan behind `foreachBatch { MERGE INTO }` on Delta/Iceberg, expressed
     on plain parquet with epoch-versioned snapshots).
 
-    Four real micro-batches (time-ordered quarters of the event log —
-    the row-pure broadcast min/max staging of
-    stream_sliding_window_append). Each batch reduces to latest-change-
+    Four real micro-batches (time-ordered quarters of the event log's
+    time span, ``_span_epochs``). Each batch reduces to latest-change-
     per-key (partial-aggregable max(struct(us, event_id, ...)), the
     cdc_merge_snapshot argmax), full-outer-merges into the previous
     snapshot version — 'error' deletes, anything else upserts, untouched
@@ -1225,90 +1129,77 @@ def stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles only its own changes (one partial-aggregable argmax) plus a
     key-equi merge join against the snapshot."""
     e = load(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
-    t_us = F.unix_micros("ts")
-    bounds = e.agg(F.min(t_us).alias("__mn"), F.max(t_us).alias("__mx"))
-    quarter = F.ceil((F.col("__mx") - F.col("__mn") + 1) / F.lit(4.0)).cast(
-        "long"
-    )
-    staged = e.crossJoin(F.broadcast(bounds)).select(
-        "ts", "user_id", "event_type", "value", "event_id",
-        F.least(
-            F.lit(3), F.floor((t_us - F.col("__mn")) / quarter).cast("int")
-        ).alias("epoch"),
+    staged = _span_epochs(
+        e.select("ts", "user_id", "event_type", "value", "event_id"),
+        4, F.unix_micros("ts"),
     )
 
     snap_schema = ("user_id long, state string, value double, "
                    "last_epoch int")
-    # shared arrival-schedule machinery (_stage_slices/_slice_stream/
-    # _await_foreach_batch — the r9 unification, ADVICE r8 #4); the sink is
-    # the MERGE itself rather than _run_sliced_stream's append sink
-    staging = _stage_slices(staged, "epoch", 4, "stream_cdc_merge")
+    # the per-epoch sink is the MERGE itself
     snapdir = _track_sink("stream_cdc_merge")
-    try:
-        stream = _slice_stream(spark, staging, staged.schema)
 
-        def apply_merge(df: DataFrame, epoch_id: int) -> None:
-            ss = df.sparkSession
-            latest = (
-                df.groupBy("user_id")
-                .agg(
-                    F.max(
-                        F.struct(
-                            F.unix_micros("ts").alias("us"),
-                            F.col("event_id"),
-                            F.col("event_type").alias("state"),
-                            F.col("value"),
-                            F.col("epoch"),
-                        )
-                    ).alias("c")
-                )
-                .select(
-                    F.col("user_id").alias("c_user_id"),
-                    F.col("c.state").alias("c_state"),
-                    F.col("c.value").alias("c_value"),
-                    F.col("c.epoch").alias("c_epoch"),
-                )
+    def apply_merge(df: DataFrame, epoch_id: int) -> None:
+        ss = df.sparkSession
+        latest = (
+            df.groupBy("user_id")
+            .agg(
+                F.max(
+                    F.struct(
+                        F.unix_micros("ts").alias("us"),
+                        F.col("event_id"),
+                        F.col("event_type").alias("state"),
+                        F.col("value"),
+                        F.col("epoch"),
+                    )
+                ).alias("c")
             )
-            if epoch_id == 0:
-                base = ss.createDataFrame([], snap_schema)
-            else:
-                base = ss.read.schema(snap_schema).parquet(
-                    os.path.join(snapdir, f"v{epoch_id - 1}")
-                )
-            merged = base.join(
-                latest, base.user_id == latest.c_user_id, "full_outer"
-            ).filter(
-                F.col("c_state").isNull() | (F.col("c_state") != "error")
+            .select(
+                F.col("user_id").alias("c_user_id"),
+                F.col("c.state").alias("c_state"),
+                F.col("c.value").alias("c_value"),
+                F.col("c.epoch").alias("c_epoch"),
             )
-            out = merged.select(
-                F.coalesce(base.user_id, F.col("c_user_id")).alias("user_id"),
-                F.coalesce(F.col("c_state"), F.col("state")).alias("state"),
-                F.when(F.col("c_user_id").isNotNull(), F.col("c_value"))
-                .otherwise(F.col("value"))
-                .alias("value"),
-                F.coalesce(F.col("c_epoch"), F.col("last_epoch")).alias(
-                    "last_epoch"
-                ),
+        )
+        if epoch_id == 0:
+            base = ss.createDataFrame([], snap_schema)
+        else:
+            base = ss.read.schema(snap_schema).parquet(
+                os.path.join(snapdir, f"v{epoch_id - 1}")
             )
-            out.write.mode("overwrite").parquet(
-                os.path.join(snapdir, f"v{epoch_id}")
-            )
+        merged = base.join(
+            latest, base.user_id == latest.c_user_id, "full_outer"
+        ).filter(
+            F.col("c_state").isNull() | (F.col("c_state") != "error")
+        )
+        out = merged.select(
+            F.coalesce(base.user_id, F.col("c_user_id")).alias("user_id"),
+            F.coalesce(F.col("c_state"), F.col("state")).alias("state"),
+            F.when(F.col("c_user_id").isNotNull(), F.col("c_value"))
+            .otherwise(F.col("value"))
+            .alias("value"),
+            F.coalesce(F.col("c_epoch"), F.col("last_epoch")).alias(
+                "last_epoch"
+            ),
+        )
+        out.write.mode("overwrite").parquet(
+            os.path.join(snapdir, f"v{epoch_id}")
+        )
 
-        _await_foreach_batch(stream, apply_merge, "stream_cdc_merge",
-                             300, "append")
-        final = max(
-            int(d[1:]) for d in os.listdir(snapdir) if d.startswith("v")
-        )
-        snap = spark.read.schema(snap_schema).parquet(
-            os.path.join(snapdir, f"v{final}")
-        )
-        return snap.select(
-            "user_id", "state",
-            round_half_up(F.col("value"), 4).alias("value"),
-            "last_epoch",
-        )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    _run_stream(
+        spark, staged, "stream_cdc_merge", sink=apply_merge, n_slices=4
+    )
+    final = max(
+        int(d[1:]) for d in os.listdir(snapdir) if d.startswith("v")
+    )
+    snap = spark.read.schema(snap_schema).parquet(
+        os.path.join(snapdir, f"v{final}")
+    )
+    return snap.select(
+        "user_id", "state",
+        round_half_up(F.col("value"), 4).alias("value"),
+        "last_epoch",
+    )
 
 
 @query(
@@ -1404,58 +1295,44 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "overwrite"
     ).parquet(os.path.join(state, "bloom_v0"))
 
-    staging = _stage_slices(staged, "epoch", 4, "stream_incremental_dedup")
-    try:
-        stream = _slice_stream(spark, staging, staged.schema)
 
-        def apply_batch(df: DataFrame, epoch_id: int) -> None:
-            ss = df.sparkSession
-            keys_prev = ss.read.schema(key_schema).parquet(
-                os.path.join(state, f"keys_v{epoch_id}")
-            )
-            bprev = ss.read.parquet(os.path.join(state, f"bloom_v{epoch_id}"))
-            firsts = df.groupBy("content_key").agg(
-                F.min("doc_id").alias("doc_id"),
-                F.min("epoch").alias("epoch"),
-            )
-            probed = firsts.join(F.broadcast(bprev))
-            maybe = probed.filter(F.expr(probe)).drop("bloom")
-            fresh = probed.filter(~F.expr(probe)).drop("bloom")
-            surv = maybe.join(
-                keys_prev, "content_key", "left_anti"
-            ).unionByName(fresh).select("doc_id", "content_key", "epoch")
-            surv.write.mode("overwrite").parquet(
-                os.path.join(state, f"surv_v{epoch_id}")
-            )
-            surv_back = ss.read.schema(surv_schema).parquet(
-                os.path.join(state, f"surv_v{epoch_id}")
-            )
-            keys_prev.unionByName(
-                surv_back.select("content_key")
-            ).write.mode("overwrite").parquet(
-                os.path.join(state, f"keys_v{epoch_id + 1}")
-            )
-            bloom_merge(
-                [bprev, bloom_build(surv_back, "content_key", words=words)]
-            ).write.mode("overwrite").parquet(
-                os.path.join(state, f"bloom_v{epoch_id + 1}")
-            )
-
-        _await_foreach_batch(
-            stream, apply_batch, "stream_incremental_dedup", 300, "append"
+    def apply_batch(df: DataFrame, epoch_id: int) -> None:
+        ss = df.sparkSession
+        keys_prev = ss.read.schema(key_schema).parquet(
+            os.path.join(state, f"keys_v{epoch_id}")
         )
-        survs = [
-            spark.read.schema(surv_schema).parquet(
-                os.path.join(state, f"surv_v{ep}")
-            )
-            for ep in range(4)
-        ]
-        out = survs[0]
-        for s in survs[1:]:
-            out = out.unionByName(s)
-        return out
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        bprev = ss.read.parquet(os.path.join(state, f"bloom_v{epoch_id}"))
+        firsts = df.groupBy("content_key").agg(
+            F.min("doc_id").alias("doc_id"),
+            F.min("epoch").alias("epoch"),
+        )
+        probed = firsts.join(F.broadcast(bprev))
+        maybe = probed.filter(F.expr(probe)).drop("bloom")
+        fresh = probed.filter(~F.expr(probe)).drop("bloom")
+        surv = maybe.join(
+            keys_prev, "content_key", "left_anti"
+        ).unionByName(fresh).select("doc_id", "content_key", "epoch")
+        surv.write.mode("overwrite").parquet(
+            os.path.join(state, f"surv_v{epoch_id}")
+        )
+        surv_back = ss.read.schema(surv_schema).parquet(
+            os.path.join(state, f"surv_v{epoch_id}")
+        )
+        keys_prev.unionByName(
+            surv_back.select("content_key")
+        ).write.mode("overwrite").parquet(
+            os.path.join(state, f"keys_v{epoch_id + 1}")
+        )
+        bloom_merge(
+            [bprev, bloom_build(surv_back, "content_key", words=words)]
+        ).write.mode("overwrite").parquet(
+            os.path.join(state, f"bloom_v{epoch_id + 1}")
+        )
+
+    _run_stream(
+        spark, staged, "stream_incremental_dedup", sink=apply_batch, n_slices=4
+    )
+    return _union_epochs(spark, state, "surv_v", surv_schema)
 
 
 # --- Streaming IVF assignment (VERDICT r9 #7) --------------------------------
@@ -1620,65 +1497,51 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").cast("array<double>").alias("v"),
         F.expr("CAST((vec_id div 4) % 4 AS INT)").alias("epoch"),
     )
-    staging = _stage_slices(staged, "epoch", 4, "stream_ivf_assign")
-    try:
-        stream = _slice_stream(spark, staging, staged.schema)
 
-        def apply_batch(df: DataFrame, epoch_id: int) -> None:
-            ss = df.sparkSession
-            cb = ss.read.schema(cb_schema).parquet(
-                os.path.join(state, "codebook")
-            )
-            occ_prev = ss.read.schema(occ_schema).parquet(
-                os.path.join(state, f"occ_v{epoch_id}")
-            )
-            per = _ivf_assign_cells(df.select("vec_id", "v"), cb)
-            merged = (
-                occ_prev.join(per, ["cid"], "full_outer")
-                .select(
-                    "cid",
-                    (F.coalesce("n_cum", F.lit(0))
-                     + F.coalesce("n_b", F.lit(0))).alias("n_cum"),
-                    (F.coalesce("sd_cum", F.lit(0))
-                     + F.coalesce("sd_b", F.lit(0))).alias("sd_cum"),
-                    F.col("n_b").isNotNull().alias("touched"),
-                )
-            )
-            merged.write.mode("overwrite").parquet(
-                os.path.join(state, f"occ_raw_v{epoch_id + 1}")
-            )
-            back = ss.read.schema(occ_schema + ", touched boolean").parquet(
-                os.path.join(state, f"occ_raw_v{epoch_id + 1}")
-            )
-            back.select("cid", "n_cum", "sd_cum").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(state, f"occ_v{epoch_id + 1}"))
-            ep = F.lit(int(epoch_id)).cast("int")
-            back.filter("touched").select(
-                F.col("cid").cast("int").alias("cluster_id"),
-                ep.alias("epoch"),
-                "n_cum",
-                (F.floor(F.col("sd_cum").cast("double") / F.col("n_cum")
-                         + F.lit(0.5)) / F.lit(KM_SCALE)).alias("mean_d"),
-            ).write.mode("overwrite").parquet(
-                os.path.join(state, f"emit_v{epoch_id}")
-            )
-
-        _await_foreach_batch(
-            stream, apply_batch, "stream_ivf_assign", 300, "append"
+    def apply_batch(df: DataFrame, epoch_id: int) -> None:
+        ss = df.sparkSession
+        cb = ss.read.schema(cb_schema).parquet(
+            os.path.join(state, "codebook")
         )
-        outs = [
-            spark.read.schema(emit_schema).parquet(
-                os.path.join(state, f"emit_v{ep}")
+        occ_prev = ss.read.schema(occ_schema).parquet(
+            os.path.join(state, f"occ_v{epoch_id}")
+        )
+        per = _ivf_assign_cells(df.select("vec_id", "v"), cb)
+        merged = (
+            occ_prev.join(per, ["cid"], "full_outer")
+            .select(
+                "cid",
+                (F.coalesce("n_cum", F.lit(0))
+                 + F.coalesce("n_b", F.lit(0))).alias("n_cum"),
+                (F.coalesce("sd_cum", F.lit(0))
+                 + F.coalesce("sd_b", F.lit(0))).alias("sd_cum"),
+                F.col("n_b").isNotNull().alias("touched"),
             )
-            for ep in range(4)
-        ]
-        out = outs[0]
-        for s in outs[1:]:
-            out = out.unionByName(s)
-        return out
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        )
+        merged.write.mode("overwrite").parquet(
+            os.path.join(state, f"occ_raw_v{epoch_id + 1}")
+        )
+        back = ss.read.schema(occ_schema + ", touched boolean").parquet(
+            os.path.join(state, f"occ_raw_v{epoch_id + 1}")
+        )
+        back.select("cid", "n_cum", "sd_cum").write.mode(
+            "overwrite"
+        ).parquet(os.path.join(state, f"occ_v{epoch_id + 1}"))
+        ep = F.lit(int(epoch_id)).cast("int")
+        back.filter("touched").select(
+            F.col("cid").cast("int").alias("cluster_id"),
+            ep.alias("epoch"),
+            "n_cum",
+            (F.floor(F.col("sd_cum").cast("double") / F.col("n_cum")
+                     + F.lit(0.5)) / F.lit(KM_SCALE)).alias("mean_d"),
+        ).write.mode("overwrite").parquet(
+            os.path.join(state, f"emit_v{epoch_id}")
+        )
+
+    _run_stream(
+        spark, staged, "stream_ivf_assign", sink=apply_batch, n_slices=4
+    )
+    return _union_epochs(spark, state, "emit_v", emit_schema)
 
 
 # --- Stream-side adaptive quality filter (VERDICT r9 #9) ---------------------
@@ -1794,8 +1657,8 @@ def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "source", "epoch", "score", "threshold_ppm")
         )
 
-    return _run_sliced_stream(
-        spark, staged, "epoch", 4, build, "stream_quality_filter"
+    return _run_stream(
+        spark, staged, "stream_quality_filter", build, n_slices=4
     )
 
 
@@ -1917,103 +1780,89 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = d.select(
         "doc_id", "text", F.expr("CAST(doc_id % 4 AS INT)").alias("epoch")
     )
-    staging = _stage_slices(staged, "epoch", 4, "stream_heavy_hitters")
-    try:
-        stream = _slice_stream(spark, staging, staged.schema)
 
-        def apply_batch(df: DataFrame, epoch_id: int) -> None:
-            ss = df.sparkSession
-            cm_prev = ss.read.schema(cm_schema).parquet(
-                os.path.join(state, f"cm_v{epoch_id}")
-            )
-            cand_prev = ss.read.schema(cand_schema).parquet(
-                os.path.join(state, f"cand_v{epoch_id}")
-            )
-            js = ss.range(_CM_D).select(F.col("id").alias("j"))
-            tb = (
-                df.select(F.explode(F.split("text", " ")).alias("tok"))
-                .filter(F.col("tok") != "")
-                .groupBy("tok")
-                .agg(F.count(F.lit(1)).alias("c"))
-            )
-            cells_b = (
-                tb.crossJoin(F.broadcast(js))
-                .select(
-                    "j",
-                    _cm_bucket_spark(F.col("j"), F.col("tok")).alias("bucket"),
-                    "c",
-                )
-                .groupBy("j", "bucket")
-                .agg(F.sum("c").alias("cnt"))
-            )
-            merged = cm_prev.join(
-                cells_b, ["j", "bucket"], "full_outer"
-            ).select(
-                "j",
-                "bucket",
-                (
-                    F.coalesce(cm_prev["cnt"], F.lit(0))
-                    + F.coalesce(cells_b["cnt"], F.lit(0))
-                ).alias("cnt"),
-            )
-            merged.write.mode("overwrite").parquet(
-                os.path.join(state, f"cm_v{epoch_id + 1}")
-            )
-            cand_next = (
-                cand_prev.unionByName(
-                    tb.filter(F.col("c") >= _HH_CAND_FLOOR).select("tok")
-                ).distinct()
-            )
-            cand_next.write.mode("overwrite").parquet(
-                os.path.join(state, f"cand_v{epoch_id + 1}")
-            )
-            # emit from the WRITTEN state: post-merge cumulative estimates
-            cm_cells = ss.read.schema(cm_schema).parquet(
-                os.path.join(state, f"cm_v{epoch_id + 1}")
-            )
-            cands = ss.read.schema(cand_schema).parquet(
-                os.path.join(state, f"cand_v{epoch_id + 1}")
-            )
-            hb = cands.crossJoin(F.broadcast(js)).select(
-                "tok",
+    def apply_batch(df: DataFrame, epoch_id: int) -> None:
+        ss = df.sparkSession
+        cm_prev = ss.read.schema(cm_schema).parquet(
+            os.path.join(state, f"cm_v{epoch_id}")
+        )
+        cand_prev = ss.read.schema(cand_schema).parquet(
+            os.path.join(state, f"cand_v{epoch_id}")
+        )
+        js = ss.range(_CM_D).select(F.col("id").alias("j"))
+        tb = (
+            df.select(F.explode(F.split("text", " ")).alias("tok"))
+            .filter(F.col("tok") != "")
+            .groupBy("tok")
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
+        cells_b = (
+            tb.crossJoin(F.broadcast(js))
+            .select(
                 "j",
                 _cm_bucket_spark(F.col("j"), F.col("tok")).alias("bucket"),
+                "c",
             )
-            est = (
-                hb.join(F.broadcast(cm_cells), ["j", "bucket"])
-                .groupBy("tok")
-                .agg(F.min("cnt").alias("cm_estimate"))
-            )
-            top = est.orderBy(
-                F.desc("cm_estimate"), F.asc("tok")
-            ).limit(_HH_TOP_K)
-            from pyspark.sql import Window as W
-
-            rw = W.orderBy(F.desc("cm_estimate"), F.asc("tok"))
-            top.select(
-                F.lit(int(epoch_id)).cast("int").alias("epoch"),
-                "tok",
-                "cm_estimate",
-                F.row_number().over(rw).alias("rnk"),
-            ).write.mode("overwrite").parquet(
-                os.path.join(state, f"emit_v{epoch_id}")
-            )
-
-        _await_foreach_batch(
-            stream, apply_batch, "stream_heavy_hitters", 300, "append"
+            .groupBy("j", "bucket")
+            .agg(F.sum("c").alias("cnt"))
         )
-        outs = [
-            spark.read.schema(emit_schema).parquet(
-                os.path.join(state, f"emit_v{ep}")
-            )
-            for ep in range(4)
-        ]
-        out = outs[0]
-        for s in outs[1:]:
-            out = out.unionByName(s)
-        return out
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        merged = cm_prev.join(
+            cells_b, ["j", "bucket"], "full_outer"
+        ).select(
+            "j",
+            "bucket",
+            (
+                F.coalesce(cm_prev["cnt"], F.lit(0))
+                + F.coalesce(cells_b["cnt"], F.lit(0))
+            ).alias("cnt"),
+        )
+        merged.write.mode("overwrite").parquet(
+            os.path.join(state, f"cm_v{epoch_id + 1}")
+        )
+        cand_next = (
+            cand_prev.unionByName(
+                tb.filter(F.col("c") >= _HH_CAND_FLOOR).select("tok")
+            ).distinct()
+        )
+        cand_next.write.mode("overwrite").parquet(
+            os.path.join(state, f"cand_v{epoch_id + 1}")
+        )
+        # emit from the WRITTEN state: post-merge cumulative estimates
+        cm_cells = ss.read.schema(cm_schema).parquet(
+            os.path.join(state, f"cm_v{epoch_id + 1}")
+        )
+        cands = ss.read.schema(cand_schema).parquet(
+            os.path.join(state, f"cand_v{epoch_id + 1}")
+        )
+        hb = cands.crossJoin(F.broadcast(js)).select(
+            "tok",
+            "j",
+            _cm_bucket_spark(F.col("j"), F.col("tok")).alias("bucket"),
+        )
+        est = (
+            hb.join(F.broadcast(cm_cells), ["j", "bucket"])
+            .groupBy("tok")
+            .agg(F.min("cnt").alias("cm_estimate"))
+        )
+        top = est.orderBy(
+            F.desc("cm_estimate"), F.asc("tok")
+        ).limit(_HH_TOP_K)
+        from pyspark.sql import Window as W
+
+        rw = W.orderBy(F.desc("cm_estimate"), F.asc("tok"))
+        top.select(
+            F.lit(int(epoch_id)).cast("int").alias("epoch"),
+            "tok",
+            "cm_estimate",
+            F.row_number().over(rw).alias("rnk"),
+        ).write.mode("overwrite").parquet(
+            os.path.join(state, f"emit_v{epoch_id}")
+        )
+
+    _run_stream(
+        spark, staged, "stream_heavy_hitters", sink=apply_batch, n_slices=4
+    )
+    return _union_epochs(spark, state, "emit_v", emit_schema)
 
 
 QUERY_REGISTRY["stream_heavy_hitters"].oracle = _stream_hh_oracle_sql()
@@ -2225,97 +2074,83 @@ def stream_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         # MULTIPLE micro-batches, so the per-source spend fold is real
         F.expr("CAST((doc_id div 20) % 4 AS INT)").alias("epoch"),
     )
-    staging = _stage_slices(staged, "epoch", 4, "stream_domain_mix")
-    try:
-        stream = _slice_stream(spark, staging, staged.schema)
 
-        def apply_batch(df: DataFrame, epoch_id: int) -> None:
-            from pyspark.sql import Window as W
+    def apply_batch(df: DataFrame, epoch_id: int) -> None:
+        from pyspark.sql import Window as W
 
-            ss = df.sparkSession
-            allocs = ss.read.schema(alloc_schema).parquet(
-                os.path.join(state, "alloc")
-            )
-            spent_prev = ss.read.schema(spent_schema).parquet(
-                os.path.join(state, f"spent_v{epoch_id}")
-            )
-            qb = _mix_quality_frame(df)
-            base = (
-                qb.join(allocs, "source")
-                .join(spent_prev, ["source"], "left")
-                .withColumn("spent0", F.coalesce("spent", F.lit(0)))
-            )
-            cw = (
-                W.partitionBy("source")
-                .orderBy(F.asc("h"), F.asc("doc_id"))
-                .rowsBetween(W.unboundedPreceding, W.currentRow)
-            )
-            wc = base.withColumn("cb", F.sum("n_tok").over(cw))
-            admitted = wc.filter(
-                F.col("spent0") + F.col("cb") <= F.col("alloc_tokens")
-            )
-            adm_g = admitted.groupBy("source").agg(
-                F.count(F.lit(1)).alias("n_admitted"),
-                F.sum("n_tok").alias("tok_admitted"),
-            )
-            spent_next = (
-                allocs.select("source")
-                .join(spent_prev, ["source"], "left")
-                .join(adm_g.select("source", "tok_admitted"), ["source"],
-                      "left")
-                .select(
-                    "source",
-                    (
-                        F.coalesce("spent", F.lit(0))
-                        + F.coalesce("tok_admitted", F.lit(0))
-                    ).alias("spent"),
-                )
-            )
-            spent_next.write.mode("overwrite").parquet(
-                os.path.join(state, f"spent_v{epoch_id + 1}")
-            )
-            spent_back = ss.read.schema(spent_schema).parquet(
-                os.path.join(state, f"spent_v{epoch_id + 1}")
-            )
-            arr_g = qb.groupBy("source").agg(
-                F.count(F.lit(1)).alias("n_arrived")
-            )
-            ep = F.lit(int(epoch_id)).cast("int")
-            (
-                arr_g.join(allocs, "source")
-                .join(adm_g, ["source"], "left")
-                .join(spent_back, ["source"])
-                .select(
-                    "source",
-                    ep.alias("epoch"),
-                    "n_arrived",
-                    F.coalesce("n_admitted", F.lit(0)).cast("long")
-                    .alias("n_admitted"),
-                    F.coalesce("tok_admitted", F.lit(0)).cast("long")
-                    .alias("tok_admitted"),
-                    F.col("spent").alias("spent_cum"),
-                    (F.col("alloc_tokens") - F.col("spent"))
-                    .alias("remaining_tokens"),
-                )
-                .write.mode("overwrite")
-                .parquet(os.path.join(state, f"emit_v{epoch_id}"))
-            )
-
-        _await_foreach_batch(
-            stream, apply_batch, "stream_domain_mix", 300, "append"
+        ss = df.sparkSession
+        allocs = ss.read.schema(alloc_schema).parquet(
+            os.path.join(state, "alloc")
         )
-        outs = [
-            spark.read.schema(emit_schema).parquet(
-                os.path.join(state, f"emit_v{ep}")
+        spent_prev = ss.read.schema(spent_schema).parquet(
+            os.path.join(state, f"spent_v{epoch_id}")
+        )
+        qb = _mix_quality_frame(df)
+        base = (
+            qb.join(allocs, "source")
+            .join(spent_prev, ["source"], "left")
+            .withColumn("spent0", F.coalesce("spent", F.lit(0)))
+        )
+        cw = (
+            W.partitionBy("source")
+            .orderBy(F.asc("h"), F.asc("doc_id"))
+            .rowsBetween(W.unboundedPreceding, W.currentRow)
+        )
+        wc = base.withColumn("cb", F.sum("n_tok").over(cw))
+        admitted = wc.filter(
+            F.col("spent0") + F.col("cb") <= F.col("alloc_tokens")
+        )
+        adm_g = admitted.groupBy("source").agg(
+            F.count(F.lit(1)).alias("n_admitted"),
+            F.sum("n_tok").alias("tok_admitted"),
+        )
+        spent_next = (
+            allocs.select("source")
+            .join(spent_prev, ["source"], "left")
+            .join(adm_g.select("source", "tok_admitted"), ["source"],
+                  "left")
+            .select(
+                "source",
+                (
+                    F.coalesce("spent", F.lit(0))
+                    + F.coalesce("tok_admitted", F.lit(0))
+                ).alias("spent"),
             )
-            for ep in range(4)
-        ]
-        out = outs[0]
-        for s in outs[1:]:
-            out = out.unionByName(s)
-        return out
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        )
+        spent_next.write.mode("overwrite").parquet(
+            os.path.join(state, f"spent_v{epoch_id + 1}")
+        )
+        spent_back = ss.read.schema(spent_schema).parquet(
+            os.path.join(state, f"spent_v{epoch_id + 1}")
+        )
+        arr_g = qb.groupBy("source").agg(
+            F.count(F.lit(1)).alias("n_arrived")
+        )
+        ep = F.lit(int(epoch_id)).cast("int")
+        (
+            arr_g.join(allocs, "source")
+            .join(adm_g, ["source"], "left")
+            .join(spent_back, ["source"])
+            .select(
+                "source",
+                ep.alias("epoch"),
+                "n_arrived",
+                F.coalesce("n_admitted", F.lit(0)).cast("long")
+                .alias("n_admitted"),
+                F.coalesce("tok_admitted", F.lit(0)).cast("long")
+                .alias("tok_admitted"),
+                F.col("spent").alias("spent_cum"),
+                (F.col("alloc_tokens") - F.col("spent"))
+                .alias("remaining_tokens"),
+            )
+            .write.mode("overwrite")
+            .parquet(os.path.join(state, f"emit_v{epoch_id}"))
+        )
+
+    _run_stream(
+        spark, staged, "stream_domain_mix", sink=apply_batch, n_slices=4
+    )
+    return _union_epochs(spark, state, "emit_v", emit_schema)
 
 
 QUERY_REGISTRY["stream_domain_mix"].oracle = _stream_mix_oracle_sql()

@@ -77,7 +77,7 @@ def test_watermark_stream_runs_on_ntz_events(spark, ntz_sf_dir, tmp_path):
     events.write.mode("overwrite").parquet(staged)
     stream = spark.readStream.schema(events.schema).parquet(staged)
     q = (
-        tumbling_counts_stream(stream, watermark="0 seconds")
+        tumbling_counts_stream(stream.withWatermark("ts", "0 seconds"))
         .writeStream.outputMode("append")
         .format("memory")
         .queryName("ntz_wm_out")

@@ -3,10 +3,7 @@ registry entries, so rotation mistakes (unregistered names, a rows-only
 query burning a hash-checked slot, duplicates) must fail CI, not the round."""
 
 import __spark_entry__ as entry
-from aws_vpc_flow_log_appender_spark.operators.registry import (
-    NO_ORACLE_TAIL,
-    PRIORITY_ORDER,
-)
+from aws_vpc_flow_log_appender_spark.operators.registry import PRIORITY_ORDER
 
 WINDOW = 50
 
@@ -28,19 +25,14 @@ def test_window_is_fully_oracle_backed():
 
 
 def test_every_registered_query_has_an_oracle():
-    """179/179 contract-backed (VERDICT_r04 ask #2): any future oracle-less
-    query must be an explicit, justified NO_ORACLE_TAIL entry, never a
-    silent omission."""
-    names = list(entry.queries())
+    """Every registered query is contract-backed: an oracle-less query is
+    always a mistake, never a silent omission."""
     oracles = entry.oracle_sql()
-    no_oracle = {n for n in names if n not in oracles}
-    assert no_oracle <= set(NO_ORACLE_TAIL), no_oracle - set(NO_ORACLE_TAIL)
-    if NO_ORACLE_TAIL:
-        tail = names[-len(NO_ORACLE_TAIL):]
-        assert set(tail) == set(NO_ORACLE_TAIL)
+    no_oracle = [n for n in entry.queries() if n not in oracles]
+    assert not no_oracle, no_oracle
 
 
 def test_every_priority_name_is_registered():
     qs = entry.queries()
-    missing = [n for n in PRIORITY_ORDER + NO_ORACLE_TAIL if n not in qs]
+    missing = [n for n in PRIORITY_ORDER if n not in qs]
     assert not missing

@@ -92,33 +92,126 @@ def test_null_log_event_message_does_not_poison_sink(spark):
 def test_scan_cache_is_bounded_lru(spark, sf_dir):
     """ADVICE r4: the scan memo must be BOUNDED over sessions — the old
     WeakKeyDictionary never evicted because cached DataFrames pin their own
-    session key alive. The LRU keeps at most _SCAN_CACHE_MAX_SESSIONS
-    entries regardless of value->key cycles, evicting oldest-first, and a
-    re-used id() from a dead session never serves another session's plans."""
+    session key alive. The LRU keeps at most ``maxsize`` entries regardless
+    of value->key cycles, evicting oldest-first, and a re-used id() from a
+    dead session never serves another session's plans. The prepared geo
+    dimension's per-SparkContext memo is the same helper and holds the
+    same bound and liveness guarantees."""
+    import gc
+    import weakref
+
+    from aws_vpc_flow_log_appender_spark import fixtures
     from aws_vpc_flow_log_appender_spark.operators import registry as reg
 
+    cache = reg._SCAN_CACHE
     reg.load_cache_clear()
     try:
         # the real session plus newSession() clones: all distinct cache keys
-        sessions = [spark] + [spark.newSession() for _ in range(reg._SCAN_CACHE_MAX_SESSIONS + 1)]
+        sessions = [spark] + [spark.newSession() for _ in range(cache.maxsize + 1)]
         for s in sessions:
             reg.load(s, sf_dir, "region")
-        assert len(reg._SCAN_CACHE) == reg._SCAN_CACHE_MAX_SESSIONS
+        assert len(cache) == cache.maxsize
         # oldest (the original session and the first clone) were evicted;
         # the newest survives and still serves its memoized plan
         newest = sessions[-1]
-        memo = reg._SCAN_CACHE[id(newest)][1]
+        memo = cache.get(newest)
         df_again = reg.load(newest, sf_dir, "region")
         assert memo[(sf_dir, "region")] is df_again
         # a cached plan is bound to ITS session, never another's
         assert df_again.sparkSession is newest
         # re-loading through an evicted session repopulates (correctness
         # never depends on the cache) and bumps it to most-recent
+        assert cache.get(spark) is None
         reg.load(spark, sf_dir, "region")
-        assert id(spark) in reg._SCAN_CACHE
-        assert len(reg._SCAN_CACHE) == reg._SCAN_CACHE_MAX_SESSIONS
+        assert cache.get(spark) is not None
+        assert len(cache) == cache.maxsize
     finally:
         reg.load_cache_clear()
+
+    # geo dimension memo: one materialization per live SparkContext ...
+    geo = fixtures._GEO_FLAT_CACHE
+    sc = spark.sparkContext
+    flat = fixtures.geo_dim_flat_df(spark)
+    assert fixtures.geo_dim_flat_df(spark) is flat
+    assert geo.get(sc) is flat
+
+    class Key:  # weakref-able stand-ins for other contexts
+        pass
+
+    # ... bounded: maxsize newer keys evict it, and the next call
+    # re-materializes instead of growing the memo
+    others = [Key() for _ in range(geo.maxsize)]
+    for k in others:
+        geo.setdefault(k, "other")
+    assert len(geo) == geo.maxsize and geo.get(sc) is None
+    fresh = fixtures.geo_dim_flat_df(spark)
+    assert fresh is not flat and geo.get(sc) is fresh
+    assert len(geo) == geo.maxsize
+    # ... live keys only: a collected key's entry is swept, and an id
+    # shared with a dead key's entry never serves that entry's value
+    del others, k
+    gc.collect()
+    assert len(geo) == 1
+    dead, alive = Key(), Key()
+    geo._entries[id(alive)] = (weakref.ref(dead), "stale")
+    assert geo.get(alive) is None
+    del dead
+    gc.collect()
+    assert geo.get(alive) is None and len(geo) == 1
+    assert geo.get(sc) is fresh
+
+
+def test_session_lru_is_thread_safe():
+    """SessionLRU's sweep/lookup/insert/evict sequences run under one lock:
+    with many threads and a tiny interpreter switch interval, every thread
+    keeps reading its own key's value, all threads share the ONE value
+    cached for a common key (get-or-create is atomic), and the memo never
+    exceeds its bound."""
+    import sys
+    import threading
+
+    from aws_vpc_flow_log_appender_spark.session import SessionLRU
+
+    class Key:
+        pass
+
+    n_threads = 16
+    # room for every thread's own key, the shared key and one short-lived
+    # key per thread
+    cache = SessionLRU(maxsize=2 * n_threads + 1)
+    shared = Key()
+    seen = [set() for _ in range(n_threads)]
+    errors = []
+
+    def worker(t, key):
+        try:
+            for _ in range(2000):
+                own = cache.setdefault(key, t)
+                seen[t].add(cache.setdefault(shared, t))
+                cache.setdefault(Key(), -1)  # dies at once: exercises the sweep
+                if own != t or len(cache) > cache.maxsize:
+                    errors.append((t, own, len(cache)))
+                    return
+        except Exception as exc:  # noqa: BLE001 - surfaced by the assert below
+            errors.append(repr(exc))
+
+    keys = [Key() for _ in range(n_threads)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=worker, args=(t, k))
+            for t, k in enumerate(keys)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[:3]
+    assert len(set().union(*seen)) == 1
 
 
 def test_stream_sink_retention_is_bounded(spark, tmp_path):

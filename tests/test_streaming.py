@@ -82,7 +82,8 @@ def test_tumbling_window_stream_matches_batch(spark, sf_dir, events_parquet):
     stream_events = spark.readStream.schema(batch_events.schema).parquet(events_parquet)
 
     got = _run_stream(
-        spark, tumbling_counts_stream(stream_events, watermark="0 seconds"),
+        spark,
+        tumbling_counts_stream(stream_events.withWatermark("ts", "0 seconds")),
         "tumbling_out",
     )
     expected = (
@@ -110,7 +111,8 @@ def test_session_window_stream(spark, events_parquet):
     batch_events = spark.read.parquet(events_parquet)
     stream_events = spark.readStream.schema(batch_events.schema).parquet(events_parquet)
     got = _run_stream(
-        spark, sessionized_stream(stream_events, watermark="0 seconds"),
+        spark,
+        sessionized_stream(stream_events.withWatermark("ts", "0 seconds")),
         "session_out",
     )
     rows = got.collect()
@@ -166,7 +168,9 @@ def test_watermark_drops_late_data(spark, tmp_path):
         .parquet(str(src / "f*"))
     )
     got = _run_stream(
-        spark, tumbling_counts_stream(stream, watermark="10 minutes"), "late_out"
+        spark,
+        tumbling_counts_stream(stream.withWatermark("ts", "10 minutes")),
+        "late_out",
     )
     hour0_rows = [r for r in got.collect() if r["window_start"] == base]
     # exactly one emission of hour 0, with exactly the on-time event count

@@ -586,7 +586,7 @@ def test_stream_stream_left_outer_null_emission_is_watermark_gated(spark):
         stream_stream_interval_join,
     )
     from aws_vpc_flow_log_appender_spark.streaming.queries import (
-        _run_sliced_stream,
+        _run_stream,
     )
 
     T0 = BASE_US
@@ -608,10 +608,10 @@ def test_stream_stream_left_outer_null_emission_is_watermark_gated(spark):
         F.timestamp_micros("ts_us").alias("ts"), "epoch",
     )
 
-    out = _run_sliced_stream(
-        spark, staged, "epoch", 3,
+    out = _run_stream(
+        spark, staged, "test_ssj_outer",
         lambda s: stream_stream_interval_join(s, how="left_outer"),
-        "test_ssj_outer",
+        n_slices=3,
     ).collect()
 
     got = {(r["click_id"], r["purchase_id"], r["gap_us"]) for r in out}

@@ -1,19 +1,15 @@
-"""CUSUM drift operator tests. The streaming form (transformWithStateInPandas,
-Spark 4 StatefulProcessor) needs protobuf in the Python workers and skips
-cleanly where it's absent; the batch twin (applyInPandas, same kernel) always
-runs and must match an INDEPENDENT hand-written recurrence exactly
-(scaled-integer state -> no float tolerance)."""
+"""CUSUM drift operator tests. The batch form (mapInPandas) and the
+streaming form (applyInPandasWithState) share one kernel, and each must
+match an INDEPENDENT hand-written recurrence exactly (scaled-integer state
+-> no float tolerance)."""
 
-import pytest
 from pyspark.sql import types as T
 
 from aws_vpc_flow_log_appender_spark.streaming.transform_state import (
     CUSUM_H_MILLI,
     CUSUM_K_MILLI,
-    ROCKSDB_PROVIDER,
     cusum_drift_batch,
     cusum_drift_stream,
-    stateful_processor_available,
 )
 
 SCHEMA = T.StructType([
@@ -85,74 +81,10 @@ def test_cusum_batch_twin_streams_across_arrow_chunks(spark):
         assert got[key] == state, (key, got[key], state)
 
 
-def test_cusum_transform_state_surface(spark, tmp_path):
-    """Exactly one of the two transformWithState behaviors is reachable in
-    any environment, and BOTH are contracts this test holds (merged from two
-    mutually-exclusive skip-marked tests — VERDICT r6 "Next round" #3, the
-    suite's one perpetual skip):
-
-     - protobuf absent (this container): the operator must refuse at PLAN
-       time with an actionable NotImplementedError naming the dependency,
-       never fail opaquely at runtime inside a worker;
-     - protobuf present (a real cluster): the StatefulProcessor must carry
-       state across two file-triggered micro-batches and land on the
-       independent reference exactly.
-
-    The kernel itself always executes in-container regardless: the batch
-    twin above and the applyInPandasWithState form below share
-    ``_cusum_fold`` verbatim."""
-    if not stateful_processor_available():
-        df = spark.readStream.schema(SCHEMA).parquet(str(tmp_path))
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            cusum_drift_stream(df)
-        return
-
-    src = tmp_path / "src"
-    src.mkdir()
-    spark.createDataFrame(B1, SCHEMA).coalesce(1).write.parquet(str(src / "f1"))
-    spark.createDataFrame(B2, SCHEMA).coalesce(1).write.parquet(str(src / "f2"))
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-    )
-    try:
-        stream = (
-            spark.readStream.schema(SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src / "f*"))
-        )
-        q = (
-            cusum_drift_stream(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("cusum_out")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        rows = spark.sql("SELECT * FROM cusum_out").collect()
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    final = {}
-    for r in rows:
-        final[r["key"]] = (
-            r["n"], r["mean_milli"], r["cusum_pos_milli"], r["cusum_neg_milli"],
-        )
-    for key, state in _independent_reference().items():
-        assert final[key] == state, (key, final[key], state)
-
-
-def test_cusum_legacy_stream_carries_state_across_batches(spark, tmp_path):
-    """applyInPandasWithState needs no protobuf: the streaming CUSUM must
-    reproduce the independent reference after two file-triggered
-    micro-batches, proving state carry (batch 2 continues batch 1's fold,
-    not a fresh one)."""
-    from aws_vpc_flow_log_appender_spark.streaming.transform_state import (
-        cusum_drift_stream_legacy,
-    )
-
+def test_cusum_stream_carries_state_across_batches(spark, tmp_path):
+    """The streaming CUSUM must reproduce the independent reference after
+    two file-triggered micro-batches, proving state carry (batch 2
+    continues batch 1's fold, not a fresh one)."""
     src = tmp_path / "src"
     src.mkdir()
     spark.createDataFrame(B1, SCHEMA).coalesce(1).write.parquet(str(src / "f1"))
@@ -164,16 +96,16 @@ def test_cusum_legacy_stream_carries_state_across_batches(spark, tmp_path):
         .parquet(str(src / "f*"))
     )
     q = (
-        cusum_drift_stream_legacy(stream)
+        cusum_drift_stream(stream)
         .writeStream.outputMode("update")
         .format("memory")
-        .queryName("cusum_legacy_out")
+        .queryName("cusum_stream_out")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(180)
-    rows = spark.sql("SELECT * FROM cusum_legacy_out").collect()
+    rows = spark.sql("SELECT * FROM cusum_stream_out").collect()
 
     # update-mode memory sink appends one row per key per batch; the LAST
     # row per key is the final state
