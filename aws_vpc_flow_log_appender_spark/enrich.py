@@ -18,12 +18,17 @@ Spark-first design:
    first (flatten_geo_dim); the fact side does a broadcast equi join on its
    address's bucket and takes the first candidate that contains the address.
    Coarse buckets prune, an exact test inside the bucket decides.
+
+Every stage builds its Column expressions once per SparkContext
+(``session.stage_columns``) and runs as a few ``select``/``join`` calls.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .session import stage_columns
 
 # RFC1918 predicate — replicates decorator/index.js:149-153 EXACTLY, including
 # its quirk of classifying loopback 127/8 as "private" (SURVEY §2.2 P8).
@@ -72,18 +77,65 @@ def _nulls_last(cols: list[str]) -> list[Column]:
     return [c for a in cols for c in (F.isnull(a).alias(f"__null_{a}"), F.col(a))]
 
 
+def _eni(c: str) -> str:
+    """first_match_dim's private name for ENI dim column ``c``."""
+    return f"__eni_{c}"
+
+
+def _first_match_columns(columns: tuple[str, ...], key: str) -> tuple[Column, list[Column]]:
+    others = [c for c in columns if c != key]
+    best = F.col("__best")
+    agg = F.min(F.struct(*_nulls_last(others))).alias("__best")
+    out = [(F.col(c) if c == key else best[c]).alias(_eni(c)) for c in columns]
+    return agg, out
+
+
 def first_match_dim(eni_dim: DataFrame, key: str = "interfaceId") -> DataFrame:
     """lodash.find takes the FIRST match (decorator/index.js:167). 'First' in
     API-listing order is unknowable once distributed, so the enforced
     discipline is *deterministic*-match: one row per key, the least by the
     other columns in order, nulls last (bare dropDuplicates keeps whichever
     row the hash aggregate meets first — flip-flopping sg-ids/direction
-    across runs)."""
-    others = [c for c in eni_dim.columns if c != key]
-    best = F.col("__best")
-    return eni_dim.groupBy(key).agg(F.min(F.struct(*_nulls_last(others))).alias("__best")).select(
-        *[F.col(c) if c == key else best[c].alias(c) for c in eni_dim.columns]
+    across runs).
+
+    The output keeps the input's column order under private names
+    (``__eni_<name>``), so join_eni's condition and projections are built
+    once by name and never collide with a fact-side column."""
+    columns = tuple(eni_dim.columns)
+    agg, out = stage_columns(("first_match_dim", columns, key),
+                             lambda: _first_match_columns(columns, key))
+    return eni_dim.groupBy(key).agg(agg).select(*out)
+
+
+_ENI_USED = ("interfaceId", "securityGroupIds", "ipAddress")
+
+
+def _eni_columns(columns: tuple[str, ...]) -> tuple[Column, list[Column], list[str]]:
+    """join_eni's condition, output projection and dropped private names."""
+    on = F.col("interface-id") == F.col(_eni("interfaceId"))
+    # ipAddress is an array (the jmespath [?Primary] filter yields a singleton
+    # list, decorator/index.js:89); JS `==` coerces ['x'] == 'x' true, so the
+    # comparison is against the first element (SURVEY §7.4.2). try_element_at,
+    # not element_at: a real ENI with no Primary=true IPv4 (IPv6-only) yields
+    # an EMPTY array, and element_at on it raises under ANSI, killing the
+    # batch — the JS `[] == destaddr` evaluates false -> 'outbound', which is
+    # exactly where try_element_at's NULL lands the comparison
+    # (code-review r6).
+    direction = F.when(
+        F.col(_eni("interfaceId")).isNotNull(),
+        F.when(
+            F.col("destaddr") == F.try_element_at(F.col(_eni("ipAddress")), F.lit(1)),
+            F.lit("inbound"),
+        ).otherwise(F.lit("outbound")),
     )
+    out = [
+        F.col("*"),
+        # any other dim column rides along under its own name
+        *[F.col(_eni(c)).alias(c) for c in columns if c not in _ENI_USED],
+        F.col(_eni("securityGroupIds")).alias("security-group-ids"),
+        direction.alias("direction"),
+    ]
+    return on, out, [_eni(c) for c in columns]
 
 
 def join_eni(parsed: DataFrame, eni_dim: DataFrame) -> DataFrame:
@@ -95,38 +147,25 @@ def join_eni(parsed: DataFrame, eni_dim: DataFrame) -> DataFrame:
     inside the match branch, :169-173).
     """
     dim = first_match_dim(eni_dim)
-    joined = parsed.join(
-        F.broadcast(dim),
-        parsed["interface-id"] == dim["interfaceId"],
-        "left",
-    )
-    matched = dim["interfaceId"].isNotNull()
-    # ipAddress is an array (the jmespath [?Primary] filter yields a singleton
-    # list, decorator/index.js:89); JS `==` coerces ['x'] == 'x' true, so the
-    # comparison is against the first element (SURVEY §7.4.2). try_element_at,
-    # not element_at: a real ENI with no Primary=true IPv4 (IPv6-only) yields
-    # an EMPTY array, and element_at on it raises under ANSI, killing the
-    # batch — the JS `[] == destaddr` evaluates false -> 'outbound', which is
-    # exactly where try_element_at's NULL lands the comparison
-    # (code-review r6).
-    direction = F.when(
-        matched,
-        F.when(
-            F.col("destaddr") == F.try_element_at(dim["ipAddress"], F.lit(1)),
-            F.lit("inbound"),
-        ).otherwise(F.lit("outbound")),
-    )
-    return (
-        joined
-        .withColumn("security-group-ids", dim["securityGroupIds"])
-        .withColumn("direction", direction)
-        .drop("interfaceId", "securityGroupIds", "ipAddress")
-    )
+    columns = tuple(eni_dim.columns)
+    on, out, private = stage_columns(("join_eni", columns), lambda: _eni_columns(columns))
+    return parsed.join(F.broadcast(dim), on, "left").select(*out).drop(*private)
 
 
 def _ip_bucket(ip_int: Column) -> Column:
     """The /16 prefix bucket: the unit of both the dimension prep and the probe."""
     return (ip_int / F.lit(2 ** 16)).cast("long")
+
+
+def _flatten_columns(attrs: tuple[str, ...]) -> tuple[list[Column], Column]:
+    start, end = F.col("start_ip_int"), F.col("end_ip_int")
+    cand = F.struct((end - start).alias("w"), start.alias("s"), *_nulls_last(list(attrs)),
+                    end.alias("e"))
+    spans = [
+        F.explode(F.sequence(_ip_bucket(start), _ip_bucket(end))).alias("ip_bucket"),
+        cand.alias("cand"),
+    ]
+    return spans, F.array_sort(F.collect_list("cand")).alias("cands")
 
 
 def flatten_geo_dim(geo_dim: DataFrame) -> DataFrame:
@@ -146,19 +185,45 @@ def flatten_geo_dim(geo_dim: DataFrame) -> DataFrame:
     attributes still picks one winner on every run (the flip-flop hazard
     first_match_dim eliminates for the ENI dim).
     """
-    attrs = [f.name for f in geo_dim.schema.fields
-             if f.name not in ("start_ip_int", "end_ip_int")]
-    start, end = F.col("start_ip_int"), F.col("end_ip_int")
-    cand = F.struct((end - start).alias("w"), start.alias("s"), *_nulls_last(attrs),
-                    end.alias("e"))
-    return (
-        geo_dim.select(
-            F.explode(F.sequence(_ip_bucket(start), _ip_bucket(end))).alias("ip_bucket"),
-            cand.alias("cand"),
-        )
-        .groupBy("ip_bucket")
-        .agg(F.array_sort(F.collect_list("cand")).alias("cands"))
+    attrs = tuple(c for c in geo_dim.columns if c not in ("start_ip_int", "end_ip_int"))
+    spans, cands = stage_columns(("flatten_geo_dim", attrs), lambda: _flatten_columns(attrs))
+    return geo_dim.select(*spans).groupBy("ip_bucket").agg(cands)
+
+
+_GEO_PRIVATE = ["ip_bucket", "cands", "__ip_int", "__geo"]
+
+# output column -> the geo dim attribute it reads
+_GEO_FIELDS = [("source-country-code", "country_code"), ("source-country-name", "country_name"),
+               ("source-region-code", "region_code"), ("source-region-name", "region_name"),
+               ("source-city", "city")]
+
+
+def _geo_output(geo: Column | None) -> list[Column]:
+    """Every input column plus the six geo columns read from the winning
+    candidate ``geo``: ''/0 where it is NULL, and everywhere when ``geo``
+    is None (geolocation off)."""
+    def field(attr: str, default: str | float) -> Column:
+        return F.lit(default) if geo is None else F.coalesce(geo[attr], F.lit(default))
+
+    return [
+        F.col("*"),
+        *[field(attr, "").alias(name) for name, attr in _GEO_FIELDS],
+        F.struct(field("latitude", 0.0).alias("lat"),
+                 field("longitude", 0.0).alias("lon")).alias("source-location"),
+    ]
+
+
+def _geo_columns(src_col: str) -> tuple[list[Column], Column, list[Column], list[Column]]:
+    """join_geo's gated address, join condition on its bucket, winning
+    candidate and output."""
+    gate = (~is_rfc1918(src_col)) & F.col(src_col).isNotNull()
+    ip = F.col("__ip_int")
+    ip_int = [F.col("*"), F.when(gate, ip_to_int(src_col)).alias("__ip_int")]
+    on = _ip_bucket(ip) == F.col("ip_bucket")
+    hit = F.try_element_at(
+        F.filter("cands", lambda c: (c["s"] <= ip) & (ip <= c["e"])), F.lit(1)
     )
+    return ip_int, on, [F.col("*"), hit.alias("__geo")], _geo_output(F.col("__geo"))
 
 
 def join_geo(df: DataFrame, geo_dim: DataFrame, src_col: str = "srcaddr",
@@ -179,48 +244,14 @@ def join_geo(df: DataFrame, geo_dim: DataFrame, src_col: str = "srcaddr",
     flatten_geo_dim (callers that reuse one dimension across queries or
     micro-batches prepare it once).
     """
-    geo_defaults = {
-        "source-country-code": F.lit(""),
-        "source-country-name": F.lit(""),
-        "source-region-code": F.lit(""),
-        "source-region-name": F.lit(""),
-        "source-city": F.lit(""),
-        "source-location": F.struct(
-            F.lit(0.0).alias("lat"), F.lit(0.0).alias("lon")
-        ),
-    }
     if not geolocation_enabled:
-        for name, default in geo_defaults.items():
-            df = df.withColumn(name, default)
-        return df
-
-    gate = (~is_rfc1918(src_col)) & F.col(src_col).isNotNull()
+        return df.select(*stage_columns(("join_geo", None), lambda: _geo_output(None)))
+    ip_int, on, geo, out = stage_columns(("join_geo", src_col), lambda: _geo_columns(src_col))
     buckets = geo_dim if dim_is_disjoint else flatten_geo_dim(geo_dim)
-    ip = F.col("__ip_int")
-    df = df.withColumn("__ip_int", F.when(gate, ip_to_int(src_col))).withColumn(
-        "__ip_bucket", _ip_bucket(ip)
-    )
-    joined = df.join(F.broadcast(buckets), df["__ip_bucket"] == buckets["ip_bucket"], "left")
-    hit = F.try_element_at(
-        F.filter("cands", lambda c: (c["s"] <= ip) & (ip <= c["e"])), F.lit(1)
-    )
-    geo = F.col("__geo")
-    return (
-        joined.withColumn("__geo", hit)
-        .withColumn("source-country-code", F.coalesce(geo["country_code"], F.lit("")))
-        .withColumn("source-country-name", F.coalesce(geo["country_name"], F.lit("")))
-        .withColumn("source-region-code", F.coalesce(geo["region_code"], F.lit("")))
-        .withColumn("source-region-name", F.coalesce(geo["region_name"], F.lit("")))
-        .withColumn("source-city", F.coalesce(geo["city"], F.lit("")))
-        .withColumn(
-            "source-location",
-            F.struct(
-                F.coalesce(geo["latitude"], F.lit(0.0)).alias("lat"),
-                F.coalesce(geo["longitude"], F.lit(0.0)).alias("lon"),
-            ),
-        )
-        .drop("ip_bucket", "cands", "__ip_int", "__ip_bucket", "__geo")
-    )
+    joined = df.select(*ip_int).join(F.broadcast(buckets), on, "left")
+    # the winning candidate is its own projection: each output column reads
+    # it, and one projection keeps the filter to one evaluation per row
+    return joined.select(*geo).select(*out).drop(*_GEO_PRIVATE)
 
 
 def project_eni_dim(ec2_raw: DataFrame) -> DataFrame:

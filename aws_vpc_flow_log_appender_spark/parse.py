@@ -8,15 +8,18 @@ dropped, and later emitted with result ProcessingFailed).
 
 Spark-first design: one ``regexp_extract`` of the whole match (empty = no
 match) + one ``split`` of that match + positional ``getItem``/``cast`` — all
-built-in Column expressions, fully inside whole-stage codegen; no UDFs.
+built-in Column expressions, fully inside whole-stage codegen; no UDFs. The
+expressions are built once per SparkContext (``session.stage_columns``), so
+each call is two projections over prebuilt columns.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .schema import FLOW_FIELDS, FLOW_LINE_PATTERN
+from .session import stage_columns
 
 
 def decode_base64_utf8(col: Column | str) -> Column:
@@ -55,19 +58,8 @@ def parse_flow_fields(line: Column) -> list[Column]:
     return cols
 
 
-def parse_records(records: DataFrame, data_col: str = "data",
-                  base64_encoded: bool = True) -> DataFrame:
-    """Firehose records -> parsed rows with error routing.
-
-    Input: any DataFrame with a ``recordId`` column and a payload column.
-    Output columns: ``recordId``, ``raw`` (decoded line), ``error`` (bool),
-    ``@timestamp`` and the 14 typed flow fields (NULL when error).
-
-    Mirrors extractRecords (decorator/index.js:100-139): valid rows become
-    typed records, invalid rows carry the raw payload with ``error=true``.
-    Implemented as one projection (no per-branch scans): the validity predicate
-    is computed once and the typed columns are NULL-masked by it.
-    """
+def _parse_columns(data_col: str, base64_encoded: bool) -> tuple[list[Column], list[Column]]:
+    """parse_records' two projections: the explode barrier, then the output."""
     if base64_encoded:
         raw = decode_base64_utf8(data_col)
         # preserve the ORIGINAL base64 payload for dead-lettering: re-encoding
@@ -98,20 +90,19 @@ def parse_records(records: DataFrame, data_col: str = "data",
     # dead-letter packaging path, and leaving it a flat projection lets
     # column pruning drop its base64 re-encode for every query that never
     # reads it.)
-    df = records.select(
-        "*",
+    barrier = [
+        F.col("*"),
         F.explode(
             F.array(F.struct(raw.alias("raw"), match.alias("match")))
         ).alias("__rv"),
-    )
-    rawc = F.col("__rv.raw")
+    ]
     # null-safe: a NULL payload gives a NULL match, and NULL `error`
     # would be treated as false downstream, misrouting the record to 'Ok'
     validc = F.coalesce(F.col("__rv.match") != "", F.lit(False))
     parsed = parse_flow_fields(F.col("__rv.match"))
-    out = df.select(
-        "recordId",
-        rawc.alias("raw"),
+    out = [
+        F.col("recordId"),
+        F.col("__rv.raw").alias("raw"),
         orig.alias("__orig_b64"),
         (~validc).alias("error"),
         F.when(validc, F.current_timestamp()).alias("@timestamp"),
@@ -119,8 +110,35 @@ def parse_records(records: DataFrame, data_col: str = "data",
             F.when(validc, c).alias(name)
             for c, (name, _) in zip(parsed, FLOW_FIELDS)
         ],
-    )
-    return out
+    ]
+    return barrier, out
+
+
+def parse_records(records: DataFrame, data_col: str = "data",
+                  base64_encoded: bool = True) -> DataFrame:
+    """Firehose records -> parsed rows with error routing.
+
+    Input: any DataFrame with a ``recordId`` column and a payload column.
+    Output columns: ``recordId``, ``raw`` (decoded line), ``error`` (bool),
+    ``@timestamp`` and the 14 typed flow fields (NULL when error).
+
+    Mirrors extractRecords (decorator/index.js:100-139): valid rows become
+    typed records, invalid rows carry the raw payload with ``error=true``.
+    Implemented as one projection (no per-branch scans): the validity predicate
+    is computed once and the typed columns are NULL-masked by it.
+    """
+    barrier, out = stage_columns(("parse_records", data_col, base64_encoded),
+                                 lambda: _parse_columns(data_col, base64_encoded))
+    return records.select(*barrier).select(*out)
+
+
+def _line_columns(line_col: str, unique_ids: bool) -> list[Column]:
+    line = F.col(line_col)
+    record_id = F.sha2(line, 256)
+    if unique_ids:
+        w = Window.partitionBy(line_col).orderBy(F.monotonically_increasing_id())
+        record_id = F.concat(record_id, F.lit("-"), F.row_number().over(w).cast("string"))
+    return [record_id.alias("recordId"), line.alias("data")]
 
 
 def parse_lines(lines: DataFrame, line_col: str = "value",
@@ -136,21 +154,6 @@ def parse_lines(lines: DataFrame, line_col: str = "value",
     repeats with a per-content occurrence index (costs one shuffle on the
     line content) — use for sinks that dedupe on recordId.
     """
-    if unique_ids:
-        from pyspark.sql import Window as W
-
-        w = W.partitionBy(line_col).orderBy(F.monotonically_increasing_id())
-        df = lines.select(
-            F.concat(
-                F.sha2(F.col(line_col), 256),
-                F.lit("-"),
-                F.row_number().over(w).cast("string"),
-            ).alias("recordId"),
-            F.col(line_col).alias("data"),
-        )
-    else:
-        df = lines.select(
-            F.sha2(F.col(line_col), 256).alias("recordId"),
-            F.col(line_col).alias("data"),
-        )
-    return parse_records(df, data_col="data", base64_encoded=False)
+    cols = stage_columns(("parse_lines", line_col, unique_ids),
+                         lambda: _line_columns(line_col, unique_ids))
+    return parse_records(lines.select(*cols), data_col="data", base64_encoded=False)

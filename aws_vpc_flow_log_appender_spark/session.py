@@ -12,9 +12,13 @@ import os
 import threading
 import weakref
 from collections import OrderedDict
-from typing import Any
+from collections.abc import Callable
+from typing import Any, TypeVar
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def get_spark(app_name: str = "aws_vpc_flow_log_appender_spark",
@@ -126,3 +130,25 @@ class SessionLRU:
     def clear(self) -> None:
         with self._lock:
             self._entries.clear()
+
+
+_STAGE_COLUMNS = SessionLRU(maxsize=4)
+
+
+def stage_columns(key: tuple, build: Callable[[], T]) -> T:
+    """The Column expressions ``build()`` returns for ``key``, built once per
+    SparkContext and reused by every later call.
+
+    Every ``F.*`` call, ``Column`` method and ``withColumn`` is one or more
+    py4j round trips plus a call-site capture: building the decorate plan
+    from scratch took ~3k of them, about a third of a 500-line micro-batch.
+    Expressions that name their inputs (``F.col``, never a DataFrame-bound
+    ``df[...]``) are independent of the plan they are used in, so each stage
+    builds its expressions once. ``key`` names the stage and every input its
+    expressions depend on; the per-context dict holds one entry per distinct
+    key the program uses."""
+    memo = _STAGE_COLUMNS.setdefault(SparkContext._active_spark_context, {})
+    cols = memo.get(key)
+    if cols is None:
+        cols = memo.setdefault(key, build())
+    return cols

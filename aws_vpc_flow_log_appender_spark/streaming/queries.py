@@ -160,6 +160,10 @@ def _run_stream(spark: SparkSession, staged: DataFrame, name: str,
             df.write.mode(mode).parquet(out_dir)
 
     staging = tempfile.mkdtemp(prefix=f"{name}_src_")
+    if n_slices > 1:
+        # each slice write filters `staged`; persisted, its plan (a SimHash
+        # sketch, a span aggregate) runs once instead of once per slice
+        staged = staged.persist()
     try:
         now = time.time()
         for e in range(n_slices):
@@ -177,6 +181,8 @@ def _run_stream(spark: SparkSession, staged: DataFrame, name: str,
         _await(out.writeStream.outputMode(output_mode).foreachBatch(sink),
                name, timeout_s)
     finally:
+        if n_slices > 1:
+            staged.unpersist()
         shutil.rmtree(staging, ignore_errors=True)
     return None if out_dir is None else _read_back(spark, out_dir, out.schema)
 

@@ -2,9 +2,13 @@
 reference's only fixture (decorator/event.json) plus branch-coverage corpus."""
 
 import base64
+import hashlib
 import json
 import random
 import re
+import threading
+
+import py4j.java_gateway
 
 from pyspark.sql import functions as F
 
@@ -18,8 +22,8 @@ from aws_vpc_flow_log_appender_spark.enrich import (
     join_geo,
     project_eni_dim,
 )
-from aws_vpc_flow_log_appender_spark.parse import parse_records
-from aws_vpc_flow_log_appender_spark.pipeline import decorate, enrich_flow_logs
+from aws_vpc_flow_log_appender_spark.parse import parse_lines, parse_records
+from aws_vpc_flow_log_appender_spark.pipeline import decorate, decorate_lines, enrich_flow_logs
 from aws_vpc_flow_log_appender_spark.schema import (
     EC2_ENI_RAW_SCHEMA,
     ENI_DIM_SCHEMA,
@@ -368,3 +372,103 @@ def test_join_geo_matches_python_reference(spark):
         assert len(rows) == len(probes)
         got = {r["id"]: (*[r[c] for c in cols], tuple(r["source-location"])) for r in rows}
         assert got == want
+
+
+def test_decorate_plan_build_is_a_few_jvm_calls(spark, monkeypatch):
+    """Each stage's Column expressions are built once per SparkContext, so a
+    micro-batch's plan costs a few py4j round trips per select/join, not
+    one or more per F.* call (~3k when every call built its own)."""
+    eni, flat = fixtures.eni_dim_df(spark), fixtures.geo_dim_flat_df(spark)
+    lines = spark.createDataFrame([(ln,) for ln in fixtures.EVENT_JSON_LINES], "value string")
+
+    def build():
+        return decorate_lines(lines, eni, flat, unique_ids=True, geo_dim_is_disjoint=True)
+
+    build()
+    calls = []
+    me = threading.get_ident()
+    send = py4j.java_gateway.GatewayClient.send_command
+
+    def counted(self, *args, **kwargs):
+        if threading.get_ident() == me:
+            calls.append(args[0].split("\n", 3)[:3])
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(py4j.java_gateway.GatewayClient, "send_command", counted)
+    out = build()
+    monkeypatch.undo()
+    assert len(calls) <= 300, len(calls)
+    assert out.count() == len(fixtures.EVENT_JSON_LINES)
+
+
+def _sha(line):
+    return hashlib.sha256(line.encode()).hexdigest()
+
+
+def _payloads(out):
+    """recordId -> (result, payload): the decoded JSON without its
+    processing-time @timestamp for Ok rows, the decoded text otherwise."""
+    got = {}
+    for r in out.collect():
+        data = base64.b64decode(r["data"])
+        if r["result"] == "Ok":
+            data = json.loads(data)
+            del data["@timestamp"]
+        else:
+            data = data.decode()
+        got[r["recordId"]] = (r["result"], data)
+    return got
+
+
+def test_stage_memo_keys_do_not_leak(spark):
+    """The stage expressions are memoized by the inputs they depend on:
+    calls that differ in one of them, made back to back in one session,
+    each get their own."""
+    eni, geo = fixtures.eni_dim_df(spark), fixtures.geo_dim_df(spark)
+    pub, priv = fixtures.EVENT_JSON_LINES
+    bad = "not a flow log"
+    lines = [pub, pub, priv, bad]
+    # each frame carries the other line column too, full of unparseable text
+    value = spark.createDataFrame([(ln, bad) for ln in lines], "value string, Data string")
+    data = spark.createDataFrame([(ln, bad) for ln in lines], "Data string, value string")
+
+    by_value = _payloads(decorate_lines(value, eni, geo))
+    assert set(by_value) == {_sha(pub), _sha(priv), _sha(bad)}  # repeats collide
+    ok = by_value[_sha(pub)]
+    assert ok[0] == "Ok" and ok[1]["source-city"] == "Seattle"
+    assert ok[1]["security-group-ids"] == ["sg-aaaa1111", "sg-bbbb2222"]
+    assert by_value[_sha(priv)][1]["source-city"] == ""  # RFC1918: gated
+    assert by_value[_sha(bad)] == ("ProcessingFailed", bad)
+    assert _payloads(decorate_lines(data, eni, geo, line_col="Data")) == by_value
+
+    uniq = _payloads(decorate_lines(value, eni, geo, unique_ids=True))
+    assert set(uniq) == {_sha(pub) + "-1", _sha(pub) + "-2", _sha(priv) + "-1", _sha(bad) + "-1"}
+    assert uniq[_sha(pub) + "-2"] == ok
+
+    no_geo = _payloads(decorate_lines(value, eni, geo, geolocation_enabled=False))
+    result, rec = no_geo[_sha(pub)]
+    assert result == "Ok" and rec["source-city"] == "" and rec["source-country-code"] == ""
+    assert rec["source-location"] == {"lat": 0.0, "lon": 0.0}
+    geo_cols = {"source-country-code", "source-country-name", "source-region-code",
+                "source-region-name", "source-city", "source-location"}
+    assert ({k: v for k, v in rec.items() if k not in geo_cols}
+            == {k: v for k, v in ok[1].items() if k not in geo_cols})
+
+    # base64 Firehose framing: the payload is decoded before parsing, and a
+    # failed record's original payload passes through
+    framed = _payloads(decorate(fixtures.firehose_records_df(spark, lines), eni, geo))
+    assert framed == {"rec-000000": ok, "rec-000001": ok,
+                      "rec-000002": by_value[_sha(priv)], "rec-000003": by_value[_sha(bad)]}
+
+    # an ENI dim with an extra column: it rides along under its own name,
+    # and the security groups and direction still come from their columns
+    parsed = parse_lines(value)
+    eni_x = eni.select(F.lit("acct-1").alias("owner"), *eni.columns)
+    wide = enrich_flow_logs(parsed, eni_x, geo)
+    assert not [c for c in wide.columns if c.startswith("__eni")]
+    plain = enrich_flow_logs(parsed, eni, geo).columns
+    assert wide.columns == [*plain[:-8], "owner", *plain[-8:]]  # 8 = 2 ENI + 6 geo
+    for r in wide.filter(~F.col("error")).collect():
+        assert (r["owner"], r["security-group-ids"], r["direction"]) == (
+            "acct-1", ["sg-aaaa1111", "sg-bbbb2222"], "inbound")
+    assert _payloads(decorate_lines(value, eni, geo)) == by_value

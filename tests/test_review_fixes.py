@@ -214,6 +214,47 @@ def test_session_lru_is_thread_safe():
     assert len(set().union(*seen)) == 1
 
 
+def test_stage_columns_share_one_build_across_threads(spark):
+    """session.stage_columns under racing threads: a key may be built more
+    than once, but every caller gets the ONE value the memo kept for it."""
+    import sys
+    import threading
+    import time
+
+    from aws_vpc_flow_log_appender_spark.session import stage_columns
+
+    n_threads, keys = 16, [("test_stage_columns_race", k) for k in range(4)]
+    got = [[] for _ in range(n_threads)]
+    start = threading.Barrier(n_threads)
+
+    def build():
+        time.sleep(0.01)  # a real build waits on py4j round trips
+        return object()
+
+    def worker(t):
+        start.wait(timeout=60)
+        for i in range(500):
+            key = keys[(t + i) % len(keys)]
+            got[t].append((key, id(stage_columns(key, build))))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(t,)) for t in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert all(len(g) == 500 for g in got)
+    ids = {}
+    for key, value in (kv for g in got for kv in g):
+        ids.setdefault(key, set()).add(value)
+    assert {k: len(v) for k, v in ids.items()} == {k: 1 for k in keys}
+
+
 def test_stream_sink_retention_is_bounded(spark, tmp_path):
     """Code-review r5 + ADVICE r5: sink dirs are registered for FIFO
     reclamation AT CREATION by _track_sink (so exception paths before

@@ -61,6 +61,9 @@ def test_plan_normalize_drops_session_labels():
 
 
 def test_interleave_alternates_which_side_runs_first(monkeypatch):
+    """A discarded warm-up round of both sides, then rounds that alternate
+    which side runs first; an odd pair count is rounded up to even, so each
+    side runs first equally often."""
     calls = []
 
     def run_side(root, qlist, n_trials):
@@ -69,9 +72,15 @@ def test_interleave_alternates_which_side_runs_first(monkeypatch):
 
     monkeypatch.setattr(ab_drive, "_run_side", run_side)
     acc = ab_drive.interleave({"ref": "/ref", "work": "/work"}, ["q"], 3, 2)
-    assert calls == ["/ref", "/work", "/work", "/ref", "/ref", "/work"]
-    assert acc == {"ref": {"q": [[1.0, 1.0], [4.0, 4.0], [5.0, 5.0]]},
-                   "work": {"q": [[2.0, 2.0], [3.0, 3.0], [6.0, 6.0]]}}
+    assert calls == ["/ref", "/work",  # warm-up, discarded
+                     "/ref", "/work", "/work", "/ref", "/ref", "/work", "/work", "/ref"]
+    assert acc == {"ref": {"q": [[3.0, 3.0], [6.0, 6.0], [7.0, 7.0], [10.0, 10.0]]},
+                   "work": {"q": [[4.0, 4.0], [5.0, 5.0], [8.0, 8.0], [9.0, 9.0]]}}
+    firsts = [calls[i] for i in range(2, len(calls), 2)]
+    assert firsts.count("/ref") == firsts.count("/work")
+    calls.clear()
+    ab_drive.interleave({"ref": "/ref", "work": "/work"}, ["q"], 2, 1)
+    assert len(calls) == 2 + 2 * 2  # an even count is kept
 
 
 def test_pair_stats_is_median_of_per_pair_ratios():

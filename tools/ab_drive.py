@@ -36,11 +36,17 @@ def interleave(roots: dict[str, str], qlist: list[str], pairs: int,
                n_trials: int) -> Rounds:
     """Run ``pairs`` rounds of one ab_bench process per side (one checkout
     per process, so machine drift hits both sides alike); the side that runs
-    first alternates from round to round. Returns side -> query -> one list
-    of trials per round."""
+    first alternates from round to round. A discarded warm-up round of both
+    sides goes first (without it, whichever side ran first in round 0 was
+    slower on 17 of 18 queries of one A/B), and an odd ``pairs`` is rounded
+    up to even so that each side runs first equally often. Returns side -> query -> one list of trials
+    per counted round."""
     acc: Rounds = {side: {q: [] for q in qlist} for side in roots}
     order = list(roots)
-    for r in range(pairs):
+    for side in order:
+        res = _run_side(roots[side], qlist, n_trials)
+        print(f"warm-up {side}: " + json.dumps(res), flush=True)
+    for r in range(pairs + pairs % 2):
         for side in order if r % 2 == 0 else order[::-1]:
             res = _run_side(roots[side], qlist, n_trials)
             for q in qlist:
