@@ -165,7 +165,11 @@ def _flatten_columns(attrs: tuple[str, ...]) -> tuple[list[Column], Column]:
         F.explode(F.sequence(_ip_bucket(start), _ip_bucket(end))).alias("ip_bucket"),
         cand.alias("cand"),
     ]
-    return spans, F.array_sort(F.collect_list("cand")).alias("cands")
+    # the width and null flags only order the sort; the probe reads the rest
+    kept = ["s", *attrs, "e"]
+    cands = F.transform(F.array_sort(F.collect_list("cand")),
+                        lambda c: F.struct(*[c[f].alias(f) for f in kept]))
+    return spans, cands.alias("cands")
 
 
 def flatten_geo_dim(geo_dim: DataFrame) -> DataFrame:

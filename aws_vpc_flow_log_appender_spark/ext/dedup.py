@@ -673,10 +673,11 @@ import itertools as _itertools
 _sql_over_seq = _itertools.count(1)
 
 
-def _sql_over(df, tag: str, sql: str):
+def _sql_over(df, tag: str, sql: str, args: dict | None = None):
     """Run a Spark-SQL string over ``df`` registered under a unique temp view.
 
-    The ``{v}`` placeholder in ``sql`` is replaced with the view name.
+    The ``{v}`` placeholder in ``sql`` is replaced with the view name, and
+    ``args`` binds its ``:name`` parameters.
     spark.sql() binds the view eagerly at call time, so the view is dropped
     again before returning (verified: the bound DataFrame stays executable)
     — no catalog entries accumulate across calls; the counter guards
@@ -684,7 +685,7 @@ def _sql_over(df, tag: str, sql: str):
     view = f"__sg_{tag}_{next(_sql_over_seq)}"
     df.createOrReplaceTempView(view)
     try:
-        return df.sparkSession.sql(sql.replace("{v}", view))
+        return df.sparkSession.sql(sql.replace("{v}", view), args)
     finally:
         df.sparkSession.catalog.dropTempView(view)
 

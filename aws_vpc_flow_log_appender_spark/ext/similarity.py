@@ -11,6 +11,8 @@ comparison is stable at 1e-6 rounding.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -982,28 +984,34 @@ def _kmeans_oracle_sql() -> str:
 # BOUNDED CONSTANT (KM_K x EMB_DIM doubles): the classical distributed
 # Lloyd (Spark MLlib's own shape) holds it on the driver, runs ONE
 # map-side-combined aggregate job per round (K x EMB_DIM avg cells cross
-# the network, never the corpus), and re-embeds the next codebook as
-# literals. That removes every corpus-sized training Exchange (guide
+# the network, never the corpus), and hands the next codebook back to the
+# plan as data. That removes every corpus-sized training Exchange (guide
 # §2.3/§2.4) and shrinks the analyzed plan ~3x (guide §7.3). Driver-held
-# state is exactly what a broadcast join already does — 8 rows, not data.
+# state is exactly what a broadcast join already does — 8 rows, not the
+# corpus.
+#
+# The codebook is data, never statement text: each round and each consumer
+# statement binds it as ONE JSON string parameter (``:cb`` for the KM
+# cells, ``:pcb`` for the PQ cells, one array per subspace) that Catalyst
+# folds to a single array literal. Generated code reads that literal by
+# reference, so the text of a round — and the classes codegen compiles for
+# it — is the same for every codebook, every round and every consumer.
 #
 # Engine parity is preserved bit-for-bit:
 #  - round >= 1 centroid elements are floor(avg*1e6+0.5) BIGINTs collected
-#    exactly and re-emitted as ``{s}L / 1000000.0D`` — the same division
+#    exactly and divided by 1e6 in Python floats — the same IEEE division
 #    the in-plan form evaluated;
-#  - c0 raw doubles round-trip through repr() + CAST(string AS DOUBLE)
-#    (both sides correctly-rounded shortest-repr IEEE-754);
+#  - every double crosses as its repr(), the shortest string that
+#    round-trips, and from_json parses it correctly-rounded back to the
+#    identical bits;
 #  - centroid self-dots fold in Python floats (binary64, left fold from
 #    0.0 — the _km_dot_sql operation order exactly);
-#  - the row-wise argmin least(struct(d, cid)...) induces the identical
-#    (d, cid) lexicographic total order min(struct(d, cid)) did.
+#  - the row-wise argmin array_min over (d, cid) structs induces the
+#    identical (d, cid) lexicographic total order min(struct(d, cid)) did.
 
-
-def _dbl_lit(x: float) -> str:
-    """Exact double literal: repr() emits the shortest string that
-    round-trips to this binary64; Spark's string->double cast parses it
-    correctly-rounded back to the identical bits."""
-    return f"CAST('{x!r}' AS DOUBLE)"
+_CELLS_TYPE = "array<struct<cid:int,c:array<double>,cc:double>>"
+_KM_CB = f"from_json(:cb, '{_CELLS_TYPE}')"
+_PQ_CB = f"from_json(:pcb, 'array<{_CELLS_TYPE}>')[m]"
 
 
 def _py_dot(a: list[float], b: list[float]) -> float:
@@ -1013,6 +1021,35 @@ def _py_dot(a: list[float], b: list[float]) -> float:
     for xx, yy in zip(a, b):
         acc = acc + xx * yy
     return acc
+
+
+def _cb_args(cb=None, pcb=None) -> dict[str, str]:
+    """SQL parameters binding the codebooks _lloyd_train returns: ``cb`` is
+    [(cid, [element value])] sorted by cid, ``pcb`` one such list per
+    subspace; each cell carries its self-dot ``cc``."""
+    def cells(cs):
+        return [{"cid": cid, "c": c, "cc": _py_dot(c, c)} for cid, c in cs]
+
+    args = {}
+    if cb is not None:
+        args["cb"] = json.dumps(cells(cb))
+    if pcb is not None:
+        args["pcb"] = json.dumps([cells(cs) for cs in pcb])
+    return args
+
+
+def _scores_sql(cells: str, v: str, vv: str) -> str:
+    """Every codebook cell's ``named_struct('d', ..., 'cid', ...)`` for one
+    vector: the same ``(vv - 2.0D * <fold dot> + cc)`` distance the unrolled
+    sc{i} CTE computed. array_min over it is the argmin."""
+    return (
+        f"transform({cells}, x -> named_struct('d', {vv} - 2.0D * "
+        f"{_km_dot_sql(v, 'x.c')} + x.cc, 'cid', x.cid))"
+    )
+
+
+_KM_SCORES = _scores_sql(_KM_CB, "v", "vv")
+_PQ_SCORES = _scores_sql(_PQ_CB, "sv", "svv")
 
 
 def _km_vecs_body(where: str | None = None) -> str:
@@ -1061,57 +1098,30 @@ def _vecs_ck(e, tag: str):
     )
 
 
-def _km_centroid_exprs(cb: list[tuple[int, list[str], list[float]]],
-                       v: str = "v", vv: str = "vv") -> list[str]:
-    """One ``named_struct('d', ..., 'cid', ...)`` per centroid: the same
-    ``(vv - 2.0D * <fold dot> + cc)`` distance the unrolled sc{i} CTE
-    computed, with the codebook as literals."""
-    out = []
-    for cid, elem_sql, elem_val in cb:
-        arr = f"array({', '.join(elem_sql)})"
-        cc = _dbl_lit(_py_dot(elem_val, elem_val))
-        out.append(
-            f"named_struct('d', {vv} - 2.0D * {_km_dot_sql(v, arr)} + {cc},"
-            f" 'cid', {cid})"
-        )
-    return out
-
-
-def _km_best_sql(cb, v: str = "v", vv: str = "vv") -> str:
-    """Row-wise argmin over the literal codebook: least() on (d, cid)
-    structs — the min(struct(d, cid)) total order without the
-    groupBy(vec_id) Exchange."""
-    structs = _km_centroid_exprs(cb, v, vv)
-    return structs[0] if len(structs) == 1 else f"least({', '.join(structs)})"
-
-
-def _km_literal_parts_spark(cb, vecs_body: str | None = None,
-                            with_sc: bool = False) -> list[str]:
-    """Spark twin of _km_oracle_train_parts over the codebook ``cb`` that
-    _lloyd_train returns: emits the same-named CTEs the unrolled form
-    exposes — ``vecs``, ``c{KM_ITERS}`` (literal VALUES) and ``a{KM_ITERS}``
-    (row-wise argmin, zero Exchanges), plus ``sc{KM_ITERS}`` (the full
-    (vector, centroid, d) pair relation, lazily exploded) when ``with_sc`` —
-    so every downstream tail keeps its text unchanged."""
+def _km_parts_spark(vecs_body: str | None = None,
+                    with_sc: bool = False) -> list[str]:
+    """Spark twin of _km_oracle_train_parts over the ``:cb`` codebook (bind
+    it with _cb_args): emits the same-named CTEs the unrolled form exposes
+    — ``vecs``, ``c{KM_ITERS}`` (the cells, with their self-dots ``cc``)
+    and ``a{KM_ITERS}`` (row-wise argmin, zero Exchanges), plus
+    ``sc{KM_ITERS}`` (the full (vector, centroid, d) pair relation, lazily
+    exploded) when ``with_sc`` — so every downstream tail keeps its text
+    unchanged."""
     if vecs_body is None:
         vecs_body = _km_vecs_body()
     fin = KM_ITERS
-    cb_rows = ", ".join(
-        f"({cid}, array({', '.join(elem_sql)}))" for cid, elem_sql, _ in cb
-    )
     parts = [f"""
     WITH vecs AS ({vecs_body}),
-    c{fin} AS (SELECT cid, c FROM (VALUES {cb_rows}) AS __cb(cid, c)),
+    c{fin} AS (SELECT inline({_KM_CB})),
     a{fin} AS (
       SELECT vec_id, v, vv, best.cid AS cid, best.d AS d
-      FROM (SELECT vec_id, v, vv, {_km_best_sql(cb)} AS best FROM vecs)
+      FROM (SELECT vec_id, v, vv, array_min({_KM_SCORES}) AS best FROM vecs)
     )"""]
     if with_sc:
-        structs = ", ".join(_km_centroid_exprs(cb))
         parts.append(f"""
     , sc{fin} AS (
       SELECT vec_id, v, vv, x.cid AS cid, x.d AS d
-      FROM vecs LATERAL VIEW explode(array({structs})) t AS x
+      FROM vecs LATERAL VIEW explode({_KM_SCORES}) t AS x
     )""")
     return parts
 
@@ -1160,7 +1170,7 @@ def sim_kmeans_cells(spark, sf_dir):
 
     e = load(spark, sf_dir, "embeddings")
     cb, _ = _lloyd_train(e, "kmeans", _km_vecs_body(), pq=False)
-    parts = _km_literal_parts_spark(cb)
+    parts = _km_parts_spark()
     fin = KM_ITERS
     parts.append(f"""
     SELECT a.cid AS cluster_id,
@@ -1169,14 +1179,13 @@ def sim_kmeans_cells(spark, sf_dir):
              / {KM_SCALE}D AS inertia,
            cn.centroid_norm
     FROM a{fin} a JOIN (
-      SELECT cid,
-             floor(sqrt({_km_dot_sql("c", "c")}) * {KM_SCALE}D + 0.5D)
-               / {KM_SCALE}D AS centroid_norm
+      SELECT cid, floor(sqrt(cc) * {KM_SCALE}D + 0.5D) / {KM_SCALE}D
+               AS centroid_norm
       FROM c{fin}
     ) cn ON a.cid = cn.cid
     GROUP BY a.cid, cn.centroid_norm
     """)
-    return _sql_over(e, "kmeans", "".join(parts))
+    return _sql_over(e, "kmeans", "".join(parts), _cb_args(cb))
 
 
 def _ivf_trained_oracle_sql() -> str:
@@ -1232,15 +1241,15 @@ def sim_ivf_trained_topk(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings")
     fin = KM_ITERS
     cb, _ = _lloyd_train(e, "kmtrain", _km_vecs_body(), pq=False)
-    parts = _km_literal_parts_spark(cb)
+    parts = _km_parts_spark()
     # sqrt(vv) is the per-row norm factor of the pair cosine — one sqrt per
     # row at the checkpoint instead of two 64-element folds per candidate
     # pair (the _cos_prenorm discipline; vv folds in _km_dot_sql order,
     # which is _fold_dot's order, so the doubles are bit-identical)
     parts.append(f" SELECT vec_id, v, sqrt(vv) AS nrm, cid FROM a{fin}")
-    assigned = _sql_over(e, "kmtrain", "".join(parts)).localCheckpoint(
-        eager=False
-    )
+    assigned = _sql_over(
+        e, "kmtrain", "".join(parts), _cb_args(cb)
+    ).localCheckpoint(eager=False)
     q = assigned.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("cid").alias("q_cid"),
@@ -1333,7 +1342,7 @@ def sim_ivf_trained_multiprobe(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings")
     fin = KM_ITERS
     cb, _ = _lloyd_train(e, "kmprobe", _km_vecs_body(), pq=False)
-    parts = _km_literal_parts_spark(cb, with_sc=True)
+    parts = _km_parts_spark(with_sc=True)
     # sqrt(vv) rides the checkpoint per row (the _cos_prenorm discipline)
     parts.append(f"""
     SELECT 0 AS kind, vec_id, v, sqrt(vv) AS nrm, cid,
@@ -1343,7 +1352,9 @@ def sim_ivf_trained_multiprobe(spark, sf_dir):
     SELECT 1 AS kind, vec_id, v, sqrt(vv) AS nrm, cid, d FROM sc{fin}
     WHERE vec_id < {N_QUERIES}
     """)
-    both = _sql_over(e, "kmprobe", "".join(parts)).localCheckpoint(eager=False)
+    both = _sql_over(
+        e, "kmprobe", "".join(parts), _cb_args(cb)
+    ).localCheckpoint(eager=False)
     pw = W.partitionBy("vec_id").orderBy(F.asc("d"), F.asc("cid"))
     probes = (
         both.filter(F.col("kind") == 1)
@@ -1471,72 +1482,39 @@ _PQ_SUB_BODY = (
 _PQ_VECS_BODY = "SELECT vec_id, CAST(embedding AS ARRAY<DOUBLE>) AS v FROM {v}"
 
 
-def _pq_centroid_case(pcb, what: str) -> str:
-    """Per-subspace codebook dispatch: CASE m WHEN j THEN <expr over m=j's
-    centroids> END. ``what`` is 'best' (least() argmin struct — the
-    min(struct(d, cid)) total order) or 'all' (array of every (cid, d)
-    struct, for the psc pair relation)."""
-    branches = []
-    for m in sorted({m for m, _ in pcb}):
-        structs = []
-        for (mm, cid), (elem_sql, elem_val) in pcb.items():
-            if mm != m:
-                continue
-            arr = f"array({', '.join(elem_sql)})"
-            cc = _dbl_lit(_py_dot(elem_val, elem_val))
-            structs.append(
-                f"named_struct('d', svv - 2.0D * {_km_dot_sql('sv', arr)}"
-                f" + {cc}, 'cid', {cid})"
-            )
-        if what == "best":
-            e = structs[0] if len(structs) == 1 else f"least({', '.join(structs)})"
-        else:
-            e = f"array({', '.join(structs)})"
-        branches.append(f"WHEN {m} THEN {e}")
-    return f"CASE m {' '.join(branches)} END"
-
-
-def _pq_literal_parts_spark(pcb, include_vecs: bool = True,
-                            vecs_sql: str = _PQ_VECS_BODY) -> list[str]:
-    """Spark twin of _pq_oracle_train_parts over the codebooks ``pcb`` that
-    _lloyd_train returns: emits the same-named CTEs — ``sub``,
-    ``pc{PQ_ITERS}`` (literal VALUES), ``pa{PQ_ITERS}`` (row-wise argmin)
-    and ``psc{PQ_ITERS}`` (the lazily-exploded pair relation) — so every
-    downstream tail keeps its text unchanged. ``include_vecs=False`` omits
-    the vecs CTE so the chain can follow a prefix that defines it."""
+def _pq_parts_spark(include_vecs: bool = True,
+                    vecs_sql: str = _PQ_VECS_BODY) -> list[str]:
+    """Spark twin of _pq_oracle_train_parts over the ``:pcb`` codebooks
+    (bind them with _cb_args): emits the same-named CTEs — ``sub``,
+    ``pa{PQ_ITERS}`` (row-wise argmin) and ``psc{PQ_ITERS}`` (the
+    lazily-exploded pair relation) — so every downstream tail keeps its
+    text unchanged. ``include_vecs=False`` omits the vecs CTE so the chain
+    can follow a prefix that defines it."""
     fin = PQ_ITERS
     head = f"""
     WITH vecs AS ({vecs_sql}),""" if include_vecs else "\n    ,"
-    pcb_rows = ", ".join(
-        f"({m}, {cid}, array({', '.join(elem_sql)}))"
-        for (m, cid), (elem_sql, _) in sorted(pcb.items())
-    )
     return [head + f"""
     sub AS ({_PQ_SUB_BODY}),
-    pc{fin} AS (
-      SELECT m, cid, c FROM (VALUES {pcb_rows}) AS __pcb(m, cid, c)
-    ),
     pa{fin} AS (
       SELECT vec_id, m, sv, best.cid AS cid, best.d AS d FROM (
-        SELECT vec_id, m, sv, {_pq_centroid_case(pcb, 'best')} AS best
-        FROM sub
+        SELECT vec_id, m, sv, array_min({_PQ_SCORES}) AS best FROM sub
       )
     ),
     psc{fin} AS (
       SELECT vec_id, m, sv, x.cid AS cid, x.d AS d
-      FROM sub LATERAL VIEW explode({_pq_centroid_case(pcb, 'all')}) t AS x
+      FROM sub LATERAL VIEW explode({_PQ_SCORES}) t AS x
     )"""]
 
 
 def _lloyd_train(rel, tag: str, vecs_body: str, km: bool = True,
-                 pq: bool = True, allow_interp: bool = True):
+                 pq: bool = True):
     """The driver-folded Lloyd trainer for the coarse (KM) codebook, the
     product (PQ) codebooks, or both, over ``vecs_body`` — a (vec_id, v[, vv])
     derivation of ``rel`` bound at ``{v}``. The codebooks are bounded
-    constants, so they are held on the driver and re-embedded as literals
-    each round. Returns (cb, pcb): cb is [(cid, [element sql], [element
-    value])], pcb is {(m, cid): ([element sql], [element value])}, and an
-    untrained side is None.
+    constants, so they are held on the driver and bound back into the one
+    round statement as data each round. Returns (cb, pcb): cb is
+    [(cid, [element value])] sorted by cid, pcb holds one such list per
+    subspace m, and an untrained side is None.
 
     ONE TakeOrdered job collects the seeds, the first KM_K / PQ_K vectors
     by vec_id. The PQ seeds are exact Python slices of those rows: sub's sv
@@ -1544,38 +1522,40 @@ def _lloyd_train(rel, tag: str, vecs_body: str, km: bool = True,
     per-m row_number seeding picks the same PQ_K smallest vec_ids. Each
     round is then ONE job, a UNION ALL of the trained sides' update
     aggregates (a single-element union when one side is trained): rows
-    tagged grp 0=KM / 1=PQ, the per-cell scaled-integer sums carried as one
-    BIGINT array, each side map-side combined to KM_K x EMB_DIM /
-    PQ_M x PQ_K x PQ_SUB cells, so no corpus-keyed Exchange runs anywhere.
+    tagged grp 0=KM / 1=PQ, one scaled-integer mean per (cell, position),
+    each side map-side combined to KM_K x EMB_DIM / PQ_M x PQ_K x PQ_SUB
+    groups, so no corpus-keyed Exchange runs anywhere.
     Total: 1 + max(KM_ITERS, PQ_ITERS) driver jobs over the trained sides.
-    Over a lazy _vecs_ck checkpoint the seed job also materializes it.
-
-    ``allow_interp=False`` keeps codegen on for the trainer statements
-    even below the size gate: _train_mem's consumers measured a reproducible
-    ~7-16% loss under the interpreted trainer (3/3 interleaved A/B
-    passes) — their final decision query reuses the trainer's generated
-    projection shape from the codegen cache, and the interpreted rounds
-    no longer pre-warm it — while every other trainer path measured
-    0.75-0.94 (see OPTIMIZATION_r11.md §4c)."""
+    Over a lazy _vecs_ck checkpoint the seed job also materializes it."""
     from .dedup import _sql_over
 
     prefix = f"WITH vecs AS ({vecs_body}), sub AS ({_PQ_SUB_BODY}) "
     km_iters, pq_iters = KM_ITERS if km else 0, PQ_ITERS if pq else 0
 
-    def sums(col: str, n: int) -> str:
-        """The per-cell position means on the 1e-6 grid, as exact BIGINTs."""
-        return "array(" + ", ".join(
-            f"CAST(floor(avg({col}[{p}]) * {KM_SCALE}D + 0.5D) AS BIGINT)"
-            for p in range(n)
-        ) + ")"
+    # one output row per (cell, position): the position mean on the 1e-6
+    # grid as an exact BIGINT. One avg over posexplode, not 64 avg columns:
+    # the 64-column aggregate's generated code ran a KM round ~1.5x slower
+    # at sf0.1 (2000 vectors, 4 cores).
+    mean = f"CAST(floor(avg(x) * {KM_SCALE}D + 0.5D) AS BIGINT) AS s"
+    km_side = (
+        f"SELECT 0 AS grp, -1 AS m, best.cid AS cid, p, {mean}"
+        f" FROM (SELECT array_min({_KM_SCORES}) AS best, v FROM vecs)"
+        " LATERAL VIEW posexplode(v) t AS p, x GROUP BY best.cid, p"
+    )
+    pq_side = (
+        f"SELECT 1 AS grp, m, best.cid AS cid, p, {mean}"
+        f" FROM (SELECT m, array_min({_PQ_SCORES}) AS best, sv FROM sub)"
+        " LATERAL VIEW posexplode(sv) t AS p, x GROUP BY m, best.cid, p"
+    )
 
-    def literal(vals) -> tuple[list[str], list[float]]:
-        """Seed doubles as exact literals (repr round-trip)."""
-        return [_dbl_lit(x) for x in vals], list(vals)
-
-    def scaled(s) -> tuple[list[str], list[float]]:
-        """A round's scaled-integer sums as ``{s}L / 1e6D`` and its values."""
-        return [f"{x}L / {KM_SCALE}D" for x in s], [x / KM_SCALE for x in s]
+    def cells(rows, grp: int, m: int = -1) -> list:
+        """A round's (cid, means) cells of one codebook, sorted by cid."""
+        means: dict[int, dict[int, float]] = {}
+        for r in rows:
+            if r.grp == grp and r.m == m:
+                means.setdefault(r.cid, {})[r.p] = r.s / KM_SCALE
+        return [(cid, [ps[p] for p in sorted(ps)])
+                for cid, ps in sorted(means.items())]
 
     # Scoped execution conf for the tiny bounded statements, restored on
     # exit; queries built outside the block keep their creation-time conf:
@@ -1587,21 +1567,11 @@ def _lloyd_train(rel, tag: str, vecs_body: str, km: bool = True,
     #   cells at ANY corpus scale (map-side partial aggregation emits <=
     #   codebook rows per mapper) — profiled at 32 inherited partitions the
     #   merged rounds ran 66 tasks for 24 output rows.
-    # - codegen.wholeStage=false + codegen.factoryMode=NO_CODEGEN, when
-    #   ``allow_interp`` and ``rel``'s estimate is below
-    #   plan_gates.TRAINER_INTERP_BYTES: each round embeds a fresh literal
-    #   codebook, so codegen can never hit its cache and every statement
-    #   pays a full compile that interpreted execution skips.
-    # Values are unaffected: interpreted and generated evaluation keep the
-    # operation order, and partition-count changes only reorder the avg
+    # Values are unaffected: partition-count changes only reorder the avg
     # partial sums, which the 1e-6 grid absorbs (the full oracle sweep pins
     # both the 8-partition test session and the 32-partition bench).
     settings = {"spark.sql.adaptive.enabled": "false",
                 "spark.sql.shuffle.partitions": "1"}
-    if allow_interp and not plan_gates.is_large(
-            rel, total=plan_gates.TRAINER_INTERP_BYTES):
-        settings["spark.sql.codegen.wholeStage"] = "false"
-        settings["spark.sql.codegen.factoryMode"] = "NO_CODEGEN"
     cb = pcb = None
     with plan_gates.scoped_conf(rel.sparkSession, settings):
         seeds = _sql_over(
@@ -1610,37 +1580,22 @@ def _lloyd_train(rel, tag: str, vecs_body: str, km: bool = True,
             f"LIMIT {max(KM_K if km else 0, PQ_K if pq else 0)}",
         ).collect()
         if km:
-            cb = [(j, *literal(row.v)) for j, row in enumerate(seeds[:KM_K])]
+            cb = [(j, list(row.v)) for j, row in enumerate(seeds[:KM_K])]
         if pq:
-            pcb = {
-                (m, j): literal(row.v[m * PQ_SUB:(m + 1) * PQ_SUB])
-                for j, row in enumerate(seeds[:PQ_K])
-                for m in range(PQ_M)
-            }
+            pcb = [[(j, list(row.v[m * PQ_SUB:(m + 1) * PQ_SUB]))
+                    for j, row in enumerate(seeds[:PQ_K])]
+                   for m in range(PQ_M)]
         for i in range(max(km_iters, pq_iters)):
-            sides = []
-            if i < km_iters:
-                sides.append(
-                    f"SELECT 0 AS grp, -1 AS m, best.cid AS cid,"
-                    f" {sums('v', EMB_DIM)} AS s"
-                    f" FROM (SELECT {_km_best_sql(cb)} AS best, v FROM vecs)"
-                    f" GROUP BY best.cid"
-                )
-            if i < pq_iters:
-                sides.append(
-                    f"SELECT 1 AS grp, m, best.cid AS cid,"
-                    f" {sums('sv', PQ_SUB)} AS s"
-                    f" FROM (SELECT m, {_pq_centroid_case(pcb, 'best')} AS best,"
-                    f" sv FROM sub) GROUP BY m, best.cid"
-                )
+            km_on, pq_on = i < km_iters, i < pq_iters
+            sides = ([km_side] if km_on else []) + ([pq_side] if pq_on else [])
             rows = _sql_over(
-                rel, f"{tag}_lloyd{i}", prefix + " UNION ALL ".join(sides)
+                rel, f"{tag}_lloyd{i}", prefix + " UNION ALL ".join(sides),
+                _cb_args(cb if km_on else None, pcb if pq_on else None),
             ).collect()
-            if i < km_iters:
-                cb = [(r.cid, *scaled(r.s))
-                      for r in sorted(rows, key=lambda r: r.cid) if r.grp == 0]
-            if i < pq_iters:
-                pcb = {(r.m, r.cid): scaled(r.s) for r in rows if r.grp == 1}
+            if km_on:
+                cb = cells(rows, 0)
+            if pq_on:
+                pcb = [cells(rows, 1, m) for m in range(PQ_M)]
     return cb, pcb
 
 
@@ -1720,14 +1675,16 @@ def sim_pq_adc(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings")
     fin = PQ_ITERS
     _, pcb = _lloyd_train(e, "pqtrain", _PQ_VECS_BODY, km=False)
-    parts = _pq_literal_parts_spark(pcb)
+    parts = _pq_parts_spark()
     parts.append(f"""
     SELECT 0 AS kind, vec_id, m, cid, CAST(NULL AS DOUBLE) AS d FROM pa{fin}
     UNION ALL
     SELECT 1 AS kind, vec_id, m, cid, d FROM psc{fin}
     WHERE vec_id < {N_QUERIES}
     """)
-    both = _sql_over(e, "pqtrain", "".join(parts)).localCheckpoint(eager=False)
+    both = _sql_over(
+        e, "pqtrain", "".join(parts), _cb_args(pcb=pcb)
+    ).localCheckpoint(eager=False)
     codes = both.filter(F.col("kind") == 0).select(
         F.col("vec_id").alias("neighbor_id"), "m", "cid"
     )
@@ -1857,8 +1814,8 @@ def sim_ivfpq_topk(spark, sf_dir):
     kfin, pfin = KM_ITERS, PQ_ITERS
     vck = _vecs_ck(e, "ivfpq")
     cb, pcb = _lloyd_train(vck, "ivfpq", _VECS_CK_BODY)
-    parts = _km_literal_parts_spark(cb, _VECS_CK_BODY, with_sc=True)
-    parts.extend(_pq_literal_parts_spark(pcb, include_vecs=False))
+    parts = _km_parts_spark(_VECS_CK_BODY, with_sc=True)
+    parts.extend(_pq_parts_spark(include_vecs=False))
     parts.append(f"""
     SELECT 0 AS kind, a.vec_id, a.cid AS cell, p.m, p.cid AS code,
            CAST(NULL AS DOUBLE) AS d
@@ -1871,9 +1828,9 @@ def sim_ivfpq_topk(spark, sf_dir):
     SELECT 2 AS kind, vec_id, CAST(NULL AS INT) AS cell, m, cid AS code, d
     FROM psc{pfin} WHERE vec_id < {N_QUERIES}
     """)
-    both = _sql_over(vck, "ivfpq", "".join(parts)).localCheckpoint(
-        eager=False
-    )
+    both = _sql_over(
+        vck, "ivfpq", "".join(parts), _cb_args(cb, pcb)
+    ).localCheckpoint(eager=False)
     return _ivfpq_search(both).select(
         "query_id",
         "neighbor_id",
@@ -1972,7 +1929,7 @@ def sim_pq_distortion(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings")
     fin = PQ_ITERS
     _, pcb = _lloyd_train(e, "pqdist", _PQ_VECS_BODY, km=False)
-    parts = _pq_literal_parts_spark(pcb)
+    parts = _pq_parts_spark()
     parts.append(f"""
     SELECT CAST(m AS INTEGER) AS m,
            CAST(count(*) AS BIGINT) AS n_vecs,
@@ -1984,7 +1941,7 @@ def sim_pq_distortion(spark, sf_dir):
              / {KM_SCALE}D AS max_distortion
     FROM pa{fin} GROUP BY m
     """)
-    return _sql_over(e, "pqdist", "".join(parts))
+    return _sql_over(e, "pqdist", "".join(parts), _cb_args(pcb=pcb))
 
 
 def _recall_eval_oracle_sql() -> str:
@@ -2095,10 +2052,12 @@ def _ivfpq_vec_checkpoint(spark, sf_dir, tag: str):
     e = load(spark, sf_dir, "embeddings")
     vck = _vecs_ck(e, tag)
     cb, pcb = _lloyd_train(vck, tag, _VECS_CK_BODY)
-    parts = _km_literal_parts_spark(cb, _VECS_CK_BODY, with_sc=True)
-    parts.extend(_pq_literal_parts_spark(pcb, include_vecs=False))
+    parts = _km_parts_spark(_VECS_CK_BODY, with_sc=True)
+    parts.extend(_pq_parts_spark(include_vecs=False))
     parts.append(_ivfpq_vec_union_sql())
-    return _sql_over(vck, tag, "".join(parts)).localCheckpoint(eager=False)
+    return _sql_over(
+        vck, tag, "".join(parts), _cb_args(cb, pcb)
+    ).localCheckpoint(eager=False)
 
 
 def _vec_slices(both):
@@ -2394,8 +2353,8 @@ def _train_mem(e, tag: str):
 
     fin = KM_ITERS
     vck = _vecs_ck(e, tag)
-    cb, _ = _lloyd_train(vck, tag, _VECS_CK_BODY, pq=False, allow_interp=False)
-    parts = _km_literal_parts_spark(cb, _VECS_CK_BODY)
+    cb, _ = _lloyd_train(vck, tag, _VECS_CK_BODY, pq=False)
+    parts = _km_parts_spark(_VECS_CK_BODY)
     # a{fin} carries vv directly (r10) — the old `JOIN vecs v2 ON vec_id`
     # existed only to re-attach the self-dot and cost a corpus-sized join
     # per training; the oracle keeps its join text (same values either way)
@@ -2410,7 +2369,9 @@ def _train_mem(e, tag: str):
     # both sides by cid regardless, so a round-robin here adds an
     # exchange without changing the join's parallelism (A/B-measured
     # neutral-to-negative, r10).
-    return _sql_over(vck, tag, "".join(parts)).localCheckpoint(eager=False)
+    return _sql_over(
+        vck, tag, "".join(parts), _cb_args(cb)
+    ).localCheckpoint(eager=False)
 
 
 # The SemDeDup decision join is keyed on cid alone — KM_K (8) distinct join
@@ -2812,19 +2773,17 @@ def sim_ivf_incremental_assign(spark, sf_dir):
     # driver-folded (_lloyd_train)
     train_body = _km_vecs_body(f"NOT ({_INC_BATCH_PRED})")
     cb, _ = _lloyd_train(e, "ivfinc", train_body, pq=False)
-    parts = _km_literal_parts_spark(cb, train_body)
+    parts = _km_parts_spark(train_body)
     parts.append(f"""
     SELECT 0 AS kind, cid, d,
            CAST(NULL AS ARRAY<DOUBLE>) AS c, CAST(NULL AS DOUBLE) AS cc
     FROM a{fin}
     UNION ALL
-    SELECT 1 AS kind, cid, CAST(NULL AS DOUBLE) AS d,
-           c, {_km_dot_sql("c", "c")} AS cc
-    FROM c{fin}
+    SELECT 1 AS kind, cid, CAST(NULL AS DOUBLE) AS d, c, cc FROM c{fin}
     """)
-    trained = _sql_over(e, "ivfinc", "".join(parts)).localCheckpoint(
-        eager=False
-    )
+    trained = _sql_over(
+        e, "ivfinc", "".join(parts), _cb_args(cb)
+    ).localCheckpoint(eager=False)
 
     scaled_d = F.floor(F.col("d") * F.lit(KM_SCALE) + F.lit(0.5)).cast("long")
     train_stats = (
@@ -2992,16 +2951,16 @@ def sim_ivf_minibatch_update(spark, sf_dir):
     fin = KM_ITERS
     train_body = _km_vecs_body("NOT (vec_id % 4 = 1)")
     cb, _ = _lloyd_train(e, "ivfmb", train_body, pq=False)
-    parts = _km_literal_parts_spark(cb, train_body)
+    parts = _km_parts_spark(train_body)
     cterms = ", ".join(
         f"floor(CAST(s{p} AS DOUBLE) / (n_train + n_new) + 0.5D)"
         f" / {KM_SCALE}D"
         for p in range(EMB_DIM)
     )
-    # the full-corpus assignment is row-wise against the literal codebook
-    # (the same (d, cid) least() argmin the training uses) — no corpus
+    # the full-corpus assignment is row-wise against the bound codebook
+    # (the same (d, cid) array_min argmin the training uses) — no corpus
     # crossJoin + groupBy(vec_id) Exchange (optimization r10; identical
-    # values: d = vv - 2<v,c> + cc over the same literal centroids)
+    # values: d = vv - 2<v,c> + cc over the same centroids)
     parts.append(f"""
     , allv AS (
       SELECT vec_id, (vec_id % 4 = 1) AS is_new, v,
@@ -3009,14 +2968,14 @@ def sim_ivf_minibatch_update(spark, sf_dir):
       FROM (SELECT vec_id, CAST(embedding AS ARRAY<DOUBLE>) AS v FROM {{v}})
     )
     SELECT vec_id, is_new, v, vv, best.cid AS cid, best.d AS d FROM (
-      SELECT vec_id, is_new, v, vv, {_km_best_sql(cb)} AS best FROM allv
+      SELECT vec_id, is_new, v, vv, array_min({_KM_SCORES}) AS best FROM allv
     )
     """)
     # mem feeds two consumers (cell aggregate, after-distortion pass);
     # checkpoint so the Lloyd training above runs once, not per consumer
-    mem = _sql_over(e, "ivf_minibatch_mem", "".join(parts)).localCheckpoint(
-        eager=False
-    )
+    mem = _sql_over(
+        e, "ivf_minibatch_mem", "".join(parts), _cb_args(cb)
+    ).localCheckpoint(eager=False)
     cell_aggs = [
         F.expr("CAST(sum(CASE WHEN is_new THEN 0 ELSE 1 END) AS BIGINT)")
         .alias("n_train"),

@@ -10,7 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .. import plan_gates
 from ..functions import round_half_up
 from ..operators.registry import load, query
 
@@ -421,7 +420,7 @@ def text_repetition_ratio(spark, sf_dir):
     )
 
 
-def _doc_shingles(docs, width: int, cols: list[str]):
+def _doc_shingles(docs, width: int, cols: list[str], inrow: bool):
     """Distinct width-token shingles per document over ``cols`` identity
     columns — the shared pipeline behind text_contamination_check and
     text_cross_doc_repeats (code-review r6: the two inline copies could
@@ -429,29 +428,23 @@ def _doc_shingles(docs, width: int, cols: list[str]):
     are excluded (Spark's sequence() would descend on a negative stop;
     DuckDB's generate_series returns empty).
 
-    The per-document dedup runs IN-ROW when the corpus is large
-    (optimization r10, gated r11 — guide §2.4): shingles are built as an
-    array per document and array_distinct'ed before the explode, so when
-    ``cols`` carries the document key (doc_id is unique) the corpus-wide
-    DISTINCT — a full Exchange of every shingle instance, growing with
-    corpus bytes — is a no-op and is dropped. Only the key-less form (the
-    benchmark side's global shingle set) still needs a cross-document
-    distinct, then over rows already deduplicated within each document.
-    BELOW plan_gates.INROW_DEDUP_BYTES_PER_TASK (bench scale) the r9
-    explode+distinct form stands: the r11 interleaved A/B vs the r9 tag
-    measured the unconditional in-row form 1.29x slower there (the
-    higher-order transform + array_distinct evaluate outside whole-stage
-    codegen, and the few-MB distinct Exchange they replace is cheap),
-    while at real scale the saved corpus-wide Exchange dominates. The gate
-    also bounds ADVICE r10 #2's memory concern: the full per-document
-    shingle array is only materialized in one row on the large-corpus
-    path, where documents are the same bounded fixtures scaled out.
-    Identical output either way: per-doc distinct == corpus distinct when
-    the key is unique."""
+    Each consumer picks its shape with ``inrow``:
+     - in-row (optimization r10, guide §2.4): shingles are built as an
+       array per document and array_distinct'ed before the explode, so when
+       ``cols`` carries the document key (doc_id is unique) the corpus-wide
+       DISTINCT Exchange is a no-op and is dropped; the key-less form (the
+       benchmark side's global shingle set) still needs a cross-document
+       distinct, then over rows already deduplicated within each document;
+     - explode+distinct: one row per shingle instance, then one DISTINCT.
+    Forced each way at sf0.1 (AB_plan_gates_forced.log), in-row read 0.88
+    on text_contamination_check and 1.18 on text_cross_doc_repeats by
+    median per-pair ratio, 5 of 5 pairs each: the consumer decides the
+    faster shape, not the corpus size. Identical output either way: per-doc
+    distinct == corpus distinct when the key is unique."""
     toks = F.split("text", " ")
     n = F.size(toks)
     base = docs.filter(n >= width)
-    if not plan_gates.is_large(docs, per_task=plan_gates.INROW_DEDUP_BYTES_PER_TASK):
+    if not inrow:
         shingle = F.array_join(F.slice(F.col("l"), F.col("i") + 1, width), " ")
         return (
             base.select(
@@ -519,7 +512,7 @@ def text_contamination_check(spark, sf_dir):
     from .dedup import _spread_input
 
     def shingles(docs, cols):
-        return _doc_shingles(docs, CONTAM_SHINGLE, cols)
+        return _doc_shingles(docs, CONTAM_SHINGLE, cols, inrow=True)
 
     sh = shingles(
         _spread_input(load(spark, sf_dir, "documents")), ["doc_id", "source"]
@@ -1093,7 +1086,7 @@ def text_cross_doc_repeats(spark, sf_dir):
     The frequency table is vocabulary-sized, so nothing here is all-pairs
     and no stage depends on corpus row count beyond linear scans."""
     d = load(spark, sf_dir, "documents")
-    sh = _doc_shingles(d, REPEAT_SHINGLE, ["doc_id"])
+    sh = _doc_shingles(d, REPEAT_SHINGLE, ["doc_id"], inrow=False)
     freq = sh.groupBy("shingle").agg(F.count("*").alias("n_docs"))
     rep = F.when(F.col("n_docs") >= 2, 1).otherwise(0)
     return (

@@ -1,6 +1,11 @@
 """Size gates: the one place the engine picks between two plan shapes from
 Catalyst's size estimate, plus the scoped conf some of those shapes run under.
 
+Three gates remain:
+ - ``SPREAD_BYTES_PER_TASK``: ext/dedup._spread_input's repartition;
+ - ``FANOUT_BYTES_PER_TASK``: ext/dedup._fan_out_derived's repartition;
+ - ``SEMDEDUP_BROADCAST_BYTES``: ext/similarity._sem_spread_broadcast.
+
 Every gate asks the same question — is the SOURCE relation (usually the
 corpus scan, whose estimate comes from parquet footers) at or above a
 threshold — and answers "large" when the estimate is unavailable (mocked
@@ -28,27 +33,11 @@ SPREAD_BYTES_PER_TASK = 8 << 10
 # (5.9 MB): crossover ~2 MB total at 32 cores.
 FANOUT_BYTES_PER_TASK = 64 << 10
 
-# In-row shingle dedup (ext/textanalysis._doc_shingles): transform +
-# array_distinct evaluate outside whole-stage codegen, so they pay only
-# where the corpus-wide DISTINCT Exchange they remove is the bigger term.
-# Below ~4 MB/task that Exchange is cheap (r11 interleaved A/B vs r9: the
-# unconditional in-row form 1.29x slower at bench scale).
-INROW_DEDUP_BYTES_PER_TASK = 4 << 20
-
 # SemDeDup decision join (ext/similarity._sem_spread_broadcast): the
 # closer-member side is broadcast only while the source is far below what a
 # driver can hold; above it the members are corpus-sized and the unhinted
 # shuffle join stands.
 SEMDEDUP_BROADCAST_BYTES = 16 << 20
-
-# Interpreted trainer statements (ext/similarity._lloyd_train). Every Lloyd
-# round embeds a fresh literal codebook, so its generated code never hits
-# the codegen cache and each statement pays a full compile (~0.1 s) that
-# interpreted execution skips, at ~2 us/row of interpreted overhead; the two
-# cross near ~120k vectors. The gate keys on the estimate of the relation
-# handed to the trainer, all of its columns (for a parquet scan, the bytes
-# on disk), not on the (vec_id, v, vv) rows the rounds derive from it.
-TRAINER_INTERP_BYTES = 64 << 20
 
 
 def plan_bytes(df):

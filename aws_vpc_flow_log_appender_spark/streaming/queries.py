@@ -1463,7 +1463,8 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     never corpus-bounded."""
     from ..ext.similarity import (
         KM_SCALE,
-        _km_dot_sql,
+        _KM_CB,
+        _cb_args,
         _km_vecs_body,
         _lloyd_train,
     )
@@ -1473,21 +1474,13 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     # --- one-time training over the indexed subset; checkpoint the codebook.
     # The batch family's driver-folded trainer (_lloyd_train, KM side only):
     # 1 + KM_ITERS small map-side-combined jobs, no corpus-keyed Exchange.
-    # The final codebook evaluates from exact literals (round >= 1 elements
-    # are scaled-integer BIGINTs re-emitted as {s}L / 1e6D, c0 doubles
-    # round-trip via repr()) — bit-identical to the oracle's unrolled
-    # c{fin}, the §1 OPTIMIZATION_r10 equivalence argument; cc keeps the
-    # same in-plan fold.
+    # The codebook rows (cid, c, cc) are the trainer's exact values bound as
+    # data — bit-identical to the oracle's unrolled c{fin}, the §1
+    # OPTIMIZATION_r10 equivalence argument; cc is the same left fold.
     cb, _ = _lloyd_train(
         e, "stream_ivf_train", _km_vecs_body("NOT (vec_id % 4 = 1)"), pq=False
     )
-    cb_rows = ", ".join(
-        f"({cid}, array({', '.join(elem_sql)}))" for cid, elem_sql, _ in cb
-    )
-    codebook = spark.sql(
-        f"SELECT CAST(cid AS INT) AS cid, c, {_km_dot_sql('c', 'c')} AS cc"
-        f" FROM (VALUES {cb_rows}) AS __cb(cid, c)"
-    )
+    codebook = spark.sql(f"SELECT inline({_KM_CB})", _cb_args(cb))
 
     state = _track_sink("stream_ivf_assign")
     cb_schema = "cid int, c array<double>, cc double"

@@ -22,16 +22,19 @@ GATED_QUERIES = [
     "dedup_minhash_est_jaccard",
     "dedup_simhash",
     "text_contamination_check",
+    "dedup_semantic",
+]
+# Their gates were deleted (the tf / per-doc checkpoints, the in-row
+# shingle gate, the trainer's interpreted mode); the one shape left stays
+# under the oracle here, and must consult no gate.
+UNGATED_QUERIES = [
+    "text_tfidf_top_terms",
+    "text_bm25_search",
     "text_cross_doc_repeats",
     "sim_ivfpq_rerank_topk",
-    "dedup_semantic",
-    # the trainer's interpreted-mode gate with one codebook trained
     "sim_kmeans_cells",
     "sim_pq_distortion",
 ]
-# Their checkpoint gate was deleted; the one shape left stays under the
-# oracle here, and must consult no gate.
-UNGATED_QUERIES = ["text_tfidf_top_terms", "text_bm25_search"]
 
 
 @pytest.fixture(scope="module")
@@ -61,8 +64,8 @@ def test_gate_side_matches_oracle(spark, sf_dir, duck, monkeypatch, side, name):
     assert [p for p in compare(name, got, want) if not p.startswith("DTYPE")] == []
 
 
-def test_doc_shingles_paths_agree(spark, sf_dir, monkeypatch):
-    """The in-row and explode+distinct shingle paths of
+def test_doc_shingles_paths_agree(spark, sf_dir):
+    """The in-row and explode+distinct shingle shapes of
     ext/textanalysis._doc_shingles give identical rows, keyed and key-less."""
     from aws_vpc_flow_log_appender_spark.ext import textanalysis as ta
     from aws_vpc_flow_log_appender_spark.operators.registry import load
@@ -71,13 +74,11 @@ def test_doc_shingles_paths_agree(spark, sf_dir, monkeypatch):
         return sorted(map(tuple, df.collect()))
 
     docs = load(spark, sf_dir, "documents")
-    assert not plan_gates.is_large(docs, per_task=plan_gates.INROW_DEDUP_BYTES_PER_TASK)
-    small = rows(ta._doc_shingles(docs, 8, ["doc_id", "source"]))
-    # key-less form (the benchmark side): global distinct on both paths
-    small0 = rows(ta._doc_shingles(docs, 8, []))
-    monkeypatch.setattr(plan_gates, "is_large", lambda source, **threshold: True)
-    assert rows(ta._doc_shingles(docs, 8, ["doc_id", "source"])) == small
-    assert rows(ta._doc_shingles(docs, 8, [])) == small0
+    # the key-less form is the benchmark side: a global distinct either way
+    for cols in (["doc_id", "source"], []):
+        assert rows(ta._doc_shingles(docs, 8, cols, inrow=True)) == rows(
+            ta._doc_shingles(docs, 8, cols, inrow=False)
+        )
 
 
 class _FailingConf:

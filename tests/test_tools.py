@@ -204,3 +204,27 @@ def test_read_event_log_groups_gaps_and_stage_totals(tmp_path):
     assert q2["stages"] == [{
         "stageId": 4, "executor_run_ms": 16, "tasks": 1, "input_bytes": 0,
         "shuffle_read_bytes": 0, "shuffle_write_bytes": 0, "name": "count at q2.py:1"}]
+
+
+def test_read_event_log_job_count_range_over_passes(tmp_path):
+    """One query profiled in three passes: n_jobs_min / n_jobs_max span the
+    passes, and the job list is the first pass's."""
+    events, job = [], 0
+    for run, n_jobs in (("0", 2), ("1", 3), ("2", 2)):
+        for _ in range(n_jobs):
+            events += [
+                _job_start(job, f"profile:q#{run}", 1000 * job,
+                           [_stage(job, 1, f"collect at pass{run}.py:1")]),
+                _task(job, 5),
+                _stage_done(job, f"collect at pass{run}.py:1"),
+                _job_end(job, 1000 * job + 100),
+            ]
+            job += 1
+    path = tmp_path / "eventlog"
+    path.write_text("".join(json.dumps(e) + "\n" for e in events))
+
+    q = profiler.read_event_log(str(path))["q"]
+
+    assert (q["n_jobs"], q["n_jobs_min"], q["n_jobs_max"]) == (2, 2, 3)
+    assert [j["jobId"] for j in q["jobs"]] == [0, 1]
+    assert {s["name"] for s in q["stages"]} == {"collect at pass0.py:1"}

@@ -1,16 +1,18 @@
 """ext/similarity._lloyd_train: the one driver-folded Lloyd trainer.
 
 It runs one seed job plus one merged job per round, whichever codebooks it
-trains, and both sides of its interpreted-mode size gate reproduce the same
-codebooks. The codebook values themselves stay under the DuckDB oracle
-through the trainer's consumer queries (tests/test_plan_gates.py and the
-full sweep)."""
+trains, and returns codebooks of values only. The codebook reaches every
+statement as a bound parameter, so a training over new data compiles no new
+classes, and the trainer restores every conf it touches. The codebook
+values themselves stay under the DuckDB oracle through the trainer's
+consumer queries (tests/test_plan_gates.py and the full sweep)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
-from aws_vpc_flow_log_appender_spark import plan_gates
 from aws_vpc_flow_log_appender_spark.ext import similarity as sim
 from aws_vpc_flow_log_appender_spark.operators.registry import load
 
@@ -46,21 +48,30 @@ def test_trainer_job_count(spark, sf_dir, km, pq, want):
     )
     assert n == want
     assert (cb is not None) == km and (pcb is not None) == pq
-    if km:
-        # sorted by cid; a cell that loses every member drops out
-        cids = [cid for cid, _, _ in cb]
-        assert cids and cids == sorted(set(cids)) and set(cids) <= set(range(sim.KM_K))
+    # per codebook: (cid, values) cells sorted by cid; a cell that loses
+    # every member drops out
+    books = [(cb, sim.KM_K, sim.EMB_DIM)] if km else []
     if pq:
-        assert {m for m, _ in pcb} == set(range(sim.PQ_M))
+        assert len(pcb) == sim.PQ_M
+        books += [(cells, sim.PQ_K, sim.PQ_SUB) for cells in pcb]
+    for cells, k, dim in books:
+        cids = [cid for cid, _ in cells]
+        assert cids and cids == sorted(set(cids)) and set(cids) <= set(range(k))
+        assert all(len(c) == dim and all(isinstance(x, float) for x in c)
+                   for _, c in cells)
 
 
-def test_trainer_interp_gate_paths_agree(spark, sf_dir, monkeypatch):
-    """The size-gated interpreted trainer mode (codegen.wholeStage off +
-    factoryMode NO_CODEGEN below plan_gates.TRAINER_INTERP_BYTES) must
-    reproduce the codegen side's codebooks, and the trainer must restore
-    every conf it touches on exit. Only each centroid's scaled-integer
-    element SQL is compared: that is what downstream statements embed."""
+def test_trainer_compiles_once(spark, sf_dir, tmp_path):
+    """A second training over different data (a parquet subset of the
+    embeddings: same schema, different codebooks) compiles no new classes:
+    the round statements bind the codebook as data, so their text, and the
+    generated code codegen caches for it, never changes. The trainer also
+    restores every conf it touches."""
     e = load(spark, sf_dir, "embeddings")
+    e.filter("vec_id % 3 <> 0").write.parquet(
+        os.path.join(str(tmp_path), "embeddings.parquet")
+    )
+    subset = load(spark, str(tmp_path), "embeddings")
     conf = spark.conf
     before = {
         k: conf.get(k, None)
@@ -71,16 +82,10 @@ def test_trainer_interp_gate_paths_agree(spark, sf_dir, monkeypatch):
             "spark.sql.codegen.factoryMode",
         )
     }
-
-    def train(tag):
-        cb, pcb = sim._lloyd_train(e, tag, sim._km_vecs_body())
-        return ([(cid, sql) for cid, sql, _ in cb],
-                {key: sql for key, (sql, _) in pcb.items()})
-
-    # interpreted side (test SF is far below the gate)
-    assert not plan_gates.is_large(e, total=plan_gates.TRAINER_INTERP_BYTES)
-    interp = train("t_interp")
-    monkeypatch.setattr(plan_gates, "is_large", lambda source, **threshold: True)
-    assert train("t_codegen") == interp
-    after = {k: conf.get(k, None) for k in before}
-    assert after == before
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    first = sim._lloyd_train(e, "t_once", sim._km_vecs_body())
+    n0 = compiles.METRIC_COMPILATION_TIME().getCount()
+    second = sim._lloyd_train(subset, "t_once", sim._km_vecs_body())
+    assert compiles.METRIC_COMPILATION_TIME().getCount() - n0 == 0
+    assert first[0] != second[0] and first[1] != second[1]
+    assert {k: conf.get(k, None) for k in before} == before

@@ -56,7 +56,9 @@ python -c "
 import json
 r = json.load(open('/tmp/ci_profile.json'))['flowlog_enrich']
 assert r['n_jobs'] > 0 and r['stages'], r
-print('profile OK:', r['n_jobs'], 'jobs,', r['n_stages_run'], 'stages')
+assert 0 < r['n_jobs_min'] <= r['n_jobs'] <= r['n_jobs_max'], r
+print('profile OK:', r['n_jobs'], 'jobs (range', r['n_jobs_min'], '-',
+      r['n_jobs_max'], 'over passes),', r['n_stages_run'], 'stages')
 "
 SPARK_GRAFT_SF_DIR="$SF_SMALL" python tools/plans.py flowlog_enrich > /tmp/ci_plans.txt
 grep -q "Physical Plan" /tmp/ci_plans.txt

@@ -1,20 +1,25 @@
 """Per-query profile read from the Spark event log.
 
 For each named query (default: the bench HEADLINE list) the tool runs the
-query once warm and once measured, each in its own job group, on a session
-from ``session.get_spark``. It times the measured run's driver-side
-construction (builder incl. eager checkpoints) and its noop-sink execution.
-After ``spark.stop()`` it reads the finished event log and reports, per query:
+query once warm and then PASSES times measured, each run in its own job
+group, on a session from ``session.get_spark``. It times each measured run's
+driver-side construction (builder incl. eager checkpoints) and its
+noop-sink execution. After ``spark.stop()`` it reads the finished event log
+and reports, per query:
 
-  - construct_s / execute_s;
-  - jobs, stages (all, and those that ran) and tasks;
-  - shuffle read/write bytes;
-  - every job's duration, gap after the previous job and task count, in
-    submission order, named by the SQL execution it served (its
-    description: the action and call site, e.g. ``localCheckpoint at ...``)
-    or, for a job outside any SQL execution, by its last stage's call site;
-  - every stage that ran: executor run time, tasks, input/shuffle bytes and
-    name, slowest first.
+  - construct_s / execute_s, the minimum over the measured passes;
+  - n_jobs_min / n_jobs_max, the job count's range over the passes (the
+    count can differ between runs of the same query);
+  - for the first measured pass:
+    - jobs, stages (all, and those that ran) and tasks;
+    - shuffle read/write bytes;
+    - every job's duration, gap after the previous job and task count, in
+      submission order, named by the SQL execution it served (its
+      description: the action and call site, e.g. ``localCheckpoint at
+      ...``) or, for a job outside any SQL execution, by its last stage's
+      call site;
+    - every stage that ran: executor run time, tasks, input/shuffle bytes
+      and name, slowest first.
 
 Usage: python tools/profiler.py [query ...] [--sf DIR] [--out F]
 The JSON goes to F, or to stdout; one summary line per query goes to stderr.
@@ -29,10 +34,12 @@ import shutil
 import sys
 import tempfile
 import time
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-GROUP = "profile:"  # job-group prefix of the measured runs
+GROUP = "profile:"  # job-group prefix of the measured runs: GROUP + query#pass
+PASSES = 3
 
 
 def _ms_to_s(ms: int) -> float:
@@ -47,8 +54,11 @@ def _stage_totals() -> dict:
 def read_event_log(path: str) -> dict[str, dict]:
     """Jobs, stages and totals per query from one uncompressed event log.
 
-    A job belongs to query ``q`` when its job group is ``GROUP + q``; jobs
-    of other groups (warm-up runs, no group) are ignored. Task counts follow
+    A job belongs to pass ``k`` of query ``q`` when its job group is
+    ``GROUP + q#k`` (``GROUP + q`` is a single pass); jobs of other groups
+    (warm-up runs, no group) are ignored. The job and stage figures are
+    those of the query's first pass; ``n_jobs_min`` / ``n_jobs_max`` span
+    all of its passes. Task counts follow
     the Spark UI: a job counts the tasks of its stages that had not already
     run in an earlier job. A query's stages are those its jobs list, skipped
     ones included; figures cover the stages that completed. A job is named
@@ -69,8 +79,10 @@ def read_event_log(path: str) -> dict[str, dict]:
                 infos = ev.get("Stage Infos", [])
                 last = max(infos, key=lambda s: s["Stage ID"], default={})
                 sql_id = props.get("spark.sql.execution.id")
+                query, _, run = group[len(GROUP):].partition("#")
                 jobs[ev["Job ID"]] = {
-                    "query": group[len(GROUP):],
+                    "query": query,
+                    "run": run,
                     "sql_id": int(sql_id) if sql_id is not None else None,
                     "name": last.get("Stage Name", "")[:110],
                     "submit_ms": ev["Submission Time"],
@@ -101,7 +113,10 @@ def read_event_log(path: str) -> dict[str, dict]:
 
     out: dict[str, dict] = {}
     for query in dict.fromkeys(j["query"] for j in jobs.values()):
-        mine = sorted(k for k, j in jobs.items() if j["query"] == query)
+        counts = Counter(j["run"] for j in jobs.values() if j["query"] == query)
+        first = min(counts)
+        mine = sorted(k for k, j in jobs.items()
+                      if j["query"] == query and j["run"] == first)
         rows, prev_end = [], None
         for jid in mine:
             j = jobs[jid]
@@ -120,6 +135,8 @@ def read_event_log(path: str) -> dict[str, dict]:
         stages.sort(key=lambda s: (-s["executor_run_ms"], s["stageId"]))
         out[query] = {
             "n_jobs": len(rows),
+            "n_jobs_min": min(counts.values()),
+            "n_jobs_max": max(counts.values()),
             "n_stages": len(sids),
             "n_stages_run": len(stages),
             "n_tasks": sum(j["n_tasks"] for j in rows),
@@ -162,14 +179,16 @@ def main() -> None:
             # description of every SQL execution, hiding their call sites
             sc.setLocalProperty("spark.jobGroup.id", f"warm:{name}")
             qs[name](spark, args.sf).write.format("noop").mode("overwrite").save()
-            sc.setLocalProperty("spark.jobGroup.id", GROUP + name)
-            t0 = time.perf_counter()
-            df = qs[name](spark, args.sf)
-            t1 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            t2 = time.perf_counter()
-            timings[name] = {"construct_s": round(t1 - t0, 3),
-                             "execute_s": round(t2 - t1, 3)}
+            runs = []
+            for k in range(PASSES):
+                sc.setLocalProperty("spark.jobGroup.id", f"{GROUP}{name}#{k}")
+                t0 = time.perf_counter()
+                df = qs[name](spark, args.sf)
+                t1 = time.perf_counter()
+                df.write.format("noop").mode("overwrite").save()
+                runs.append((t1 - t0, time.perf_counter() - t1))
+            timings[name] = {"construct_s": round(min(c for c, _ in runs), 3),
+                             "execute_s": round(min(x for _, x in runs), 3)}
         spark.stop()
         (log,) = [f for f in os.listdir(log_dir) if not f.startswith(".")]
         profiles = read_event_log(os.path.join(log_dir, log))
