@@ -14,10 +14,12 @@ Spark-first design:
  - J2 (per-row HTTP geo lookup) -> a *data* join against a CIDR-range geo
    dimension. The naive (ip BETWEEN start AND end) range join is O(n*m), and
    nested ranges would duplicate facts. Instead the dimension is grouped into
-   one row per /16 bucket holding every range that touches it, most specific
-   first (flatten_geo_dim); the fact side does a broadcast equi join on its
-   address's bucket and takes the first candidate that contains the address.
-   Coarse buckets prune, an exact test inside the bucket decides.
+   one row per prefix bucket holding every range that touches it, most
+   specific first (flatten_geo_dim); the fact side does a broadcast equi join
+   on its address's bucket and takes the first candidate that contains the
+   address. Coarse buckets prune, an exact test inside the bucket decides.
+   A dimension prepared once sizes its bucket to its ranges; the per-job
+   inline prep uses /16.
 
 Every stage builds its Column expressions once per SparkContext
 (``session.stage_columns``) and runs as a few ``select``/``join`` calls.
@@ -110,8 +112,15 @@ def first_match_dim(eni_dim: DataFrame, key: str = "interfaceId") -> DataFrame:
 _ENI_USED = ("interfaceId", "securityGroupIds", "ipAddress")
 
 
-def _eni_columns(columns: tuple[str, ...]) -> tuple[Column, list[Column], list[str]]:
-    """join_eni's condition, output projection and dropped private names."""
+def _quoted(name: str) -> Column:
+    """The column named ``name``, read literally (dots and all)."""
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
+def _eni_columns(columns: tuple[str, ...],
+                 facts: tuple[str, ...]) -> tuple[Column, list[Column]]:
+    """join_eni's condition and output projection: the fact columns, then
+    the ENI columns under their public names."""
     on = F.col("interface-id") == F.col(_eni("interfaceId"))
     # ipAddress is an array (the jmespath [?Primary] filter yields a singleton
     # list, decorator/index.js:89); JS `==` coerces ['x'] == 'x' true, so the
@@ -129,13 +138,13 @@ def _eni_columns(columns: tuple[str, ...]) -> tuple[Column, list[Column], list[s
         ).otherwise(F.lit("outbound")),
     )
     out = [
-        F.col("*"),
+        *[_quoted(c) for c in facts],
         # any other dim column rides along under its own name
         *[F.col(_eni(c)).alias(c) for c in columns if c not in _ENI_USED],
         F.col(_eni("securityGroupIds")).alias("security-group-ids"),
         direction.alias("direction"),
     ]
-    return on, out, [_eni(c) for c in columns]
+    return on, out
 
 
 def join_eni(parsed: DataFrame, eni_dim: DataFrame) -> DataFrame:
@@ -147,22 +156,35 @@ def join_eni(parsed: DataFrame, eni_dim: DataFrame) -> DataFrame:
     inside the match branch, :169-173).
     """
     dim = first_match_dim(eni_dim)
-    columns = tuple(eni_dim.columns)
-    on, out, private = stage_columns(("join_eni", columns), lambda: _eni_columns(columns))
-    return parsed.join(F.broadcast(dim), on, "left").select(*out).drop(*private)
+    columns, facts = tuple(eni_dim.columns), tuple(parsed.columns)
+    on, out = stage_columns(("join_eni", columns, facts), lambda: _eni_columns(columns, facts))
+    return parsed.join(F.broadcast(dim), on, "left").select(*out)
 
 
-def _ip_bucket(ip_int: Column) -> Column:
-    """The /16 prefix bucket: the unit of both the dimension prep and the probe."""
-    return (ip_int / F.lit(2 ** 16)).cast("long")
+# The bucket is the address divided by 2^shift (a /(32-shift) prefix). 16 is
+# the inline prep's fixed width and the finest a prepared dimension gets, so
+# no dimension holds more rows than at /16.
+_MIN_SHIFT = 16
+# ip_bucket metadata key: the shift the prepared dimension was built with
+_SHIFT_KEY = "ip_bucket_shift"
 
 
-def _flatten_columns(attrs: tuple[str, ...]) -> tuple[list[Column], Column]:
+def _ip_bucket(ip_int: Column, shift: int) -> Column:
+    """The prefix bucket: the unit of both the dimension prep and the probe.
+
+    A double division, exact below 2^53, not ``shiftright``: with
+    ``shiftright`` as the probe's join key, flowbench's batch job (seed 1,
+    4 cores) ran 1.29 s against 1.21 s, over the same physical plan, and
+    the stream was no faster."""
+    return (ip_int / F.lit(2 ** shift)).cast("long")
+
+
+def _flatten_columns(attrs: tuple[str, ...], shift: int) -> tuple[list[Column], Column]:
     start, end = F.col("start_ip_int"), F.col("end_ip_int")
     cand = F.struct((end - start).alias("w"), start.alias("s"), *_nulls_last(list(attrs)),
                     end.alias("e"))
     spans = [
-        F.explode(F.sequence(_ip_bucket(start), _ip_bucket(end))).alias("ip_bucket"),
+        F.explode(F.sequence(_ip_bucket(start, shift), _ip_bucket(end, shift))).alias("ip_bucket"),
         cand.alias("cand"),
     ]
     # the width and null flags only order the sort; the probe reads the rest
@@ -172,11 +194,46 @@ def _flatten_columns(attrs: tuple[str, ...]) -> tuple[list[Column], Column]:
     return spans, cands.alias("cands")
 
 
+def _flatten(geo_dim: DataFrame, shift: int) -> DataFrame:
+    """flatten_geo_dim's rows at a given bucket width, without the width."""
+    attrs = tuple(c for c in geo_dim.columns if c not in ("start_ip_int", "end_ip_int"))
+    spans, cands = stage_columns(("flatten_geo_dim", attrs, shift),
+                                 lambda: _flatten_columns(attrs, shift))
+    return geo_dim.select(*spans).groupBy("ip_bucket").agg(cands)
+
+
+def _bucket_shift(geo_dim: DataFrame) -> int:
+    """The bucket width for ``geo_dim``: the mean width of its well-formed
+    ranges (NULL or inverted bounds are left out) rounded down to a power of
+    two, and never finer than /16. A range of width w touches about
+    1 + w/2^shift buckets, so the prepared dimension holds at most about
+    three candidates per range on average, however deeply the ranges nest."""
+    start, end = F.col("start_ip_int"), F.col("end_ip_int")
+    mean = geo_dim.where(start <= end).agg(F.avg(end - start + 1)).first()[0]
+    return max(_MIN_SHIFT, int(mean).bit_length() - 1) if mean else _MIN_SHIFT
+
+
+def _prepared_shift(prepared: DataFrame) -> int:
+    """The shift ``flatten_geo_dim`` recorded on ``prepared``'s ip_bucket."""
+    meta = {f.name: f.metadata for f in prepared.schema.fields}.get("ip_bucket", {})
+    if _SHIFT_KEY not in meta:
+        raise ValueError("join_geo(dim_is_disjoint=True) needs a dimension prepared by "
+                         "flatten_geo_dim: its ip_bucket column carries no bucket width")
+    return meta[_SHIFT_KEY]
+
+
 def flatten_geo_dim(geo_dim: DataFrame) -> DataFrame:
     """Prepare a possibly-overlapping range dimension for the J2 probe: one
-    row per /16 bucket, ``(ip_bucket, cands)``, where ``cands`` holds every
-    range that touches the bucket, sorted so that the first range covering
-    an address is its most specific (narrowest) one.
+    row per prefix bucket, ``(ip_bucket, cands)``, where ``cands`` holds
+    every range that touches the bucket, sorted so that the first range
+    covering an address is its most specific (narrowest) one.
+
+    For callers that prepare once and probe many times. One aggregate job
+    sizes the bucket to the ranges (``_bucket_shift``): a fixed /16 copies
+    each wide range into every /16 it touches (flowbench seed 1: 19,574
+    ranges became 129,308 candidates in 51,200 rows; at its mean-sized /14,
+    45,982 candidates in 12,800 rows). The width rides on ``ip_bucket`` as
+    column metadata, which join_geo reads, so the probe cannot use another.
 
     Real GeoIP feeds nest ranges (country superset + city subset); joining
     facts against overlapping ranges would duplicate records. With one row
@@ -189,12 +246,9 @@ def flatten_geo_dim(geo_dim: DataFrame) -> DataFrame:
     attributes still picks one winner on every run (the flip-flop hazard
     first_match_dim eliminates for the ENI dim).
     """
-    attrs = tuple(c for c in geo_dim.columns if c not in ("start_ip_int", "end_ip_int"))
-    spans, cands = stage_columns(("flatten_geo_dim", attrs), lambda: _flatten_columns(attrs))
-    return geo_dim.select(*spans).groupBy("ip_bucket").agg(cands)
+    shift = _bucket_shift(geo_dim)
+    return _flatten(geo_dim, shift).withMetadata("ip_bucket", {_SHIFT_KEY: shift})
 
-
-_GEO_PRIVATE = ["ip_bucket", "cands", "__ip_int", "__geo"]
 
 # output column -> the geo dim attribute it reads
 _GEO_FIELDS = [("source-country-code", "country_code"), ("source-country-name", "country_name"),
@@ -202,32 +256,34 @@ _GEO_FIELDS = [("source-country-code", "country_code"), ("source-country-name", 
                ("source-city", "city")]
 
 
-def _geo_output(geo: Column | None) -> list[Column]:
-    """Every input column plus the six geo columns read from the winning
+def _geo_output(keep: list[Column], geo: Column | None) -> list[Column]:
+    """The ``keep`` columns plus the six geo columns read from the winning
     candidate ``geo``: ''/0 where it is NULL, and everywhere when ``geo``
     is None (geolocation off)."""
     def field(attr: str, default: str | float) -> Column:
         return F.lit(default) if geo is None else F.coalesce(geo[attr], F.lit(default))
 
     return [
-        F.col("*"),
+        *keep,
         *[field(attr, "").alias(name) for name, attr in _GEO_FIELDS],
         F.struct(field("latitude", 0.0).alias("lat"),
                  field("longitude", 0.0).alias("lon")).alias("source-location"),
     ]
 
 
-def _geo_columns(src_col: str) -> tuple[list[Column], Column, list[Column], list[Column]]:
+def _geo_columns(src_col: str, shift: int, facts: tuple[str, ...]
+                 ) -> tuple[list[Column], Column, list[Column], list[Column]]:
     """join_geo's gated address, join condition on its bucket, winning
-    candidate and output."""
+    candidate and output (the fact columns, then the geo columns)."""
     gate = (~is_rfc1918(src_col)) & F.col(src_col).isNotNull()
     ip = F.col("__ip_int")
     ip_int = [F.col("*"), F.when(gate, ip_to_int(src_col)).alias("__ip_int")]
-    on = _ip_bucket(ip) == F.col("ip_bucket")
+    on = _ip_bucket(ip, shift) == F.col("ip_bucket")
     hit = F.try_element_at(
         F.filter("cands", lambda c: (c["s"] <= ip) & (ip <= c["e"])), F.lit(1)
     )
-    return ip_int, on, [F.col("*"), hit.alias("__geo")], _geo_output(F.col("__geo"))
+    return (ip_int, on, [F.col("*"), hit.alias("__geo")],
+            _geo_output([_quoted(c) for c in facts], F.col("__geo")))
 
 
 def join_geo(df: DataFrame, geo_dim: DataFrame, src_col: str = "srcaddr",
@@ -246,16 +302,24 @@ def join_geo(df: DataFrame, geo_dim: DataFrame, src_col: str = "srcaddr",
     when False the join is statically pruned from the plan entirely.
     ``dim_is_disjoint=True`` says ``geo_dim`` is already prepared by
     flatten_geo_dim (callers that reuse one dimension across queries or
-    micro-batches prepare it once).
+    micro-batches prepare it once) and is probed at the bucket width it
+    carries; a dimension without one raises ValueError. Otherwise the
+    dimension is prepared inline at /16, with no job to size the bucket.
     """
     if not geolocation_enabled:
-        return df.select(*stage_columns(("join_geo", None), lambda: _geo_output(None)))
-    ip_int, on, geo, out = stage_columns(("join_geo", src_col), lambda: _geo_columns(src_col))
-    buckets = geo_dim if dim_is_disjoint else flatten_geo_dim(geo_dim)
+        return df.select(*stage_columns(("join_geo", None),
+                                        lambda: _geo_output([F.col("*")], None)))
+    if dim_is_disjoint:
+        shift, buckets = _prepared_shift(geo_dim), geo_dim
+    else:
+        shift, buckets = _MIN_SHIFT, _flatten(geo_dim, _MIN_SHIFT)
+    facts = tuple(df.columns)
+    ip_int, on, geo, out = stage_columns(("join_geo", src_col, shift, facts),
+                                         lambda: _geo_columns(src_col, shift, facts))
     joined = df.select(*ip_int).join(F.broadcast(buckets), on, "left")
     # the winning candidate is its own projection: each output column reads
     # it, and one projection keeps the filter to one evaluation per row
-    return joined.select(*geo).select(*out).drop(*_GEO_PRIVATE)
+    return joined.select(*geo).select(*out)
 
 
 def project_eni_dim(ec2_raw: DataFrame) -> DataFrame:

@@ -106,14 +106,15 @@ _GEO_FLAT_CACHE = SessionLRU(maxsize=4)
 
 
 def geo_dim_flat_df(spark: SparkSession) -> DataFrame:
-    """The fixture geo dimension prepared for the probe (one row per /16
-    bucket, ``enrich.flatten_geo_dim``), materialized ONCE per SparkContext
-    via localCheckpoint.
+    """The fixture geo dimension prepared for the probe
+    (``enrich.flatten_geo_dim``: one row per prefix bucket, the bucket width
+    sized to the ranges and carried as ``ip_bucket`` metadata), materialized
+    ONCE per SparkContext via localCheckpoint, which keeps that metadata.
 
     Range prep is offline dimension work in production (GeoIP feeds update
-    daily; facts arrive continuously). The prep is one explode and one
-    aggregate, but running it inside every query invocation still bills its
-    shuffle job to each query (one more job for ``flowlog_enrich``). The
+    daily; facts arrive continuously). The prep is one width aggregate, one
+    explode and one aggregate; running it inside every query invocation
+    would bill its jobs to each query (more jobs for ``flowlog_enrich``). The
     streaming path (streaming/flowlog.py) prepares once for the same reason;
     this is the batch twin. Deterministic, so memoizing across invocations
     cannot change results; keyed by SparkContext identity (with

@@ -53,8 +53,27 @@ def get_spark(app_name: str = "aws_vpc_flow_log_appender_spark",
     # (code-review r6); static confs (master, memory) genuinely cannot
     # change post-start and stay as the first creator set them.
     configure_existing(spark)
+    _worker_pythonpath(spark.sparkContext)
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# the directory holding this package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _worker_pythonpath(sc: SparkContext) -> None:
+    """Put the package root first on the Python workers' ``PYTHONPATH``,
+    keeping any entries already set there.
+
+    Python UDFs pickle their functions by reference, so a worker must be
+    able to import this package. The worker starts in the driver's working
+    directory, which need not be the repository root. Every Python function
+    created after this call carries ``sc.environment``; that holds for a
+    session built elsewhere too, which a launch-time conf could not reach."""
+    have = [p for p in sc.environment.get("PYTHONPATH", "").split(os.pathsep) if p]
+    sc.environment["PYTHONPATH"] = os.pathsep.join(
+        [_PACKAGE_ROOT] + [p for p in have if p != _PACKAGE_ROOT])
 
 
 def configure_existing(spark: SparkSession) -> SparkSession:

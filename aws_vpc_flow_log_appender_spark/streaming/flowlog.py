@@ -43,7 +43,9 @@ def stream_decorate(
     """
     lines = spark.readStream.format("text").load(input_path)
     # the geo dim is static for the stream's lifetime: group its ranges into
-    # /16 bucket rows ONCE here instead of in every micro-batch.
+    # prefix-bucket rows ONCE here instead of in every micro-batch, at a
+    # bucket width sized to the ranges (a third of the /16 broadcast on
+    # flowbench's dimension; the probe reads the width off the result).
     # persist(), NOT localCheckpoint(): checkpoint blocks live in
     # unreplicated executor storage with TRUNCATED lineage, so on a real
     # cluster one lost executor hours into a long-running stream would fail

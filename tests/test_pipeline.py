@@ -9,10 +9,11 @@ import re
 import threading
 
 import py4j.java_gateway
-
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
-from aws_vpc_flow_log_appender_spark import fixtures
+from aws_vpc_flow_log_appender_spark import enrich, fixtures
 from aws_vpc_flow_log_appender_spark.enrich import (
     RFC1918_PATTERN,
     first_match_dim,
@@ -286,18 +287,39 @@ def test_jmespath_projection_equivalent(spark):
     assert r["ipAddress"] == ["172.31.16.21"]  # [?Primary] filter keeps a list
 
 
-def _adversarial_geo_dim(rng):
-    """Nested country/region/city ranges with the cases a real feed brings:
-    ranges that cross /16 and /8 boundaries, same-width ranges overlapping
-    at different starts, and duplicate [start, end] rows with conflicting
-    and null attributes. Two ranges cover RFC1918 space, which the gate
-    must keep out of the join."""
+def _geo_rows(rng):
+    """A geo dim row maker: each attribute is NULL one time in five."""
     def row(s, e, tag):
         def pick(v):
             return None if rng.random() < 0.2 else v
         return (s, e, pick(tag[:2]), pick(tag), pick("R" + tag), pick("reg " + tag),
                 pick("city " + tag), pick(rng.uniform(-90, 90)), pick(rng.uniform(-180, 180)))
+    return row
 
+
+# a feed read from files can carry NULL bounds
+_FEED_GEO_SCHEMA = StructType([StructField(f.name, f.dataType) for f in GEO_DIM_SCHEMA.fields])
+
+
+def _dirty_bounds(rng, row):
+    """Rows a dirty feed brings that cover no address: NULL bounds, and
+    bounds inverted across a /4. Counted in the mean width, the inverted
+    rows would drag it below zero."""
+    rows = []
+    for i in range(4):
+        s = rng.randrange(1 << 31)
+        rows += [row(s + (1 << 28), s, f"inv{i}"), row(None, s, f"nos{i}"), row(s, None, f"noe{i}")]
+    return rows
+
+
+def _adversarial_geo_dim(rng):
+    """Nested country/region/city ranges with the cases a real feed brings:
+    ranges that cross /16 and /8 boundaries, same-width ranges overlapping
+    at different starts, duplicate [start, end] rows with conflicting
+    and null attributes, and dirty bounds. Two ranges cover RFC1918 space,
+    which the gate must keep out of the join. Wide ranges: the bucket
+    lands coarse."""
+    row = _geo_rows(rng)
     rows = [row(10 << 24, (11 << 24) - 1, "private"),
             row((192 << 24) | (168 << 16), (192 << 24) | (168 << 16) | 0xFFFF, "lan")]
     for i, o1 in enumerate((8, 23, 45, 61, 72, 88, 104, 151, 185, 203)):
@@ -318,6 +340,28 @@ def _adversarial_geo_dim(rng):
     for r in rng.sample(rows, 15):
         rows.append(row(r[0], r[1], "dup" + str(rng.randrange(3))))
         rows.append((r[0], r[1]) + (None,) * 7)
+    rows += _dirty_bounds(rng, row)
+    rng.shuffle(rows)
+    return rows
+
+
+def _dense_geo_dim(rng):
+    """Ranges narrower than a /16, nested three deep inside a few /16s,
+    some crossing into the next /16, plus duplicates and dirty bounds: the
+    bucket lands on the /16 floor."""
+    row = _geo_rows(rng)
+    rows = []
+    for i, b in enumerate(rng.sample(range(1, (1 << 16) - 1), 6)):
+        for j in range(6):
+            rs = (b << 16) + rng.randrange(0, 1 << 16)
+            re_ = rs + rng.randrange(1 << 10, 1 << 14)
+            rows.append(row(rs, re_, f"b{i}r{j}"))
+            for k in range(2):
+                s = rng.randrange(rs, re_)
+                rows.append(row(s, min(re_, s + rng.randrange(0, 256)), f"b{i}r{j}t{k}"))
+    for r in rng.sample(rows, 8):
+        rows.append(row(r[0], r[1], "dup" + str(rng.randrange(3))))
+    rows += _dirty_bounds(rng, row)
     rng.shuffle(rows)
     return rows
 
@@ -335,7 +379,7 @@ def _ref_geo(ranges, addr):
     """The narrowest range covering the address; ties by start, then by the
     attributes with nulls last. ''/0 defaults when gated or uncovered."""
     ip = _ref_ip(addr)
-    covering = [r for r in ranges if ip is not None and r[0] <= ip <= r[1]]
+    covering = [r for r in ranges if ip is not None and None not in r[:2] and r[0] <= ip <= r[1]]
     if not covering:
         return ("", "", "", "", "", (0.0, 0.0))
     best = min(covering, key=lambda r: (r[1] - r[0], r[0], *[
@@ -349,12 +393,17 @@ def _dotted(ip):
     return ".".join(str((ip >> s) & 255) for s in (24, 16, 8, 0))
 
 
-def test_join_geo_matches_python_reference(spark):
+@pytest.mark.parametrize("make_dim, shift", [(_adversarial_geo_dim, 20), (_dense_geo_dim, 16)],
+                         ids=["nested", "dense"])
+def test_join_geo_matches_python_reference(spark, make_dim, shift):
+    """Both probe paths match the reference: the inline /16 prep, and the
+    prepared dimension at the bucket width it picks (coarse for wide
+    ranges, the /16 floor for narrow ones)."""
     rng = random.Random(7)
-    ranges = _adversarial_geo_dim(rng)
+    ranges = make_dim(rng)
     probes = set()
     for s, e, *_ in ranges:
-        for ip in (s - 1, s, e, e + 1):
+        for ip in (s - 1, s, e, e + 1) if None not in (s, e) else ():
             if 0 <= ip < 1 << 32:
                 probes.add(_dotted(ip))
     probes |= {_dotted(rng.randrange(1 << 32)) for _ in range(300)}
@@ -362,16 +411,32 @@ def test_join_geo_matches_python_reference(spark):
                "72.21.300.1", "8.8.8.256", "99999999999999999999.1.1.1", "8.8.8", None}
     probes = sorted(probes, key=str)
     facts = spark.createDataFrame(list(enumerate(probes)), "id long, srcaddr string")
-    geo = spark.createDataFrame(ranges, GEO_DIM_SCHEMA)
+    geo = spark.createDataFrame(ranges, _FEED_GEO_SCHEMA)
+    flat = flatten_geo_dim(geo)
+    assert enrich._prepared_shift(flat) == shift
+    # the NULL and inverted bounds do not move the width
+    clean = [r for r in ranges if None not in r[:2] and r[0] <= r[1]]
+    assert len(clean) < len(ranges)
+    assert enrich._bucket_shift(spark.createDataFrame(clean, _FEED_GEO_SCHEMA)) == shift
     want = {i: _ref_geo(ranges, a) for i, a in enumerate(probes)}
     cols = ["source-country-code", "source-country-name", "source-region-code",
             "source-region-name", "source-city"]
-    for out in (join_geo(facts, geo),
-                join_geo(facts, flatten_geo_dim(geo), dim_is_disjoint=True)):
+    for out in (join_geo(facts, geo), join_geo(facts, flat, dim_is_disjoint=True)):
         rows = out.collect()
         assert len(rows) == len(probes)
         got = {r["id"]: (*[r[c] for c in cols], tuple(r["source-location"])) for r in rows}
         assert got == want
+
+
+def test_join_geo_refuses_a_dim_without_its_width(spark):
+    """A prepared dimension must be probed at the width it was built with;
+    one that does not carry it (built some other way, or not prepared at
+    all) fails before any plan is built."""
+    geo = fixtures.geo_dim_df(spark)
+    facts = spark.createDataFrame([("72.21.196.65",)], "srcaddr string")
+    for dim in (enrich._flatten(geo, 16), geo):
+        with pytest.raises(ValueError, match="no bucket width"):
+            join_geo(facts, dim, dim_is_disjoint=True)
 
 
 def test_decorate_plan_build_is_a_few_jvm_calls(spark, monkeypatch):
@@ -397,7 +462,7 @@ def test_decorate_plan_build_is_a_few_jvm_calls(spark, monkeypatch):
     monkeypatch.setattr(py4j.java_gateway.GatewayClient, "send_command", counted)
     out = build()
     monkeypatch.undo()
-    assert len(calls) <= 300, len(calls)
+    assert len(calls) <= 160, len(calls)  # 152 measured
     assert out.count() == len(fixtures.EVENT_JSON_LINES)
 
 

@@ -1,8 +1,12 @@
 """Regression tests for the code-review findings: unchunked base64 payloads,
 byte-exact dead-letter passthrough, overlapping-geo-range discipline,
-unique recordIds, salted-join guard."""
+unique recordIds, salted-join guard, Python workers started outside the
+repository."""
 
 import base64
+import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -321,3 +325,25 @@ def test_dedup_exact_null_texts_never_collapse(spark, tmp_path):
         assert (out[d]["dup_rank"], out[d]["group_size"]) == (1, 1), out[d]
         assert out[d]["text_hash"] is None
     assert (out[5]["dup_rank"], out[5]["group_size"]) == (1, 1)
+
+
+def test_python_workers_import_the_package_from_any_cwd(tmp_path, sf_dir):
+    """A Python UDF's worker must import this package even when the driver
+    runs outside the repository and nothing sets PYTHONPATH: the workers
+    start in the driver's working directory, so without the package root
+    on their path a pandas UDF fails with ModuleNotFoundError."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        f"import sys; sys.path.insert(0, {root!r})\n"
+        "import __spark_entry__ as m\n"
+        "from aws_vpc_flow_log_appender_spark.session import get_spark\n"
+        "spark = get_spark('cwd')\n"
+        f"print('ROWS', m.queries()['multimodal_bmp_decode'](spark, {sf_dir!r}).count())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEMORY="1g")
+    p = subprocess.run([sys.executable, "-c", script], cwd=tmp_path, env=env,
+                       capture_output=True, text=True, timeout=600)
+    rows = [ln for ln in p.stdout.splitlines() if ln.startswith("ROWS ")]
+    assert p.returncode == 0 and rows, p.stderr[-3000:]
+    assert int(rows[0].split()[1]) > 0

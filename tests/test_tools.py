@@ -1,11 +1,15 @@
 """Unit tests of the measurement tools that need no Spark session:
-tools/profiler.py's event-log reader, tools/ab_drive.py's interleave and
-pair statistic, and tools/plans.py's plan normalization."""
+tools/profiler.py's event-log reader, tools/ab_drive.py's interleave, pair
+statistic and flowbench mode, and tools/plans.py's plan normalization."""
 
 import importlib.util
 import json
 import os
+import statistics
+import subprocess
 import tempfile
+
+import pytest
 
 _TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
 
@@ -94,6 +98,45 @@ def test_pair_stats_is_median_of_per_pair_ratios():
     assert got["ratios"] == [0.9, 0.95, 2.0, 0.8]
     assert got["ratio"] == 0.925  # min over all trials would read 0.8 / 0.5 = 1.6
     assert (got["ref_won"], got["work_won"]) == (1, 3)
+
+
+def test_flowbench_mode_interleaves_runs_per_checkout_and_workload(monkeypatch):
+    """--flowbench runs flowbench/run.py --trace 0 once per workload in each
+    checkout, in interleave's order, and compares every end-to-end metric
+    per pair; a run that reports a wrong output leaves its pair out."""
+    runs = []
+
+    def fake_run(cmd, cwd, **kwargs):
+        w = cmd[cmd.index("--workload") + 1]
+        runs.append((cwd, w))
+        assert cmd[1:3] == ["flowbench/run.py", "--workload"]
+        assert cmd[cmd.index("--seed") + 1] == "5" and cmd[cmd.index("--trace") + 1] == "0"
+        n = len(runs)
+        lat = (0.40 if cwd == "/ref" else 0.36) + n / 1000
+        metrics = {"setup_s": {"value": 13.0, "unit": "s"},
+                   "latency_p50_s": {"value": lat, "unit": "s"},
+                   "peak_rss_mb": {"value": 1700.0 + n, "unit": "MB"}}
+        out = {"correct": n != 7, "attempted": 20, "failed": 0, "metrics": metrics}
+        return subprocess.CompletedProcess(cmd, 0, "phase x\n" + json.dumps(out) + "\n", "")
+
+    monkeypatch.setattr(ab_drive.subprocess, "run", fake_run)
+    got = ab_drive.flowbench_ab("/ref", "/work", ["flowlog_stream", "flowlog_batch"], 2, seed=5)
+    sides = [cwd for cwd, _ in runs[::2]]
+    assert sides == ["/ref", "/work",  # warm-up, discarded
+                     "/ref", "/work", "/work", "/ref"]
+    assert [w for _, w in runs] == ["flowlog_stream", "flowlog_batch"] * 6
+    assert set(got) == {f"{w}:{m}" for w in ("flowlog_stream", "flowlog_batch")
+                        for m in ("setup_s", "latency_p50_s", "peak_rss_mb")}
+    # run 7 (round 0's work stream) was wrong, so that stream pair is left out
+    lat = got["flowlog_stream:latency_p50_s"]
+    assert lat["ref_min"] == pytest.approx([0.411]) and lat["work_min"] == pytest.approx([0.369])
+    assert (lat["ref_won"], lat["work_won"]) == (0, 1)
+    batch = got["flowlog_batch:latency_p50_s"]
+    assert batch["ref_min"] == pytest.approx([0.406, 0.412])
+    assert batch["work_min"] == pytest.approx([0.368, 0.370])
+    assert batch["ratio"] == round(statistics.median([0.368 / 0.406, 0.370 / 0.412]), 3)
+    assert batch["work_won"] == 2
+    assert batch["ref_iqr"] == pytest.approx(0.006 * 1.5)
 
 
 def _job_start(job, group, submit, infos, sql_id=None):
