@@ -402,11 +402,9 @@ def curation_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # string-heavy quality gate. The checkpoint holds (source, doc_id,
     # n_tok, h) — 4 narrow columns. alloc is |sources|-row; its eager cut
     # stops the quota/rank chain re-running for its two consumers.
-    # localCheckpoint caveat: executor-local blocks, NO lineage replay on executor loss (guide §5); acceptable because the whole job is re-runnable
     q = _mix_quality_frame(load(spark, sf_dir, "documents")).localCheckpoint(
         eager=True
     )
-    # localCheckpoint caveat: executor-local blocks, NO lineage replay on executor loss (guide §5); acceptable because the whole job is re-runnable
     alloc = _hamilton_alloc(q).localCheckpoint(eager=True)
     cw = (
         W.partitionBy("source")

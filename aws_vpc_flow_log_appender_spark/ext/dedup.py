@@ -12,6 +12,8 @@ lexicographic in both, which makes MinHash signatures engine-portable.
 
 from __future__ import annotations
 
+from operator import lt
+
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -452,7 +454,6 @@ def dedup_minhash_est_jaccard(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     sig = (
         _fan_out_derived(_minhash_sig_for(docs), docs)
-        # localCheckpoint caveat: executor-local blocks, NO lineage replay on executor loss (guide §5); acceptable because the whole job is re-runnable
         .localCheckpoint(eager=True)
     )
     bands = _bands_from_sig(sig)
@@ -468,7 +469,6 @@ def dedup_minhash_est_jaccard(spark, sf_dir):
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    # localCheckpoint caveat: executor-local blocks, NO lineage replay on executor loss (guide §5); acceptable because the whole job is re-runnable
     pairs = _fan_out_derived(pairs, docs).localCheckpoint(eager=True)
     sh = _shingled_for(docs)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
@@ -597,7 +597,6 @@ def _shingle_intersections(sh, source=None):
             ).alias("b0"),
         )
     )
-    # localCheckpoint caveat: executor-local blocks, NO lineage replay on executor loss (guide §5); acceptable because the whole job is re-runnable
     profile = _fan_out_derived(profile, source).localCheckpoint(eager=True)
     a = profile.alias("a")
     b = profile.alias("b")
@@ -749,8 +748,7 @@ _SQL_COS_AB = """
 def _embedding_nn_oracle_sql(cell_cap: int | None = None) -> str:
     """Oracle for dedup_embedding_nn, parametric in the cell cap so the
     hot-cell sub-bucket path is oracle-checked with an ACTIVE cap in
-    tests/test_ext.py (code-review r6: the label-only join silently
-    diverged the moment the cap engaged)."""
+    tests/test_ext.py."""
     from .similarity import CELL_CAP, _capped_sub_cte
 
     return f"""
@@ -784,49 +782,27 @@ def dedup_embedding_nn(spark, sf_dir):
     return _embedding_nn(load(spark, sf_dir, "embeddings"))
 
 
-def _embedding_nn(e, cell_cap: int | None = None, n_sub_bits: int | None = None,
-                  dim: int | None = None):
-    from .similarity import (CELL_CAP, EMB_DIM, N_SUB_BITS, _cos_prenorm,
-                             _emb_norm, with_capped_cell)
+def _cells(e, cell_cap: int | None, n_sub_bits: int | None, dim: int | None):
+    """similarity._cell_frame, eagerly checkpointed, with None meaning the
+    similarity module's default."""
+    from .similarity import CELL_CAP, EMB_DIM, N_SUB_BITS, _cell_frame
 
-    # checkpointed: both self-join sides derive from the capped frame (see
-    # _ivf_topk's rationale — one corpus pass, not two). The per-row norm
-    # sqrt(<v,v>) rides the checkpoint (optimization r10): _cos recomputed
-    # BOTH self-dot norm factors per candidate pair — 2 of its 3 fold dots
-    # per pair were row constants. Identical values: the same sqrt(self-dot)
-    # doubles are multiplied in the same operand order (_cos_prenorm).
-    e = with_capped_cell(
+    return _cell_frame(
         e,
-        "label",
         cell_cap if cell_cap is not None else CELL_CAP,
         n_sub_bits if n_sub_bits is not None else N_SUB_BITS,
-        dim=dim if dim is not None else EMB_DIM,
-    # localCheckpoint caveat: executor-local blocks, NO lineage replay on executor loss (guide §5); acceptable because the whole job is re-runnable
-    ).withColumn("__nrm", _emb_norm()).localCheckpoint(eager=True)
-
-    a = e.alias("a")
-    b = e.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.sub_bucket") == F.col("b.sub_bucket"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_id"),
-            F.col("b.vec_id").alias("nn_id"),
-            # the shared 1e-6 rounded-cosine grid (similarity._cos), with
-            # the two per-row norm factors read off the checkpoint
-            _cos_prenorm("a.embedding", "b.embedding",
-                         "a.__nrm", "b.__nrm").alias("cos_sim"),
-        )
+        dim if dim is not None else EMB_DIM,
+        eager=True,
     )
-    w = W.partitionBy("vec_id").orderBy(F.desc("cos_sim"), F.asc("nn_id"))
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "nn_id", "cos_sim")
+
+
+def _embedding_nn(e, cell_cap: int | None = None, n_sub_bits: int | None = None,
+                  dim: int | None = None):
+    from .similarity import _by_cos, _cell_pairs_cos, _topk
+
+    pairs = _cell_pairs_cos(_cells(e, cell_cap, n_sub_bits, dim))
+    return _topk(pairs, _by_cos("nn_id"), 1, part="vec_id", rank="rn").select(
+        "vec_id", "nn_id", "cos_sim"
     )
 
 
@@ -865,37 +841,12 @@ def dedup_embedding_pairs(spark, sf_dir):
 def _embedding_pairs(e, threshold: float = 0.35,
                      cell_cap: int | None = None, n_sub_bits: int | None = None,
                      dim: int | None = None):
-    from .similarity import (CELL_CAP, EMB_DIM, N_SUB_BITS, _cos_prenorm,
-                             _emb_norm, with_capped_cell)
+    from .similarity import _cell_pairs_cos
 
-    # checkpointed + per-row norm, exactly as _embedding_nn (one corpus
-    # pass; 2 of _cos's 3 per-pair fold dots were row constants)
-    e = with_capped_cell(
-        e,
-        "label",
-        cell_cap if cell_cap is not None else CELL_CAP,
-        n_sub_bits if n_sub_bits is not None else N_SUB_BITS,
-        dim=dim if dim is not None else EMB_DIM,
-    # localCheckpoint caveat: executor-local blocks, NO lineage replay on executor loss (guide §5); acceptable because the whole job is re-runnable
-    ).withColumn("__nrm", _emb_norm()).localCheckpoint(eager=True)
-
-    a, b = e.alias("a"), e.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.sub_bucket") == F.col("b.sub_bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            # shared rounded-cosine definition (see _embedding_nn)
-            _cos_prenorm("a.embedding", "b.embedding",
-                         "a.__nrm", "b.__nrm").alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
-    )
+    pairs = _cell_pairs_cos(_cells(e, cell_cap, n_sub_bits, dim), lt)
+    return pairs.select(
+        F.col("vec_id").alias("vec_a"), F.col("nn_id").alias("vec_b"), "cos_sim"
+    ).filter(F.col("cos_sim") >= threshold)
 
 
 @query(
@@ -1017,7 +968,6 @@ def _simhash_pairs(sig, hot_cap: int = HOT_BAND_CAP):
             f" (shiftrightunsigned(simhash, 8) & {m56 ^ low}))"
         )
     par = sig.sparkSession.sparkContext.defaultParallelism
-    # localCheckpoint caveat: executor-local blocks, NO lineage replay on executor loss (guide §5); acceptable because the whole job is re-runnable
     sig_ck = sig.repartition(par).localCheckpoint(eager=True)
     chunk_structs = ", ".join(
         f"named_struct('chunk_id', {c},"
@@ -1702,7 +1652,6 @@ def dedup_paragraphs_near(spark, sf_dir):
             F.count(F.lit(1)).alias("n_copies"),
         )
         .repartition(par)
-        # localCheckpoint caveat: executor-local blocks, NO lineage replay on executor loss (guide §5); acceptable because the whole job is re-runnable
         .localCheckpoint(eager=True)
     )
 
@@ -1761,7 +1710,6 @@ def dedup_paragraphs_near(spark, sf_dir):
         # self-join single-task (profiled r10: a 1.8 s one-task stage);
         # eager: both self-join sides read one cached copy
         .repartition(par)
-        # localCheckpoint caveat: executor-local blocks, NO lineage replay on executor loss (guide §5); acceptable because the whole job is re-runnable
         .localCheckpoint(eager=True)
     )
     a, b = bands.alias("a"), bands.alias("b")
@@ -2058,7 +2006,6 @@ def dedup_cross_split_leakage(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     sig = (
         _fan_out_derived(_minhash_sig_for(docs), docs)
-        # localCheckpoint caveat: executor-local blocks, NO lineage replay on executor loss (guide §5); acceptable because the whole job is re-runnable
         .localCheckpoint(eager=True)
     )
     bands = _bands_from_sig(sig)

@@ -12,6 +12,8 @@ comparison is stable at 1e-6 rounding.
 from __future__ import annotations
 
 import json
+from functools import reduce
+from operator import and_, ne
 
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -165,10 +167,8 @@ def _fold_dot(x, y):
 
 def _emb_norm():
     """sqrt(<embedding, embedding>) as a Column — the per-row norm factor of
-    _cos's denominator, computed ONCE PER ROW and checkpointed by the
-    embedding pair-join queries instead of once per candidate pair
-    (optimization r10: 2 of _cos's 3 fold dots per pair were row
-    constants)."""
+    _cos's denominator, computed once per row instead of once per
+    candidate pair."""
     v = F.col("embedding").cast("array<double>")
     return F.sqrt(_fold_dot(v, v))
 
@@ -178,12 +178,108 @@ def _cos_prenorm(qcol: str, ccol: str, qn: str, cn: str):
     on the same 1e-6 grid. Identical IEEE values — qn/cn hold the very
     sqrt(self-dot) doubles _cos recomputed per pair, multiplied in the same
     (q, c) operand order; the cross dot keeps _cos's fold form (an explicit
-    64-term spelling was A/B-measured SLOWER at bench scale: the generated
-    code balloons past what the JIT compiles happily, and at 2k vectors the
-    fixed codegen cost dominates the per-row win — r10, guide §1.1)."""
+    64-term spelling measured slower: its generated code is too large for
+    the JIT to compile well)."""
     q = F.col(qcol).cast("array<double>")
     c = F.col(ccol).cast("array<double>")
     return round_half_up(_fold_dot(q, c) / (F.col(qn) * F.col(cn)), 6)
+
+
+# --- the search path ---------------------------------------------------------
+#
+# Every top-k search here is one operator in three steps: generate the
+# candidate pairs, score them, keep the best k per query. Candidates meet in
+# one of two joins: _probe_cos broadcasts a bounded probe set against the
+# corpus, _cell_pairs_cos self-joins the corpus within its capped cells.
+# _topk is the only Spark-side row_number of the module.
+
+
+def _topk(scored, order, k: int, part: str = "query_id", rank: str = "rank"):
+    """The first ``k`` rows of each ``part`` group under ``order`` (a list
+    of sort Columns), numbered from 1 in ``rank``."""
+    w = W.partitionBy(part).orderBy(*order)
+    return scored.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
+def _by_cos(neighbor: str = "neighbor_id"):
+    """Cosine order: most similar first, ties to the smaller neighbour id."""
+    return [F.desc("cos_sim"), F.asc(neighbor)]
+
+
+def _by_dist(dist: str):
+    """Integer-distance order: nearest first, ties to the smaller neighbour
+    id."""
+    return [F.asc(dist), F.asc("neighbor_id")]
+
+
+def _cos_topk(scored):
+    """The TOP_K (query_id, neighbor_id, cos_sim, rank) rows of each query
+    of a _probe_cos scoring."""
+    return _topk(scored, _by_cos(), TOP_K).select(
+        "query_id", "neighbor_id", "cos_sim", "rank"
+    )
+
+
+def _with_norm(e):
+    """The raw embeddings as scorer input: (vec_id, v, nrm)."""
+    return e.select("vec_id", F.col("embedding").alias("v"), _emb_norm().alias("nrm"))
+
+
+def _probe_cos(corpus, probes, keys: tuple[str, ...] = ()):
+    """Score the corpus against broadcast probes. Both frames carry
+    ``vec_id``, the ``keys`` columns, a vector ``v`` and its norm ``nrm``; a
+    corpus row meets every probe with equal keys and another id. Emits
+    (query_id, neighbor_id, cos_sim)."""
+    def side(df, vid: str, p: str):
+        return df.select(
+            F.col("vec_id").alias(vid),
+            *[F.col(k).alias(p + k) for k in keys],
+            F.col("v").alias(p + "v"),
+            F.col("nrm").alias(p + "nrm"),
+        )
+
+    on = [F.col("c_" + k) == F.col("q_" + k) for k in keys]
+    on.append(F.col("neighbor_id") != F.col("query_id"))
+    probes = side(probes, "query_id", "q_")
+    return (
+        side(corpus, "neighbor_id", "c_")
+        .join(F.broadcast(probes), reduce(and_, on))
+        .select(
+            "query_id",
+            "neighbor_id",
+            _cos_prenorm("q_v", "c_v", "q_nrm", "c_nrm").alias("cos_sim"),
+        )
+    )
+
+
+def _cell_frame(e, cell_cap: int = CELL_CAP, n_sub_bits: int = N_SUB_BITS,
+                dim: int = EMB_DIM, eager: bool = False):
+    """The embeddings keyed by their capped cell (with_capped_cell), with
+    the vector as ``v`` and its per-row norm ``nrm``; checkpointed because
+    both sides of an in-cell join read it."""
+    return (
+        with_capped_cell(e, "label", cell_cap, n_sub_bits, dim=dim)
+        .withColumn("nrm", _emb_norm())
+        .withColumnRenamed("embedding", "v")
+        .localCheckpoint(eager=eager)
+    )
+
+
+def _cell_pairs_cos(cells, pair=ne):
+    """Self-join a _cell_frame within (label, sub_bucket): rows a and b
+    meet when ``pair(a.vec_id, b.vec_id)`` holds. Emits (vec_id, nn_id,
+    cos_sim)."""
+    a, b = cells.alias("a"), cells.alias("b")
+    return a.join(
+        b,
+        (F.col("a.label") == F.col("b.label"))
+        & (F.col("a.sub_bucket") == F.col("b.sub_bucket"))
+        & pair(F.col("a.vec_id"), F.col("b.vec_id")),
+    ).select(
+        F.col("a.vec_id").alias("vec_id"),
+        F.col("b.vec_id").alias("nn_id"),
+        _cos_prenorm("a.v", "b.v", "a.nrm", "b.nrm").alias("cos_sim"),
+    )
 
 
 @query(
@@ -203,34 +299,8 @@ def _cos_prenorm(qcol: str, ccol: str, qn: str, cn: str):
 def sim_bruteforce_topk(spark, sf_dir):
     """Exact cosine top-k: broadcast the (small) query set against the corpus,
     per-query window top-k. One corpus scan regardless of query count."""
-    e = load(spark, sf_dir, "embeddings")
-    # per-row norms (the _cos_prenorm discipline, r10): the corpus-side
-    # sqrt(self-dot) previously re-folded once per (query, corpus) pair —
-    # N_QUERIES times per corpus row
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        _emb_norm().alias("q_nrm"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        _emb_norm().alias("c_nrm"),
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cos_prenorm("q_emb", "c_emb", "q_nrm", "c_nrm").alias("cos_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    x = _with_norm(load(spark, sf_dir, "embeddings"))
+    return _cos_topk(_probe_cos(x, x.filter(F.col("vec_id") < N_QUERIES)))
 
 
 _SQL_COS_V = """
@@ -268,60 +338,19 @@ def _ivf_oracle_sql(cell_cap: int = CELL_CAP) -> str:
 )
 def sim_ivf_topk(spark, sf_dir):
     """IVF-pruned top-k: probe only the query's own cell (label = coarse
-    centroid assignment). At 100 TB this turns a full scan into
-    corpus/n_cells per query; recall depends on cell quality, which is the
-    standard IVF trade. Cells above CELL_CAP are further split by a seeded
-    RP sign sketch (with_capped_cell) so one hot cell can't go quadratic —
-    and the oracle models the SAME split (_capped_sub_cte), so the capped
-    path is hash-checkable, not just the fixture-inactive one."""
+    centroid assignment), so a query scans corpus/n_cells rows; recall
+    depends on cell quality, which is the standard IVF trade. Cells above
+    CELL_CAP are further split by a seeded RP sign sketch (with_capped_cell)
+    so one hot cell can't go quadratic — and the oracle models the SAME
+    split (_capped_sub_cte), so the capped path is hash-checkable, not just
+    the fixture-inactive one."""
     return _ivf_topk(load(spark, sf_dir, "embeddings"))
 
 
 def _ivf_topk(e, cell_cap: int = CELL_CAP, n_sub_bits: int = N_SUB_BITS):
-    # checkpoint the capped frame: BOTH join branches (query set + corpus)
-    # derive from it, and without the materialization each branch re-runs
-    # the cell-size aggregate and the sub-bucket projection over the corpus
-    # (profiled: the checkpoint beats the double build at sf0.1 and removes
-    # a second corpus pass at any scale; corpus-row-bounded, the same
-    # discipline as the banded dedup tables)
-    e = (
-        with_capped_cell(e, "label", cell_cap, n_sub_bits)
-        # per-row norm on the checkpoint (the _cos_prenorm discipline, r10)
-        .withColumn("__nrm", _emb_norm())
-        .localCheckpoint(eager=False)
-    )
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("q_label"),
-        F.col("sub_bucket").alias("q_sub"),
-        F.col("embedding").alias("q_emb"),
-        F.col("__nrm").alias("q_nrm"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("c_label"),
-        F.col("sub_bucket").alias("c_sub"),
-        F.col("embedding").alias("c_emb"),
-        F.col("__nrm").alias("c_nrm"),
-    )
-    scored = (
-        c.join(
-            F.broadcast(q),
-            (F.col("c_label") == F.col("q_label"))
-            & (F.col("c_sub") == F.col("q_sub"))
-            & (F.col("neighbor_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cos_prenorm("q_emb", "c_emb", "q_nrm", "c_nrm").alias("cos_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    x = _cell_frame(e, cell_cap, n_sub_bits)
+    return _cos_topk(
+        _probe_cos(x, x.filter(F.col("vec_id") < N_QUERIES), ("label", "sub_bucket"))
     )
 
 
@@ -399,51 +428,18 @@ def sim_ivf_multiprobe(spark, sf_dir):
             F.transform("pc", lambda s: round_half_up(s["cx"], 6)).alias("centroid"),
         )
     )
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        v.alias("qv"),
-        # per-row norm (the _cos_prenorm discipline, r10); the K-row
-        # centroid-ranking window below keeps the full _cos (bounded at
-        # N_QUERIES x KM-cells rows, not a pair join)
-        F.sqrt(_fold_dot(v, v)).alias("q_nrm"),
+    x = e.select("vec_id", "label", v.alias("v"), F.sqrt(_fold_dot(v, v)).alias("nrm"))
+    # the probe ranking keeps the full _cos: it scores N_QUERIES x n_cells
+    # rows, not candidate pairs
+    q = x.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "v", "nrm")
+    probes = _topk(
+        q.crossJoin(F.broadcast(cent)),
+        [F.desc(_cos("v", "centroid")), F.asc("label")],
+        N_PROBE,
+        part="vec_id",
+        rank="rn",
     )
-    ranked = q.crossJoin(F.broadcast(cent)).select(
-        "query_id",
-        "label",
-        "qv",
-        "q_nrm",
-        F.row_number()
-        .over(
-            W.partitionBy("query_id").orderBy(
-                F.desc(_cos(F.col("qv"), F.col("centroid"))), F.asc("label")
-            )
-        )
-        .alias("rn"),
-    )
-    probes = ranked.filter(F.col("rn") <= N_PROBE).select(
-        "query_id", "label", "qv", "q_nrm"
-    )
-    c = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("c_label"),
-        v.alias("cv"),
-        F.sqrt(_fold_dot(v, v)).alias("c_nrm"),
-    )
-    scored = c.join(
-        F.broadcast(probes),
-        (F.col("c_label") == F.col("label"))
-        & (F.col("neighbor_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        "neighbor_id",
-        _cos_prenorm("qv", "cv", "q_nrm", "c_nrm").alias("cos_sim"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _cos_topk(_probe_cos(x, probes, ("label",)))
 
 
 def _rp_oracle_sql(dim: int = 64, n_bits: int = 6, seed: int = 42) -> str:
@@ -494,43 +490,16 @@ def sim_rp_lsh_topk(spark, sf_dir):
     # The double-cast array binds once to a named column so the generated
     # 384-term expression indexes it instead of re-casting per term.
     bucket = _rp_bucket_sql("__v", one_based=False)
-    e = (
+    v = F.col("__v")
+    x = (
         load(spark, sf_dir, "embeddings")
         .withColumn("__v", F.col("embedding").cast("array<double>"))
         .withColumn("bucket", F.expr(bucket))
-        # per-row norm (the _cos_prenorm discipline, r10)
-        .withColumn("__nrm", F.sqrt(_fold_dot(F.col("__v"), F.col("__v"))))
-        .drop("__v")
+        .select("vec_id", "bucket", F.col("embedding").alias("v"),
+                F.sqrt(_fold_dot(v, v)).alias("nrm"))
     )
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("bucket").alias("q_bucket"),
-        F.col("embedding").alias("q_emb"),
-        F.col("__nrm").alias("q_nrm"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("bucket").alias("c_bucket"),
-        F.col("embedding").alias("c_emb"),
-        F.col("__nrm").alias("c_nrm"),
-    )
-    scored = (
-        c.join(
-            F.broadcast(q),
-            (F.col("c_bucket") == F.col("q_bucket"))
-            & (F.col("neighbor_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cos_prenorm("q_emb", "c_emb", "q_nrm", "c_nrm").alias("cos_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    return _cos_topk(
+        _probe_cos(x, x.filter(F.col("vec_id") < N_QUERIES), ("bucket",))
     )
 
 
@@ -552,31 +521,13 @@ def sim_range_search(spark, sf_dir):
     recall-sensitive RAG filters need (top-k misses qualifying neighbors
     past k; radius search returns exactly the qualifying set). Same
     broadcast-queries shape as sim_bruteforce_topk but with a narrow filter
-    instead of a rank window: no shuffle at all after the scan — at 100 TB
-    the scan cost dominates and the same IVF cell pruning as sim_ivf_topk
-    composes in front unchanged. The threshold compares ROUNDED cosine on
-    both engines so the >= cut is boundary-stable."""
-    e = load(spark, sf_dir, "embeddings")
-    # per-row norms (the _cos_prenorm discipline, r10)
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        _emb_norm().alias("q_nrm"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        _emb_norm().alias("c_nrm"),
-    )
-    return (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cos_prenorm("q_emb", "c_emb", "q_nrm", "c_nrm").alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= 0.2)
-    )
+    instead of a rank window: no shuffle at all after the scan, and the
+    same IVF cell pruning as sim_ivf_topk composes in front unchanged. The
+    threshold compares ROUNDED cosine on both engines so the >= cut is
+    boundary-stable."""
+    x = _with_norm(load(spark, sf_dir, "embeddings"))
+    scored = _probe_cos(x, x.filter(F.col("vec_id") < N_QUERIES))
+    return scored.filter(F.col("cos_sim") >= 0.2)
 
 
 @query(
@@ -752,9 +703,7 @@ def sim_knn_graph(spark, sf_dir):
     step of graph-based ANN indexes (NN-descent seeding, HNSW layers) and
     density clustering, where mutual-kNN edges are the high-precision
     subgraph. Candidates come from the IVF cell (label = coarse-quantizer
-    cell), with hot cells sub-bucketed via with_capped_cell HERE too
-    (code-review r6: edge generation previously had no skew bound of its
-    own and the docstring deferred to the nn-dedup twin), so edge
+    cell), with hot cells sub-bucketed via with_capped_cell, so edge
     generation is per-cell and cap-bounded, never global all-pairs — and
     the oracle models the same split. Mutuality is a
     self-join of the kNN edge list on reversed endpoints — edge-list-sized,
@@ -764,32 +713,9 @@ def sim_knn_graph(spark, sf_dir):
 
 
 def _knn_graph(e, cell_cap: int = CELL_CAP):
-    # checkpointed for the same both-sides reason as _ivf_topk; per-row
-    # norm on the checkpoint (the _cos_prenorm discipline, r10)
-    e = (
-        with_capped_cell(e, "label", cell_cap)
-        .withColumn("__nrm", _emb_norm())
-        .localCheckpoint(eager=False)
-    )
-    a = e.alias("a")
-    b = e.alias("b")
-    scored = a.join(
-        b,
-        (F.col("a.label") == F.col("b.label"))
-        & (F.col("a.sub_bucket") == F.col("b.sub_bucket"))
-        & (F.col("a.vec_id") != F.col("b.vec_id")),
-    ).select(
-        F.col("a.vec_id").alias("vec_id"),
-        F.col("b.vec_id").alias("nn_id"),
-        _cos_prenorm(
-            "a.embedding", "b.embedding", "a.__nrm", "b.__nrm"
-        ).alias("cos_sim"),
-    )
-    w = W.partitionBy("vec_id").orderBy(F.desc("cos_sim"), F.asc("nn_id"))
-    knn = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= KNN_GRAPH_K)
-        .localCheckpoint(eager=False)
+    scored = _cell_pairs_cos(_cell_frame(e, cell_cap))
+    knn = _topk(scored, _by_cos("nn_id"), KNN_GRAPH_K, part="vec_id").localCheckpoint(
+        eager=False
     )
     rev = knn.select(
         F.col("vec_id").alias("r_vec"), F.col("nn_id").alias("r_nn")
@@ -1223,59 +1149,25 @@ def sim_ivf_trained_topk(spark, sf_dir):
     broadcast of the K-row codebook, partial-aggregable argmin),
     localCheckpoint'ed because BOTH sides of the in-cell join derive from
     it — without the materialization the query branch and the corpus
-    branch would each re-run the full training (the _ivf_topk checkpoint
-    discipline, one corpus-row-bounded table). The search itself is the
-    proven IVF shape: broadcast the N_QUERIES-row query set (bounded by
-    the query-batch constant), equi-join on the trained cell, 1e-6-rounded
-    fold-order-stable cosine, per-query window top-k.
-
-    At 100 TB: training cost is KM_ITERS corpus passes with K x EMB_DIM
-    partial-agg state; search probes corpus/K rows per query instead of
-    the corpus. Cell imbalance bounds: the probe side is capped by the
-    query-set constant, so a hot trained cell costs N_QUERIES x cell_n
-    comparisons (linear in the cell), never cell_n^2 — the quadratic
-    hot-cell risk that forces with_capped_cell onto the PAIRWISE queries
-    does not arise for a bounded query batch."""
+    branch would each re-run the full training. The search itself is the
+    IVF shape: broadcast the N_QUERIES-row query set, equi-join on the
+    trained cell, per-query top-k. The probe side is bounded by the query
+    batch, so a hot trained cell costs N_QUERIES x cell_n comparisons,
+    never cell_n^2 — no with_capped_cell split is needed."""
     from .dedup import _sql_over
 
     e = load(spark, sf_dir, "embeddings")
     fin = KM_ITERS
     cb, _ = _lloyd_train(e, "kmtrain", _km_vecs_body(), pq=False)
     parts = _km_parts_spark()
-    # sqrt(vv) is the per-row norm factor of the pair cosine — one sqrt per
-    # row at the checkpoint instead of two 64-element folds per candidate
-    # pair (the _cos_prenorm discipline; vv folds in _km_dot_sql order,
-    # which is _fold_dot's order, so the doubles are bit-identical)
+    # vv folds in _km_dot_sql order, which is _fold_dot's order, so sqrt(vv)
+    # is bit-identical to _emb_norm
     parts.append(f" SELECT vec_id, v, sqrt(vv) AS nrm, cid FROM a{fin}")
     assigned = _sql_over(
         e, "kmtrain", "".join(parts), _cb_args(cb)
     ).localCheckpoint(eager=False)
-    q = assigned.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("cid").alias("q_cid"),
-        F.col("v").alias("q_v"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    c = assigned.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("cid").alias("c_cid"),
-        F.col("v").alias("c_v"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    scored = c.join(
-        F.broadcast(q),
-        (F.col("c_cid") == F.col("q_cid"))
-        & (F.col("neighbor_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        "neighbor_id",
-        _cos_prenorm("q_v", "c_v", "q_nrm", "c_nrm").alias("cos_sim"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    return _cos_topk(
+        _probe_cos(assigned, assigned.filter(F.col("vec_id") < N_QUERIES), ("cid",))
     )
 
 
@@ -1327,23 +1219,14 @@ def sim_ivf_trained_multiprobe(spark, sf_dir):
     emits BOTH tables the search needs — the corpus assignment a{fin} and
     the query probe candidates — as a kind-tagged union, localCheckpoint'ed
     ONCE: without the tag trick the two branches would each re-run the full
-    KM_ITERS training over the corpus (the sim_ivf_trained_topk checkpoint
-    discipline, extended to two heterogeneous consumers).
-
-    At 100 TB: the checkpointed union is corpus + N_QUERIES x KM_K rows —
-    the probe side adds a constant-bounded sliver. Search scans N_PROBE
-    cells per query (~N_PROBE/KM_K of the corpus across the bounded query
-    batch); candidates never duplicate across probes because each corpus
-    vector lives in exactly one trained cell. The probe-pair table
-    (N_QUERIES x N_PROBE rows) broadcasts by the query-batch-constant
-    bound."""
+    KM_ITERS training over the corpus. Candidates never duplicate across
+    probes because each corpus vector lives in exactly one trained cell."""
     from .dedup import _sql_over
 
     e = load(spark, sf_dir, "embeddings")
     fin = KM_ITERS
     cb, _ = _lloyd_train(e, "kmprobe", _km_vecs_body(), pq=False)
     parts = _km_parts_spark(with_sc=True)
-    # sqrt(vv) rides the checkpoint per row (the _cos_prenorm discipline)
     parts.append(f"""
     SELECT 0 AS kind, vec_id, v, sqrt(vv) AS nrm, cid,
            CAST(NULL AS DOUBLE) AS d
@@ -1355,39 +1238,15 @@ def sim_ivf_trained_multiprobe(spark, sf_dir):
     both = _sql_over(
         e, "kmprobe", "".join(parts), _cb_args(cb)
     ).localCheckpoint(eager=False)
-    pw = W.partitionBy("vec_id").orderBy(F.asc("d"), F.asc("cid"))
-    probes = (
-        both.filter(F.col("kind") == 1)
-        .withColumn("prank", F.row_number().over(pw))
-        .filter(F.col("prank") <= N_PROBE)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("cid").alias("q_cid"),
-            F.col("v").alias("q_v"),
-            F.col("nrm").alias("q_nrm"),
-        )
+    probes = _topk(
+        both.filter(F.col("kind") == 1),
+        [F.asc("d"), F.asc("cid")],
+        N_PROBE,
+        part="vec_id",
+        rank="prank",
     )
-    c = both.filter(F.col("kind") == 0).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("cid").alias("c_cid"),
-        F.col("v").alias("c_v"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    scored = c.join(
-        F.broadcast(probes),
-        (F.col("c_cid") == F.col("q_cid"))
-        & (F.col("neighbor_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        "neighbor_id",
-        _cos_prenorm("q_v", "c_v", "q_nrm", "c_nrm").alias("cos_sim"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    corpus = both.filter(F.col("kind") == 0)
+    return _cos_topk(_probe_cos(corpus, probes, ("cid",)))
 
 
 # --- Product quantization (the IVF-PQ storage path) -------------------------
@@ -1635,7 +1494,7 @@ def _pq_adc_oracle_sql() -> str:
 )
 def sim_pq_adc(spark, sf_dir):
     """Product quantization with asymmetric distance computation — the
-    IVF-PQ storage path that makes 100 TB ANN indexes fit: train PQ_M
+    IVF-PQ storage path that makes large ANN indexes fit: train PQ_M
     independent PQ_K-centroid codebooks (one per contiguous PQ_SUB-dim
     subspace), ENCODE every vector to PQ_M small codes, then score
     compressed codes against uncompressed queries via per-query distance
@@ -1661,15 +1520,12 @@ def sim_pq_adc(spark, sf_dir):
     (the EWMA/Holt rule: engine summation order can't perturb ranking),
     one final double division for display.
 
-    At 100 TB: the index table is corpus x PQ_M rows of (id, m, code) —
-    with PQ_K <= 256 that is PQ_M BYTES of payload per vector vs
-    EMB_DIM x 8 raw (64x smaller here; 512x at dim-768/M-96 production
-    shapes). The scoring join broadcasts the LUT (query-batch x codebook
-    constant) against the code table and partial-aggregates the per-pair
-    sums map-side; no shuffle carries a full vector. Recall follows
-    codebook quality (the standard PQ trade); this is the honest
-    exhaustive-ADC scan — compose with the trained IVF cells to prune
-    candidates before scoring (IVF-PQ proper)."""
+    The index table is corpus x PQ_M rows of (id, m, code): with
+    PQ_K <= 256 that is PQ_M bytes of payload per vector against
+    EMB_DIM x 8 raw. The scoring join broadcasts the LUT against the code
+    table and partial-aggregates the per-pair sums map-side; no shuffle
+    carries a full vector. This is the exhaustive ADC scan; sim_ivfpq_topk
+    prunes candidates with the trained IVF cells first."""
     from .dedup import _sql_over
 
     e = load(spark, sf_dir, "embeddings")
@@ -1706,16 +1562,11 @@ def sim_pq_adc(spark, sf_dir):
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("term").alias("adc_i"))
     )
-    w = W.partitionBy("query_id").orderBy(F.asc("adc_i"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            (F.col("adc_i").cast("double") / F.lit(KM_SCALE)).alias("adc_dist"),
-            "rank",
-        )
+    return _topk(scored, _by_dist("adc_i"), TOP_K).select(
+        "query_id",
+        "neighbor_id",
+        (F.col("adc_i").cast("double") / F.lit(KM_SCALE)).alias("adc_dist"),
+        "rank",
     )
 
 
@@ -1848,13 +1699,13 @@ def _ivfpq_search(both, k: int = TOP_K):
     distance), sim_recall_eval (which joins it against the exact scan),
     and the re-rank queries (which widen k to the RERANK_C candidate
     pool)."""
-    pw = W.partitionBy("vec_id").orderBy(F.asc("d"), F.asc("cell"))
-    probes = (
-        both.filter(F.col("kind") == 1)
-        .withColumn("pr", F.row_number().over(pw))
-        .filter(F.col("pr") <= N_PROBE)
-        .select(F.col("vec_id").alias("query_id"), F.col("cell").alias("q_cell"))
-    )
+    probes = _topk(
+        both.filter(F.col("kind") == 1),
+        [F.asc("d"), F.asc("cell")],
+        N_PROBE,
+        part="vec_id",
+        rank="pr",
+    ).select(F.col("vec_id").alias("query_id"), F.col("cell").alias("q_cell"))
     lut = both.filter(F.col("kind") == 2).select(
         F.col("vec_id").alias("l_query"),
         F.col("m").alias("l_m"),
@@ -1880,10 +1731,7 @@ def _ivfpq_search(both, k: int = TOP_K):
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("term").alias("adc_i"))
     )
-    w = W.partitionBy("query_id").orderBy(F.asc("adc_i"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _topk(scored, _by_dist("adc_i"), k)
 
 
 def _pq_distortion_oracle_sql() -> str:
@@ -2101,13 +1949,11 @@ def _exact_topk(both):
     """The brute-force ground truth: broadcast the bounded query batch, one
     corpus scan, integer ranking with neighbor_id tie-break."""
     q, c = _vec_slices(both)
-    we = W.partitionBy("query_id").orderBy(F.asc("d_i"), F.asc("neighbor_id"))
-    return (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", _exact_d_i())
-        .withColumn("rnk", F.row_number().over(we))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id")
+    scored = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")).select(
+        "query_id", "neighbor_id", _exact_d_i()
+    )
+    return _topk(scored, _by_dist("d_i"), TOP_K, rank="rnk").select(
+        "query_id", "neighbor_id"
     )
 
 
@@ -2134,23 +1980,19 @@ def _recall_agg(exact, approx):
 RERANK_C = 3 * TOP_K
 
 
-def _rerank_exact(both, cand):
+def _rerank_exact(both, cand, k: int = TOP_K):
     """Exact re-rank of an ADC candidate set: join the bounded candidate
     pairs (N_QUERIES x RERANK_C rows — broadcast) back to raw vectors on
-    BOTH sides, score with the exact-grid distance, re-rank per query.
-
-    At 100 TB this is the stage that recovers recall lost to PQ
-    compression: the corpus-side vector fetch touches only candidate ids
-    (a broadcast-semi-join against the vector store, never a scan), and
+    BOTH sides, score with the exact-grid distance, keep the top ``k`` per
+    query. The corpus-side vector fetch touches only candidate ids, and
     everything downstream is bounded by the query batch."""
     q, c = _vec_slices(both)
-    wr = W.partitionBy("query_id").orderBy(F.asc("d_i"), F.asc("neighbor_id"))
-    return (
+    scored = (
         c.join(F.broadcast(cand), "neighbor_id")
         .join(F.broadcast(q), "query_id")
         .select("query_id", "neighbor_id", _exact_d_i())
-        .withColumn("rank", F.row_number().over(wr))
     )
+    return _topk(scored, _by_dist("d_i"), k)
 
 
 def _rerank_oracle_ctes() -> str:
@@ -2212,24 +2054,18 @@ def sim_ivfpq_rerank_topk(spark, sf_dir):
     re-ranks per query. Output distances are EXACT squared-L2, not ADC
     approximations — what a user of two-stage retrieval actually gets.
 
-    At 100 TB: stage 1 reads only the (id, cell, codes) index table;
-    stage 2's raw-vector reads are candidate-bounded (a broadcast join
-    against the vector store, never a corpus scan). Within any candidate
-    pool, a true exact-top-k member can be outranked only by other true
-    members, so recall@k is monotonically >= the un-reranked index's —
-    measured in-engine by sim_rerank_recall_eval and pinned by
-    tests/test_ext.py."""
+    Stage 1 reads only the (id, cell, codes) index table; stage 2's
+    raw-vector reads are candidate-bounded. Within any candidate pool, a
+    true exact-top-k member can be outranked only by other true members,
+    so recall@k is monotonically >= the un-reranked index's — measured
+    in-engine by sim_rerank_recall_eval and pinned by tests/test_ext.py."""
     both = _ivfpq_vec_checkpoint(spark, sf_dir, "rerank")
     cand = _ivfpq_search(both, k=RERANK_C).select("query_id", "neighbor_id")
-    return (
-        _rerank_exact(both, cand)
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            (F.col("d_i").cast("double") / F.lit(KM_SCALE)).alias("exact_dist"),
-            "rank",
-        )
+    return _rerank_exact(both, cand).select(
+        "query_id",
+        "neighbor_id",
+        (F.col("d_i").cast("double") / F.lit(KM_SCALE)).alias("exact_dist"),
+        "rank",
     )
 
 
@@ -2290,10 +2126,8 @@ def sim_rerank_recall_eval(spark, sf_dir):
     both = _ivfpq_vec_checkpoint(spark, sf_dir, "rerank_recall")
     exact = _exact_topk(both)
     cand = _ivfpq_search(both, k=RERANK_C).select("query_id", "neighbor_id")
-    approx = (
-        _rerank_exact(both, cand)
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", F.lit(1).alias("hit"))
+    approx = _rerank_exact(both, cand).select(
+        "query_id", "neighbor_id", F.lit(1).alias("hit")
     )
     return _recall_agg(exact, approx)
 
@@ -2921,9 +2755,9 @@ def sim_ivf_minibatch_update(spark, sf_dir):
     mean over its members (train + batch): per-coordinate sums of
     1e-6-rounded values as BIGINTs — order-insensitive, overflow-safe at
     corpus scale (|v| <= O(1) -> micro-units ~1e6/row -> ~9e12 rows to
-    saturate int64 per cell-coordinate), and MERGEABLE, which is the
-    100 TB property: per-cell (count, 64 coordinate sums) is constant-size
-    state a streaming ingest can fold batch after batch (Sculley's
+    saturate int64 per cell-coordinate), and MERGEABLE: per-cell (count,
+    64 coordinate sums) is constant-size state a streaming ingest can fold
+    batch after batch (Sculley's
     mini-batch k-means update in closed form) without revisiting history.
     One double division per coordinate at the end, rounded back to the
     1e-6 grid — the kmeans family's engine-parity rules throughout.
@@ -2940,11 +2774,11 @@ def sim_ivf_minibatch_update(spark, sf_dir):
     vectors) is materialized ONCE as a localCheckpoint — it feeds both the
     cell aggregate and the after-distortion pass, and Spark inlines CTEs,
     so without the checkpoint the entire Lloyd training + assignment
-    upstream executed once per consumer (caught in the r10 plan audit).
-    Downstream is checkpoint-bounded: one 64+3-column cell aggregate, the
-    8-row updated codebook (itself checkpointed — two tiny consumers), one
-    broadcast join back over mem for the after-distortion — no second
-    Lloyd loop, no window over the corpus."""
+    upstream would run once per consumer. Downstream is
+    checkpoint-bounded: one (cell, position) aggregate of the scaled
+    coordinates, the 8-row updated codebook (itself checkpointed — two tiny
+    consumers), one broadcast join back over mem for the after-distortion —
+    no second Lloyd loop, no window over the corpus."""
     from .dedup import _sql_over
 
     e = load(spark, sf_dir, "embeddings")
@@ -2952,15 +2786,9 @@ def sim_ivf_minibatch_update(spark, sf_dir):
     train_body = _km_vecs_body("NOT (vec_id % 4 = 1)")
     cb, _ = _lloyd_train(e, "ivfmb", train_body, pq=False)
     parts = _km_parts_spark(train_body)
-    cterms = ", ".join(
-        f"floor(CAST(s{p} AS DOUBLE) / (n_train + n_new) + 0.5D)"
-        f" / {KM_SCALE}D"
-        for p in range(EMB_DIM)
-    )
     # the full-corpus assignment is row-wise against the bound codebook
     # (the same (d, cid) array_min argmin the training uses) — no corpus
-    # crossJoin + groupBy(vec_id) Exchange (optimization r10; identical
-    # values: d = vv - 2<v,c> + cc over the same centroids)
+    # crossJoin + groupBy(vec_id) Exchange
     parts.append(f"""
     , allv AS (
       SELECT vec_id, (vec_id % 4 = 1) AS is_new, v,
@@ -2976,23 +2804,36 @@ def sim_ivf_minibatch_update(spark, sf_dir):
     mem = _sql_over(
         e, "ivf_minibatch_mem", "".join(parts), _cb_args(cb)
     ).localCheckpoint(eager=False)
-    cell_aggs = [
-        F.expr("CAST(sum(CASE WHEN is_new THEN 0 ELSE 1 END) AS BIGINT)")
-        .alias("n_train"),
-        F.expr("CAST(sum(CASE WHEN is_new THEN 1 ELSE 0 END) AS BIGINT)")
-        .alias("n_new"),
-        F.expr(f"sum(CAST(floor(d * {KM_SCALE}D + 0.5D) AS BIGINT))")
-        .alias("sdb"),
-    ] + [
-        F.expr(f"sum(CAST(floor(v[{p}] * {KM_SCALE}D + 0.5D) AS BIGINT))")
-        .alias(f"s{p}")
-        for p in range(EMB_DIM)
-    ]
-    cell = mem.groupBy("cid").agg(*cell_aggs)
+    # one row per (cell, position), the _lloyd_train shape: every position
+    # of a cell carries the same counts and sdb, and the per-position sum
+    # of the scaled BIGINTs is exact, so collecting the sums in position
+    # order gives the same centroid doubles as one sum column per position
+    cell = (
+        mem.select("cid", "is_new", "d", F.posexplode("v").alias("p", "x"))
+        .groupBy("cid", "p")
+        .agg(
+            F.expr("CAST(sum(CASE WHEN is_new THEN 0 ELSE 1 END) AS BIGINT)")
+            .alias("n_train"),
+            F.expr("CAST(sum(CASE WHEN is_new THEN 1 ELSE 0 END) AS BIGINT)")
+            .alias("n_new"),
+            F.expr(f"sum(CAST(floor(d * {KM_SCALE}D + 0.5D) AS BIGINT))")
+            .alias("sdb"),
+            F.expr(f"sum(CAST(floor(x * {KM_SCALE}D + 0.5D) AS BIGINT))")
+            .alias("s"),
+        )
+        .groupBy("cid")
+        .agg(
+            *[F.min(c).alias(c) for c in ("n_train", "n_new", "sdb")],
+            F.array_sort(F.collect_list(F.struct("p", "s"))).alias("ps"),
+        )
+    )
     # the 8-row updated codebook, also two consumers — checkpoint
     cnew = cell.select(
         "cid", "n_train", "n_new", "sdb",
-        F.expr(f"array({cterms})").alias("c"),
+        F.expr(
+            "transform(ps, x -> floor(CAST(x.s AS DOUBLE) / (n_train + n_new)"
+            f" + 0.5D) / {KM_SCALE}D)"
+        ).alias("c"),
     ).withColumn("ccn", F.expr(_km_dot_sql("c", "c"))).localCheckpoint(
         eager=False
     )

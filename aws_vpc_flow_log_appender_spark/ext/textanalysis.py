@@ -225,9 +225,6 @@ def text_tfidf_top_terms(spark, sf_dir):
     # gate that kept the inline form at bench scale is gone: forced each
     # way at sf0.1 the two forms are within 5% (AB_plan_gates_forced.log,
     # 10 interleaved pairs, here and for text_bm25_search's per_doc).
-    # localCheckpoint caveat: executor-local blocks, NO lineage replay on
-    # executor loss (guide §5); acceptable because the whole job is
-    # re-runnable.
     tf = (
         words.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
         .localCheckpoint(eager=True)

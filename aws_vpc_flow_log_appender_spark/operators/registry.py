@@ -21,7 +21,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..session import SessionLRU
+from ..session import SessionLRU, _worker_pythonpath
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -470,8 +470,13 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     driver's own session: epoch conversions of NTZ timestamps are session-TZ
     dependent and DuckDB's are UTC-naive (verified: a non-UTC session shifts
     unix_timestamp(date_trunc('day', ...)) by the TZ offset).
+
+    The Python workers' ``PYTHONPATH`` gets the package root for the same
+    reason: a session that ``get_spark`` never touched must still run this
+    package's UDFs from any working directory.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _worker_pythonpath(spark.sparkContext)
     # right-size shuffles for the grading host (driver sessions default to
     # 200); AQE coalesces further, so this is an upper bound, not a tuning
     spark.conf.set(

@@ -1015,6 +1015,54 @@ def test_sim_trained_multiprobe_dominates_in_cell(spark, sf_dir):
             assert multi[qid][rank] >= cs
 
 
+TWO_PATTERN_N = 16  # 8 per pattern: every query has 7 same-pattern others (> TOP_K)
+
+
+def _two_pattern_corpus(spark, tmp_path) -> str:
+    """Write an embeddings table of two strongly separated vector patterns,
+    interleaved by vec_id parity (label ``s0``/``s1``) so codebook seeds see
+    both, and return its directory. Same-pattern vectors are identical, so
+    every same-pattern cosine is exactly 1.0 and every same-pattern
+    distance exactly 0."""
+    import pandas as pd
+
+    pat = {
+        0: [5.0 if j % 2 == 0 else -3.0 for j in range(64)],
+        1: [-4.0 if j % 3 == 0 else 2.0 for j in range(64)],
+    }
+    rows = [(i, pat[i % 2], f"s{i % 2}") for i in range(TWO_PATTERN_N)]
+    df = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["vec_id", "embedding", "label"])
+    )
+    df.write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
+    return str(tmp_path)
+
+
+@pytest.mark.parametrize("name", [
+    "sim_bruteforce_topk", "sim_ivf_topk", "sim_rp_lsh_topk",
+    "sim_ivf_multiprobe", "sim_ivf_trained_topk", "sim_ivf_trained_multiprobe",
+])
+def test_cosine_search_breaks_exact_ties_by_neighbor_id(spark, tmp_path, name):
+    """Every cosine search shares one top-k: on the two-pattern corpus each
+    query's same-pattern neighbours all tie at cosine 1.0, so its top-k
+    must be the TOP_K smallest other same-pattern ids, ranked 1..TOP_K in
+    ascending id order."""
+    from aws_vpc_flow_log_appender_spark.ext import similarity
+    from aws_vpc_flow_log_appender_spark.ext.similarity import N_QUERIES, TOP_K
+
+    got = getattr(similarity, name)(spark, _two_pattern_corpus(spark, tmp_path)).collect()
+    by_q = {}
+    for r in got:
+        by_q.setdefault(r["query_id"], []).append(r)
+    assert set(by_q) == set(range(N_QUERIES))
+    for qid, rs in by_q.items():
+        rs.sort(key=lambda r: r["rank"])
+        same = [i for i in range(TWO_PATTERN_N) if i % 2 == qid % 2 and i != qid]
+        assert [r["rank"] for r in rs] == list(range(1, TOP_K + 1))
+        assert [r["neighbor_id"] for r in rs] == same[:TOP_K]
+        assert all(r["cos_sim"] == 1.0 for r in rs)
+
+
 def test_sim_pq_adc_two_pattern_corpus(spark, tmp_path):
     """End-to-end PQ quality on a corpus where the right answer is exact:
     two strongly separated vector patterns, interleaved so the codebook
@@ -1024,24 +1072,12 @@ def test_sim_pq_adc_two_pattern_corpus(spark, tmp_path):
     query's full top-k is same-pattern. Pinned because it exercises the
     whole train -> encode -> LUT -> scaled-integer-sum path with verifiable
     values, not just oracle agreement."""
-    import pandas as pd
-
     from aws_vpc_flow_log_appender_spark.ext.similarity import (
         TOP_K,
         sim_pq_adc,
     )
 
-    pat = {
-        0: [5.0 if j % 2 == 0 else -3.0 for j in range(64)],
-        1: [-4.0 if j % 3 == 0 else 2.0 for j in range(64)],
-    }
-    n = 16  # 8 per pattern: every query has 7 same-pattern others (> TOP_K)
-    rows = [(i, pat[i % 2], f"s{i % 2}") for i in range(n)]
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["vec_id", "embedding", "label"])
-    )
-    df.write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
-    got = sim_pq_adc(spark, str(tmp_path)).collect()
+    got = sim_pq_adc(spark, _two_pattern_corpus(spark, tmp_path)).collect()
     by_q = {}
     for r in got:
         by_q.setdefault(r["query_id"], []).append(r)
@@ -1196,23 +1232,12 @@ def test_sim_ivfpq_two_pattern_corpus(spark, tmp_path):
     nprobe=2 covers the whole corpus and IVF-PQ must agree with the exact
     expectation: every query's full top-k is same-pattern at ADC distance
     exactly 0."""
-    import pandas as pd
-
     from aws_vpc_flow_log_appender_spark.ext.similarity import (
         TOP_K,
         sim_ivfpq_topk,
     )
 
-    pat = {
-        0: [5.0 if j % 2 == 0 else -3.0 for j in range(64)],
-        1: [-4.0 if j % 3 == 0 else 2.0 for j in range(64)],
-    }
-    rows = [(i, pat[i % 2], f"s{i % 2}") for i in range(16)]
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["vec_id", "embedding", "label"])
-    )
-    df.write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
-    got = sim_ivfpq_topk(spark, str(tmp_path)).collect()
+    got = sim_ivfpq_topk(spark, _two_pattern_corpus(spark, tmp_path)).collect()
     by_q = {}
     for r in got:
         by_q.setdefault(r["query_id"], []).append(r)
@@ -1230,27 +1255,15 @@ def test_sim_pq_distortion_two_pattern_corpus(spark, tmp_path):
     subvector sits exactly on its centroid and the distortion metric must
     report 0 everywhere — pinning that the metric reads the training's own
     assignment distances rather than recomputing anything."""
-    import pandas as pd
-
     from aws_vpc_flow_log_appender_spark.ext.similarity import (
         PQ_M,
         sim_pq_distortion,
     )
 
-    pat = {
-        0: [5.0 if j % 2 == 0 else -3.0 for j in range(64)],
-        1: [-4.0 if j % 3 == 0 else 2.0 for j in range(64)],
-    }
-    n = 16
-    rows = [(i, pat[i % 2], f"s{i % 2}") for i in range(n)]
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["vec_id", "embedding", "label"])
-    )
-    df.write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
-    got = sim_pq_distortion(spark, str(tmp_path)).collect()
+    got = sim_pq_distortion(spark, _two_pattern_corpus(spark, tmp_path)).collect()
     assert {r["m"] for r in got} == set(range(PQ_M))
     for r in got:
-        assert r["n_vecs"] == n
+        assert r["n_vecs"] == TWO_PATTERN_N
         assert r["total_distortion"] == 0.0
         assert r["avg_distortion"] == 0.0
         assert r["max_distortion"] == 0.0
@@ -1277,23 +1290,12 @@ def test_sim_recall_eval_two_pattern_corpus(spark, tmp_path):
     coincide: same-pattern vectors are at raw distance 0 AND ADC distance 0,
     both sides break ties by neighbor_id, and each pattern has more members
     than TOP_K — so recall must be exactly 1.0 for every query."""
-    import pandas as pd
-
     from aws_vpc_flow_log_appender_spark.ext.similarity import (
         TOP_K,
         sim_recall_eval,
     )
 
-    pat = {
-        0: [5.0 if j % 2 == 0 else -3.0 for j in range(64)],
-        1: [-4.0 if j % 3 == 0 else 2.0 for j in range(64)],
-    }
-    rows = [(i, pat[i % 2], f"s{i % 2}") for i in range(16)]
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["vec_id", "embedding", "label"])
-    )
-    df.write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
-    got = sim_recall_eval(spark, str(tmp_path)).collect()
+    got = sim_recall_eval(spark, _two_pattern_corpus(spark, tmp_path)).collect()
     assert {r["query_id"] for r in got} == set(range(10))
     for r in got:
         assert r["n_hits"] == TOP_K

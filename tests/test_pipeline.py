@@ -84,22 +84,13 @@ def test_trailing_newline_is_ok_with_bare_log_status(spark):
 
 def test_trailing_text_is_ok_with_the_reference_fields(spark):
     """Text after log-status does not stop the reference's match
-    (decorator/index.js:43), and the 14 fields are the captures; the same
-    holds for the flowlog data source's parser."""
-    import re
-
-    from aws_vpc_flow_log_appender_spark.schema import FLOW_LINE_PATTERN
-    from aws_vpc_flow_log_appender_spark.sources.flowlog_datasource import _parse_line
-
+    (decorator/index.js:43), and the 14 fields are the captures."""
     line = fixtures.EVENT_JSON_LINES[0]
     recs = fixtures.firehose_records_df(spark, [line, line + "DATA extra 7"])
     plain, tailed = (r.asDict() for r in parse_records(recs).orderBy("recordId").collect())
     assert tailed["error"] is False
     assert (tailed["action"], tailed["log-status"], tailed["end"]) == ("ACCEPT", "OK", 1418530070)
     assert _fields(tailed) == _fields(plain)
-
-    pattern = re.compile(FLOW_LINE_PATTERN)
-    assert _parse_line(line + "DATA extra 7", pattern)[1:] == _parse_line(line, pattern)[1:]
 
 
 def test_ansi_hostile_records_never_fail_the_batch(spark):

@@ -347,3 +347,25 @@ def test_python_workers_import_the_package_from_any_cwd(tmp_path, sf_dir):
     rows = [ln for ln in p.stdout.splitlines() if ln.startswith("ROWS ")]
     assert p.returncode == 0 and rows, p.stderr[-3000:]
     assert int(rows[0].split()[1]) > 0
+
+
+def test_load_puts_the_package_first_on_an_outside_sessions_worker_path(spark, sf_dir):
+    """A caller that builds its own session and calls ``load`` must get the
+    package root first on the workers' PYTHONPATH, with the entries it had
+    set itself kept behind it."""
+    from aws_vpc_flow_log_appender_spark.operators.registry import load
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = spark.sparkContext.environment
+    saved = env.get("PYTHONPATH")
+    env["PYTHONPATH"] = "/foreign/site"
+    try:
+        load(spark, sf_dir, "embeddings")
+        path = env["PYTHONPATH"].split(os.pathsep)
+    finally:
+        if saved is None:
+            env.pop("PYTHONPATH", None)
+        else:
+            env["PYTHONPATH"] = saved
+    assert path[0] == root
+    assert "/foreign/site" in path
