@@ -39,28 +39,6 @@ _SQL_SHINGLES = """
 """
 
 
-def _fan_out_derived(derived, source):
-    """Round-robin a small DERIVED table (LSH bands, per-doc shingle
-    profiles) up to cluster parallelism before its checkpoint — but only
-    when ``source`` (the corpus frame it derives from) is large enough
-    that the quadratic candidate expansion downstream of the frozen
-    checkpoint outweighs one extra exchange.
-
-    Why gate on the SOURCE, not the derived frame: Catalyst's estimate for
-    a post-aggregate plan is unreliable (column-width heuristics), while
-    the corpus scan estimate is parquet-footer-accurate; and the hazard
-    being sized — bucket-occupancy-quadratic pair expansion — scales with
-    corpus mass, not with the few-MB derived table. Below the threshold
-    the expansion is too small for single-core execution to matter
-    (measured: r5's un-spread plan ran the sf0.1 minhash join in 1.1 s);
-    above it, AQE's byte-based coalescing would freeze the tiny derived
-    table at ~1 partition and serialize an expansion that is far larger
-    than its input (measured 15% win at 10x, growing with scale)."""
-    if not plan_gates.is_large(source, per_task=plan_gates.FANOUT_BYTES_PER_TASK):
-        return derived
-    return derived.repartition(derived.sparkSession.sparkContext.defaultParallelism)
-
-
 def _spread_input(docs):
     """Repartition a small-file input up to cluster parallelism before
     CPU-heavy per-row work (hashing every shingle/word). The fixture tables
@@ -266,13 +244,10 @@ def _minhash_pairs_for(docs):
     across AQE stage boundaries). 4 short rows per doc, so the
     materialization is corpus-row-bounded (A/B'd ~1.5x at sf0.1).
 
-    Fanned out before the checkpoint for the same reason as
-    _simhash_pairs (r6): AQE coalesces the few-MB banded table to ~1
-    partition by bytes, the checkpoint freezes it, and the broadcast
-    self-join's candidate expansion — quadratic in bucket occupancy, far
-    larger than the input — would run on that one core. Gated on corpus
-    size (_fan_out_derived) because at bench scale the expansion is too
-    small for the extra exchange to pay (AB_r06_session2.json).
+    The banded table is not repartitioned before the checkpoint: forced
+    each way, a round-robin to cluster parallelism read 0.98-1.11x the
+    unspread plan from sf0.01 to the on-disk x10 tables, winning nowhere
+    (AB_gates_x10.log).
 
     EAGER (optimization r10): with a lazy checkpoint the self-join's
     broadcast-build job and the probe stage race to materialize the
@@ -284,7 +259,7 @@ def _minhash_pairs_for(docs):
     interleaved pairs, lazy slower by a median 1.7%). localCheckpoint
     caveat: executor-local blocks, NO lineage replay on executor loss
     (guide §5); acceptable because the whole job is re-runnable."""
-    bands = _fan_out_derived(_minhash_bands_for(docs), docs).localCheckpoint(eager=True)
+    bands = _minhash_bands_for(docs).localCheckpoint(eager=True)
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -452,10 +427,7 @@ def dedup_minhash_est_jaccard(spark, sf_dir):
     min-shingle, but a truncated-hash collision can pair shingle-disjoint
     docs and the audit must report est=k/8 vs true=0, not drop the row."""
     docs = load(spark, sf_dir, "documents")
-    sig = (
-        _fan_out_derived(_minhash_sig_for(docs), docs)
-        .localCheckpoint(eager=True)
-    )
+    sig = _minhash_sig_for(docs).localCheckpoint(eager=True)
     bands = _bands_from_sig(sig)
     a = bands.alias("a")
     b = bands.alias("b")
@@ -469,7 +441,7 @@ def dedup_minhash_est_jaccard(spark, sf_dir):
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    pairs = _fan_out_derived(pairs, docs).localCheckpoint(eager=True)
+    pairs = pairs.localCheckpoint(eager=True)
     sh = _shingled_for(docs)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     sa = sh.alias("sa")
@@ -550,7 +522,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
     hash). Intersections computed by a shingle equi-join restricted to
     candidate pairs — never materializes all-pairs."""
     sh = _shingled(spark, sf_dir)
-    inter, profile = _shingle_intersections(sh, load(spark, sf_dir, "documents"))
+    inter, profile = _shingle_intersections(sh)
     za = profile.alias("za")
     zb = profile.alias("zb")
     return (
@@ -571,7 +543,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
     )
 
 
-def _shingle_intersections(sh, source=None):
+def _shingle_intersections(sh):
     """Shared candidate-pair intersection machinery for the Jaccard and
     containment scorers: (inter, profile) where profile is one checkpointed
     row per doc (shingle count + min-shingle bucket, computed in a SINGLE
@@ -580,14 +552,7 @@ def _shingle_intersections(sh, source=None):
     per-doc profile cuts executions of the corpus-scale shingle derivation
     from 5 per query (sizes, bucket x2 across the self-join, both
     intersection sides) to 3 (profile + both intersection sides); the
-    checkpoint is 1 short row per doc, never corpus-byte-bounded.
-
-    Fanned out before the checkpoint (r6, same hazard as _simhash_pairs):
-    the per-doc profile is tiny in bytes so AQE coalesces it to ~1 frozen
-    partition, and the b0-bucket broadcast self-join's candidate expansion
-    would then run single-core. Gated on the corpus frame ``source`` when
-    the caller provides it (_fan_out_derived: at bench scale the expansion
-    is too small for the extra exchange to pay)."""
+    checkpoint is 1 short row per doc, never corpus-byte-bounded."""
     profile = (
         sh.groupBy("doc_id")
         .agg(
@@ -597,7 +562,7 @@ def _shingle_intersections(sh, source=None):
             ).alias("b0"),
         )
     )
-    profile = _fan_out_derived(profile, source).localCheckpoint(eager=True)
+    profile = profile.localCheckpoint(eager=True)
     a = profile.alias("a")
     b = profile.alias("b")
     cand = a.join(
@@ -1208,7 +1173,7 @@ def dedup_containment(spark, sf_dir):
     dedup_ngram_jaccard (never all-pairs); the score just normalizes by the
     smaller shingle set, and contained_doc names the removal candidate."""
     sh = _shingled(spark, sf_dir)
-    inter, profile = _shingle_intersections(sh, load(spark, sf_dir, "documents"))
+    inter, profile = _shingle_intersections(sh)
     za = profile.alias("za")
     zb = profile.alias("zb")
     return (
@@ -1894,8 +1859,8 @@ def dedup_incremental_snapshot(spark, sf_dir):
     The bloom is SIZED TO THE SNAPSHOT (~10 bits/key via bloom_words_for,
     VERDICT r8 #1 — the r8 fixed 1024 words saturated in its own scale
     artifacts: miss share 27%/0.03%/0.0% at 10x/50x/100x), so the routing
-    share holds as the snapshot grows; tools/scale_smoke.py now FAILS its
-    incremental section if the miss share collapses below 0.2.
+    share holds as the snapshot grows (pinned by
+    tests/test_ext.py::test_incremental_bloom_words_scale_with_snapshot).
 
     Result is bit-identical to the plain anti-join (the oracle IS the
     plain anti-join): the bloom only moves where rows die, the exact
@@ -2004,10 +1969,7 @@ def dedup_cross_split_leakage(spark, sf_dir):
     Reference scope note: extension surface (SURVEY §2 'beyond the
     reference' LLM-pipeline rungs), no reference counterpart."""
     docs = load(spark, sf_dir, "documents")
-    sig = (
-        _fan_out_derived(_minhash_sig_for(docs), docs)
-        .localCheckpoint(eager=True)
-    )
+    sig = _minhash_sig_for(docs).localCheckpoint(eager=True)
     bands = _bands_from_sig(sig)
     t = bands.filter(F.col("doc_id") % 10 < 8).select(
         F.col("doc_id").alias("train_id"), "band_id", "band_sig"

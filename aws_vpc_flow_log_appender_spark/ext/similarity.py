@@ -2212,9 +2212,8 @@ def _train_mem(e, tag: str):
 # keys, so a shuffle join runs on at most KM_K tasks however many cores
 # exist, and AQE's byte-based coalescing shrinks the ~MB member exchanges
 # to ~1 partition while the pair EXPANSION (quadratic in cell occupancy)
-# is orders of magnitude larger than the input bytes — exactly the
-# _fan_out_derived hazard (ext/dedup.py), now fixed at the decision join
-# (optimization r11, guide §2.5/§3.1). When the member relation's SOURCE
+# is orders of magnitude larger than the input bytes (optimization r11,
+# guide §2.5/§3.1). When the member relation's SOURCE
 # is provably broadcast-small (below plan_gates.SEMDEDUP_BROADCAST_BYTES of
 # parquet-footer-accurate scan estimate), the probe side is round-robined
 # to cluster parallelism and the closer-member side broadcast: the cid
@@ -2321,8 +2320,7 @@ def dedup_semantic(spark, sf_dir):
     (with_capped_cell); on the fixture the cells are hundreds of rows
     and the exact semantics are oracle-checked end-to-end. Engine
     parity: distances and cosines compare on the 1e-6 floor grid with
-    sequential-fold dots — tools/scale_smoke.py carries a per-cell
-    occupancy/work section for the 10-100x fixtures.
+    sequential-fold dots.
 
     The trained member relation is CHECKPOINTED before the decision
     self-join (plan-read r7: the unrolled training otherwise executes
@@ -2490,9 +2488,7 @@ def dedup_semantic_capped(spark, sf_dir):
     the driver row proves the capped decision itself: the oracle restricts
     its pair join by the identical sub_bucket CASE, making the documented
     recall trade (cross-sub-bucket duplicates in a hot cell are not
-    compared) part of the hash contract. The per-task pair bound at scale
-    is measured by tools/scale_smoke.py's semdedup-capped section; kept
-    counts are monotone vs dedup_semantic (capping only removes
+    compared) part of the hash contract. Kept counts are monotone vs dedup_semantic (capping only removes
     challengers), pinned in tests/test_r8_queries.py."""
     e = load(spark, sf_dir, "embeddings")
     memc = _with_mem_sub_bucket(_train_mem(e, "semdedup_capped"))
@@ -2767,16 +2763,16 @@ def sim_ivf_minibatch_update(spark, sf_dir):
     AFTER (to the updated centroid), and the updated centroid's norm (a
     64-coordinate witness of the new codebook). For fixed membership the
     mean minimizes summed squared distance, so d_after <= d_before up to
-    the 1e-6 rounding grid — asserted per-cell in tests and watched by the
-    scale smoke (distortion non-increasing on the training slice).
+    the 1e-6 rounding grid — asserted per-cell in tests.
 
     Plan: the membership relation ``mem`` (vec_id, v, cid, d over ALL
     vectors) is materialized ONCE as a localCheckpoint — it feeds both the
     cell aggregate and the after-distortion pass, and Spark inlines CTEs,
     so without the checkpoint the entire Lloyd training + assignment
     upstream would run once per consumer. Downstream is
-    checkpoint-bounded: one (cell, position) aggregate of the scaled
-    coordinates, the 8-row updated codebook (itself checkpointed — two tiny
+    checkpoint-bounded: one per-cell aggregate of the counts and
+    distances, one (cell, position) aggregate of the scaled coordinates,
+    the 8-row updated codebook (itself checkpointed — two tiny
     consumers), one broadcast join back over mem for the after-distortion —
     no second Lloyd loop, no window over the corpus."""
     from .dedup import _sql_over
@@ -2804,29 +2800,30 @@ def sim_ivf_minibatch_update(spark, sf_dir):
     mem = _sql_over(
         e, "ivf_minibatch_mem", "".join(parts), _cb_args(cb)
     ).localCheckpoint(eager=False)
-    # one row per (cell, position), the _lloyd_train shape: every position
-    # of a cell carries the same counts and sdb, and the per-position sum
-    # of the scaled BIGINTs is exact, so collecting the sums in position
-    # order gives the same centroid doubles as one sum column per position
-    cell = (
-        mem.select("cid", "is_new", "d", F.posexplode("v").alias("p", "x"))
+    # per-cell counts and summed distance over the members, then the
+    # per-(cell, position) sums of the scaled coordinates in the
+    # _lloyd_train shape: each sum of scaled BIGINTs is exact, so
+    # collecting them in position order gives the same centroid doubles
+    # as one sum column per position
+    stats = mem.groupBy("cid").agg(
+        F.expr("CAST(sum(CASE WHEN is_new THEN 0 ELSE 1 END) AS BIGINT)")
+        .alias("n_train"),
+        F.expr("CAST(sum(CASE WHEN is_new THEN 1 ELSE 0 END) AS BIGINT)")
+        .alias("n_new"),
+        F.expr(f"sum(CAST(floor(d * {KM_SCALE}D + 0.5D) AS BIGINT))")
+        .alias("sdb"),
+    )
+    sums = (
+        mem.select("cid", F.posexplode("v").alias("p", "x"))
         .groupBy("cid", "p")
         .agg(
-            F.expr("CAST(sum(CASE WHEN is_new THEN 0 ELSE 1 END) AS BIGINT)")
-            .alias("n_train"),
-            F.expr("CAST(sum(CASE WHEN is_new THEN 1 ELSE 0 END) AS BIGINT)")
-            .alias("n_new"),
-            F.expr(f"sum(CAST(floor(d * {KM_SCALE}D + 0.5D) AS BIGINT))")
-            .alias("sdb"),
             F.expr(f"sum(CAST(floor(x * {KM_SCALE}D + 0.5D) AS BIGINT))")
             .alias("s"),
         )
         .groupBy("cid")
-        .agg(
-            *[F.min(c).alias(c) for c in ("n_train", "n_new", "sdb")],
-            F.array_sort(F.collect_list(F.struct("p", "s"))).alias("ps"),
-        )
+        .agg(F.array_sort(F.collect_list(F.struct("p", "s"))).alias("ps"))
     )
+    cell = stats.join(sums, "cid")
     # the 8-row updated codebook, also two consumers — checkpoint
     cnew = cell.select(
         "cid", "n_train", "n_new", "sdb",

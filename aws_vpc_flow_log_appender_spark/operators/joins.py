@@ -615,8 +615,7 @@ def join_bloom_prefilter(spark, sf_dir):
     sf0.1, past the default 4096-bit map's ~500-key saturation point — the
     undersized bloom stayed bit-identical (the exact join clears false
     positives) but passed most non-members, demonstrating no pruning. 16+
-    bits/key keeps the demonstrated pass rate at the ~1% design point
-    (tools/scale_smoke.py section 17 sizes the same way)."""
+    bits/key keeps the demonstrated pass rate at the ~1% design point."""
     c = load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "MACHINERY")
     o = load(spark, sf_dir, "orders")
 

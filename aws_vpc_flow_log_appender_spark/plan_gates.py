@@ -1,9 +1,8 @@
 """Size gates: the one place the engine picks between two plan shapes from
 Catalyst's size estimate, plus the scoped conf some of those shapes run under.
 
-Three gates remain:
+Two gates remain:
  - ``SPREAD_BYTES_PER_TASK``: ext/dedup._spread_input's repartition;
- - ``FANOUT_BYTES_PER_TASK``: ext/dedup._fan_out_derived's repartition;
  - ``SEMDEDUP_BROADCAST_BYTES``: ext/similarity._sem_spread_broadcast.
 
 Every gate asks the same question — is the SOURCE relation (usually the
@@ -21,17 +20,10 @@ from contextlib import contextmanager
 
 # Input spread (ext/dedup._spread_input): below ~8 KiB of source per core
 # the hash work a task would receive is cheaper than its share of the
-# repartition shuffle (sf0.01 is below; at sf0.1 — 594 KB, ~5k docs —
-# spreading was a profiled 36% win for dedup_minhash_lsh).
+# repartition shuffle. Forced each way on 4 cores (AB_gates_x10.log,
+# dedup_simhash): the unspread side won at sf0.001 (spread 1.15x), the
+# spread side at sf0.1 and on the x10 tables (0.87x, 0.90x).
 SPREAD_BYTES_PER_TASK = 8 << 10
-
-# Derived-table fan-out (ext/dedup._fan_out_derived): buys parallelism only
-# for the candidate-expansion join downstream of a frozen checkpoint, and
-# that expansion is small exactly when the corpus is small. The
-# unconditional repartition put dedup_minhash_lsh at 1.36x on the 594 KB
-# sf0.1 corpus (AB_r06_session2.json) and was a 15% win on the 10x smoke
-# (5.9 MB): crossover ~2 MB total at 32 cores.
-FANOUT_BYTES_PER_TASK = 64 << 10
 
 # SemDeDup decision join (ext/similarity._sem_spread_broadcast): the
 # closer-member side is broadcast only while the source is far below what a

@@ -652,41 +652,6 @@ def test_spread_input_spreads_large_single_split(spark, tmp_path):
     assert "Exchange RoundRobinPartitioning" in plan
 
 
-def test_fan_out_derived_gated_on_source_size(spark, sf_dir, tmp_path):
-    """The derived-table fan-out (LSH bands / shingle profiles) is gated on
-    the SOURCE corpus scan size (AB_r06_session2.json: the unconditional
-    repartition cost dedup_minhash_lsh 1.36x at bench scale; the gated form
-    is 1.095x, AB_r06_minhash_fix.json): below the per-core byte floor the
-    derived frame passes through untouched, above it a round-robin
-    Repartition is inserted; a non-introspectable source keeps the old
-    unconditional-spread behavior."""
-    from aws_vpc_flow_log_appender_spark.ext.dedup import _fan_out_derived
-    from aws_vpc_flow_log_appender_spark.plan_gates import FANOUT_BYTES_PER_TASK
-    from aws_vpc_flow_log_appender_spark.operators.registry import load
-
-    derived = spark.range(10).selectExpr("id AS doc_id", "id % 3 AS band_id")
-
-    # small corpus (sf0.001/sf0.01 documents): identity, no Exchange at all
-    small = load(spark, sf_dir, "documents")
-    assert _fan_out_derived(derived, small) is derived
-
-    # corpus above the floor: the derived frame IS round-robin repartitioned
-    par = spark.sparkContext.defaultParallelism
-    path = str(tmp_path / "big_corpus")
-    spark.range(par * FANOUT_BYTES_PER_TASK // 16).selectExpr(
-        "id AS doc_id",
-        "concat(md5(string(id)), md5(string(id + 1)), md5(string(id + 2))) AS text",
-    ).coalesce(1).write.parquet(path)
-    big = spark.read.parquet(path)
-    spread = _fan_out_derived(derived, big)
-    assert spread is not derived
-    assert "RoundRobinPartitioning" in spread._jdf.queryExecution().toString() \
-        or "Repartition" in spread._jdf.queryExecution().toString()
-
-    # no source to introspect: conservative unconditional spread
-    assert _fan_out_derived(derived, None) is not derived
-
-
 def test_bucketed_join_has_no_exchange(spark, sf_dir):
     """The storage-bucketed co-located join's whole point: both sides are
     written bucketBy(join_key), so the SortMergeJoin consumes the bucketed

@@ -62,6 +62,10 @@ print('profile OK:', r['n_jobs'], 'jobs (range', r['n_jobs_min'], '-',
 "
 SPARK_GRAFT_SF_DIR="$SF_SMALL" python tools/plans.py flowlog_enrich > /tmp/ci_plans.txt
 grep -q "Physical Plan" /tmp/ci_plans.txt
+# the scale harness stays runnable: x2 of the smallest SF into a temp dir
+SCALE_DIR=$(mktemp -d)
+SPARK_GRAFT_SF_DIR="$SF_SMALL" python tools/scale_smoke.py 2 "$SCALE_DIR/x2"
+rm -rf "$SCALE_DIR"
 # COMMIT EVERY COMPLETE BENCH RUN (VERDICT r5: the best r5 run went
 # uncaptured): the artifact now carries loadavg + raw trials, and the A/B
 # gate below adjudicates any >1.25x per-query delta against the round-start

@@ -1,2271 +1,219 @@
-"""Scale smoke: multiply the sf0.1 fact tables 10x/50x in-memory (~6M/30M
-lineitem rows) and check that (a) results scale exactly linearly where they
-should, (b) AQE re-specializes the physical plans (the lineitem<->orders join
-must fall back from broadcast to a shuffle join once the build side exceeds
-the broadcast threshold), (c) nothing collapses to a driver-side bottleneck,
-and — r5, VERDICT_r04 ask #3 — (d) the ITERATIVE family holds: the
-distributed connected-components loop (forced above the union-find
-short-circuit) converges in O(log diameter) rounds and agrees with the exact
-union-find labels, and pagerank's unrolled plan stays sane at scale. r6 adds
-(e) the trained quantizer: k-means cell stats must match their duplication
-closed form exactly and the trained search must rank perfect-match copies
-first.
+"""Scale smoke: write the SF tables xN to disk, then check the invariants of
+the large side that no other check pins.
 
-Usage: python tools/scale_smoke.py [multiplier] [json_artifact_out]
+    python tools/scale_smoke.py N [out_dir] [json_artifact_out]
+
+``multiply_tables`` writes every table of ``$SPARK_GRAFT_SF_DIR`` N times
+over into ``out_dir`` (default ``.scale_smoke/xN`` in the repo). Any tool
+then runs on it unchanged, through ``--sf`` or ``SPARK_GRAFT_SF_DIR``:
+
+    python tools/verify_local.py --sf .scale_smoke/x10 flowlog_enrich
+    python tools/profiler.py dedup_minhash_lsh --sf .scale_smoke/x10
+
+The checks below use the same directory.
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+# Copy k of a table is the base table with every key column below shifted
+# by k * KEY_OFFSET; no other column changes. Foreign keys shift with the
+# keys they reference, so copy k is a disjoint replica of the whole dataset:
+# every join matches within a copy and never across copies, and a result
+# grouped by a non-key column is exactly N times the base result. The int32
+# nation and region keys cannot hold k * 10**10; they shift by
+# k * NARROW_KEY_OFFSET instead. Residues mod 10 of every key are kept
+# (queries that split on ``doc_id % 5`` split each copy alike).
+KEY_OFFSET = 10**10
+NARROW_KEY_OFFSET = 10**3
+TABLE_KEYS = {
+    "region": ["r_regionkey"],
+    "nation": ["n_nationkey", "n_regionkey"],
+    "supplier": ["s_suppkey", "s_nationkey"],
+    "customer": ["c_custkey", "c_nationkey"],
+    "part": ["p_partkey"],
+    "orders": ["o_orderkey", "o_custkey"],
+    "lineitem": ["l_orderkey", "l_partkey", "l_suppkey"],
+    # exact text copies: each base document gains n - 1 exact duplicates
+    "documents": ["doc_id"],
+    # exact vector copies: each cell of any quantizer holds n times its rows
+    "embeddings": ["vec_id"],
+    # ts is copied as stored: the same parquet timestamp type, so
+    # registry.load and DuckDB read it as they read the base table
+    "events": ["event_id", "user_id"],
+}
 
 
-def main() -> int:
-    from pyspark.sql import functions as F
+def multiply_tables(sf_dir: str, n: int, out_dir: str) -> str:
+    """Write each table of ``sf_dir`` ``n`` times over into
+    ``out_dir/<table>.parquet``, one row group per copy, with the base
+    file's exact schema. Returns ``out_dir``."""
+    os.makedirs(out_dir, exist_ok=True)
+    for name, keys in TABLE_KEYS.items():
+        base = pq.read_table(f"{sf_dir}/{name}.parquet")
+        with pq.ParquetWriter(f"{out_dir}/{name}.parquet", base.schema) as w:
+            for k in range(n):
+                t = base
+                for col in keys:
+                    i = t.schema.get_field_index(col)
+                    typ = t.schema.field(i).type
+                    off = k * (NARROW_KEY_OFFSET if typ == pa.int32() else KEY_OFFSET)
+                    t = t.set_column(i, col, pc.add_checked(t[col], pa.scalar(off, typ)))
+                w.write_table(t)
+    return out_dir
 
-    from aws_vpc_flow_log_appender_spark.functions import round_half_up
-    from aws_vpc_flow_log_appender_spark.session import get_spark
 
-    mult = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    json_out = sys.argv[2] if len(sys.argv) > 2 else None
-    # local mode shares one JVM between driver and all 32 executor threads,
-    # so the 100x run's retained localCheckpoint blocks (187M exact pairs in
-    # the saturated section) plus shuffle buffers outgrow the 16g default —
-    # a test-rig artifact, not an engine property (a real cluster holds these
-    # blocks across executors). Session-4 run at 16g OOMed in the CC section;
-    # size the single JVM to the multiplier unless the caller already did.
-    if mult >= 50 and "SPARK_DRIVER_MEMORY" not in os.environ:
-        os.environ["SPARK_DRIVER_MEMORY"] = "48g"
-    artifact: dict = {"mult": mult, "sf_dir": SF_DIR}
-    spark = get_spark("scale_smoke")
+# Each check below takes (spark, base_dir, big_dir, n) and returns its
+# figures with "ok"; a closed form relates the xN run to the base run.
 
-    def multiplied(name: str, key_cols: list[str]):
-        """Replicate a table mult times, offsetting keys so join fanout stays
-        realistic (copies do not collide)."""
-        df = spark.read.parquet(f"{SF_DIR}/{name}.parquet")
-        copies = df.crossJoin(
-            spark.range(mult).select(F.col("id").alias("__copy"))
-        )
-        for k in key_cols:
-            copies = copies.withColumn(
-                k, F.col(k) + F.col("__copy") * F.lit(10 ** 10)
-            )
-        return copies.drop("__copy")
 
-    li = multiplied("lineitem", ["l_orderkey"])
-    orders = multiplied("orders", ["o_orderkey"])
-    base_li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-
-    ok = True
-
-    # 1) linear-scaling check: Q1-style agg count must be exactly mult x base
-    t0 = time.perf_counter()
-    big = li.groupBy("l_returnflag").agg(
-        F.count("*").alias("n"),
-        round_half_up(F.sum("l_quantity"), 2).alias("qty"),
-    ).collect()
-    t_agg = time.perf_counter() - t0
-    base = {
-        r["l_returnflag"]: r["n"]
-        for r in base_li.groupBy("l_returnflag").agg(F.count("*").alias("n")).collect()
-    }
-    for r in big:
-        if r["n"] != base[r["l_returnflag"]] * mult:
-            print(f"FAIL linear-scaling: {r['l_returnflag']} {r['n']} != {base[r['l_returnflag']]}x{mult}")
-            ok = False
-
-    # 2) plan re-specialization: fact-fact join must NOT broadcast at this size
-    j = li.join(orders, li.l_orderkey == orders.o_orderkey).groupBy(
-        "l_returnflag"
-    ).agg(F.count("*").alias("n"))
-    t0 = time.perf_counter()
-    jrows = {r["l_returnflag"]: r["n"] for r in j.collect()}
-    t_join = time.perf_counter() - t0
-    plan = j._jdf.queryExecution().executedPlan().toString()
-    fact_fact_broadcast = "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
-    # only a defect once the build side is unambiguously past the broadcast
-    # threshold (mult >= 10: orders is ~4.5M rows / >100 MB); at small
-    # multipliers AQE broadcasting a still-small orders side is the CORRECT
-    # plan, not a scale failure
-    if fact_fact_broadcast and mult >= 10:
-        print("FAIL plan: fact-fact join still broadcast at", mult, "x")
-        ok = False
-    for flag, n in jrows.items():
-        if n != base[flag] * mult:
-            print(f"FAIL join-result scaling: {flag} {n} != {base[flag]}x{mult}")
-            ok = False
-
-    n_rows = li.count()
-    if fact_fact_broadcast:
-        join_label = (
-            "broadcast (WRONG at this size)" if mult >= 10
-            else "broadcast (fits threshold at this size — correct)"
-        )
-    else:
-        join_label = "shuffle (correct)"
-    print(
-        f"scale_smoke mult={mult}: lineitem={n_rows:,} rows; "
-        f"agg {t_agg:.1f}s ({n_rows / t_agg / 1e6:.1f}M rows/s), "
-        f"join+agg {t_join:.1f}s; "
-        f"fact-fact join strategy: {join_label}; "
-        f"{'ALL OK' if ok else 'FAILURES'}"
-    )
-    artifact["relational"] = {
-        "lineitem_rows": n_rows,
-        "t_agg_s": round(t_agg, 2),
-        "t_join_s": round(t_join, 2),
-        "fact_fact_join": "shuffle" if not fact_fact_broadcast else "broadcast",
-    }
-
-    # 3) dedup at scale: multiply documents (text perturbed per copy so the
-    # corpus grows in content, not just dup density) and check the 64-bit
-    # SimHash band index stays non-degenerate — the property that keeps the
-    # banded pair join sub-quadratic as corpora grow.
-    import shutil
-    import tempfile
-
-    from aws_vpc_flow_log_appender_spark.ext.dedup import (
-        dedup_simhash,
-        dedup_simhash_pairs,
-    )
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    mdocs = (
-        docs.crossJoin(spark.range(mult).select(F.col("id").alias("__copy")))
-        .withColumn("doc_id", F.col("doc_id") + F.col("__copy") * F.lit(10 ** 10))
-        .withColumn(
-            "text",
-            F.concat(F.col("text"), F.lit(" copyword"), F.col("__copy").cast("string")),
-        )
-        .drop("__copy")
-    )
-    tmpdir = tempfile.mkdtemp(prefix="scale_docs_")
-    try:
-        mdocs.write.mode("overwrite").parquet(f"{tmpdir}/documents.parquet")
-        n_docs = mult * docs.count()
-        t0 = time.perf_counter()
-        sig = dedup_simhash(spark, tmpdir)
-        occ = (
-            sig.select(
-                F.explode(F.array(*[F.lit(b) for b in range(8)])).alias("band_id"),
-                "simhash",
-            )
-            .withColumn("band_val", F.expr("shiftright(simhash, band_id * 8) & 255"))
-            .groupBy("band_id", "band_val")
-            .agg(F.count("*").alias("n"))
-            .agg(F.max("n").alias("max_bucket"), F.count("*").alias("n_buckets"))
-            .collect()[0]
-        )
-        t_sig = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        n_pairs = dedup_simhash_pairs(spark, tmpdir).count()
-        t_pairs = time.perf_counter() - t0
-        # degenerate would be one bucket holding ~all docs; healthy banding
-        # keeps the hottest (band, value) bucket well below n_docs
-        if occ["max_bucket"] > n_docs * 0.5:
-            print(
-                f"FAIL simhash banding degenerate: max bucket {occ['max_bucket']}"
-                f" of {n_docs} docs"
-            )
-            ok = False
-        print(
-            f"scale_smoke docs mult={mult}: {n_docs:,} docs; simhash+occupancy "
-            f"{t_sig:.1f}s; hottest band bucket {occ['max_bucket']} "
-            f"({occ['max_bucket'] / n_docs:.1%} of corpus, {occ['n_buckets']} "
-            f"occupied buckets); pairs {n_pairs:,} in {t_pairs:.1f}s; "
-            f"{'ALL OK' if ok else 'FAILURES'}"
-        )
-
-        # 3b) minhash-LSH at scale: the windowed (2-md5) signature scheme's
-        # band buckets must stay non-degenerate as the corpus grows — the
-        # property that keeps the (band_id, band_sig) pair join keyed by
-        # duplicate density. Perturbed copies of one base doc are true
-        # near-dups, so the candidate count growing ~mult^2 per base doc is
-        # the OUTPUT being quadratic, not the join degenerating.
-        from aws_vpc_flow_log_appender_spark.ext.dedup import (
-            _minhash_bands_for,
-        )
-
-        t0 = time.perf_counter()
-        mh_bands = _minhash_bands_for(spark.read.parquet(f"{tmpdir}/documents.parquet"))
-        mh_occ = (
-            mh_bands.groupBy("band_id", "band_sig")
-            .agg(F.count("*").alias("n"))
-            .agg(F.max("n").alias("max_bucket"), F.count("*").alias("n_buckets"))
-            .collect()[0]
-        )
-        t_mh = time.perf_counter() - t0
-        if mh_occ["max_bucket"] > n_docs * 0.5:
-            print(
-                f"FAIL minhash banding degenerate: max bucket "
-                f"{mh_occ['max_bucket']} of {n_docs} docs"
-            )
-            ok = False
-        print(
-            f"scale_smoke minhash mult={mult}: hottest (band,sig) bucket "
-            f"{mh_occ['max_bucket']} ({mh_occ['max_bucket'] / n_docs:.1%} of "
-            f"corpus, {mh_occ['n_buckets']:,} occupied buckets) in {t_mh:.1f}s; "
-            f"{'OK' if ok else 'FAILURES'}"
-        )
-        artifact["lsh"] = {
-            "n_docs": n_docs,
-            "simhash_hottest_bucket": occ["max_bucket"],
-            "simhash_hottest_frac": occ["max_bucket"] / n_docs,
-            "simhash_pairs": n_pairs,
-            "minhash_hottest_bucket": mh_occ["max_bucket"],
-            "minhash_hottest_frac": mh_occ["max_bucket"] / n_docs,
-            "minhash_occupied_buckets": mh_occ["n_buckets"],
-            "t_simhash_s": round(t_sig, 2),
-            "t_pairs_s": round(t_pairs, 2),
-            "t_minhash_s": round(t_mh, 2),
-        }
-
-        # 3b2) keep-first paragraph dedup at scale (r8). Two checks, both
-        # fully distributed (violation COUNTS collected, never rows):
-        # (a) the keep-first invariant recomputed independently over the
-        # output — every span group has exactly one kept row and it is the
-        # (doc_id, pos) argmin; (b) the copy-corpus closed form — a copy
-        # doc's interior spans duplicate an earlier copy's (the perturbed
-        # " copyword{k}" suffix only alters each doc's TAIL span), so
-        # copies (__copy > 0) keep AT MOST one span per doc, and at least
-        # one tail survives. One shuffle on the span text regardless of
-        # mult.
-        from aws_vpc_flow_log_appender_spark.ext.dedup import dedup_paragraphs
-
-        t0 = time.perf_counter()
-        para = dedup_paragraphs(spark, tmpdir).localCheckpoint()
-        n_spans = para.count()
-        groups = para.groupBy("para_hash").agg(
-            F.sum("kept").alias("n_kept"),
-            F.min(F.struct("doc_id", "para_idx")).alias("first_pos"),
-            F.min(
-                F.when(F.col("kept") == 1, F.struct("doc_id", "para_idx"))
-            ).alias("kept_pos"),
-        )
-        n_viol = groups.filter(
-            (F.col("n_kept") != 1)
-            | (F.col("first_pos") != F.col("kept_pos"))
-        ).count()
-        copy_stats = (
-            para.filter(F.col("doc_id") >= 10 ** 10)
-            .groupBy("doc_id")
-            .agg(F.sum("kept").alias("n_kept"))
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum("n_kept").alias("kept_total"),
-                F.max("n_kept").alias("kept_max"),
-            )
-            .collect()[0]
-        )
-        t_para = time.perf_counter() - t0
-        para_ok = n_viol == 0
-        if mult > 1 and (
-            copy_stats["kept_max"] > 1 or copy_stats["kept_total"] == 0
-        ):
-            print(
-                f"FAIL paragraphs copy closed form: copy docs kept max "
-                f"{copy_stats['kept_max']} spans/doc, {copy_stats['kept_total']} total"
-            )
-            para_ok = False
-        if n_viol:
-            print(f"FAIL paragraphs keep-first: {n_viol} violating span groups")
-        if not para_ok:
-            ok = False
-        print(
-            f"scale_smoke paragraphs mult={mult}: {n_spans:,} spans in "
-            f"{t_para:.1f}s; keep-first argmin violations: {n_viol}; copy "
-            f"docs kept {int(copy_stats['kept_total'] or 0):,} tail spans over "
-            f"{int(copy_stats['n_docs'] or 0):,} docs (max {int(copy_stats['kept_max'] or 0)}/doc); "
-            f"{'OK' if para_ok else 'FAIL'}"
-        )
-        artifact["paragraph_dedup"] = {
-            "spans": n_spans,
-            "argmin_violations": n_viol,
-            "copy_kept_spans": int(copy_stats["kept_total"] or 0),
-            "copy_kept_max_per_doc": int(copy_stats["kept_max"] or 0),
-            "exact": para_ok,
-            "t_s": round(t_para, 2),
-        }
-
-        # 3b3) incremental snapshot dedup at scale (r8; bloom auto-sized r9):
-        # doc_id residues are preserved under +k*1e10 (and under the derived
-        # power-of-10 re-crawl offset), so the snapshot/batch/re-crawl
-        # classes scale with mult and the invariant is exact — every
-        # re-crawl drops, every (unique, perturbed) new doc survives:
-        # survivors = mult x base new-doc count. The bloom is now SIZED TO
-        # THE SNAPSHOT (VERDICT r8 #1 — the old fixed 1024 words saturated
-        # here: 27%/0.03%/0.0% miss share at 10x/50x/100x), and this
-        # section FAILS if the definitely-new routing share ever collapses
-        # below _BLOOM_MISS_FLOOR again (the true new share is ~2/3 of the
-        # batch at every mult, so 0.2 is noise-proof margin, not a tuned
-        # constant).
-        from aws_vpc_flow_log_appender_spark.ext.dedup import (
-            _incremental_split,
-            _snapshot_bloom_words,
-            dedup_incremental_snapshot,
-        )
-        from aws_vpc_flow_log_appender_spark.operators.joins import (
-            bloom_build,
-            bloom_probe_sql,
-        )
-
-        _BLOOM_MISS_FLOOR = 0.2
-        base_new = dedup_incremental_snapshot(spark, SF_DIR).count()
-        t0 = time.perf_counter()
-        inc_rows = dedup_incremental_snapshot(spark, tmpdir)
-        n_inc = inc_rows.count()
-        bad_inc = inc_rows.filter(
-            (F.col("doc_id") % 10 ** 10) % 5 != 4
-        ).count()
-        t_inc = time.perf_counter() - t0
-        inc_ok = n_inc == base_new * mult and bad_inc == 0
-        if not inc_ok:
-            print(
-                f"FAIL incremental dedup at mult={mult}: {n_inc} survivors "
-                f"!= {base_new}x{mult} or {bad_inc} non-new survivors"
-            )
-            ok = False
-        snap_keys, batch = _incremental_split(spark, tmpdir)
-        snap_words = _snapshot_bloom_words(spark, tmpdir)
-        firsts = batch.groupBy("content_key").agg(F.min("doc_id").alias("doc_id"))
-        bloomf = bloom_build(snap_keys, "content_key", words=snap_words)
-        n_first = firsts.count()
-        n_miss = firsts.join(F.broadcast(bloomf)).filter(
-            ~F.expr(bloom_probe_sql("content_key", words=snap_words))
-        ).count()
-        miss_share = n_miss / max(n_first, 1)
-        if miss_share <= _BLOOM_MISS_FLOOR:
-            print(
-                f"FAIL incremental dedup bloom at mult={mult}: miss share "
-                f"{miss_share:.1%} <= floor {_BLOOM_MISS_FLOOR:.0%} — the "
-                f"auto-sized bloom ({snap_words} words) is saturating"
-            )
-            inc_ok = False
-            ok = False
-        print(
-            f"scale_smoke incremental mult={mult}: {n_inc:,} survivors "
-            f"(= {base_new:,} x {mult}) in {t_inc:.1f}s; auto-sized bloom "
-            f"({snap_words} words) routes {n_miss:,}/{n_first:,} "
-            f"({miss_share:.1%}) around the snapshot join; "
-            f"{'OK' if inc_ok else 'FAIL'}"
-        )
-        artifact["incremental_dedup"] = {
-            "survivors": n_inc,
-            "expected": base_new * mult,
-            "bloom_words": snap_words,
-            "bloom_miss_share": round(miss_share, 4),
-            "bloom_miss_floor": _BLOOM_MISS_FLOOR,
-            "exact": inc_ok,
-            "t_s": round(t_inc, 2),
-        }
-
-        # 3c) DISTRIBUTED connected components, forced (r5, VERDICT_r04 #3):
-        # the in-window smokes take the union-find short-circuit, so the
-        # O(log d) pointer-jumping loop that real 100 TB corpora would run
-        # had never been exercised at scale. Force it (small_edge_cap=0)
-        # over the scaled LSH candidate graph, record its round count, and
-        # — the strong check — verify its labels agree EXACTLY with the
-        # driver union-find on the same edge set (forced the other way).
-        from aws_vpc_flow_log_appender_spark.ext.dedup import dedup_minhash_lsh
-        from aws_vpc_flow_log_appender_spark.ext.graph import (
-            SMALL_GRAPH_EDGE_CAP,
-            connected_components,
-        )
-
-        pairs = dedup_minhash_lsh(spark, tmpdir).localCheckpoint()
-        n_pairs_lsh = pairs.count()
-        cc_stats: dict = {}
-        t0 = time.perf_counter()
-        cc_dist = connected_components(
-            pairs, small_edge_cap=0, stats=cc_stats
-        ).localCheckpoint()
-        n_nodes = cc_dist.count()
-        t_cc = time.perf_counter() - t0
-        n_clusters = cc_dist.select("cluster_id").distinct().count()
-        if cc_stats.get("path") != "distributed_pointer_jumping":
-            print("FAIL cc: forced distributed path did not run")
-            ok = False
-        # cross-check vs exact union-find labels where the edge set is
-        # still driver-collectable (4x the query-path cap: a one-off audit
-        # tool can afford a bigger collect than the hot path); at larger
-        # mults validate fixpoint invariants PLUS an over-merge audit,
-        # because the invariants alone are one-sided — a labeling that
-        # fuses two disconnected components satisfies label<=id, no
-        # dangling, and no split edges (code-review r5 finding)
-        if cc_stats["sym_edges"] <= 4 * SMALL_GRAPH_EDGE_CAP:
-            cc_uf = connected_components(pairs, small_edge_cap=1 << 62)
-            n_disagree = (
-                cc_dist.alias("d")
-                .join(cc_uf.alias("u"), "doc_id")
-                .filter("d.cluster_id != u.cluster_id")
-                .count()
-            )
-            check = f"union-find cross-check: {n_disagree} disagreements"
-            if n_disagree:
-                print("FAIL cc: distributed labels disagree with union-find")
-                ok = False
-        else:
-            bad_min = cc_dist.filter("cluster_id > doc_id").count()
-            ids = cc_dist.select(F.col("doc_id").alias("cluster_id")).distinct()
-            dangling = (
-                cc_dist.select("cluster_id").distinct()
-                .join(ids, "cluster_id", "left_anti").count()
-            )
-            # edge consistency: every candidate edge's endpoints must carry
-            # the SAME label — the defining property of a valid partition
-            la = cc_dist.select(
-                F.col("doc_id").alias("doc_a"), F.col("cluster_id").alias("ca")
-            )
-            lb = cc_dist.select(
-                F.col("doc_id").alias("doc_b"), F.col("cluster_id").alias("cb")
-            )
-            split_edges = (
-                pairs.join(la, "doc_a").join(lb, "doc_b")
-                .filter("ca != cb").count()
-            )
-            # OVER-merge audit (the direction the three invariants above
-            # cannot see): each of the K largest clusters must be
-            # internally CONNECTED by the candidate edges — a cluster that
-            # is really two fused components has >1 root under a union-find
-            # of its own intra-cluster edges. K largest because over-merge
-            # inflates cluster size, so the fused ones would be at the top;
-            # collected data is K * avg-cluster-size rows. The union-find
-            # itself is the engine's tested _driver_union_find (one call
-            # over the audited subgraph), not a re-implementation; a
-            # member that appears in NO intra-cluster edge is disconnected
-            # by definition and flags its cluster too.
-            audit_k = 50
-            from aws_vpc_flow_log_appender_spark.ext.graph import (
-                _driver_union_find,
-            )
-
-            top = [
-                r["cluster_id"]
-                for r in cc_dist.groupBy("cluster_id").count()
-                .orderBy(F.desc("count"), F.asc("cluster_id"))
-                .limit(audit_k).collect()
-            ]
-            intra_edges = (
-                pairs.join(la, "doc_a").join(lb, "doc_b")
-                .filter(F.col("ca") == F.col("cb"))
-                .filter(F.col("ca").isin(top))
-                .select(
-                    F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-                )
-            )
-            uf = _driver_union_find(intra_edges).withColumnRenamed(
-                "cluster_id", "uf_label"
-            )
-            over_merged = (
-                cc_dist.filter(F.col("cluster_id").isin(top))
-                .join(uf, "doc_id", "left")
-                .groupBy("cluster_id")
-                .agg(
-                    F.count_distinct("uf_label").alias("n_roots"),
-                    F.sum(
-                        F.when(F.col("uf_label").isNull(), 1).otherwise(0)
-                    ).alias("n_unlinked"),
-                )
-                .filter((F.col("n_roots") > 1) | (F.col("n_unlinked") > 0))
-                .count()
-            )
-            check = (
-                f"fixpoint invariants: {bad_min} label>id violations, "
-                f"{dangling} dangling labels, {split_edges} split edges; "
-                f"over-merge audit: {over_merged}/{len(top)} of the largest "
-                f"clusters internally disconnected"
-            )
-            if bad_min or dangling or split_edges or over_merged:
-                print("FAIL cc: fixpoint invariants / over-merge audit")
-                ok = False
-        print(
-            f"scale_smoke cc mult={mult}: {n_pairs_lsh:,} candidate pairs "
-            f"({cc_stats['sym_edges']:,} sym edges) -> {n_clusters:,} clusters "
-            f"over {n_nodes:,} nodes via {cc_stats['path']} in "
-            f"{cc_stats['rounds']} rounds, {t_cc:.1f}s; {check}; "
-            f"{'ALL OK' if ok else 'FAILURES'}"
-        )
-        artifact["connected_components"] = {
-            "candidate_pairs": n_pairs_lsh,
-            "sym_edges": cc_stats["sym_edges"],
-            "path": cc_stats["path"],
-            "rounds": cc_stats["rounds"],
-            "nodes": n_nodes,
-            "clusters": n_clusters,
-            "t_s": round(t_cc, 2),
-            "check": check,
-        }
-
-        # 3d) sample_dedup_weights at scale (r6, VERDICT_r05 #1): the
-        # cluster-membership join-back is now UNHINTED, so AQE picks the
-        # strategy from measured sizes. Run it twice: once letting AQE
-        # choose (record the choice), once with broadcast disabled to TIME
-        # THE SORT-MERGE PATH the realistic 30-50 %-dup web corpus would
-        # take. Row contract either way: every doc exactly once, and the
-        # weights sum to ~#content-units (each cluster contributes ~1).
-        from aws_vpc_flow_log_appender_spark.ext.graph import (
-            sample_dedup_weights,
-        )
-
-        t0 = time.perf_counter()
-        sw = sample_dedup_weights(spark, tmpdir).localCheckpoint()
-        n_weighted = sw.count()
-        t_sw = time.perf_counter() - t0
-        sw_plan = sw._jdf.queryExecution().executedPlan().toString()
-        agg_w = sw.agg(
-            F.sum("sample_weight").alias("wsum"),
-            F.count_distinct("cluster_size").alias("n_sizes"),
-        ).collect()[0]
-        n_content_units = (
-            n_clusters
-            + n_docs
-            - n_nodes  # singletons: docs in no candidate pair
-        )
-        if n_weighted != n_docs:
-            print(f"FAIL dedup weights: {n_weighted} rows != {n_docs} docs")
-            ok = False
-        if abs(agg_w["wsum"] - n_content_units) > 1e-3 * n_content_units + 1:
-            print(
-                f"FAIL dedup weights: sum {agg_w['wsum']:.2f} != "
-                f"~{n_content_units} content units"
-            )
-            ok = False
-        # Isolate the VERDICT r5 #1 question — the membership JOIN-BACK on
-        # its sort-merge path. Disabling broadcast around the whole
-        # recomputed pipeline would also de-broadcast the LSH band self-join
-        # and every join inside connected components, conflating
-        # whole-pipeline no-broadcast cost with the join-back (code-review
-        # r6). So: materialize the join inputs FIRST (membership table +
-        # corpus ids), then time ONLY the join under the disabled threshold,
-        # and record which physical join actually ran.
-        from aws_vpc_flow_log_appender_spark.ext.graph import dedup_clusters
-
-        cl_ckpt = dedup_clusters(spark, tmpdir).localCheckpoint()
-        member = cl_ckpt.join(
-            cl_ckpt.groupBy("cluster_id").agg(
-                F.count("*").alias("cluster_size")
-            ),
-            "cluster_id",
-        ).localCheckpoint()
-        docs_ids = (
-            spark.read.parquet(f"{tmpdir}/documents.parquet")
-            .select("doc_id").localCheckpoint()
-        )
-        saved_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            joined = docs_ids.join(member, "doc_id", "left").select(
-                "doc_id",
-                F.coalesce("cluster_size", F.lit(1)).alias("cluster_size"),
-            )
-            t0 = time.perf_counter()
-            n_smj = joined.count()
-            t_smj = time.perf_counter() - t0
-            smj_plan = joined._jdf.queryExecution().executedPlan().toString()
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved_thresh)
-        joinback_join = (
-            "sort_merge" if "SortMergeJoin" in smj_plan
-            else "shuffled_hash" if "ShuffledHashJoin" in smj_plan
-            else "broadcast" if "BroadcastHashJoin" in smj_plan
-            else "other"
-        )
-        if n_smj != n_docs:
-            print(f"FAIL dedup weights (SMJ path): {n_smj} rows != {n_docs}")
-            ok = False
-        if joinback_join == "broadcast":
-            print("FAIL dedup weights: join-back still broadcast with the "
-                  "threshold disabled")
-            ok = False
-        print(
-            f"scale_smoke dedup_weights mult={mult}: {n_weighted:,} docs "
-            f"weighted in {t_sw:.1f}s (AQE choice); membership join-back "
-            f"alone on its {joinback_join} path {t_smj:.1f}s; weight sum "
-            f"{agg_w['wsum']:.1f} ~= {n_content_units:,} content units; "
-            f"{'ALL OK' if ok else 'FAILURES'}"
-        )
-        artifact["dedup_weights"] = {
-            "docs": n_weighted,
-            "weight_sum": round(float(agg_w["wsum"]), 2),
-            "content_units": n_content_units,
-            "aqe_used_broadcast": "BroadcastHashJoin" in sw_plan,
-            "t_aqe_s": round(t_sw, 2),
-            "joinback_forced_join": joinback_join,
-            "t_joinback_forced_s": round(t_smj, 2),
-        }
-
-        # 3e) bounded pair stats on the dup-saturated corpus (r6, VERDICT_r05
-        # #4): dedup_simhash_pair_stats must return <= 8 rows whose total
-        # EQUALS the exact enumeration's pair count (computed above), in
-        # time bounded by distinct-fingerprint collisions rather than by
-        # the quadratic output mass.
-        from aws_vpc_flow_log_appender_spark.ext.dedup import (
-            dedup_simhash_pair_stats,
-        )
-
-        t0 = time.perf_counter()
-        stats_rows = dedup_simhash_pair_stats(spark, tmpdir).collect()
-        t_stats = time.perf_counter() - t0
-        stats_total = sum(r["n_pairs"] for r in stats_rows)
-        if len(stats_rows) > 8:
-            print(f"FAIL pair stats: {len(stats_rows)} rows > 8")
-            ok = False
-        if stats_total != n_pairs:
-            print(
-                f"FAIL pair stats: total {stats_total:,} != exact "
-                f"enumeration {n_pairs:,}"
-            )
-            ok = False
-        print(
-            f"scale_smoke pair_stats mult={mult}: {len(stats_rows)} rows, "
-            f"{stats_total:,} pairs accounted in {t_stats:.1f}s vs "
-            f"{t_pairs:.1f}s for the exact enumeration; "
-            f"{'ALL OK' if ok else 'FAILURES'}"
-        )
-        artifact["pair_stats"] = {
-            "rows": len(stats_rows),
-            "total_pairs": stats_total,
-            "exact_enumeration_pairs": n_pairs,
-            "t_stats_s": round(t_stats, 2),
-            "t_exact_s": round(t_pairs, 2),
-        }
-
-        # 3f) dup-SATURATED corpus (r6, VERDICT_r05 #4 "bounded runtime on
-        # the saturated corpus"): mult IDENTICAL copies of every base doc
-        # (distinct doc_ids, same text -> same fingerprint). The exact
-        # enumeration on this corpus is output-quadratic (~mult^2 x the
-        # base pair mass — the 1354 s shape from the r5 100x smoke) and is
-        # NOT run; instead the bounded stats query runs and its per-Hamming
-        # counts are verified against the CLOSED FORM derived from the
-        # base-corpus stats: with every base fingerprint's multiplicity
-        # scaled by m,
-        #   pairs_sat(0)   = (m^2 * (2*pairs_base(0) + n_base) - m*n_base)/2
-        #   pairs_sat(h>0) = m^2 * pairs_base(h)
-        # (sum n_f^2 = 2*pairs_base(0) + n_base). An exact scale check
-        # with zero quadratic work.
-        sat_docs = (
-            docs.crossJoin(
-                spark.range(mult).select(F.col("id").alias("__copy"))
-            )
-            .withColumn(
-                "doc_id", F.col("doc_id") * mult + F.col("__copy")
-            )
-            .drop("__copy")
-        )
-        sat_tmp = tempfile.mkdtemp(prefix="scale_satdocs_")
-        try:
-            sat_docs.write.mode("overwrite").parquet(
-                f"{sat_tmp}/documents.parquet"
-            )
-            n_base = docs.count()
-            base_stats = {
-                r["hamming"]: r["n_pairs"]
-                for r in dedup_simhash_pair_stats(spark, SF_DIR).collect()
-            }
-            t0 = time.perf_counter()
-            sat_stats = {
-                r["hamming"]: r["n_pairs"]
-                for r in dedup_simhash_pair_stats(spark, sat_tmp).collect()
-            }
-            t_sat = time.perf_counter() - t0
-            pred = {
-                0: (mult * mult * (2 * base_stats.get(0, 0) + n_base)
-                    - mult * n_base) // 2,
-            }
-            for hh in range(1, 8):
-                if base_stats.get(hh, 0):
-                    pred[hh] = mult * mult * base_stats[hh]
-            pred = {k: v for k, v in pred.items() if v > 0}
-            if sat_stats != pred:
-                print(
-                    f"FAIL saturated pair stats: got {sat_stats} != "
-                    f"closed-form {pred}"
-                )
-                ok = False
-            sat_mass = sum(pred.values())
-            print(
-                f"scale_smoke saturated mult={mult}: {n_base * mult:,} docs, "
-                f"{sat_mass:,} true pairs accounted by {len(sat_stats)} "
-                f"stats rows in {t_sat:.1f}s (exact enumeration would emit "
-                f"{sat_mass:,} rows); closed-form match: "
-                f"{'EXACT' if sat_stats == pred else 'MISMATCH'}; "
-                f"{'ALL OK' if ok else 'FAILURES'}"
-            )
-            artifact["saturated_pair_stats"] = {
-                "docs": n_base * mult,
-                "true_pair_mass": sat_mass,
-                "stats_rows": len(sat_stats),
-                "closed_form_exact": sat_stats == pred,
-                "t_stats_s": round(t_sat, 2),
-            }
-        finally:
-            shutil.rmtree(sat_tmp, ignore_errors=True)
-
-        # 4) contamination probe at scale: the benchmark side stays tiny
-        # (src0 of the BASE corpus) while the probe side grows with the
-        # corpus — the broadcast join must hold and per-doc ratios must be
-        # copy-invariant (every perturbed copy of a doc shares its base
-        # shingles, so hit counts scale with content, not with mult).
-        from aws_vpc_flow_log_appender_spark.ext.textanalysis import (
-            text_contamination_check,
-        )
-
-        t0 = time.perf_counter()
-        contam = text_contamination_check(spark, tmpdir)
-        n_contam = contam.count()
-        hits = contam.agg(
-            F.sum("n_contaminated").alias("h"), F.sum("n_shingles").alias("s")
-        ).collect()[0]
-        t_contam = time.perf_counter() - t0
-        cplan = contam._jdf.queryExecution().executedPlan().toString()
-        if "BroadcastHashJoin" not in cplan:
-            print("FAIL contamination probe lost its broadcast at", mult, "x")
-            ok = False
-        print(
-            f"scale_smoke contamination mult={mult}: {n_contam:,} docs scored, "
-            f"{hits['h']:,}/{hits['s']:,} shingles hit in {t_contam:.1f}s; "
-            f"probe join: {'broadcast (correct)' if 'BroadcastHashJoin' in cplan else 'WRONG'}; "
-            f"{'ALL OK' if ok else 'FAILURES'}"
-        )
-        artifact["contamination"] = {
-            "docs_scored": n_contam,
-            "probe_join": "broadcast" if "BroadcastHashJoin" in cplan else "other",
-            "t_s": round(t_contam, 2),
-        }
-
-        # 4b) segment scrub at scale (r5 addition): one explode + one
-        # shuffle on segment text + join-back + per-doc agg — every doc
-        # must come back exactly once at any multiplier
-        from aws_vpc_flow_log_appender_spark.ext.dedup import (
-            dedup_segments_scrub,
-        )
-
-        t0 = time.perf_counter()
-        n_scrub = dedup_segments_scrub(spark, tmpdir).count()
-        t_scrub = time.perf_counter() - t0
-        if n_scrub != n_docs:
-            print(f"FAIL segment scrub: {n_scrub} output rows != {n_docs} docs")
-            ok = False
-        print(
-            f"scale_smoke scrub mult={mult}: {n_scrub:,} docs scrubbed in "
-            f"{t_scrub:.1f}s; {'ALL OK' if ok else 'FAILURES'}"
-        )
-        artifact["segment_scrub"] = {
-            "docs": n_scrub, "t_s": round(t_scrub, 2),
-        }
-
-        # 4c) minhash sketch-quality audit at scale (late-r6 addition): the
-        # est-vs-true Jaccard comparison over the scaled LSH candidate set.
-        # All checks run as ONE Spark-side aggregate (the pair set grows
-        # ~mult^2 per near-dup family — collecting it would be the driver
-        # bottleneck this smoke exists to catch): estimates and truths must
-        # stay in [0, 1], and every row's |abs_err - |est - true|| must sit
-        # within the 1e-6 double-rounding envelope (est is exact, true is
-        # grid-rounded, abs_err is computed from the unrounded integers).
-        from aws_vpc_flow_log_appender_spark.ext.dedup import (
-            dedup_minhash_est_jaccard,
-        )
-
-        t0 = time.perf_counter()
-        ej = dedup_minhash_est_jaccard(spark, tmpdir)
-        ej_stats = ej.agg(
-            F.count("*").alias("n_pairs"),
-            F.sum(
-                F.when(
-                    (F.col("est_jaccard") < 0) | (F.col("est_jaccard") > 1)
-                    | (F.col("true_jaccard") < 0) | (F.col("true_jaccard") > 1),
-                    1,
-                ).otherwise(0)
-            ).alias("n_range_bad"),
-            F.sum(
-                F.when(
-                    F.abs(
-                        F.col("abs_err")
-                        - F.abs(F.col("est_jaccard") - F.col("true_jaccard"))
-                    )
-                    > 2e-6,
-                    1,
-                ).otherwise(0)
-            ).alias("n_err_bad"),
-            round_half_up(F.avg("abs_err"), 6).alias("mean_abs_err"),
-        ).collect()[0]
-        t_ej = time.perf_counter() - t0
-        if ej_stats["n_range_bad"] or ej_stats["n_err_bad"]:
-            print(
-                f"FAIL est_jaccard audit: {ej_stats['n_range_bad']} range / "
-                f"{ej_stats['n_err_bad']} error-formula violations"
-            )
-            ok = False
-        print(
-            f"scale_smoke est_jaccard mult={mult}: {ej_stats['n_pairs']:,} "
-            f"candidate pairs audited in {t_ej:.1f}s, mean |err| "
-            f"{ej_stats['mean_abs_err']}; {'OK' if ok else 'FAILURES'}"
-        )
-        artifact["est_jaccard"] = {
-            "pairs": ej_stats["n_pairs"],
-            "range_violations": ej_stats["n_range_bad"],
-            "err_formula_violations": ej_stats["n_err_bad"],
-            "mean_abs_err": ej_stats["mean_abs_err"],
-            "t_s": round(t_ej, 2),
-        }
-
-        # 3b4) domain-mix budget allocation at scale (r9): the copy
-        # perturbation shifts token counts and quality-gate membership, so
-        # there is no per-source closed form vs base — the checks are the
-        # method's own invariants, which must hold at EVERY corpus size:
-        # allocations sum EXACTLY to the derived target (largest-remainder's
-        # defining property), target = half the quality tokens, and no
-        # source is allocated beyond its availability or fills past its
-        # allocation.
-        from aws_vpc_flow_log_appender_spark.ext.curation import (
-            curation_domain_mix,
-        )
-
-        t0 = time.perf_counter()
-        mix_rows = curation_domain_mix(spark, tmpdir).collect()
-        t_mix = time.perf_counter() - t0
-        mix_target = mix_rows[0]["target_tokens"] if mix_rows else 0
-        mix_alloc = sum(r["alloc_tokens"] for r in mix_rows)
-        mix_qtok = sum(r["qtok"] for r in mix_rows)
-        mix_ok = (
-            bool(mix_rows)
-            and mix_alloc == mix_target
-            and mix_target == mix_qtok // 2
-            and all(
-                0 <= r["alloc_tokens"] <= r["qtok"]
-                and r["sel_tokens"] <= r["alloc_tokens"]
-                for r in mix_rows
-            )
-        )
-        if not mix_ok:
-            print(
-                f"FAIL domain mix at mult={mult}: sum(alloc)={mix_alloc} "
-                f"target={mix_target} qtok={mix_qtok}"
-            )
-            ok = False
-        print(
-            f"scale_smoke domain_mix mult={mult}: {len(mix_rows)} sources, "
-            f"{mix_qtok:,} quality tokens, budget {mix_target:,} allocated "
-            f"exactly ({mix_alloc:,}) in {t_mix:.1f}s; "
-            f"{'OK' if mix_ok else 'FAIL'}"
-        )
-        artifact["domain_mix"] = {
-            "sources": len(mix_rows),
-            "quality_tokens": mix_qtok,
-            "target": mix_target,
-            "allocated": mix_alloc,
-            "sum_exact": mix_alloc == mix_target,
-            "t_s": round(t_mix, 2),
-        }
-
-        # 3b5) paragraph NEAR dedup at scale (r9): the copy suffix makes
-        # each copy's tail span a DISTINCT near-duplicate text (one token
-        # differs out of <= 8), so the near class fires heavily at scale
-        # while all interior spans collapse to exact duplicates first. The
-        # strong checks: the near rule keeps a strict SUBSET of the exact
-        # rule's survivors (per span instance), the near-only drop class is
-        # populated, and the banded stage runs over DISTINCT texts only —
-        # recorded as the distinct-text count growing far slower than span
-        # instances.
-        from aws_vpc_flow_log_appender_spark.ext.dedup import (
-            dedup_paragraphs,
-            dedup_paragraphs_near,
-        )
-
-        t0 = time.perf_counter()
-        near = dedup_paragraphs_near(spark, tmpdir).localCheckpoint()
-        exact_p = dedup_paragraphs(spark, tmpdir)
-        joined = near.select(
-            "doc_id", "para_idx", F.col("kept").alias("kept_near")
-        ).join(
-            exact_p.select(
-                "doc_id", "para_idx", F.col("kept").alias("kept_exact")
-            ),
-            ["doc_id", "para_idx"],
-        )
-        agg = joined.agg(
-            F.count(F.lit(1)).alias("n_spans"),
-            F.sum(
-                F.when(
-                    (F.col("kept_near") == 1) & (F.col("kept_exact") == 0), 1
-                ).otherwise(0)
-            ).alias("n_subset_viol"),
-            F.sum(
-                F.when(
-                    (F.col("kept_near") == 0) & (F.col("kept_exact") == 1), 1
-                ).otherwise(0)
-            ).alias("n_near_only_drops"),
-        ).collect()[0]
-        from aws_vpc_flow_log_appender_spark.ext.dedup import _segment_table
-
-        n_distinct_texts = (
-            _segment_table(
-                spark.read.parquet(f"{tmpdir}/documents.parquet").filter(
-                    F.col("text").isNotNull()
-                )
-            )
-            .select("seg_text")
-            .distinct()
-            .count()
-        )
-        t_near = time.perf_counter() - t0
-        near_ok = (
-            agg["n_subset_viol"] == 0 and agg["n_near_only_drops"] > 0
-        )
-        if not near_ok:
-            print(
-                f"FAIL paragraphs_near at mult={mult}: "
-                f"{agg['n_subset_viol']} subset violations, "
-                f"{agg['n_near_only_drops']} near-only drops"
-            )
-            ok = False
-        print(
-            f"scale_smoke paragraphs_near mult={mult}: {agg['n_spans']:,} "
-            f"span instances over {n_distinct_texts:,} distinct texts in "
-            f"{t_near:.1f}s; near-only drops {agg['n_near_only_drops']:,}, "
-            f"subset violations {agg['n_subset_viol']}; "
-            f"{'OK' if near_ok else 'FAIL'}"
-        )
-        artifact["paragraphs_near"] = {
-            "spans": agg["n_spans"],
-            "distinct_texts": n_distinct_texts,
-            "near_only_drops": agg["n_near_only_drops"],
-            "subset_violations": agg["n_subset_viol"],
-            "exact": near_ok,
-            "t_s": round(t_near, 2),
-        }
-    finally:
-        shutil.rmtree(tmpdir, ignore_errors=True)
-
-    # 5) graph saturation: the circulant edge synthesis must BOUND the edge
-    # set as events grow (operators/graphs.py's scale contract) — wedge
-    # fan-out in triangle/common-neighbor joins then stays dim-sized at any
-    # corpus multiple.
-    from aws_vpc_flow_log_appender_spark.operators.graphs import (
-        _N,
-        _OFF,
-        _undirected_edges,
-    )
-
+def linear_scaling(spark, base_dir, big_dir, n):
+    """A grouped count over lineitem is exactly n times the base count."""
     from aws_vpc_flow_log_appender_spark.operators.registry import load
 
-    events = load(spark, SF_DIR, "events")  # handles the NANOS fixture layout
-    mevents = (
-        events.crossJoin(spark.range(mult).select(F.col("id").alias("__copy")))
-        .withColumn("event_id", F.col("event_id") * mult + F.col("__copy"))
-        .drop("__copy")
+    def counts(sf):
+        rows = load(spark, sf, "lineitem").groupBy("l_returnflag").count().collect()
+        return {r["l_returnflag"]: r["count"] for r in rows}
+
+    base, big = counts(base_dir), counts(big_dir)
+    return {"ok": big == {k: v * n for k, v in base.items()},
+            "lineitem_rows": sum(big.values()), "base_rows": sum(base.values())}
+
+
+def fact_fact_join_shuffles(spark, base_dir, big_dir, n):
+    """lineitem x orders joins to exactly n times the base rows, and at
+    each scale whose orders estimate is past the broadcast threshold AQE
+    runs the join as a shuffle join, not a broadcast. Every orders column
+    feeds the aggregate, so the build side is the whole table: with only
+    the key, AQE may rightly broadcast a pruned column at any scale."""
+    from pyspark.sql import functions as F
+
+    from aws_vpc_flow_log_appender_spark.operators.registry import load
+    from aws_vpc_flow_log_appender_spark.plan_gates import plan_bytes
+
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+    def run(sf):
+        li, orders = load(spark, sf, "lineitem"), load(spark, sf, "orders")
+        agg = li.join(orders, li.l_orderkey == orders.o_orderkey).groupBy("l_returnflag").agg(
+            F.count("*").alias("n"), F.sum(F.hash(*orders.columns)).alias("h"))
+        rows = sum(r["n"] for r in agg.collect())
+        plan = agg._jdf.queryExecution().executedPlan().toString()
+        return {"rows": rows, "orders_bytes": plan_bytes(orders),
+                "strategy": "broadcast" if "BroadcastHashJoin" in plan else "shuffle"}
+
+    base, big = run(base_dir), run(big_dir)
+    ok = big["rows"] == n * base["rows"] and not any(
+        s["strategy"] == "broadcast" and (s["orders_bytes"] or 0) > threshold for s in (base, big)
     )
-    etmp = tempfile.mkdtemp(prefix="scale_events_")
-    try:
-        # registry.load() expects events.ts as INT64 nanos (the driver
-        # fixture's layout) — store it that way in the synthetic copy too
-        mevents.withColumn(
-            "ts", (F.unix_micros("ts") * 1000).cast("long")
-        ).write.mode("overwrite").parquet(f"{etmp}/events.parquet")
-        t0 = time.perf_counter()
-        n_edges = _undirected_edges(spark, etmp).count()
-        t_edges = time.perf_counter() - t0
-        cap = _N * _OFF
-        if n_edges > cap:
-            print(f"FAIL graph saturation: {n_edges} edges exceeds support {cap}")
-            ok = False
-        print(
-            f"scale_smoke graph mult={mult}: {n_edges:,} distinct edges from "
-            f"{mevents.count():,} events (support cap {cap:,}) in {t_edges:.1f}s; "
-            f"{'ALL OK' if ok else 'FAILURES'}"
-        )
-        artifact["graph_saturation"] = {
-            "edges": n_edges, "cap": cap, "t_s": round(t_edges, 2),
-        }
+    return {"ok": ok, "base": base, "big": big, "broadcast_threshold": threshold}
 
-        # 5b) pagerank at scale (r5, VERDICT_r04 #3): the 5-round unrolled
-        # single-plan loop (5 shuffles keyed by dst, edge/node tables
-        # checkpointed once) must stay executable as the event stream grows
-        # — the edge set saturates at the circulant support, so the top-25
-        # must come back dense (pr_rank exactly 1..25), strictly ordered,
-        # with positive integer-scaled ranks.
-        from aws_vpc_flow_log_appender_spark.operators.graphs import (
-            graph_pagerank,
-        )
 
-        t0 = time.perf_counter()
-        pr_rows = graph_pagerank(spark, etmp).collect()  # top-25 by contract
-        t_pr = time.perf_counter() - t0
-        ranks_desc = [r["rank"] for r in pr_rows]
-        # NOTE the circulant fixture graph is regular, so all ranks tie —
-        # the order check then verifies the (rank desc, node asc) tiebreak,
-        # not a strict ordering. Empty top-k is a failure, recorded (not a
-        # crash) so the artifact still lands.
-        pr_ok = (
-            len(pr_rows) == min(25, _N)
-            and [r["pr_rank"] for r in pr_rows] == list(range(1, len(pr_rows) + 1))
-            and ranks_desc == sorted(ranks_desc, reverse=True)
-            and all(x > 0 for x in ranks_desc)
-            and all(
-                pr_rows[i]["node"] < pr_rows[i + 1]["node"]
-                for i in range(len(pr_rows) - 1)
-                if pr_rows[i]["rank"] == pr_rows[i + 1]["rank"]
-            )
-        )
-        if not pr_ok:
-            print(f"FAIL pagerank top-k malformed/empty at mult={mult}")
-            ok = False
-        rank_lo = min(ranks_desc) if ranks_desc else 0
-        rank_hi = max(ranks_desc) if ranks_desc else 0
-        print(
-            f"scale_smoke pagerank mult={mult}: top-{len(pr_rows)} in "
-            f"{t_pr:.1f}s, rank range [{rank_lo:,}, {rank_hi:,}]; "
-            f"{'ALL OK' if ok else 'FAILURES'}"
-        )
-        artifact["pagerank"] = {
-            "topk": len(pr_rows),
-            "rank_min": int(rank_lo),
-            "rank_max": int(rank_hi),
-            "t_s": round(t_pr, 2),
-        }
-    finally:
-        shutil.rmtree(etmp, ignore_errors=True)
+def distributed_cc_matches_union_find(spark, base_dir, big_dir, n):
+    """Connected components over the xN LSH candidate graph, forced onto
+    the distributed pointer-jumping loop, equals the union-find labelling
+    of the base graph lifted to the copies, and converges in O(log d)
+    rounds. A copy shares every band with its original, so each xN
+    component is a base component with all its copies (or one unpaired
+    document with its copies), labelled by its copy-0 minimum id."""
+    import math
 
-    # 6) stateful partition-fold at scale: ts_ewma must produce exactly one
-    # row per (replicated) user and stay wall-clock-linear — the shape that
-    # regressed 9x under groupBy().applyInPandas (per-key Python round-trip
-    # + AQE coalescing to one worker; see PLANS.md) must not creep back.
-    from aws_vpc_flow_log_appender_spark.operators.timeseries import ts_ewma
+    from pyspark.sql import functions as F
 
-    base_users = events.select("user_id").distinct().count()
-    f_events = (
-        events.crossJoin(spark.range(mult).select(F.col("id").alias("__copy")))
-        .withColumn("user_id", F.col("user_id") + F.col("__copy") * F.lit(10 ** 10))
-        .withColumn("event_id", F.col("event_id") * mult + F.col("__copy"))
-        .drop("__copy")
+    from aws_vpc_flow_log_appender_spark.ext.dedup import dedup_minhash_lsh
+    from aws_vpc_flow_log_appender_spark.ext.graph import connected_components
+
+    uf = connected_components(dedup_minhash_lsh(spark, base_dir), small_edge_cap=1 << 62)
+    stats: dict = {}
+    cc = connected_components(
+        dedup_minhash_lsh(spark, big_dir), small_edge_cap=0, stats=stats
+    ).localCheckpoint()
+    base = (cc.doc_id % KEY_OFFSET).alias("base_id")
+    want = F.coalesce("uf_label", "base_id")
+    lifted = cc.select("doc_id", "cluster_id", base).join(
+        F.broadcast(uf.select(F.col("doc_id").alias("base_id"), F.col("cluster_id").alias("uf_label"))),
+        "base_id", "left",
     )
-    ftmp = tempfile.mkdtemp(prefix="scale_ewma_")
-    try:
-        f_events.withColumn(
-            "ts", (F.unix_micros("ts") * 1000).cast("long")
-        ).write.mode("overwrite").parquet(f"{ftmp}/events.parquet")
-        t0 = time.perf_counter()
-        n_states = ts_ewma(spark, ftmp).count()
-        t_fold = time.perf_counter() - t0
-        if n_states != base_users * mult:
-            print(
-                f"FAIL ewma fold scaling: {n_states} state rows != "
-                f"{base_users}x{mult}"
-            )
-            ok = False
-        print(
-            f"scale_smoke ewma mult={mult}: {n_states:,} per-user states in "
-            f"{t_fold:.1f}s ({'OK' if ok else 'FAIL'})"
-        )
-        artifact["ewma_fold"] = {
-            "state_rows": n_states, "t_s": round(t_fold, 2),
-        }
-    finally:
-        shutil.rmtree(ftmp, ignore_errors=True)
+    r = lifted.agg(
+        F.count("*").alias("nodes"),
+        F.count_distinct("base_id").alias("base_nodes"),
+        F.sum((F.col("cluster_id") != want).cast("int")).alias("disagree"),
+    ).collect()[0]
+    largest = cc.groupBy("cluster_id").count().agg(F.max("count")).collect()[0][0]
+    # each round does a neighbour-min step and a pointer jump, so the
+    # label of any node reaches its component minimum in O(log d) rounds;
+    # d < the largest component's size
+    bound = 2 * math.ceil(math.log2(max(largest, 2))) + 2
+    return {"ok": stats["path"] == "distributed_pointer_jumping" and r["disagree"] == 0
+            and r["nodes"] == n * r["base_nodes"] and stats["rounds"] <= bound,
+            "path": stats["path"], "rounds": stats["rounds"], "round_bound": bound,
+            "sym_edges": stats["sym_edges"], "nodes": r["nodes"],
+            "largest_component": largest, "disagreements": r["disagree"]}
 
-    # 7) trained quantizer at scale (r6 addition): k-means over a corpus of
-    # mult IDENTICAL copies (vec_ids offset; base ids stay the smallest so
-    # the seeded codebook c0 is unchanged) has a CLOSED FORM — identical
-    # vectors assign identically under the deterministic (d, cid) tie-break,
-    # per-cell means are unchanged by duplication, so cell counts and the
-    # integer-scaled inertia must scale EXACTLY by mult while the centroid
-    # norms stay bit-identical. Then the trained search must put a perfect
-    # match (cosine 1.0 — the query's own copies) at rank 1 for every
-    # query, which requires training to have assigned every copy to its
-    # original's cell.
-    from aws_vpc_flow_log_appender_spark.ext.similarity import (
-        KM_SCALE,
-        N_QUERIES,
-        TOP_K,
-        sim_ivf_trained_topk,
-        sim_kmeans_cells,
+
+def kmeans_closed_form(spark, base_dir, big_dir, n):
+    """k-means over n exact copies of every vector trains the base
+    codebook: the seeds (the smallest ids) are copy-0 rows and no copy
+    moves a cell mean, so each cell's count and integer-scaled inertia are
+    exactly n times the base and its centroid norm is bit-identical."""
+    from aws_vpc_flow_log_appender_spark.ext.similarity import KM_SCALE, sim_kmeans_cells
+
+    def cells(sf):
+        return {r["cluster_id"]: r for r in sim_kmeans_cells(spark, sf).collect()}
+
+    base, big = cells(base_dir), cells(big_dir)
+    ok = set(big) == set(base) and all(
+        big[c]["n_vecs"] == n * b["n_vecs"]
+        and round(big[c]["inertia"] * KM_SCALE) == n * round(b["inertia"] * KM_SCALE)
+        and big[c]["centroid_norm"] == b["centroid_norm"]
+        for c, b in base.items()
     )
+    return {"ok": ok, "cells": len(big), "vectors": sum(r["n_vecs"] for r in big.values())}
 
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    memb = (
-        emb.crossJoin(spark.range(mult).select(F.col("id").alias("__copy")))
-        .withColumn("vec_id", F.col("vec_id") + F.col("__copy") * F.lit(10 ** 10))
-        .drop("__copy")
-    )
-    ktmp = tempfile.mkdtemp(prefix="scale_kmeans_")
-    try:
-        memb.write.mode("overwrite").parquet(f"{ktmp}/embeddings.parquet")
-        base_cells = {
-            r["cluster_id"]: r for r in sim_kmeans_cells(spark, SF_DIR).collect()
-        }
-        t0 = time.perf_counter()
-        big_cells = {
-            r["cluster_id"]: r for r in sim_kmeans_cells(spark, ktmp).collect()
-        }
-        t_km = time.perf_counter() - t0
-        km_ok = set(big_cells) == set(base_cells)
-        for cid, b in base_cells.items():
-            g = big_cells.get(cid)
-            if g is None:
-                km_ok = False
-                continue
-            if g["n_vecs"] != b["n_vecs"] * mult:
-                km_ok = False
-            if round(g["inertia"] * KM_SCALE) != mult * round(
-                b["inertia"] * KM_SCALE
-            ):
-                km_ok = False
-            if g["centroid_norm"] != b["centroid_norm"]:
-                km_ok = False
-        if not km_ok:
-            print(f"FAIL kmeans closed-form scaling at mult={mult}")
-            ok = False
-        n_emb = emb.count() * mult
-        t0 = time.perf_counter()
-        topk_rows = sim_ivf_trained_topk(spark, ktmp).collect()
-        t_topk = time.perf_counter() - t0
-        by_q: dict = {}
-        for r in topk_rows:
-            by_q.setdefault(r["query_id"], []).append(r)
-        # Guarantees come from copy families: a query's cell holds >= mult
-        # members of its own family, so >= mult-1 non-self candidates. All
-        # N_QUERIES queries therefore appear from mult>=2, and a FULL top-k
-        # is only guaranteed once mult-1 >= TOP_K (a singleton base cell at
-        # small mult legitimately yields fewer rows — code-review r6).
-        search_ok = mult < 2 or len(by_q) == N_QUERIES
-        for qid, rows in by_q.items():
-            rows.sort(key=lambda r: r["rank"])
-            if mult >= TOP_K + 1 and len(rows) != TOP_K:
-                search_ok = False
-            if mult >= 2 and rows[0]["cos_sim"] != 1.0:
-                search_ok = False  # a perfect-match copy must win rank 1
-        if not search_ok:
-            print(f"FAIL trained search: malformed top-k at mult={mult}")
-            ok = False
-        # multiprobe dominance at scale: probe rank 1 IS the assignment, so
-        # the nprobe>1 candidate set is a superset of the in-cell one — at
-        # every (query, rank) its cosine must be >= in-cell's, per-query
-        # row counts never shrink, and the rank-1 perfect match survives.
-        from aws_vpc_flow_log_appender_spark.ext.similarity import (
-            sim_ivf_trained_multiprobe,
-        )
 
-        t0 = time.perf_counter()
-        mp_rows = sim_ivf_trained_multiprobe(spark, ktmp).collect()
-        t_mp = time.perf_counter() - t0
-        mp_by_q: dict = {}
-        for r in mp_rows:
-            mp_by_q.setdefault(r["query_id"], []).append(r)
-        mp_ok = set(by_q) <= set(mp_by_q)
-        for qid, rows in mp_by_q.items():
-            rows.sort(key=lambda r: r["rank"])
-            cell_rows = by_q.get(qid, [])
-            if len(rows) < len(cell_rows):
-                mp_ok = False
-            for i, cr in enumerate(cell_rows):
-                if i < len(rows) and rows[i]["cos_sim"] < cr["cos_sim"]:
-                    mp_ok = False
-            if mult >= 2 and rows[0]["cos_sim"] != 1.0:
-                mp_ok = False
-        if not mp_ok:
-            print(f"FAIL trained multiprobe dominance at mult={mult}")
-            ok = False
-        print(
-            f"scale_smoke kmeans mult={mult}: {n_emb:,} vectors trained in "
-            f"{t_km:.1f}s (cell counts + scaled inertia exactly x{mult}, "
-            f"centroid norms bit-identical: {'YES' if km_ok else 'NO'}); "
-            f"trained search {len(topk_rows)} rows in {t_topk:.1f}s, "
-            f"rank-1 perfect matches: {'YES' if search_ok else 'NO'}; "
-            f"multiprobe {len(mp_rows)} rows in {t_mp:.1f}s, dominance: "
-            f"{'YES' if mp_ok else 'NO'}; "
-            f"{'ALL OK' if ok else 'FAILURES'}"
-        )
-        artifact["kmeans_trained"] = {
-            "vectors": n_emb,
-            "closed_form_exact": km_ok,
-            "t_train_s": round(t_km, 2),
-            "search_rows": len(topk_rows),
-            "search_rank1_perfect": search_ok,
-            "t_search_s": round(t_topk, 2),
-            "multiprobe_rows": len(mp_rows),
-            "multiprobe_dominates": mp_ok,
-            "t_multiprobe_s": round(t_mp, 2),
-        }
+CHECKS = [linear_scaling, fact_fact_join_shuffles, distributed_cc_matches_union_find,
+          kmeans_closed_form]
 
-        # 7b) PQ/ADC at scale, same duplicated corpus: the codebook seeds
-        # are the PQ_K smallest vec_ids (present unchanged in the copy
-        # corpus) and identical copies cannot move any per-(m, cid) mean,
-        # so training — hence every original vector's codes and ADC
-        # distances — is INVARIANT under duplication, while the copies add
-        # candidates: per-query rank-1 ADC distance at mult must be <= the
-        # base corpus's, and a query's own copies (identical codes => the
-        # global-minimum ADC distance) guarantee full result sets by the
-        # same copy-family bounds as the trained search.
-        from aws_vpc_flow_log_appender_spark.ext.similarity import sim_pq_adc
 
-        base_pq = {}
-        for r in sim_pq_adc(spark, SF_DIR).collect():
-            if r["rank"] == 1:
-                base_pq[r["query_id"]] = r["adc_dist"]
-        t0 = time.perf_counter()
-        pq_rows = sim_pq_adc(spark, ktmp).collect()
-        t_pq = time.perf_counter() - t0
-        pq_by_q: dict = {}
-        for r in pq_rows:
-            pq_by_q.setdefault(r["query_id"], []).append(r)
-        pq_ok = mult < 2 or set(pq_by_q) == set(base_pq)
-        for qid, rows in pq_by_q.items():
-            rows.sort(key=lambda r: r["rank"])
-            if mult >= TOP_K + 1 and len(rows) != TOP_K:
-                pq_ok = False
-            if qid in base_pq and rows[0]["adc_dist"] > base_pq[qid]:
-                pq_ok = False  # added copies can only improve rank-1
-        if not pq_ok:
-            print(f"FAIL pq adc at mult={mult}")
-            ok = False
-        # IVF-PQ composition at scale: same codes, pruned candidates — at
-        # every (query, rank) present in both results the pruned ADC
-        # distance must be >= the exhaustive scan's (pruning can only push
-        # candidates out, never conjure closer ones).
-        from aws_vpc_flow_log_appender_spark.ext.similarity import (
-            sim_ivfpq_topk,
-        )
+def main(argv: list[str]) -> int:
+    import json
+    import time
 
-        t0 = time.perf_counter()
-        ivfpq_rows = sim_ivfpq_topk(spark, ktmp).collect()
-        t_ivfpq = time.perf_counter() - t0
-        pq_rank = {
-            (r["query_id"], r["rank"]): r["adc_dist"] for r in pq_rows
-        }
-        ivfpq_ok = True
-        for r in ivfpq_rows:
-            exh = pq_rank.get((r["query_id"], r["rank"]))
-            if exh is not None and r["adc_dist"] < exh:
-                ivfpq_ok = False
-        if not ivfpq_ok:
-            print(f"FAIL ivfpq pruning dominance at mult={mult}")
-            ok = False
-        print(
-            f"scale_smoke pq mult={mult}: ADC search {len(pq_rows)} rows in "
-            f"{t_pq:.1f}s, rank-1 monotone vs base: {'YES' if pq_ok else 'NO'}"
-            f"; ivfpq {len(ivfpq_rows)} rows in {t_ivfpq:.1f}s, dominance: "
-            f"{'YES' if ivfpq_ok else 'NO'}"
-        )
-        artifact["pq_adc"] = {
-            "vectors": n_emb,
-            "rows": len(pq_rows),
-            "rank1_monotone": pq_ok,
-            "t_search_s": round(t_pq, 2),
-            "ivfpq_rows": len(ivfpq_rows),
-            "ivfpq_dominates": ivfpq_ok,
-            "t_ivfpq_s": round(t_ivfpq, 2),
-        }
+    from aws_vpc_flow_log_appender_spark.session import get_spark
+    from bench import SF_DIR
 
-        # 7c) recall evaluation at scale (late-r6 addition): one plan
-        # trains both quantizers AND produces the exact ground truth over
-        # the duplicated corpus. Shape checks only — recall VALUES on a
-        # copy-saturated corpus honestly reflect the tiny fixture codebook
-        # (many vectors share PQ codes, ties break toward small ids), and
-        # value correctness is the oracle's job at the fixture SFs; what
-        # scale must preserve is one row per query with n_hits in range.
-        from aws_vpc_flow_log_appender_spark.ext.similarity import (
-            sim_recall_eval,
-        )
-
-        t0 = time.perf_counter()
-        rec_rows = sim_recall_eval(spark, ktmp).collect()
-        t_rec = time.perf_counter() - t0
-        rec_ok = len(rec_rows) == N_QUERIES and all(
-            0 <= r["n_hits"] <= TOP_K for r in rec_rows
-        )
-        mean_recall = (
-            sum(r["recall_at_k"] for r in rec_rows) / len(rec_rows)
-            if rec_rows
-            else 0.0
-        )
-        if not rec_ok:
-            print(f"FAIL recall_eval shape at mult={mult}")
-            ok = False
-        print(
-            f"scale_smoke recall_eval mult={mult}: {len(rec_rows)} queries "
-            f"in {t_rec:.1f}s, mean recall@{TOP_K} {mean_recall:.2f}; "
-            f"{'OK' if rec_ok else 'FAIL'}"
-        )
-        artifact["recall_eval"] = {
-            "queries": len(rec_rows),
-            "mean_recall": round(mean_recall, 3),
-            "shape_ok": rec_ok,
-            "t_s": round(t_rec, 2),
-        }
-
-        # 7d) two-stage re-rank at scale (r7): per query, re-ranked recall
-        # must dominate the un-reranked number on the SAME duplicated
-        # corpus — the monotonicity contract is scale-free, so it must
-        # hold wherever the index itself runs.
-        from aws_vpc_flow_log_appender_spark.ext.similarity import (
-            sim_rerank_recall_eval,
-        )
-
-        plain_hits = {r["query_id"]: r["n_hits"] for r in rec_rows}
-        t0 = time.perf_counter()
-        rr_rows = sim_rerank_recall_eval(spark, ktmp).collect()
-        t_rr = time.perf_counter() - t0
-        rr_ok = {r["query_id"] for r in rr_rows} == set(plain_hits) and all(
-            r["n_hits"] >= plain_hits[r["query_id"]] for r in rr_rows
-        )
-        if not rr_ok:
-            print(f"FAIL rerank recall dominance at mult={mult}")
-            ok = False
-        mean_rr = (
-            sum(r["recall_at_k"] for r in rr_rows) / len(rr_rows)
-            if rr_rows else 0.0
-        )
-        print(
-            f"scale_smoke rerank mult={mult}: {len(rr_rows)} queries in "
-            f"{t_rr:.1f}s, mean recall@{TOP_K} {mean_rr:.2f} vs "
-            f"{mean_recall:.2f} un-reranked, dominance: "
-            f"{'YES' if rr_ok else 'NO'}"
-        )
-        artifact["rerank_recall"] = {
-            "queries": len(rr_rows),
-            "mean_recall": round(mean_rr, 3),
-            "mean_recall_unreranked": round(mean_recall, 3),
-            "dominates_per_query": rr_ok,
-            "t_s": round(t_rr, 2),
-        }
-
-        # 7e) SemDeDup at scale (r7): the copy corpus gives dedup_semantic
-        # a CLOSED FORM. Training is duplication-invariant (proven in 7),
-        # copies share their original's cell and centroid distance, and a
-        # copy's id (base + k*1e10) always loses the equal-distance
-        # tie-break to its original — so every original's audit row
-        # (kept, max_closer_sim) must be IDENTICAL to the base run's, and
-        # every non-original copy must be dropped at max_closer_sim = 1.0
-        # (its own original at cosine 1). Also records the per-cell work
-        # bound the operator's 100 TB story rests on: within-cell pair
-        # candidates sum to Σ n_c·(n_c−1), reported with the hottest
-        # cell's share.
-        from aws_vpc_flow_log_appender_spark.ext.similarity import (
-            dedup_semantic,
-        )
-
-        if mult > 50:
-            # NOT a silent cap: the copy corpus makes EVERY cell maximally
-            # hot by construction (per-cell pairs grow mult^2 — an
-            # adversarial shape real corpora reach only when KM_K is
-            # undersized). The 50x run demonstrates the closed form EXACT
-            # at 1.25B pair candidates / 24 min; 100x is 4x that wall time
-            # with no new information, so the exact audit is bounded to
-            # mult<=50 and the artifact records the skip.
-            print(
-                f"scale_smoke semdedup mult={mult}: exact closed-form audit "
-                "bounded to mult<=50 (quadratic copy-corpus pair join; 50x "
-                "artifact carries the proof)"
-            )
-            artifact["semdedup"] = {
-                "skipped_above_mult": 50,
-                "reason": "copy corpus is the quadratic worst case; "
-                          "50x artifact carries the exact proof",
-            }
-        else:
-            base_sem = {
-                r["vec_id"]: (r["kept"], r["max_closer_sim"])
-                for r in dedup_semantic(spark, SF_DIR).collect()
-            }
-            t0 = time.perf_counter()
-            sem_rows = dedup_semantic(spark, ktmp).collect()
-            t_sem = time.perf_counter() - t0
-            sem_ok = len(sem_rows) == len(base_sem) * mult
-            cell_sizes: dict = {}
-            for r in sem_rows:
-                cell_sizes[r["cluster_id"]] = cell_sizes.get(r["cluster_id"], 0) + 1
-                base_id = r["vec_id"] % (10 ** 10)
-                if r["vec_id"] == base_id:
-                    if (r["kept"], r["max_closer_sim"]) != base_sem.get(base_id):
-                        sem_ok = False
-                elif r["kept"] != 0 or r["max_closer_sim"] != 1.0:
-                    sem_ok = False
-            if not sem_ok:
-                print(f"FAIL dedup_semantic closed form at mult={mult}")
-                ok = False
-            n_sem = len(sem_rows)
-            pair_work = sum(n * (n - 1) for n in cell_sizes.values())
-            hot_share = (
-                max(cell_sizes.values()) / n_sem if cell_sizes else 0.0
-            )
-            n_dropped = sum(1 for r in sem_rows if r["kept"] == 0)
-            print(
-                f"scale_smoke semdedup mult={mult}: {n_sem:,} vectors in "
-                f"{t_sem:.1f}s, dropped {n_dropped:,} "
-                f"({n_dropped / max(n_sem, 1):.1%}); per-cell pair work "
-                f"{pair_work:,} candidates over {len(cell_sizes)} cells, "
-                f"hottest cell {hot_share:.1%} of corpus; closed form: "
-                f"{'EXACT' if sem_ok else 'MISMATCH'}"
-            )
-            artifact["semdedup"] = {
-                "vectors": n_sem,
-                "dropped": n_dropped,
-                "cells": len(cell_sizes),
-                "pair_candidates": pair_work,
-                "hot_cell_share": round(hot_share, 4),
-                "closed_form_exact": sem_ok,
-                "t_s": round(t_sem, 2),
-            }
-
-        # 7f) CAPPED SemDeDup at scale (r8): the copy corpus is exactly the
-        # hot-cell shape the cap exists for — every trained cell is
-        # mult x base-size, far past SEMDEDUP_CELL_CAP, so every member is
-        # sub-bucketed. Copies carry their original's vector, hence its RP
-        # sign-sketch sub-bucket, so the closed form survives capping:
-        # originals keep their base capped audit row, copies drop at
-        # max_closer_sim = 1.0 against their same-bucket original. The
-        # artifact records the per-task pair bound the cap buys — the
-        # hottest (cell, sub_bucket) task vs the hottest uncapped cell —
-        # which is why this section RUNS where 7e's uncapped audit is
-        # bounded to mult<=50.
-        from aws_vpc_flow_log_appender_spark.ext.similarity import (
-            dedup_semantic_capped,
-        )
-
-        base_cap = {
-            r["vec_id"]: (r["kept"], r["max_closer_sim"], r["sub_bucket"])
-            for r in dedup_semantic_capped(spark, SF_DIR).collect()
-        }
-        t0 = time.perf_counter()
-        cap_rows = dedup_semantic_capped(spark, ktmp).collect()
-        t_cap = time.perf_counter() - t0
-        cap_ok = len(cap_rows) == len(base_cap) * mult
-        task_sizes: dict = {}
-        ucell_sizes: dict = {}
-        for r in cap_rows:
-            task_sizes[(r["cluster_id"], r["sub_bucket"])] = (
-                task_sizes.get((r["cluster_id"], r["sub_bucket"]), 0) + 1
-            )
-            ucell_sizes[r["cluster_id"]] = ucell_sizes.get(r["cluster_id"], 0) + 1
-            base_id = r["vec_id"] % (10 ** 10)
-            if r["vec_id"] == base_id:
-                if (r["kept"], r["max_closer_sim"], r["sub_bucket"]) != \
-                        base_cap.get(base_id):
-                    cap_ok = False
-            elif r["kept"] != 0 or r["max_closer_sim"] != 1.0:
-                cap_ok = False
-        if not cap_ok:
-            print(f"FAIL dedup_semantic_capped closed form at mult={mult}")
-            ok = False
-        capped_pairs = sum(n * (n - 1) for n in task_sizes.values())
-        uncapped_pairs = sum(n * (n - 1) for n in ucell_sizes.values())
-        hot_task = max(task_sizes.values()) if task_sizes else 0
-        hot_cell = max(ucell_sizes.values()) if ucell_sizes else 0
-        print(
-            f"scale_smoke semdedup_capped mult={mult}: {len(cap_rows):,} "
-            f"vectors in {t_cap:.1f}s; pair candidates "
-            f"{capped_pairs:,} capped vs {uncapped_pairs:,} uncapped "
-            f"({capped_pairs / max(uncapped_pairs, 1):.1%}), hottest task "
-            f"{hot_task:,} members vs hottest cell {hot_cell:,}; "
-            f"closed form: {'EXACT' if cap_ok else 'MISMATCH'}"
-        )
-        artifact["semdedup_capped"] = {
-            "vectors": len(cap_rows),
-            "tasks": len(task_sizes),
-            "pair_candidates_capped": capped_pairs,
-            "pair_candidates_uncapped": uncapped_pairs,
-            "hot_task_members": hot_task,
-            "hot_cell_members": hot_cell,
-            "closed_form_exact": cap_ok,
-            "t_s": round(t_cap, 2),
-        }
-
-        # 7g) incremental IVF assignment at scale (r9): vec_id residues are
-        # preserved under +k*1e10 (1e10 % 4 == 0), copies carry identical
-        # vectors, and the codebook seeds (the KM_K smallest TRAIN ids) are
-        # copy-0 originals — so training is duplication-invariant and the
-        # report has a CLOSED FORM: per-cell n_train/n_new exactly mult x
-        # base, and every mean/drift BIT-IDENTICAL to base (scaled integer
-        # sums and counts both scale by mult; (mult*s)/(mult*n) is the
-        # correctly-rounded double of the same rational as s/n).
-        from aws_vpc_flow_log_appender_spark.ext.similarity import (
-            sim_ivf_incremental_assign,
-        )
-
-        base_inc = {
-            r["cluster_id"]: r
-            for r in sim_ivf_incremental_assign(spark, SF_DIR).collect()
-        }
-        t0 = time.perf_counter()
-        inc_cells = {
-            r["cluster_id"]: r
-            for r in sim_ivf_incremental_assign(spark, ktmp).collect()
-        }
-        t_ivinc = time.perf_counter() - t0
-        ivinc_ok = set(inc_cells) == set(base_inc)
-        for cid, b in base_inc.items():
-            g = inc_cells.get(cid)
-            if g is None:
-                ivinc_ok = False
-                continue
-            if (
-                g["n_train"] != b["n_train"] * mult
-                or g["n_new"] != b["n_new"] * mult
-                or g["train_mean_d"] != b["train_mean_d"]
-                or g["new_mean_d"] != b["new_mean_d"]
-                or g["drift_d"] != b["drift_d"]
-            ):
-                ivinc_ok = False
-        if not ivinc_ok:
-            print(f"FAIL ivf incremental assign closed form at mult={mult}")
-            ok = False
-        n_new_total = sum(r["n_new"] for r in inc_cells.values())
-        print(
-            f"scale_smoke ivf_incremental mult={mult}: {n_new_total:,} new "
-            f"vectors assigned in {t_ivinc:.1f}s (occupancy x{mult} exact, "
-            f"means/drift bit-identical: {'YES' if ivinc_ok else 'NO'})"
-        )
-        artifact["ivf_incremental"] = {
-            "new_vectors": n_new_total,
-            "cells": len(inc_cells),
-            "closed_form_exact": ivinc_ok,
-            "t_s": round(t_ivinc, 2),
-        }
-    finally:
-        shutil.rmtree(ktmp, ignore_errors=True)
-
-    # 8) DSIR importance at scale: EXACT document copies (same text, same
-    # source, distinct ids) must score IDENTICALLY — the per-family
-    # max==min check exercises the full two-pass pipeline (bucket counts,
-    # smoothed log-ratio table, per-doc integer sums) at mult x corpus and
-    # pins profile-invariance as one distributed aggregate.
-    from aws_vpc_flow_log_appender_spark.ext.textanalysis import (
-        text_dsir_importance,
-    )
-
-    ddocs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    dcopies = (
-        ddocs.crossJoin(spark.range(mult).select(F.col("id").alias("__copy")))
-        .withColumn("doc_id", F.col("doc_id") + F.col("__copy") * F.lit(10 ** 10))
-        .drop("__copy")
-    )
-    dtmp = tempfile.mkdtemp(prefix="scale_dsir_")
-    try:
-        dcopies.write.mode("overwrite").parquet(f"{dtmp}/documents.parquet")
-        n_text_docs = mult * ddocs.filter(F.col("text").isNotNull()).count()
-        t0 = time.perf_counter()
-        ds = text_dsir_importance(spark, dtmp)
-        ds_stats = (
-            ds.groupBy((F.col("doc_id") % F.lit(10 ** 10)).alias("fam"))
-            .agg(
-                F.count("*").alias("n"),
-                (F.max("dsir_logratio") - F.min("dsir_logratio")).alias("spread"),
-            )
-            .agg(
-                F.sum("n").alias("rows"),
-                F.sum(F.when(F.col("n") != mult, 1).otherwise(0)).alias(
-                    "n_fam_bad"
-                ),
-                F.sum(F.when(F.col("spread") != 0.0, 1).otherwise(0)).alias(
-                    "n_spread_bad"
-                ),
-            )
-            .collect()[0]
-        )
-        t_ds = time.perf_counter() - t0
-        ds_ok = (
-            ds_stats["rows"] == n_text_docs
-            and ds_stats["n_fam_bad"] == 0
-            and ds_stats["n_spread_bad"] == 0
-        )
-        if not ds_ok:
-            print(
-                f"FAIL dsir at mult={mult}: rows={ds_stats['rows']} "
-                f"(want {n_text_docs}), bad families "
-                f"{ds_stats['n_fam_bad']}, nonzero spreads "
-                f"{ds_stats['n_spread_bad']}"
-            )
-            ok = False
-        print(
-            f"scale_smoke dsir mult={mult}: {ds_stats['rows']:,} docs scored "
-            f"in {t_ds:.1f}s, copy families score-identical: "
-            f"{'YES' if ds_ok else 'NO'}"
-        )
-        artifact["dsir"] = {
-            "docs": ds_stats["rows"],
-            "family_identical": ds_ok,
-            "t_s": round(t_ds, 2),
-        }
-    finally:
-        shutil.rmtree(dtmp, ignore_errors=True)
-
-    # 12) session-4 additions. Sketches at scale — the whole point of a
-    # sketch is that its STATE does not grow with the corpus, and both have
-    # exact closed forms under replication:
-    #  - count-min over mult text-identical copies: every (j, bucket) cell
-    #    is exactly mult x its base value, the bucket set is unchanged, and
-    #    the cell count stays <= d x w whatever the corpus size;
-    #  - KMV over mult user-disjoint copies: the TRUTH scales exactly
-    #    (disjoint users => mult x distinct pairs) while the 64-hash
-    #    estimate must track it within its error envelope.
-    from aws_vpc_flow_log_appender_spark.ext.sketches import (
-        _CM_D,
-        _CM_W,
-        _cm_bucket_spark,
-        agg_kmv_distinct,
-    )
-
-    def cm_cells(d):
-        toks = d.select(F.explode(F.split("text", " ")).alias("tok")).filter(
-            F.col("tok") != ""
-        )
-        tc = toks.groupBy("tok").agg(F.count("*").alias("c"))
-        js = spark.range(_CM_D).select(F.col("id").alias("j"))
-        hb = tc.crossJoin(F.broadcast(js)).withColumn(
-            "bucket", _cm_bucket_spark(F.col("j"), F.col("tok"))
-        )
-        return hb.groupBy("j", "bucket").agg(F.sum("c").alias("cnt"))
-
-    docs_m = multiplied("documents", ["doc_id"])
+    n = int(argv[1]) if len(argv) > 1 else 10
+    out_dir = argv[2] if len(argv) > 2 else os.path.join(ROOT, ".scale_smoke", f"x{n}")
+    json_out = argv[3] if len(argv) > 3 else None
     t0 = time.perf_counter()
-    big_cells = {
-        (r["j"], r["bucket"]): r["cnt"] for r in cm_cells(docs_m).collect()
-    }
-    t_cm = time.perf_counter() - t0
-    base_cells = {
-        (r["j"], r["bucket"]): r["cnt"]
-        for r in cm_cells(spark.read.parquet(f"{SF_DIR}/documents.parquet")).collect()
-    }
-    cm_ok = (
-        len(big_cells) == len(base_cells)
-        and len(big_cells) <= _CM_D * _CM_W
-        and all(big_cells.get(k) == v * mult for k, v in base_cells.items())
-    )
-    if not cm_ok:
-        print(
-            f"FAIL countmin scaling: {len(big_cells)} cells vs "
-            f"{len(base_cells)} base; linear-cell check failed"
-        )
-        ok = False
-    print(
-        f"scale_smoke countmin mult={mult}: {len(big_cells)} sketch cells "
-        f"(cap {_CM_D * _CM_W}), every cell exactly {mult}x base: "
-        f"{'YES' if cm_ok else 'NO'}; built in {t_cm:.1f}s"
-    )
-    artifact["countmin"] = {
-        "cells": len(big_cells),
-        "cell_cap": _CM_D * _CM_W,
-        "linear_cells": cm_ok,
-        "t_s": round(t_cm, 2),
-    }
-
-    ktmp = tempfile.mkdtemp(prefix="scale_kmv_")
-    try:
-        f_events.withColumn(
-            "ts", (F.unix_micros("ts") * 1000).cast("long")
-        ).write.mode("overwrite").parquet(f"{ktmp}/events.parquet")
-        base_kmv = {
-            r["event_type"]: r["true_distinct"]
-            for r in agg_kmv_distinct(spark, SF_DIR).collect()
-        }
+    multiply_tables(SF_DIR, n, out_dir)
+    artifact: dict = {"mult": n, "sf_dir": SF_DIR,
+                      "t_multiply_s": round(time.perf_counter() - t0, 2)}
+    spark = get_spark("scale_smoke")
+    ok = True
+    for check in CHECKS:
         t0 = time.perf_counter()
-        big_kmv = agg_kmv_distinct(spark, ktmp).collect()
-        t_kmv = time.perf_counter() - t0
-        kmv_ok = len(big_kmv) == len(base_kmv)
-        worst_rel = 0.0
-        for r in big_kmv:
-            if r["true_distinct"] != base_kmv[r["event_type"]] * mult:
-                print(
-                    f"FAIL kmv truth scaling: {r['event_type']} "
-                    f"{r['true_distinct']} != {base_kmv[r['event_type']]}x{mult}"
-                )
-                kmv_ok = False
-            rel = abs(r["kmv_estimate"] - r["true_distinct"]) / r["true_distinct"]
-            worst_rel = max(worst_rel, rel)
-            if rel >= 0.40:
-                print(f"FAIL kmv envelope: {r['event_type']} rel_err {rel:.2f}")
-                kmv_ok = False
-        if not kmv_ok:
-            ok = False
-        print(
-            f"scale_smoke kmv mult={mult}: truth scaled exactly {mult}x, "
-            f"64-hash estimate worst rel err {worst_rel:.1%} "
-            f"({'OK' if kmv_ok else 'FAIL'}); {t_kmv:.1f}s"
-        )
-        artifact["kmv"] = {
-            "groups": len(big_kmv),
-            "worst_rel_err": round(worst_rel, 4),
-            "t_s": round(t_kmv, 2),
-        }
-
-        # 13) BFS on the saturated support: the circulant edge set stops
-        # growing once every (offset, residue) pair is hit (section 5's
-        # contract), so multi-source BFS distances over the multiplied
-        # corpus must be IDENTICAL to the base corpus — the graph family's
-        # strongest scale invariant: more data, same graph, same answer.
-        from aws_vpc_flow_log_appender_spark.operators.graphs import (
-            graph_shortest_paths,
-        )
-
-        base_bfs = {
-            r["node"]: r["dist"]
-            for r in graph_shortest_paths(spark, SF_DIR).collect()
-        }
-        t0 = time.perf_counter()
-        big_bfs = {
-            r["node"]: r["dist"]
-            for r in graph_shortest_paths(spark, ktmp).collect()
-        }
-        t_bfs = time.perf_counter() - t0
-        if big_bfs != base_bfs:
-            print(
-                f"FAIL bfs saturation: {len(big_bfs)} labeled nodes vs "
-                f"{len(base_bfs)} base / distances diverged"
-            )
-            ok = False
-        print(
-            f"scale_smoke bfs mult={mult}: {len(big_bfs)} node distances "
-            f"identical to base: {'YES' if big_bfs == base_bfs else 'NO'}; "
-            f"{t_bfs:.1f}s"
-        )
-        artifact["bfs"] = {
-            "nodes": len(big_bfs),
-            "identical_to_base": big_bfs == base_bfs,
-            "t_s": round(t_bfs, 2),
-        }
-
-        # 14) stream-stream join at scale: user-disjoint copies make the
-        # pair count an exact closed form (mult x base pairs — a pair never
-        # crosses copies), while the 4-slice harness forces real watermark
-        # advancement and state eviction over a mult-x-denser stream.
-        from aws_vpc_flow_log_appender_spark.streaming.queries import (
-            stream_interval_join,
-        )
-
-        base_pairs = (
-            load(spark, SF_DIR, "events").filter(F.col("event_type") == "click")
-            .alias("c")
-            .join(
-                load(spark, SF_DIR, "events")
-                .filter(F.col("event_type") == "purchase")
-                .alias("p"),
-                (F.col("p.user_id") == F.col("c.user_id"))
-                & (F.col("p.ts") > F.col("c.ts"))
-                & (F.col("p.ts") <= F.col("c.ts") + F.expr("INTERVAL 1 HOUR")),
-            )
-            .count()
-        )
-        t0 = time.perf_counter()
-        n_stream_pairs = stream_interval_join(spark, ktmp).count()
-        t_ssj = time.perf_counter() - t0
-        if n_stream_pairs != base_pairs * mult:
-            print(
-                f"FAIL stream join scaling: {n_stream_pairs} pairs != "
-                f"{base_pairs}x{mult}"
-            )
-            ok = False
-        print(
-            f"scale_smoke stream-join mult={mult}: {n_stream_pairs:,} pairs "
-            f"== {base_pairs}x{mult}: "
-            f"{'YES' if n_stream_pairs == base_pairs * mult else 'NO'}; "
-            f"4-slice watermarked run {t_ssj:.1f}s"
-        )
-        artifact["stream_interval_join"] = {
-            "pairs": n_stream_pairs,
-            "expected": base_pairs * mult,
-            "t_s": round(t_ssj, 2),
-        }
-
-        # 15) SCD2 interval construction at scale: user-disjoint copies with
-        # order-preserving event_id remapping make the interval count an
-        # exact closed form (mult x base — each copy rebuilds the identical
-        # per-user timeline under its offset user_id).
-        from aws_vpc_flow_log_appender_spark.operators.timeseries import (
-            ts_scd2_intervals,
-        )
-
-        base_scd2 = ts_scd2_intervals(spark, SF_DIR).count()
-        t0 = time.perf_counter()
-        big_scd2 = ts_scd2_intervals(spark, ktmp).count()
-        t_scd2 = time.perf_counter() - t0
-        if big_scd2 != base_scd2 * mult:
-            print(f"FAIL scd2 scaling: {big_scd2} != {base_scd2}x{mult}")
-            ok = False
-        print(
-            f"scale_smoke scd2 mult={mult}: {big_scd2:,} intervals == "
-            f"{base_scd2}x{mult}: {'YES' if big_scd2 == base_scd2 * mult else 'NO'}; "
-            f"{t_scd2:.1f}s"
-        )
-        artifact["scd2_intervals"] = {
-            "intervals": big_scd2,
-            "expected": base_scd2 * mult,
-            "t_s": round(t_scd2, 2),
-        }
-    finally:
-        shutil.rmtree(ktmp, ignore_errors=True)
-
-    # 16) LPM routing join at scale: mult x 600k synthetic addresses, each
-    # placed in a COLLISION-FREE sub-range of its target route (computed from
-    # the route table's overlap structure below), so per-route results have
-    # an exact closed form: ids are dealt round-robin over the 13 routes and
-    # offsets cycle 0..cap-1, hence n_flows(r) = |ids = r mod 13| and
-    # n_addrs(r) = min(n_flows(r), cap_r). The /32 host routes (cap 1) prove
-    # the distinct-addr reduction under maximal duplication; large caps prove
-    # the |addrs| x |plens| candidate fan-out at millions of distinct addrs.
-    from aws_vpc_flow_log_appender_spark.flagship import (
-        _route_rows,
-        lpm_best_routes,
-    )
-
-    routes = _route_rows()
-
-    def _span(plen: int, shifted: int) -> tuple[int, int]:
-        lo = (shifted << (32 - plen)) if plen < 32 else shifted
-        return lo, lo + ((1 << (32 - plen)) if plen < 32 else 1)
-
-    def _safe_range(plen: int, shifted: int) -> tuple[int, int]:
-        """Largest gap of this route's span not covered by any more-specific
-        route (so LPM of every address in the gap resolves HERE)."""
-        lo, hi = _span(plen, shifted)
-        subs = sorted(
-            _span(p2, s2)
-            for _, _, p2, s2 in routes
-            if p2 > plen and lo <= _span(p2, s2)[0] < hi
-        )
-        best_lo, best_cap, cur = lo, 0, lo
-        for s_lo, s_hi in subs + [(hi, hi)]:
-            if s_lo - cur > best_cap:
-                best_lo, best_cap = cur, s_lo - cur
-            cur = max(cur, s_hi)
-        return best_lo, best_cap
-
-    starts, caps = [], []
-    for _, _, plen, shifted in routes:
-        s_lo, s_cap = _safe_range(plen, shifted)
-        assert s_cap >= 1, "route fully shadowed — fixture table broken"
-        starts.append(s_lo)
-        caps.append(min(s_cap, 1 << 16))
-    n_routes = len(routes)
-    n_addr_ids = mult * 600_000
-    starts_arr = F.array(*[F.lit(s).cast("long") for s in starts])
-    caps_arr = F.array(*[F.lit(c).cast("long") for c in caps])
-    r_idx = (F.col("id") % n_routes).cast("int")
-    start = F.element_at(starts_arr, r_idx + 1)
-    cap = F.element_at(caps_arr, r_idx + 1)
-    ip = start + (F.col("id") / n_routes).cast("long") % cap
-    syn = spark.range(n_addr_ids).select(
-        F.lit("syn").alias("addr_role"),
-        F.concat_ws(
-            ".",
-            F.shiftright(ip, 24).bitwiseAND(F.lit(255)),
-            F.shiftright(ip, 16).bitwiseAND(F.lit(255)),
-            F.shiftright(ip, 8).bitwiseAND(F.lit(255)),
-            ip.bitwiseAND(F.lit(255)),
-        ).alias("addr"),
-    )
-    stats = syn.groupBy("addr_role", "addr").agg(
-        F.count("*").alias("n_flows"), F.count("*").alias("addr_bytes")
-    )
-    t0 = time.perf_counter()
-    lpm_got = {
-        r["route_id"]: (r["n_addrs"], r["n_flows"])
-        for r in lpm_best_routes(spark, stats)
-        .groupBy("route_id")
-        .agg(F.count("*").alias("n_addrs"), F.sum("n_flows").alias("n_flows"))
-        .collect()
-    }
-    t_lpm = time.perf_counter() - t0
-    lpm_ok = True
-    for i, (rid, _, _, _) in enumerate(routes):
-        exp_flows = n_addr_ids // n_routes + (1 if i < n_addr_ids % n_routes else 0)
-        exp_addrs = min(exp_flows, caps[i])
-        if lpm_got.get(rid) != (exp_addrs, exp_flows):
-            print(
-                f"FAIL lpm {rid}: got {lpm_got.get(rid)} != "
-                f"({exp_addrs}, {exp_flows})"
-            )
-            lpm_ok = ok = False
-    # exact distinct count from the same per-route exp_flows the checks use
-    # (ADVICE r7 #4: the old estimate added the remainder +1 to every route)
-    n_distinct = sum(
-        min(n_addr_ids // n_routes + (1 if i < n_addr_ids % n_routes else 0),
-            caps[i])
-        for i in range(n_routes)
-    )
-    print(
-        f"scale_smoke lpm mult={mult}: {n_addr_ids:,} addresses over "
-        f"{n_routes} overlapping routes ({n_distinct:,} distinct) "
-        f"closed-form exact: {'YES' if lpm_ok else 'NO'}; {t_lpm:.1f}s"
-    )
-    artifact["lpm_routing"] = {
-        "addresses": n_addr_ids,
-        "routes": n_routes,
-        "closed_form_exact": lpm_ok,
-        "t_s": round(t_lpm, 2),
-    }
-
-    # 17) bloom semi-join reduction at scale: multiplied orders (o_custkey
-    # UNTOUCHED by the key offsetting, so every copy joins the same base
-    # customers) must produce exactly mult x the base plain-join counts
-    # through the bloom path, and the bloom must actually prune (selectivity
-    # recorded). Result-identity is the operator's contract: false positives
-    # die in the exact join, false negatives are impossible.
-    from aws_vpc_flow_log_appender_spark.operators.joins import (
-        bloom_build,
-        bloom_probe_sql,
-    )
-
-    cust = spark.read.parquet(f"{SF_DIR}/customer.parquet").filter(
-        F.col("c_mktsegment") == "MACHINERY"
-    )
-    base_plain = (
-        spark.read.parquet(f"{SF_DIR}/orders.parquet")
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .count()
-    )
-    # size the bitmap to the dim (~10 bits/key, like a production build):
-    # sf0.1 MACHINERY is ~6k keys -> 1024 words = 64 Kbit, an 8 KB broadcast
-    bw = 1024
-    bloom = bloom_build(cust, "c_custkey", words=bw)
-    t0 = time.perf_counter()
-    # ONE pass: left-join the pruned fact to the dim (c_custkey unique, no
-    # fanout) and count total vs matched in the same aggregation — a first
-    # draft ran the identical probe scan twice for the two counters
-    # (code-review session 5)
-    pruned_counts = (
-        orders.join(F.broadcast(bloom))
-        .filter(F.expr(bloom_probe_sql("o_custkey", words=bw)))
-        .drop("bloom")
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"), "left")
-        .agg(
-            F.count("*").alias("n_pruned"),
-            F.count("c_custkey").alias("n_joined"),
-        )
-        .collect()[0]
-    )
-    n_pruned, n_joined = pruned_counts["n_pruned"], pruned_counts["n_joined"]
-    t_bloom = time.perf_counter() - t0
-    n_orders_total = orders.count()
-    if n_joined != base_plain * mult:
-        print(f"FAIL bloom join scaling: {n_joined} != {base_plain}x{mult}")
-        ok = False
-    # MACHINERY is ~1/5 of customers; a right-sized bloom must kill most of
-    # the other 4/5 before the join Exchange (generous 2x FP headroom)
-    if not (n_joined <= n_pruned < 0.4 * n_orders_total):
-        print(
-            f"FAIL bloom pruning: pruned {n_pruned} not in "
-            f"[{n_joined}, 0.4x{n_orders_total})"
-        )
-        ok = False
-    print(
-        f"scale_smoke bloom mult={mult}: {n_orders_total:,} orders -> "
-        f"{n_pruned:,} past bloom ({n_pruned / n_orders_total:.1%}) -> "
-        f"{n_joined:,} joined == {base_plain}x{mult}: "
-        f"{'YES' if n_joined == base_plain * mult else 'NO'}; {t_bloom:.1f}s"
-    )
-    artifact["bloom_prefilter"] = {
-        "orders": n_orders_total,
-        "past_bloom": n_pruned,
-        "joined": n_joined,
-        "expected": base_plain * mult,
-        "t_s": round(t_bloom, 2),
-    }
-
-    # 18) layout + decimal at scale: the multiplied lineitem offsets only
-    # l_orderkey, so shipdate/suppkey distributions are copy-identical and
-    # EVERY zorder/linear skipping statistic and the exact decimal revenue
-    # must scale by exactly mult (the decimal sum additionally proves no
-    # precision overflow at mult x 600k rows).
-    from aws_vpc_flow_log_appender_spark.operators.aggregates import (
-        agg_decimal_exact,
-    )
-    from aws_vpc_flow_log_appender_spark.operators.relational import (
-        sort_zorder_layout,
-    )
-
-    ltmp = tempfile.mkdtemp(prefix="scale_layout_")
-    try:
-        li.write.mode("overwrite").parquet(f"{ltmp}/lineitem.parquet")
-        base_layout = {
-            r["layout"]: r for r in sort_zorder_layout(spark, SF_DIR).collect()
-        }
-        base_dec = {
-            r["l_returnflag"]: r for r in agg_decimal_exact(spark, SF_DIR).collect()
-        }
-        t0 = time.perf_counter()
-        big_layout = {
-            r["layout"]: r for r in sort_zorder_layout(spark, ltmp).collect()
-        }
-        t_layout = time.perf_counter() - t0
-        layout_ok = True
-        for lay, b in base_layout.items():
-            g = big_layout[lay]
-            if (
-                g["n_buckets"] != b["n_buckets"]
-                or g["n_hit_buckets"] != b["n_hit_buckets"]
-                or g["hit_rows"] != b["hit_rows"] * mult
-                or g["box_rows"] != b["box_rows"] * mult
-            ):
-                print(f"FAIL layout scaling {lay}: {dict(g.asDict())}")
-                layout_ok = ok = False
-        t0 = time.perf_counter()
-        big_dec = {
-            r["l_returnflag"]: r for r in agg_decimal_exact(spark, ltmp).collect()
-        }
-        t_dec = time.perf_counter() - t0
-        dec_ok = True
-        for flag, b in base_dec.items():
-            g = big_dec[flag]
-            if (
-                g["n_items"] != b["n_items"] * mult
-                or g["revenue_micros"] != b["revenue_micros"] * mult
-            ):
-                print(f"FAIL decimal scaling {flag}")
-                dec_ok = ok = False
-        amp = {
-            lay: float(r["io_amplification"]) for lay, r in big_layout.items()
-        }
-        print(
-            f"scale_smoke layout mult={mult}: skipping stats exactly linear: "
-            f"{'YES' if layout_ok else 'NO'} (io_amp {amp}); {t_layout:.1f}s | "
-            f"decimal revenue exact x{mult}: {'YES' if dec_ok else 'NO'}; "
-            f"{t_dec:.1f}s"
-        )
-        artifact["zorder_layout"] = {
-            "linear_exact": layout_ok,
-            "io_amplification": amp,
-            "t_s": round(t_layout, 2),
-        }
-        artifact["decimal_exact"] = {
-            "linear_exact": dec_ok,
-            "t_s": round(t_dec, 2),
-        }
-    finally:
-        shutil.rmtree(ltmp, ignore_errors=True)
-
-    # --- r10 sections: phash near-dedup, minibatch codebook update, ---------
-    # --- streaming heavy hitters, PSI drift ---------------------------------
-    # One multiplied-documents fixture for the three document sections; the
-    # copy perturbation (" copyword{n}") makes copies NEAR-dups of their
-    # base doc (realistic for image dedup) while the n_chars COLUMN and all
-    # id-derived splits are copy-invariant (offset = 10^10 ≡ 0 mod every
-    # split modulus), so count-shaped checks stay closed-form.
-    from aws_vpc_flow_log_appender_spark.ext.multimodal import (
-        multimodal_phash_dedup,
-    )
-    from aws_vpc_flow_log_appender_spark.operators.profiling import (
-        dq_psi_drift,
-    )
-    from aws_vpc_flow_log_appender_spark.streaming.queries import (
-        stream_heavy_hitters,
-    )
-
-    docs0 = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    r10docs = (
-        docs0.crossJoin(spark.range(mult).select(F.col("id").alias("__copy")))
-        .withColumn("doc_id", F.col("doc_id") + F.col("__copy") * F.lit(10 ** 10))
-        .withColumn(
-            "text",
-            F.concat(F.col("text"), F.lit(" copyword"), F.col("__copy").cast("string")),
-        )
-        .drop("__copy")
-    )
-    r10tmp = tempfile.mkdtemp(prefix="scale_r10_")
-    try:
-        r10docs.write.mode("overwrite").parquet(f"{r10tmp}/documents.parquet")
-
-        # 10a) image dHash near-dedup: every emitted pair within the banded
-        # join's Hamming bound, and candidate mass reported (copies are
-        # near-dup families, so pair density grows with dup density — the
-        # LSH property — never with n^2 of the corpus).
-        t0 = time.perf_counter()
-        prow = (
-            multimodal_phash_dedup(spark, r10tmp)
-            .agg(
-                F.count("*").alias("n_pairs"),
-                F.max("hamming").alias("max_h"),
-                F.sum(F.when(F.col("hamming") == 0, 1).otherwise(0)).alias("n_exact"),
-            )
-            .collect()[0]
-        )
-        t_ph = time.perf_counter() - t0
-        ph_ok = prow["n_pairs"] > 0 and (prow["max_h"] or 0) <= 7
-        if not ph_ok:
-            print(
-                f"FAIL phash: {prow['n_pairs']} pairs, "
-                f"max hamming {prow['max_h']} (bound 7)"
-            )
-            ok = False
-        print(
-            f"scale_smoke phash mult={mult}: {prow['n_pairs']:,} banded "
-            f"pairs in {t_ph:.1f}s (max hamming {prow['max_h']}, "
-            f"{prow['n_exact']:,} exact); {'OK' if ph_ok else 'FAIL'}"
-        )
-        artifact["phash"] = {
-            "pairs": prow["n_pairs"],
-            "max_hamming": prow["max_h"],
-            "exact_pairs": prow["n_exact"],
-            "t_s": round(t_ph, 2),
-        }
-
-        # 10b) streaming heavy hitters over 4 REAL micro-batches on the
-        # multiplied corpus: per-epoch structure (<= 10 dense ranks), the
-        # one-sided count-min guarantee vs the TRUE prefix counts of every
-        # emitted token, and per-token monotonicity across epochs.
-        t0 = time.perf_counter()
-        hh_rows = stream_heavy_hitters(spark, r10tmp).collect()
-        t_hh = time.perf_counter() - t0
-        hh_ok = len(hh_rows) > 0
-        by_ep: dict = {}
-        for r in hh_rows:
-            by_ep.setdefault(r["epoch"], []).append(r)
-        if set(by_ep) != {0, 1, 2, 3}:
-            hh_ok = False
-        for ep, rs in by_ep.items():
-            rs.sort(key=lambda r: r["rnk"])
-            if len(rs) > 10 or [r["rnk"] for r in rs] != list(range(1, len(rs) + 1)):
-                hh_ok = False
-        emitted_toks = sorted({r["tok"] for r in hh_rows})
-        tc = (
-            r10docs.select(
-                F.expr("CAST(doc_id % 4 AS INT)").alias("b"),
-                F.explode(F.split("text", " ")).alias("tok"),
-            )
-            .filter(F.col("tok").isin(emitted_toks))
-            .groupBy("b", "tok")
-            .agg(F.count("*").alias("c"))
-            .collect()
-        )
-        true_c = {(r["b"], r["tok"]): r["c"] for r in tc}
-        for r in hh_rows:
-            tp = sum(
-                c for (b, t), c in true_c.items()
-                if t == r["tok"] and b <= r["epoch"]
-            )
-            if r["cm_estimate"] < tp:
-                hh_ok = False
-        est = {(r["epoch"], r["tok"]): r["cm_estimate"] for r in hh_rows}
-        for (ep, t), v in est.items():
-            nxt = est.get((ep + 1, t))
-            if nxt is not None and nxt < v:
-                hh_ok = False
-        if not hh_ok:
-            print(f"FAIL stream heavy hitters at mult={mult}")
-            ok = False
-        print(
-            f"scale_smoke stream_hh mult={mult}: {len(hh_rows)} emitted "
-            f"rows over 4 micro-batches in {t_hh:.1f}s (one-sided + "
-            f"monotone: {'YES' if hh_ok else 'NO'})"
-        )
-        artifact["stream_heavy_hitters"] = {
-            "rows": len(hh_rows),
-            "guarantees_ok": hh_ok,
-            "t_s": round(t_hh, 2),
-        }
-
-        # 10c) PSI drift: per-source counts scale EXACTLY x mult (splits and
-        # the n_chars column are copy-invariant), psi stays non-negative
-        # with a consistent flag — and as mult grows the Laplace smoothing
-        # washes out, so identical-per-copy distributions drive psi toward
-        # its unsmoothed zero.
-        base_psi = {r["source"]: r for r in dq_psi_drift(spark, SF_DIR).collect()}
-        t0 = time.perf_counter()
-        big_psi = {r["source"]: r for r in dq_psi_drift(spark, r10tmp).collect()}
-        t_psi = time.perf_counter() - t0
-        psi_ok = set(big_psi) == set(base_psi)
-        for src, b in base_psi.items():
-            g = big_psi.get(src)
-            if g is None:
-                psi_ok = False
-                continue
-            if (
-                g["n_prev"] != b["n_prev"] * mult
-                or g["n_curr"] != b["n_curr"] * mult
-                or g["psi_ppb"] < 0
-                or g["drift_flag"] != (g["psi_ppb"] >= 100_000_000)
-            ):
-                psi_ok = False
-        if not psi_ok:
-            print(f"FAIL psi drift scaling at mult={mult}")
-            ok = False
-        max_psi = max((r["psi_ppb"] for r in big_psi.values()), default=0)
-        print(
-            f"scale_smoke psi_drift mult={mult}: {len(big_psi)} sources in "
-            f"{t_psi:.1f}s (counts x{mult} exact: {'YES' if psi_ok else 'NO'}, "
-            f"max psi_ppb {max_psi})"
-        )
-        artifact["psi_drift"] = {
-            "sources": len(big_psi),
-            "counts_exact": psi_ok,
-            "max_psi_ppb": max_psi,
-            "t_s": round(t_psi, 2),
-        }
-    finally:
-        shutil.rmtree(r10tmp, ignore_errors=True)
-
-    # 10d) mini-batch codebook update closed form on EXACT-duplicate
-    # embedding copies: identical seeds + identical per-iteration means ->
-    # identical codebook; occupancy scales exactly x mult while d_before /
-    # d_after / centroid norms are bit-identical (the ivf_incremental
-    # argument: (mult*s)/(mult*n) rounds to the same grid point as s/n).
-    from aws_vpc_flow_log_appender_spark.ext.similarity import (
-        sim_ivf_minibatch_update,
-    )
-
-    emb0 = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    r10emb = (
-        emb0.crossJoin(spark.range(mult).select(F.col("id").alias("__copy")))
-        .withColumn("vec_id", F.col("vec_id") + F.col("__copy") * F.lit(10 ** 10))
-        .drop("__copy")
-    )
-    mbtmp = tempfile.mkdtemp(prefix="scale_minibatch_")
-    try:
-        r10emb.write.mode("overwrite").parquet(f"{mbtmp}/embeddings.parquet")
-        base_mb = {
-            r["cluster_id"]: r
-            for r in sim_ivf_minibatch_update(spark, SF_DIR).collect()
-        }
-        t0 = time.perf_counter()
-        big_mb = {
-            r["cluster_id"]: r
-            for r in sim_ivf_minibatch_update(spark, mbtmp).collect()
-        }
-        t_mb = time.perf_counter() - t0
-        mb_ok = set(big_mb) == set(base_mb)
-        for cid, b in base_mb.items():
-            g = big_mb.get(cid)
-            if g is None:
-                mb_ok = False
-                continue
-            if (
-                g["n_train"] != b["n_train"] * mult
-                or g["n_new"] != b["n_new"] * mult
-                or g["d_before"] != b["d_before"]
-                or g["d_after"] != b["d_after"]
-                or g["centroid_norm_new"] != b["centroid_norm_new"]
-                or g["d_after"] > g["d_before"] + 1e-4
-            ):
-                mb_ok = False
-        if not mb_ok:
-            print(f"FAIL minibatch update closed form at mult={mult}")
-            ok = False
-        print(
-            f"scale_smoke minibatch mult={mult}: {len(big_mb)} cells in "
-            f"{t_mb:.1f}s (occupancy x{mult} exact, distortion/norms "
-            f"bit-identical + non-increasing: {'YES' if mb_ok else 'NO'})"
-        )
-        artifact["minibatch_update"] = {
-            "cells": len(big_mb),
-            "closed_form_exact": mb_ok,
-            "t_s": round(t_mb, 2),
-        }
-    finally:
-        shutil.rmtree(mbtmp, ignore_errors=True)
-
+        res = check(spark, SF_DIR, out_dir, n)
+        res["t_s"] = round(time.perf_counter() - t0, 2)
+        artifact[check.__name__] = res
+        ok = ok and res["ok"]
+        print(f"scale_smoke x{n} {check.__name__}: {'OK' if res['ok'] else 'FAIL'} {json.dumps(res)}")
     artifact["ok"] = ok
     if json_out:
-        import json
-
         with open(json_out, "w") as fh:
             json.dump(artifact, fh, indent=2)
-        print(f"wrote {json_out}")
+    print(f"scale_smoke x{n}: {'ALL OK' if ok else 'FAILURES'}")
     return 0 if ok else 1
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(sys.argv))
